@@ -69,7 +69,7 @@ def main() -> None:
         F.col("path").alias("file_url"),
         F.get_json_object(udfs["ocr"](F.col("content")), "$.content").alias("text"),
     )
-    outputs = run_document_pipeline(docs, with_ocr=True)
+    outputs = run_document_pipeline(docs, with_ocr=True, cache_intermediate=True)
     persist_pipeline_outputs(outputs, tables)
 
     # 5. history analytics over the persisted tables

@@ -199,3 +199,108 @@ def test_observed_metrics_single_pass(spark):
     assert m["n_docs"] == n == 3
     assert m["n_errors"] == 0
     assert m["n_classes"] >= 1
+
+
+# -- one AI stage, read once ---------------------------------------------------
+
+
+def _plan_nodes(plan):
+    """Every operator of a physical plan, root first; an AQE wrapper is
+    walked through to the plan it runs."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    return [plan] + [n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))]
+
+
+def _physical(df):
+    return _plan_nodes(df._jdf.queryExecution().sparkPlan())
+
+
+def _udf_names(nodes):
+    """UDF names per Python-eval operator in ``nodes``."""
+    return [
+        sorted(n.udfs().apply(i).name() for i in range(n.udfs().size()))
+        for n in nodes
+        if "EvalPython" in n.nodeName()
+    ]
+
+
+def test_cached_stage_feeds_every_sink(spark):
+    """cache_intermediate=True: the three sinks are projections of the one
+    cached stage — no source scan and no Python UDF above the cache."""
+    out = run_document_pipeline(_docs(spark), with_ocr=True, cache_intermediate=True)
+    try:
+        for name in ("processed", "extracted_fields", "ocr"):
+            names = [n.nodeName() for n in _physical(getattr(out, name))]
+            assert names[-1] == "InMemoryTableScan", (name, names)
+            assert not [n for n in names[:-1] if "Scan" in n or "Python" in n], (
+                name,
+                names,
+            )
+    finally:
+        out.cached.unpersist()
+
+
+def test_cached_stage_runs_all_udfs_in_one_arrow_pass(spark):
+    out = run_document_pipeline(_docs(spark), with_ocr=True, cache_intermediate=True)
+    try:
+        scan = _physical(out.cached)[-1]
+        assert scan.nodeName() == "InMemoryTableScan"
+        stage = _plan_nodes(scan.relation().cachedPlan())
+        assert [n.nodeName() for n in stage].count("ArrowEvalPython") == 1
+        assert _udf_names(stage) == [["classify_extract", "ocr", "summarize"]]
+        # ...and the stage holds results, not the text they came from
+        assert "text" not in out.cached.columns
+    finally:
+        out.cached.unpersist()
+
+
+def test_uncached_sinks_prune_unused_udfs(spark):
+    """Without the cache each sink plans only the UDFs its columns need,
+    and the OCR branch ships the text column once to both its UDFs."""
+    out = run_document_pipeline(_docs(spark), with_ocr=True)
+    assert _udf_names(_physical(out.processed)) == [["classify_extract"]]
+    assert _udf_names(_physical(out.extracted_fields)) == [["classify_extract"]]
+    ocr_nodes = [n for n in _physical(out.ocr) if "EvalPython" in n.nodeName()]
+    assert _udf_names(ocr_nodes) == [["ocr", "summarize"]]
+    udfs = ocr_nodes[0].udfs()
+    inputs = {
+        udfs.apply(i).children().apply(0).toString() for i in range(udfs.size())
+    }
+    assert len(inputs) == 1, inputs
+
+
+def test_pipeline_build_submits_no_spark_job(spark):
+    """Building the plan (prompts generated driver-side) runs no job."""
+    sc = spark.sparkContext
+    docs = _docs(spark)
+    group = "test-pipeline-build"
+    sc.setJobGroup(group, group)
+    try:
+        run_document_pipeline(docs, with_ocr=True)
+        out = run_document_pipeline(docs, with_ocr=False, cache_intermediate=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    out.cached.unpersist()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_idempotent_persist_of_empty_batch_writes_nothing(spark, tmp_path):
+    """An empty micro-batch publishes no table version; the cache fill's
+    count is the guard, and the cache is still released."""
+    from unstructured_data_pipeline_spark.catalog import bootstrap_warehouse
+    from unstructured_data_pipeline_spark.pipelines.batch import (
+        persist_pipeline_outputs_idempotent,
+    )
+
+    tables = bootstrap_warehouse(spark, str(tmp_path / "wh"))
+    before = {n: t.versions() for n, t in tables.items()}
+    out = run_document_pipeline(
+        _docs(spark).filter(F.lit(False)), with_ocr=True, cache_intermediate=True
+    )
+    persist_pipeline_outputs_idempotent(out, tables)
+    assert not out.cached.storageLevel.useMemory
+    assert {n: t.versions() for n, t in tables.items()} == before

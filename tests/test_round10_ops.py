@@ -3,8 +3,9 @@
 The reference memoizes re-read results with ``@st.cache_data`` and clears
 the cache after writes (`app/Auto-Magic Document AI.py:89-199`); the
 Spark-native form is ``run_document_pipeline(cache_intermediate=True)``
-persisting the shared classify+extract stage for the multi-sink writers,
-which unpersist it after the fan-out.  Measured A/B: tools/persist_ab.py.
+persisting the shared AI stage for the multi-sink writers, which unpersist
+it after the fan-out.  Timed by the ``ingest`` and ``intake`` workloads of
+``perfbench/`` (both write through the cached stage).
 """
 
 from __future__ import annotations

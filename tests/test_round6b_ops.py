@@ -177,3 +177,11 @@ def test_frequent_sequences_support_bounds(spark, sf_dir):
     for r in rows:
         assert 1 <= r["support"] <= n_users
         assert r["n_occurrences"] >= r["support"]
+
+
+def test_kcore_releases_round_checkpoints(spark, sf_dir):
+    """Every round's localCheckpoint and the persisted edges are freed."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    kcore_decomposition(spark, sf_dir).collect()
+    assert set(jsc.getPersistentRDDs().keys()) <= before

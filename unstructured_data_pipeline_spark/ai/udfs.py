@@ -52,8 +52,12 @@ def make_udfs(backend: DocumentAIBackend | None = None) -> dict[str, Callable]:
 
     @F.pandas_udf(T.StringType())
     def ocr(content: pd.Series) -> pd.Series:
+        # binary content, or text taken as its UTF-8 bytes (what a binary
+        # cast would ship) so the pipeline's UDFs share one text column
         def one(c):
             try:
+                if isinstance(c, str):
+                    c = c.encode("utf-8")
                 return b.ocr(bytes(c) if c is not None else b"")
             except Exception as e:
                 return canonical_json({"error": str(e)})

@@ -3,14 +3,17 @@
 Reference flow (`app/Auto-Magic Document AI.py`, entry points 1-2):
 
     file -> classify (AI1) -> prompt lookup/auto-gen (AI5/D2) -> extract (AI2)
-         -> OCR (AI3) + summarize (AI4)            [independent branch]
+         -> OCR (AI3) + summarize (AI4)            [same Arrow pass as extract]
          -> persist: documents_processed (append), documents_extracted_fields
             (EAV append), document_ocr (append), new_uploads (mark processed)
 
 The reference runs this per-file on a client thread pool; here it is a single
 declarative plan over a documents DataFrame — its "Single SQL over stage"
 mode (`app.py:948-953`) generalized.  Parallelism = partitions.  The prompt
-dimension joins by broadcast (classes are few by construction).
+dimension rides in the classify+extract UDF's closure (classes are few by
+construction).  All four AI calls are one projection over the documents, so
+Spark evaluates them in one Python-worker pass and every sink reads its
+columns from that one stage.
 """
 
 from __future__ import annotations
@@ -18,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.ai.backends import (
@@ -36,9 +39,10 @@ class PipelineOutputs:
     extracted_fields: DataFrame  # EAV shape
     ocr: DataFrame  # document_ocr shape
     # C6 (metadata/result caching, `app.py:89-199` @st.cache_data): when
-    # run_document_pipeline(cache_intermediate=True) persisted the shared
-    # classify+extract stage, this is that frame — persist_pipeline_outputs*
-    # unpersists it after the multi-sink write so nothing leaks.
+    # run_document_pipeline(cache_intermediate=True) persisted the shared AI
+    # stage (class, extraction, OCR and summary per document), this is that
+    # frame — persist_pipeline_outputs* unpersists it after the multi-sink
+    # write so nothing leaks.
     cached: DataFrame | None = None
 
 
@@ -71,14 +75,6 @@ def _make_classify_extract(backend: DocumentAIBackend, prompts_map: dict[str, st
     return classify_extract
 
 
-def _prompts_df(spark: SparkSession, backend: DocumentAIBackend, classes: list[str]):
-    """Driver-side prompt-schema generation (AI5): one row per *class*, tiny
-    by construction -> broadcast dimension.  Mirrors the reference's
-    seed-if-unseen INSERT (`app.py:481-489`)."""
-    rows = [(c, canonical_json(backend.generate_prompts(c))) for c in sorted(classes)]
-    return spark.createDataFrame(rows, "class_name string, prompts string")
-
-
 def run_document_pipeline(
     docs: DataFrame,
     backend: DocumentAIBackend | None = None,
@@ -98,18 +94,19 @@ def run_document_pipeline(
     seed-if-unseen behavior.
 
     ``cache_intermediate`` is C6 (the reference memoizes re-read results
-    with ``@st.cache_data``, `app.py:89-199`): `processed` and
-    `extracted_fields` both descend from the classify+extract pandas-UDF
-    stage, so a multi-sink consumer (persist_pipeline_outputs writes three
-    tables = three actions) re-runs the expensive AI stage once per sink
-    unless it is persisted.  True persists that shared stage
-    (MEMORY_AND_DISK — spill-safe at scale) and hands the handle back via
+    with ``@st.cache_data``, `app.py:89-199`): `processed`,
+    `extracted_fields` and `ocr` are all projections of one AI stage
+    (classify+extract, OCR and summary pandas UDFs), so a multi-sink
+    consumer (persist_pipeline_outputs writes three tables = three actions)
+    re-runs the source scan and the AI stage once per sink unless it is
+    persisted.  True persists that shared stage (MEMORY_AND_DISK —
+    spill-safe at scale) and hands the handle back via
     ``PipelineOutputs.cached`` for the writer to unpersist.  Default False:
     a single-consumer caller (e.g. the EAV-only analytics queries) would pay
-    the materialization for nothing.
+    the materialization for nothing, and its plan keeps only the UDFs its
+    columns need.
     """
     b = backend or DeterministicStubBackend()
-    udfs = make_udfs(b)
     spark = docs.sparkSession
     from unstructured_data_pipeline_spark.dist import ensure_shipped
 
@@ -130,35 +127,38 @@ def run_document_pipeline(
     par = spark.sparkContext.defaultParallelism
     base = ensure_min_parallelism(base, target=par, threshold=max(2, par // 2))
 
-    # prompt dimension: provided schemas upserted over auto-generated ones.
+    # prompt dimension (AI5): provided schemas win over auto-generated ones.
     # The class domain of the stub classifier is closed (3 classes), so the
-    # dimension is enumerable driver-side without scanning the data — at
-    # scale this avoids a distinct() over the full corpus.
-    all_classes = ["invoice", "receipt", "contract"]
-    gen = _prompts_df(spark, b, all_classes)
+    # generated schemas are built driver-side without a Spark job — at scale
+    # this avoids a distinct() over the full corpus; caller schemas cost one
+    # collect of their (tiny) frame.
+    prompts_map = {
+        c: canonical_json(b.generate_prompts(c))
+        for c in ("contract", "invoice", "receipt")
+    }
     if prompts is not None:
-        from unstructured_data_pipeline_spark.operators.dml import upsert
+        prompts_map.update(prompts.select("class_name", "prompts").collect())
 
-        dim = upsert(gen, prompts.select("class_name", "prompts"), ["class_name"])
-    else:
-        dim = gen
-
-    # AI1+AI2 fused: one Arrow crossing instead of classify-UDF -> join ->
-    # extract-UDF; the text ships to Python once and both stages run in the
-    # same batch.
-    prompts_map = {r["class_name"]: r["prompts"] for r in dim.collect()}
-    ce = _make_classify_extract(b, prompts_map)(F.col("text")).alias("_ce")
-    extracted = base.withColumn("_ce", ce).select(
-        "file_ref",
-        "file_url",
-        "text",
-        F.col("_ce.class_name").alias("class_name"),
-        F.col("_ce.extraction_result").alias("extraction_result"),
+    # AI1+AI2 fused, AI3 and AI4 beside it in the same projection: Spark
+    # evaluates the three pandas UDFs in one Arrow pass, so the text ships
+    # to Python once and the stage carries results, not text.
+    ce = _make_classify_extract(b, prompts_map)(F.col("text"))
+    side = []
+    if with_ocr:
+        udfs = make_udfs(b)
+        side = [
+            udfs["ocr"](F.col("text")).alias("ocr"),
+            udfs["summarize"](F.col("text")).alias("summary"),
+        ]
+    stage = (
+        base.select("file_ref", "file_url", ce.alias("_ce"), *side)
+        .select("*", "_ce.*")
+        .drop("_ce")
     )
     if cache_intermediate:
-        extracted = extracted.persist()
+        stage = stage.persist()
 
-    processed = extracted.select(
+    processed = stage.select(
         "file_url",
         "file_ref",
         "class_name",
@@ -168,7 +168,7 @@ def run_document_pipeline(
 
     # EAV explode: response map -> one row per field (built-in, no UDTF)
     eav = (
-        extracted.select(
+        stage.select(
             "file_url",
             "file_ref",
             "class_name",
@@ -182,14 +182,12 @@ def run_document_pipeline(
         )
     )
 
-    # AI3 + AI4: OCR branch (independent of extract, like the reference's
-    # 2-worker side pool — here just a second branch off the same scan)
     if with_ocr:
-        ocr = base.select(
+        ocr = stage.select(
             F.col("file_ref").alias("file_name"),
             "file_ref",
-            udfs["ocr"](F.col("text").cast("binary")).alias("ocr"),
-            udfs["summarize"](F.col("text")).alias("summary"),
+            "ocr",
+            "summary",
             F.current_timestamp().cast("timestamp_ntz").alias("processed_at"),
         )
     else:
@@ -201,8 +199,43 @@ def run_document_pipeline(
         processed=processed,
         extracted_fields=eav,
         ocr=ocr,
-        cached=extracted if cache_intermediate else None,
+        cached=stage if cache_intermediate else None,
     )
+
+
+def _write_sinks(outputs: PipelineOutputs, tables, uploads, write) -> None:
+    """Run ``write(table, frame, keys)`` for the three document sinks, plus
+    the NEW_UPLOADS processed=TRUE upsert, concurrently (the targets are
+    disjoint tables, guide §2.6).  The shared cached stage is materialized
+    FIRST — concurrent sinks would otherwise race to compute the same cached
+    partitions and duplicate the AI stage — and that count doubles as the
+    empty-batch guard: no documents, no write, no new table version.  The
+    cache is unpersisted in every case."""
+    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    try:
+        if outputs.cached is not None and outputs.cached.count() == 0:
+            return
+        steps = [
+            partial(write, tables["documents_processed"], outputs.processed, ["file_ref"]),
+            partial(
+                write,
+                tables["documents_extracted_fields"],
+                outputs.extracted_fields,
+                ["file_ref", "field_name"],
+            ),
+            partial(write, tables["document_ocr"], outputs.ocr, ["file_name"]),
+        ]
+        if uploads is not None and "new_uploads" in tables:
+            done = uploads.withColumn("processed", F.lit(True))
+            steps.append(partial(tables["new_uploads"].upsert, done, ["file_name"]))
+        with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+            for f in [pool.submit(s) for s in steps]:
+                f.result()
+    finally:
+        if outputs.cached is not None:
+            outputs.cached.unpersist()
 
 
 def persist_pipeline_outputs(
@@ -213,9 +246,9 @@ def persist_pipeline_outputs(
     """The four persistence steps (`app.py:523-554`): three appends + the
     NEW_UPLOADS processed=TRUE upsert.  Round 13: the sinks are disjoint
     tables — the writes overlap (guide §2.6); per-table contents are
-    unchanged (the shared classify+extract stage is persisted by
-    ``cache_intermediate`` callers, so concurrent sinks share one
-    materialization rather than re-running the AI stage).
+    unchanged (the shared AI stage is persisted by ``cache_intermediate``
+    callers, so concurrent sinks share one materialization rather than
+    re-running the AI stage).
 
     Failure atomicity is WEAKER than the sequential form (ADVICE r13): if
     one sink fails, sibling writes already in flight still commit (futures
@@ -223,31 +256,7 @@ def persist_pipeline_outputs(
     whose appends succeeded.  Retry paths must use
     :func:`persist_pipeline_outputs_idempotent` (keyed upserts — replay
     converges regardless of which subset committed)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        # materialize the shared cached stage before the concurrent sinks
-        # (see persist_pipeline_outputs_idempotent)
-        if outputs.cached is not None:
-            outputs.cached.count()
-        steps = [
-            lambda: tables["documents_processed"].append(outputs.processed),
-            lambda: tables["documents_extracted_fields"].append(
-                outputs.extracted_fields
-            ),
-            lambda: tables["document_ocr"].append(outputs.ocr),
-        ]
-        if uploads is not None and "new_uploads" in tables:
-            done = uploads.withColumn("processed", F.lit(True))
-            steps.append(
-                lambda: tables["new_uploads"].upsert(done, ["file_name"])
-            )
-        with ThreadPoolExecutor(max_workers=len(steps)) as pool:
-            for f in [pool.submit(s) for s in steps]:
-                f.result()
-    finally:
-        if outputs.cached is not None:
-            outputs.cached.unpersist()
+    _write_sinks(outputs, tables, uploads, lambda t, df, _keys: t.append(df))
 
 
 def persist_pipeline_outputs_idempotent(
@@ -266,33 +275,4 @@ def persist_pipeline_outputs_idempotent(
     e.g. an ingest-date or a stable hash bucket of the document key —
     each batch rewrites only its touched partitions (O(touched+batch));
     Delta/Iceberg MERGE remains the multi-writer production swap-in."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        # round 13: disjoint target tables — the keyed upserts overlap
-        # (guide §2.6); per-table results identical.  Materialize the
-        # shared classify+extract cache FIRST: concurrent sinks would
-        # otherwise race to compute the same cached partitions and
-        # duplicate the AI stage instead of reusing one materialization.
-        if outputs.cached is not None:
-            outputs.cached.count()
-        steps = [
-            lambda: tables["documents_processed"].upsert(
-                outputs.processed, ["file_ref"]
-            ),
-            lambda: tables["documents_extracted_fields"].upsert(
-                outputs.extracted_fields, ["file_ref", "field_name"]
-            ),
-            lambda: tables["document_ocr"].upsert(outputs.ocr, ["file_name"]),
-        ]
-        if uploads is not None and "new_uploads" in tables:
-            done = uploads.withColumn("processed", F.lit(True))
-            steps.append(
-                lambda: tables["new_uploads"].upsert(done, ["file_name"])
-            )
-        with ThreadPoolExecutor(max_workers=len(steps)) as pool:
-            for f in [pool.submit(s) for s in steps]:
-                f.result()
-    finally:
-        if outputs.cached is not None:
-            outputs.cached.unpersist()
+    _write_sinks(outputs, tables, uploads, lambda t, df, keys: t.upsert(df, keys))

@@ -858,6 +858,13 @@ QUALIFY rk <= 20 ORDER BY rk
 """
 
 
+def _release_checkpoint(df) -> None:
+    """Free the blocks of a ``localCheckpoint``ed frame.  ``df.unpersist()``
+    does not: it only drops cache-manager entries, while a local checkpoint
+    is the block-managed RDD under the frame's ``LogicalRDD`` leaf."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def kcore_decomposition(spark, sf_dir):
     """Bounded k-core peeling (k=3, three rounds) on the part co-purchase
     graph — the community-density primitive behind spam-cluster and
@@ -897,8 +904,8 @@ def kcore_decomposition(spark, sf_dir):
         .persist()
     )
     rows = []
+    cur = edges
     try:
-        cur = edges
         for rnd in range(1, 4):
             deg = (
                 cur.select(F.col("u").alias("node"))
@@ -924,9 +931,13 @@ def kcore_decomposition(spark, sf_dir):
             )
             rows.append((rnd, n_kept, nxt.count()))
             kept.unpersist()
+            if cur is not edges:
+                _release_checkpoint(cur)
             cur = nxt
     finally:
         edges.unpersist()
+        if cur is not edges:
+            _release_checkpoint(cur)
     return spark.createDataFrame(
         [(int(r), int(n), int(e)) for r, n, e in rows],
         "round bigint, n_nodes bigint, n_edges bigint",

@@ -83,12 +83,10 @@ def start_intake_stream(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # cache_intermediate (C6): the idempotent writer below drives THREE
-        # actions off the shared classify+extract stage — persist it once per
-        # micro-batch instead of re-running the AI UDF per sink; the writer
-        # unpersists in its finally.
+        # actions off the shared AI stage — persist it once per micro-batch
+        # so the batch is read once; the writer's cache fill is also its
+        # empty-batch guard, and it unpersists in its finally.
         out = run_document_pipeline(batch_df, backend, cache_intermediate=True)
         # keyed upserts, not appends: a replayed batch rewrites its own rows
         persist_pipeline_outputs_idempotent(out, tables)
