@@ -543,6 +543,23 @@ def test_dedup_clusters_iteration_cap_raises_not_splits(spark):
     assert set(got.values()) == {0}
 
 
+def test_dedup_clusters_keeps_only_the_returned_generation(spark):
+    """Every superseded localCheckpoint generation (and the persisted edge
+    set) is freed: a 10-hop chain runs ~10 rounds but leaves at most one
+    new persistent RDD behind — the generation the result reads."""
+    from unstructured_data_pipeline_spark.operators.dedup import dedup_clusters
+
+    jsc = spark.sparkContext._jsc
+    chain = spark.createDataFrame([(i, i + 1) for i in range(10)], "a long, b long")
+    before = set(jsc.getPersistentRDDs().keys())
+    got = dedup_clusters(chain).collect()
+    assert {r["cluster_id"] for r in got} == {0}
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(chain, max_iter=3)
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+
+
 # session-window and range-join boundary semantics
 
 

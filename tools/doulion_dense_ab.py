@@ -12,8 +12,8 @@ turns the claim into numbers:
   ``spark.range`` + self-join — no RNG state, reproducible bit-for-bit).
   200 x 50 gives 245 k edges, 11.76 M wedges, 3.92 M triangles: wedge work
   >> edge build, the published target shape.
-* exact tier: compact-forward enumeration (degree-oriented wedge join +
-  closing-edge semi join) on the full edge set.
+* exact tier: compact-forward enumeration (``graph.count_triangles``, the
+  one the registry's triangle queries run) on the full edge set.
 * sampled tier: the same enumeration on the md5-coin edge subset at
   p = 1/4 (first hex digit < '4'), estimate = sampled / p^3 = 64x, exact
   integers — the same sampler contract as ``triangle_count_sampled``.
@@ -38,6 +38,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from unstructured_data_pipeline_spark.operators import graph
 from unstructured_data_pipeline_spark.session import get_spark
 
 
@@ -56,47 +57,15 @@ def planted_clique_edges(spark, n_cliques: int, clique_size: int) -> DataFrame:
     )
 
 
-def compact_forward_count(edges: DataFrame) -> tuple[int, int, int]:
-    """(n_triangles, n_edges, n_wedges) by compact-forward enumeration —
-    the same strategy as queries.triangle_count_copurchase: orient every
-    edge low-(degree, id) -> high, join wedges at the low endpoint, close
-    with a semi join.  n_wedges is the undirected sum deg*(deg-1)/2 (the
-    term DOULION's p^2 reduction attacks)."""
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e = (
-        edges.join(deg.withColumnRenamed("node", "u"), "u")
-        .withColumnRenamed("deg", "du")
-        .join(deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"), "v")
-    )
-    lo_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    o = e.select(
-        F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(lo_first, F.struct("du", "u"))
-        .otherwise(F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-        .alias("src_ord"),
-        F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(lo_first, F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-        .otherwise(F.struct("du", "u"))
-        .alias("dst_ord"),
-    )
-    o1 = o.select(F.col("src").alias("p"), F.col("dst").alias("x"), F.col("dst_ord").alias("xo"))
-    o2 = o.select(F.col("src").alias("p"), F.col("dst").alias("y"), F.col("dst_ord").alias("yo"))
-    wedges = o1.join(o2, "p").filter(F.col("xo") < F.col("yo"))
-    closing = o.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-    tri = wedges.join(closing, ["x", "y"], "left_semi").count()
-    stats = deg.agg(
-        F.coalesce(F.sum(F.expr("deg * (deg - 1) div 2")), F.lit(0))
-        .cast("long")
-        .alias("w")
-    ).collect()[0]
-    return int(tri), edges.count(), int(stats["w"])
+def tier_counts(edges: DataFrame) -> tuple[int, int, int]:
+    """(n_triangles, n_edges, n_wedges) through the queries' own operators
+    (``operators/graph.py``).  n_wedges is the undirected sum
+    deg*(deg-1)/2 (the term DOULION's p^2 reduction attacks)."""
+    deg = graph.degrees(edges)
+    wedges = deg.agg(
+        F.coalesce(F.sum(F.expr("deg * (deg - 1) div 2")), F.lit(0)).cast("long")
+    ).collect()[0][0]
+    return graph.count_triangles(edges, deg), edges.count(), int(wedges)
 
 
 def main() -> None:
@@ -110,7 +79,7 @@ def main() -> None:
         n_edges = edges.count()  # materialize BEFORE timing either tier
 
         t0 = time.perf_counter()
-        tri_exact, _, wedges_exact = compact_forward_count(edges)
+        tri_exact, _, wedges_exact = tier_counts(edges)
         wall_exact = time.perf_counter() - t0
 
         # p = 1/4: first md5 hex digit of "u-v" < '4'; estimate = 64x
@@ -127,7 +96,7 @@ def main() -> None:
             < "4"
         )
         t0 = time.perf_counter()
-        tri_sampled, n_sampled, wedges_sampled = compact_forward_count(sampled)
+        tri_sampled, n_sampled, wedges_sampled = tier_counts(sampled)
         wall_sampled = time.perf_counter() - t0
     finally:
         edges.unpersist()

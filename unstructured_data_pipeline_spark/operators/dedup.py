@@ -28,6 +28,7 @@ from unstructured_data_pipeline_spark.functions.text import (
     tokens_ws,
     word_shingles,
 )
+from unstructured_data_pipeline_spark.operators import graph
 from unstructured_data_pipeline_spark.operators.partitioning import (
     ensure_min_parallelism,
 )
@@ -532,7 +533,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     so 2-3 rounds in practice, ``max_iter`` bounds pathological chains.
     Each round is one groupBy shuffle on the node id; labels are
     checkpointed via localCheckpoint to keep the plan from growing
-    exponentially across iterations (classic iterative-algorithm trap).
+    exponentially across iterations (classic iterative-algorithm trap);
+    each new generation frees the one it supersedes, so only the returned
+    generation stays resident.
 
     If the loop exits by iteration cap while labels are still changing, the
     cluster ids are WRONG (a >max_iter-hop chain would be split), so that
@@ -548,49 +551,56 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .distinct()
         .persist()
     )
-    labels = (
-        edges.select(F.col("x").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["y"] == labels["id"])
-            .groupBy("x")
-            .agg(F.min("label").alias("nmin"))
+    try:
+        labels = (
+            edges.select(F.col("x").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["x"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-                # round 13: carry the per-row change flag through the
-                # checkpoint so convergence detection is a cheap scan of
-                # the materialized labels instead of a second join per
-                # round (old label is in scope right here)
-                (
+        gen = None  # the live checkpointed generation; each new one frees it
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges["y"] == labels["id"])
+                .groupBy("x")
+                .agg(F.min("label").alias("nmin"))
+            )
+            new_labels = (
+                labels.join(neighbor_min, labels["id"] == neighbor_min["x"], "left")
+                .select(
+                    "id",
                     F.least(
                         F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    )
-                    != F.col("label")
-                ).alias("_chg"),
+                    ).alias("label"),
+                    # carry the per-row change flag through the
+                    # checkpoint so convergence detection is a cheap scan of
+                    # the materialized labels instead of a second join per
+                    # round (old label is in scope right here)
+                    (
+                        F.least(
+                            F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
+                        )
+                        != F.col("label")
+                    ).alias("_chg"),
+                )
             )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    else:
+            new_labels = new_labels.localCheckpoint(eager=True)
+            if gen is not None:
+                graph.release_checkpoint(gen)
+            gen = new_labels
+            changed = new_labels.filter(F.col("_chg")).limit(1).count()
+            labels = new_labels.select("id", "label")
+            if changed == 0:
+                break
+        else:
+            if gen is not None:
+                graph.release_checkpoint(gen)
+            raise RuntimeError(
+                f"dedup_clusters did not converge within max_iter={max_iter} "
+                "rounds; resulting cluster ids would be split. Increase max_iter "
+                "(graph diameter exceeds it)."
+            )
+    finally:
         edges.unpersist()
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iter={max_iter} "
-            "rounds; resulting cluster ids would be split. Increase max_iter "
-            "(graph diameter exceeds it)."
-        )
-    edges.unpersist()
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

@@ -11,8 +11,8 @@ from .curation import ASSOCIATION_RULES_SQL, BM25_SQL, BUCKETED_JOIN_SQL, C4_FIL
 from .data_skipping_ann import BINARY_HAMMING_SQL, COLBERT_MAXSIM_SQL, COMPACTION_SQL, DPP_SQL, JOIN_CARDINALITY_SQL, ORC_ROUNDTRIP_SQL, PSEUDONYMIZE_SQL, THETA_SETOPS_SQL, ZONEMAP_SQL, binary_quant_hamming_topk, colbert_maxsim_topk, compaction_report, dynamic_partition_pruning_report, join_cardinality_estimate, orc_roundtrip_report, pseudonymize_consistent_report, theta_sketch_setops, zonemap_pruning_report
 from .dedup_text import BPE_TOKENIZE_SQL, CLUSTERS_SQL, CURATION_SQL, DECONTAM_SQL, DEDUP_EXACT_SQL, DEDUP_MINHASH_RECALL_SQL, DEDUP_MINHASH_SQL, DEDUP_SIMHASH_SQL, DOMAIN_QUOTA_SQL, EMB_QUANT_SQL, INCREMENTAL_DEDUP_SQL, KMEANS_SQL, KMV_SQL, MIXTURE_SQL, PACK_SQL, QUALITY_WEIGHTED_SQL, REPETITION_SQL, STRATIFIED_SAMPLE_SQL, TEXT_LANG_SQL, TEXT_QUALITY_SQL, TOKEN_COUNTS_SQL, bpe_tokenize_report, corpus_curation_report, decontam_benchmark_overlap, dedup_clusters_report, dedup_exact_groups, dedup_minhash_lsh, dedup_minhash_recall, dedup_simhash, domain_quota_cap, embedding_quantize_int8, incremental_dedup_report, kmeans_embeddings_clusters, kmv_distinct_sketch, pack_context_windows, quality_weighted_sample, source_mixture_weights, stratified_sample_documents, text_lang_id, text_quality_metrics, text_repetition_metrics, token_counts
 from .doc_pipeline import CLASSIFY_SUMMARY_SQL, FIELD_FLATTEN_SQL, HISTORY_CLASS_SUMMARY_SQL, HISTORY_DOCS_SQL, PIPELINE_EAV_SQL, PIPELINE_WIDE_SQL, SUMMARIZE_SQL, history_class_summary, history_documents_current, history_field_flatten_filtered, pipeline_classify_summary, pipeline_extract_eav, pipeline_extract_wide, summarize_documents
-from .gdpr_lifecycle import GDPR_LIFECYCLE_SQL, TRIANGLE_SAMPLED_SQL, gdpr_erasure_lifecycle, triangle_count_sampled
-from .ir_graph_analytics import BENFORD_SQL, BIGRAM_COLLOCATIONS_SQL, BITMAP_INDEX_SQL, CUBE_SQL, CUSUM_SQL, DRIFT_SHARE_SQL, ENCODING_ADVISOR_SQL, EQUIDEPTH_HISTOGRAM_SQL, EVENT_TRANSITION_SQL, FD_AUDIT_SQL, FREQUENT_SEQUENCES_SQL, FUZZY_LINKAGE_SQL, GAP_FILLED_HOURLY_SQL, GDPR_ERASURE_SQL, INTERARRIVAL_SQL, INVERTED_INDEX_SQL, KCORE_SQL, K_ANONYMITY_SQL, NATION_PROFILE_SIM_SQL, NDCG_MRR_SQL, RAKE_SQL, REFERENTIAL_INTEGRITY_SQL, SKEW_ADVISOR_SQL, SKYLINE_SQL, TRIANGLE_COUNT_SQL, VOCAB_GROWTH_SQL, WEIGHTED_MEDIAN_SQL, WINDOW_RANK_SQL, benford_first_digit_audit, bigram_collocations_topk, bitmap_index_report, cube_returnflag_status, cusum_changepoint_hourly, drift_share_report, encoding_advisor_report, equidepth_histogram_orders, event_interarrival_histogram, event_transition_matrix, events_gap_filled_hourly, fd_violation_audit, frequent_event_sequences, fuzzy_record_linkage, gdpr_erasure_cascade, inverted_index_report, k_anonymity_audit, kcore_decomposition, nation_profile_similarity, ndcg_mrr_eval, rake_keyphrases, referential_integrity_audit, skew_advisor_report, skyline_parts_2d, triangle_count_copurchase, vocab_growth_report, weighted_median_by_flag, window_rank_functions_suite
+from .gdpr_lifecycle import GDPR_LIFECYCLE_SQL, gdpr_erasure_lifecycle
+from .ir_graph_analytics import BENFORD_SQL, BIGRAM_COLLOCATIONS_SQL, BITMAP_INDEX_SQL, CUBE_SQL, CUSUM_SQL, DRIFT_SHARE_SQL, ENCODING_ADVISOR_SQL, EQUIDEPTH_HISTOGRAM_SQL, EVENT_TRANSITION_SQL, FD_AUDIT_SQL, FREQUENT_SEQUENCES_SQL, FUZZY_LINKAGE_SQL, GAP_FILLED_HOURLY_SQL, GDPR_ERASURE_SQL, INTERARRIVAL_SQL, INVERTED_INDEX_SQL, KCORE_SQL, K_ANONYMITY_SQL, NATION_PROFILE_SIM_SQL, NDCG_MRR_SQL, RAKE_SQL, REFERENTIAL_INTEGRITY_SQL, SKEW_ADVISOR_SQL, SKYLINE_SQL, TRIANGLE_COUNT_SQL, TRIANGLE_SAMPLED_SQL, VOCAB_GROWTH_SQL, WEIGHTED_MEDIAN_SQL, WINDOW_RANK_SQL, benford_first_digit_audit, bigram_collocations_topk, bitmap_index_report, cube_returnflag_status, cusum_changepoint_hourly, drift_share_report, encoding_advisor_report, equidepth_histogram_orders, event_interarrival_histogram, event_transition_matrix, events_gap_filled_hourly, fd_violation_audit, frequent_event_sequences, fuzzy_record_linkage, gdpr_erasure_cascade, inverted_index_report, k_anonymity_audit, kcore_decomposition, nation_profile_similarity, ndcg_mrr_eval, rake_keyphrases, referential_integrity_audit, skew_advisor_report, skyline_parts_2d, triangle_count_copurchase, triangle_count_sampled, vocab_growth_report, weighted_median_by_flag, window_rank_functions_suite
 from .lookups_joins import ANTI_JOIN_SQL, CUSTOMER_ORDER_STATS_SQL, FILTER_PRED_SQL, POINT_LOOKUP_SQL, SEMI_JOIN_SQL, anti_join_modest_customers, customer_order_stats, filter_predicates_customers, point_lookup_customer, semi_join_big_spenders
 from .relational_breadth import ANN_IVF_SQL, ANN_PQ_RECALL_SQL, ANN_PQ_SQL, ANN_PQ_SUBSPACE_SQL, BLOOM_PRUNE_SQL, BOILERPLATE_SQL, CATALOG_COUNTS_SQL, CDC_SQL, CENTROIDS_SQL, CROSSTAB_SQL, DEDUP_CONTAINMENT_SQL, DEDUP_NGRAM_SQL, DML_DELETE_APPEND_SQL, DML_UPSERT_SQL, EMB_NEARDUP_SQL, ENTROPY_SQL, EXACT_SUBSTRING_SQL, EXPORT_ROUNDTRIP_SQL, FINGERPRINT_SQL, FULL_OUTER_SQL, FUNNEL_SQL, FUZZY_NAME_SQL, HEAVY_HITTERS_SQL, HISTOGRAM_SQL, HYBRID_SQL, IVM_ROLLUP_SQL, LM_PERPLEXITY_SQL, MERGE_PARTITIONED_SQL, NATION_SHARE_SQL, PERCENTILES_SQL, PII_SQL, PROFILE_SQL, PROMPT_NORM_SQL, Q10_SQL, Q13_SQL, Q14_SQL, Q15_SQL, Q16_SQL, Q17_SQL, Q18_SQL, Q22_SQL, Q2_SQL, Q4_SQL, Q6_SQL, Q7_SQL, Q9_SQL, RETENTION_SQL, ROLLUP_SQL, SCHEMA_EVOLUTION_SQL, SEMDEDUP_SQL, SESSION_DEFAULTS_SQL, SETOPS_SQL, TABLE_CHANGES_SQL, TFIDF_SQL, TIME_TRAVEL_SQL, TOP_TERMS_SQL, VARIANT_PROPS_SQL, WAREHOUSE_BOOTSTRAP_SQL, WINDOW_FRAMES_SQL, WINNOW_SQL, ZORDER_SQL, ann_ivf_topk, ann_pq_recall, ann_pq_subspace_topk, ann_pq_topk_contract, bloom_join_prune_report, boilerplate_removal_report, catalog_counts_report, corpus_top_terms, dedup_containment_pairs, dedup_embedding_cosine, dedup_ngram_jaccard, dedup_ngram_jaccard_prefix, dml_delete_append_lifecycle, dml_upsert_customers, doc_chunking_cdc, doc_fingerprint_rolling, doc_winnowing_fingerprints, docs_lang_source_crosstab, embedding_label_centroids, exact_substring_dedup_report, export_roundtrip_report, full_outer_nation_balance, funnel_signup_view_purchase, fuzzy_name_dedup, heavy_hitters_contract, history_documents_sparksql, hybrid_search_topk, ivm_rollup_maintenance, lm_perplexity_filter, merge_partitioned_lifecycle, nation_revenue_share, orders_value_histogram, percentiles_by_segment, profile_customer_columns, prompt_normalization_contract, q10_returned_items, q13_order_count_distribution, q14_promo_revenue, q15_top_suppliers, q16_part_supplier_counts, q17_small_quantity_revenue, q18_big_orders, q22_global_sales_opportunity, q2_min_cost_supplier, q4_priority_with_late_items, q6_forecast_revenue, q7_nation_pair_volume, q9_profit_by_nation_year, retention_cohorts, rollup_order_stats, schema_evolution_report, semdedup_report, session_defaults_contract, setops_customer_years, table_changes_stream_report, table_time_travel_report, text_clean_pii, text_token_entropy, tfidf_top_term_per_doc, variant_native_extract, variant_props_extract, warehouse_bootstrap_report, window_frames_running, zorder_layout_report
 from .similarity_events import ASOF_SQL, EMB_TOPK_SQL, HOURLY_MAVG_SQL, HOURLY_SQL, RRF_FUSION_SQL, SESSIONIZE_SQL, asof_purchase_last_view, emb_cosine_topk, events_hourly_counts, events_hourly_moving_avg, rrf_hybrid_fusion, sessionize_summary
@@ -326,7 +326,7 @@ DEMOS = {
 # Round 4's hand-curated priority list forgot its own six newest entries
 # (VERDICT r4 "What's missing" #1), so from round 5 the rotation is
 # COMPUTED from the tracked CORRECTNESS_r*.json artifacts at import time:
-#   1. entries whose implementation or oracle changed this round
+#   1. entries whose implementation or oracle changed in the latest change
 #      (hand-listed below — the only part that must be curated, because
 #      only the author knows what changed before the driver runs);
 #   2. entries with no green driver row in any tracked round (new or
@@ -336,32 +336,20 @@ DEMOS = {
 # Entries past the ~50 budget simply wait; the computed order guarantees
 # they are the FRESHEST-evidence entries, never forgotten ones.
 
-# Entries whose own implementation (and execution path shape) changed this
-# round.  VERDICT r13 #2 (rotation honesty): the round-13 optimizer changed
-# the execution path of six queries that were NOT in the driver's 50-query
-# window either round, so their oracle evidence was builder-side only —
-# they lead round 14's rotation so the driver re-proves them.  Entries
-# touched by round-14 optimizations are appended as they land.
-_R14_CHANGED = [
-    # r13-optimized, driver-unverified (VERDICT r13 correctness-gap list)
-    "semdedup_report",
-    "ann_ivf_topk",
-    "gdpr_erasure_lifecycle",
-    "warehouse_bootstrap_report",
-    "streaming_intake_eav",
-    "streaming_interval_join_attribution",
-    # round-14 optimization-touched execution paths (semdedup_report and
-    # streaming_interval_join_attribution above also ride r14 changes)
-    "incremental_dedup_report",
+# Entries whose own implementation (and execution path shape) changed in
+# the latest change set: they lead the rotation so their oracle evidence is
+# re-proved before anything else.  Replace the list with each change set's
+# own; the assert below keeps every name a live registry entry.
+_CHANGED_PATHS = [
+    # the shared co-purchase graph operator (operators/graph.py)
+    "association_rules_report",
     "kcore_decomposition",
     "triangle_count_copurchase",
     "triangle_count_sampled",
-    "kmeans_embeddings_clusters",
-    "ann_pq_subspace_topk",
-    "ann_pq_recall",
-    "ann_pq_topk_contract",
+    # dedup_clusters now frees each superseded checkpoint generation
+    "dedup_clusters_report",
+    "dedup_end_to_end_report",
 ]
-
 
 
 def _latest_green_rounds() -> dict[str, int]:
@@ -403,7 +391,7 @@ def _latest_green_rounds() -> dict[str, int]:
 
 
 def _freshness_order(names: list[str]) -> list[str]:
-    changed = [n for n in _R14_CHANGED if n in names]
+    changed = [n for n in _CHANGED_PATHS if n in names]
     green = _latest_green_rounds()
     pos = {n: i for i, n in enumerate(names)}
     rest = sorted(
@@ -413,7 +401,7 @@ def _freshness_order(names: list[str]) -> list[str]:
     return changed + rest
 
 
-assert set(_R14_CHANGED) <= set(REGISTRY), sorted(set(_R14_CHANGED) - set(REGISTRY))
+assert set(_CHANGED_PATHS) <= set(REGISTRY), sorted(set(_CHANGED_PATHS) - set(REGISTRY))
 REGISTRY = {n: REGISTRY[n] for n in _freshness_order(list(REGISTRY))}
 
 

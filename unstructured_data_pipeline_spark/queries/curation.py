@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+from unstructured_data_pipeline_spark.operators import graph
+
 from ._common import F, TX, Window, _c, _cents, _events, _heavy, _t
 from .dedup_text import _kmv_val_spark, _kmv_val_sql
 
@@ -1162,28 +1164,20 @@ FROM per_user GROUP BY day ORDER BY day
 def association_rules_report(spark, sf_dir):
     """Market-basket association rules — the Apriori output surface
     (support, confidence, lift) for part pairs co-ordered in the same
-    order.  Pair counts come from the bounded per-order self-join
-    (`pagerank_part_copurchase`'s edge build: fan-out capped by order
-    size); item supports are one groupBy broadcast back onto the pairs;
+    order.  Pair counts come from the bounded per-order self-join of
+    `operators/graph.py` (fan-out capped by order size), emitted in both
+    directions — a directed pair (a, b) shares exactly the baskets of
+    (b, a); item supports are one groupBy broadcast back onto the pairs;
     the basket total is a single-row broadcast scalar.  Confidence and
     lift are single divisions of exact integers, rounded to 6 — ranks
     deterministic with id tie-breaks.  Output: top-20 rules by lift
     among pairs with support ≥ 3 baskets.  At 100 TB nothing is
     quadratic: pairs are order-local, supports are broadcast-sized."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.distinct()
+    baskets = graph.baskets(_t(spark, sf_dir, "lineitem"))
     n_orders = baskets.select("l_orderkey").distinct().count()
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("ante"),
-            F.col("b.l_partkey").alias("cons"),
-        )
-        .agg(F.count(F.lit(1)).alias("pair_n"))
-        .filter(F.col("pair_n") >= 3)
+    up = graph.basket_pairs(baskets).filter(F.col("pair_n") >= 3)
+    pairs = up.selectExpr("u AS ante", "v AS cons", "pair_n").union(
+        up.selectExpr("v AS ante", "u AS cons", "pair_n")
     )
     items = baskets.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("item_n"))
     ruled = (

@@ -1,4 +1,4 @@
-"""round 8: executed GDPR lifecycle + sampled triangles
+"""Executed GDPR lifecycle: real deletes on scratch warehouse tables
 
 (split from the flat queries.py, round 10 - content unchanged)"""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 from ._common import F, _events, _par, _t
 
 # ---------------------------------------------------------------------------
-# round 8: executed GDPR lifecycle (real deletes on disk) + sampled triangles
+# executed GDPR lifecycle (real deletes on disk)
 
 
 def gdpr_erasure_lifecycle(spark, sf_dir):
@@ -222,138 +222,3 @@ SELECT * FROM (
             (SELECT 1 FROM keep_c WHERE keep_c.c_custkey = keep_e.user_id))
 ) ORDER BY table_name
 """
-
-
-def triangle_count_sampled(spark, sf_dir):
-    """DOULION edge-sampled triangle counting (Tsourakakis et al., KDD'09)
-    — the corpus-scale tier for `triangle_count_copurchase`, whose exact
-    wedge join is the one operator whose growth ACCELERATES per decade
-    (2.8x -> 4.9x, SCALE.md; VERDICT r7 Next #5).  Each edge of the same
-    support>=2 co-purchase graph survives with p = 1/2, decided by its own
-    md5 (deterministic, engine-independent — the same sampler contract as
-    `deterministic_sample_orders`), so the wedge join runs on ~p^2 of the
-    wedges and each triangle survives with p^3; the unbiased estimate is
-    sampled_count / p^3 = 8x, exact integer arithmetic in both engines.
-    The Spark side enumerates by COMPACT-FORWARD degree orientation (hub
-    fan-out bounded), the DuckDB oracle by canonical id order — two
-    strategies, one answer on the same sampled edge set.
-
-    Like the exact tier, the support-filtered edge set is PERSISTED so
-    the 60 M-row basket self-join that builds it runs ONCE; the sampling
-    then only pays the (tiny) filtered wedge join on top.  Measured
-    honestly (round 8, sf10): cached-exact 27.3 s vs cached-sampled
-    28.1 s — on THIS fixture graph (100 triangles, 140 k wedges) the
-    edge build dominates and sampling buys nothing; its value is the
-    wedge-dominated regime (triangle-dense graphs, the published DOULION
-    target), where the p^2 wedge reduction is the term that matters.
-    The estimator validated: est 96 vs 100 true at sf10."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # round 14 (guide §2.4, same change as kcore_decomposition): dedup the
-    # baskets AFTER one repartition on the join key so the aggregation and
-    # the self-join share a single exchange; identical distinct set.
-    baskets = (
-        li.repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.lit(1))
-        .select("l_orderkey", "l_partkey")
-    )
-    a = baskets.alias("a")
-    b = baskets.alias("b")
-    all_edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("pair_n"))
-        .filter(F.col("pair_n") >= 2)
-        .select("u", "v")
-        .persist()
-    )
-    try:
-        edges = all_edges
-        n_edges_total = edges.count()
-        # per-edge coin flip: first md5 hex digit of "u-v" < '8'  ->  p = 8/16
-        edges = edges.filter(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "-", F.col("u").cast("string"), F.col("v").cast("string")
-                    )
-                ),
-                1,
-                1,
-            )
-            < "8"
-        )
-        deg = (
-            edges.select(F.col("u").alias("node"))
-            .union(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        e = (
-            edges.join(deg.withColumnRenamed("node", "u"), "u")
-            .withColumnRenamed("deg", "du")
-            .join(
-                deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"),
-                "v",
-            )
-        )
-        lo_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        o = e.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(lo_first, F.struct("du", "u"))
-            .otherwise(F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-            .alias("src_ord"),
-            F.when(lo_first, F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-            .otherwise(F.struct("du", "u"))
-            .alias("dst_ord"),
-        )
-        o1 = o.select(
-            F.col("src").alias("p"), F.col("dst").alias("x"), F.col("dst_ord").alias("xo")
-        )
-        o2 = o.select(
-            F.col("src").alias("p"), F.col("dst").alias("y"), F.col("dst_ord").alias("yo")
-        )
-        wedges = o1.join(o2, "p").filter(F.col("xo") < F.col("yo"))
-        closing = o.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        tri = wedges.join(closing, ["x", "y"], "left_semi").count()
-        n_sampled = edges.count()
-    finally:
-        all_edges.unpersist()
-    return spark.createDataFrame(
-        [(int(n_edges_total), int(n_sampled), int(tri), int(8 * tri))],
-        "n_edges_total bigint, n_edges_sampled bigint,"
-        " n_triangles_sampled bigint, est_triangles bigint",
-    )
-
-
-TRIANGLE_SAMPLED_SQL = """
-WITH baskets AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-all_edges AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM baskets a JOIN baskets b ON a.l_orderkey = b.l_orderkey
-  WHERE a.l_partkey < b.l_partkey
-  GROUP BY u, v HAVING COUNT(*) >= 2
-),
-edges AS (
-  SELECT u, v FROM all_edges
-  WHERE substr(md5(CAST(u AS VARCHAR) || '-' || CAST(v AS VARCHAR)), 1, 1) < '8'
-),
-tri AS (
-  SELECT COUNT(*) AS n FROM edges e1
-  JOIN edges e2 ON e1.v = e2.u
-  JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
-)
-SELECT (SELECT COUNT(*) FROM all_edges) AS n_edges_total,
-       (SELECT COUNT(*) FROM edges) AS n_edges_sampled,
-       tri.n AS n_triangles_sampled,
-       CAST(8 * tri.n AS BIGINT) AS est_triangles
-FROM tri
-"""
-
-

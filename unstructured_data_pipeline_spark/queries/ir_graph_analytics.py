@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+from unstructured_data_pipeline_spark.operators import graph
+
 from ._common import F, SIM, TX, Window, _c, _cents, _events, _heavy, _t
 from .similarity_events import _DOT
 
@@ -217,15 +219,12 @@ FROM spine LEFT JOIN c ON spine.hour = c.hour ORDER BY spine.hour
 def triangle_count_copurchase(spark, sf_dir):
     """Degree-ordered triangle counting on the part co-purchase graph —
     the graph-analytics primitive behind clustering coefficients and
-    community detection.  Edges are order-local part pairs (fan-out
-    bounded by basket size, same build as `pagerank_part_copurchase`)
-    kept at support >= 2.  The wedge join uses the COMPACT-FORWARD
-    orientation: every edge points from its lower-(degree, id) endpoint
-    to the higher, so each triangle is enumerated exactly once at its
-    lowest-ordered vertex and the wedge fan-out is sum-of-squares of
-    FORWARD degrees — the classic trick that keeps a power-law hub from
-    exploding the join (a hub's forward degree is small because almost
-    all neighbors order below it).  The DuckDB oracle counts the same
+    community detection.  Edges are the distinct-basket part pairs of
+    `operators/graph.py` (order-local, fan-out bounded by basket size)
+    kept at support >= 2.  The wedge join (`graph.count_triangles`) uses
+    the COMPACT-FORWARD orientation, so each triangle is enumerated
+    exactly once at its lowest-(degree, id) vertex and a power-law hub
+    cannot explode the join.  The DuckDB oracle counts the same
     triangles by canonical id order (i<j<k) — two independent
     enumeration strategies, one answer.  Output: one row of graph stats
     with the global clustering coefficient.
@@ -237,66 +236,16 @@ def triangle_count_copurchase(spark, sf_dir):
     wall (measured round 8: 86.4 s -> 27.3 s with the cache, identical
     output).  The same reuse a cluster gets from checkpointing the edge
     list of a graph pipeline stage."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # round 14 (guide §2.4, same change as kcore_decomposition): dedup the
-    # baskets AFTER one repartition on the join key so the aggregation and
-    # the self-join share a single exchange; identical distinct set.
-    baskets = (
-        li.repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.lit(1))
-        .select("l_orderkey", "l_partkey")
-    )
-    a = baskets.alias("a")
-    b = baskets.alias("b")
+    li = _t(spark, sf_dir, "lineitem")
     edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("pair_n"))
+        graph.basket_pairs(graph.baskets(li))
         .filter(F.col("pair_n") >= 2)
         .select("u", "v")
         .persist()
     )
     try:
-        deg = (
-            edges.select(F.col("u").alias("node"))
-            .union(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        e = (
-            edges.join(deg.withColumnRenamed("node", "u"), "u")
-            .withColumnRenamed("deg", "du")
-            .join(
-                deg.withColumnRenamed("node", "v").withColumnRenamed("deg", "dv"),
-                "v",
-            )
-        )
-        lo_first = (F.col("du") < F.col("dv")) | (
-            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-        )
-        o = e.select(
-            F.when(lo_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(lo_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(lo_first, F.struct("du", "u"))
-            .otherwise(F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-            .alias("src_ord"),
-            F.when(lo_first, F.struct(F.col("dv").alias("du"), F.col("v").alias("u")))
-            .otherwise(F.struct("du", "u"))
-            .alias("dst_ord"),
-        )
-        o1 = o.select(
-            F.col("src").alias("p"), F.col("dst").alias("x"), F.col("dst_ord").alias("xo")
-        )
-        o2 = o.select(
-            F.col("src").alias("p"), F.col("dst").alias("y"), F.col("dst_ord").alias("yo")
-        )
-        wedges = o1.join(o2, "p").filter(F.col("xo") < F.col("yo"))
-        closing = o.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        tri = wedges.join(closing, ["x", "y"], "left_semi").count()
+        deg = graph.degrees(edges)
+        tri = graph.count_triangles(edges, deg)
         stats = deg.agg(
             F.count(F.lit(1)).alias("n_nodes"),
             F.sum(F.expr("deg * (deg - 1) div 2")).cast("long").alias("n_wedges"),
@@ -350,6 +299,87 @@ SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
        CAST(3 * tri.n * 1000000
             // GREATEST((SELECT SUM(deg * (deg - 1) // 2) FROM deg), 1)
             AS BIGINT) AS global_cc_micro
+FROM tri
+"""
+
+
+def triangle_count_sampled(spark, sf_dir):
+    """DOULION edge-sampled triangle counting (Tsourakakis et al., KDD'09)
+    — the corpus-scale tier for `triangle_count_copurchase`, whose exact
+    wedge join is the one operator whose growth ACCELERATES per decade
+    (2.8x -> 4.9x, SCALE.md).  Each edge of the same
+    support>=2 co-purchase graph survives with p = 1/2, decided by its own
+    md5 (deterministic, engine-independent — the same sampler contract as
+    `deterministic_sample_orders`), so the wedge join runs on ~p^2 of the
+    wedges and each triangle survives with p^3; the unbiased estimate is
+    sampled_count / p^3 = 8x, exact integer arithmetic in both engines.
+    The Spark side runs the exact tier's own compact-forward enumeration
+    (`graph.count_triangles`), the DuckDB oracle canonical id order — two
+    strategies, one answer on the same sampled edge set.
+
+    Like the exact tier, the support-filtered edge set is PERSISTED so
+    the 60 M-row basket self-join that builds it runs ONCE; the sampling
+    then only pays the (tiny) filtered wedge join on top.  Measured
+    honestly (sf10): cached-exact 27.3 s vs cached-sampled
+    28.1 s — on THIS fixture graph (100 triangles, 140 k wedges) the
+    edge build dominates and sampling buys nothing; its value is the
+    wedge-dominated regime (triangle-dense graphs, the published DOULION
+    target), where the p^2 wedge reduction is the term that matters.
+    The estimator validated: est 96 vs 100 true at sf10."""
+    li = _t(spark, sf_dir, "lineitem")
+    all_edges = (
+        graph.basket_pairs(graph.baskets(li))
+        .filter(F.col("pair_n") >= 2)
+        .select("u", "v")
+        .persist()
+    )
+    try:
+        n_edges_total = all_edges.count()
+        # per-edge coin flip: first md5 hex digit of "u-v" < '8'  ->  p = 8/16
+        edges = all_edges.filter(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        "-", F.col("u").cast("string"), F.col("v").cast("string")
+                    )
+                ),
+                1,
+                1,
+            )
+            < "8"
+        )
+        tri = graph.count_triangles(edges, graph.degrees(edges))
+        n_sampled = edges.count()
+    finally:
+        all_edges.unpersist()
+    return spark.createDataFrame(
+        [(int(n_edges_total), int(n_sampled), int(tri), int(8 * tri))],
+        "n_edges_total bigint, n_edges_sampled bigint,"
+        " n_triangles_sampled bigint, est_triangles bigint",
+    )
+
+
+TRIANGLE_SAMPLED_SQL = """
+WITH baskets AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+all_edges AS (
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM baskets a JOIN baskets b ON a.l_orderkey = b.l_orderkey
+  WHERE a.l_partkey < b.l_partkey
+  GROUP BY u, v HAVING COUNT(*) >= 2
+),
+edges AS (
+  SELECT u, v FROM all_edges
+  WHERE substr(md5(CAST(u AS VARCHAR) || '-' || CAST(v AS VARCHAR)), 1, 1) < '8'
+),
+tri AS (
+  SELECT COUNT(*) AS n FROM edges e1
+  JOIN edges e2 ON e1.v = e2.u
+  JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
+)
+SELECT (SELECT COUNT(*) FROM all_edges) AS n_edges_total,
+       (SELECT COUNT(*) FROM edges) AS n_edges_sampled,
+       tri.n AS n_triangles_sampled,
+       CAST(8 * tri.n AS BIGINT) AS est_triangles
 FROM tri
 """
 
@@ -858,13 +888,6 @@ QUALIFY rk <= 20 ORDER BY rk
 """
 
 
-def _release_checkpoint(df) -> None:
-    """Free the blocks of a ``localCheckpoint``ed frame.  ``df.unpersist()``
-    does not: it only drops cache-manager entries, while a local checkpoint
-    is the block-managed RDD under the frame's ``LogicalRDD`` leaf."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
 def kcore_decomposition(spark, sf_dir):
     """Bounded k-core peeling (k=3, three rounds) on the part co-purchase
     graph — the community-density primitive behind spam-cluster and
@@ -872,33 +895,13 @@ def kcore_decomposition(spark, sf_dir):
     every edge touching them; the loop is a FIXED number of DataFrame
     rounds (same bounded-iteration shape as `recursive_bom_closure_report`
     and `pagerank_part_copurchase` — no driver-side data, only per-round
-    COUNT scalars).  The edge build is persisted once and reused across
+    COUNT scalars).  The edge build (`operators/graph.py`) is persisted once and reused across
     rounds.  The DuckDB oracle peels the same three rounds as nested
     CTEs — two engines, one fixed-point prefix."""
     k = 3
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # round 14 (guide §2.4 "share one exchange"): dedup the baskets with a
-    # groupBy AFTER repartitioning on the join key — HashPartitioning on
-    # l_orderkey satisfies the (l_orderkey, l_partkey) aggregation's
-    # clustering AND the self-join's requirement, so the basket relation
-    # is shuffled ONCE (a bare .distinct() hash-partitioned on both
-    # columns and the join then re-shuffled it by l_orderkey).  Same
-    # distinct set, same edges.
-    baskets = (
-        li.repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_partkey")
-        .agg(F.lit(1))
-        .select("l_orderkey", "l_partkey")
-    )
-    a = baskets.alias("a")
-    b = baskets.alias("b")
+    li = _t(spark, sf_dir, "lineitem")
     edges = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .agg(F.count(F.lit(1)).alias("pair_n"))
+        graph.basket_pairs(graph.baskets(li))
         .filter(F.col("pair_n") >= 2)
         .select("u", "v")
         .persist()
@@ -907,12 +910,7 @@ def kcore_decomposition(spark, sf_dir):
     cur = edges
     try:
         for rnd in range(1, 4):
-            deg = (
-                cur.select(F.col("u").alias("node"))
-                .union(cur.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-            )
+            deg = graph.degrees(cur)
             kept = deg.filter(F.col("deg") >= k).select("node").persist()
             n_kept = kept.count()
             # round 14 (guide §3.3 / §5, the dedup_clusters pattern): each
@@ -932,12 +930,12 @@ def kcore_decomposition(spark, sf_dir):
             rows.append((rnd, n_kept, nxt.count()))
             kept.unpersist()
             if cur is not edges:
-                _release_checkpoint(cur)
+                graph.release_checkpoint(cur)
             cur = nxt
     finally:
         edges.unpersist()
         if cur is not edges:
-            _release_checkpoint(cur)
+            graph.release_checkpoint(cur)
     return spark.createDataFrame(
         [(int(r), int(n), int(e)) for r, n, e in rows],
         "round bigint, n_nodes bigint, n_edges bigint",
