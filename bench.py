@@ -286,7 +286,7 @@ def main() -> None:
         "streaming_intake_eav",        # full streaming intake drain
         "corpus_curation_report",      # end-to-end curation funnel
         "decontam_benchmark_overlap",  # 8-gram benchmark-overlap join
-        "kmeans_embeddings_clusters",  # 3 distributed Lloyd's passes
+        "kmeans_embeddings_clusters",  # md5 sample + driver Lloyd + 1 assign
         "pack_context_windows",        # greedy packing via applyInPandas
         "stratified_sample_documents", # per-stratum hash sampling
         # round-3 additions

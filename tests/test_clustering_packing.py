@@ -46,54 +46,6 @@ def test_kmeans_separates_known_clusters(spark):
     assert sizes == [6, 6]
 
 
-def test_kmeans_local_sample_fit_matches_distributed(spark):
-    """Round-13: with ``train_cap`` set the Lloyd iterations run driver-side
-    on the collected sample (`_local_lloyd`).  When the cap covers the whole
-    corpus the sample IS the corpus, so the local fit must reproduce the
-    legacy distributed fit bit-for-bit — assignments identical."""
-    from unstructured_data_pipeline_spark.operators.clustering import (
-        kmeans_assignments,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    n = emb.count()
-    local = kmeans_assignments(
-        emb, "vec_id", "embedding", k=4, iters=2, train_cap=n + 1
-    )
-    dist = kmeans_assignments(
-        emb, "vec_id", "embedding", k=4, iters=2, train_cap=None
-    )
-    a = sorted((r["id"], r["k"]) for r in local.collect())
-    b = sorted((r["id"], r["k"]) for r in dist.collect())
-    assert a == b and len(a) == n
-
-
-def test_pq_subspace_local_fit_matches_loop(spark):
-    """Round-13: per-subspace PQ's driver-side sample fit must reproduce
-    the distributed per-iteration loop (train_cap=None covering the corpus
-    makes both paths see the same training set)."""
-    from unstructured_data_pipeline_spark.operators.pq import (
-        pq_fit_encode_subspace,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    n = emb.count()
-    codes_a, cbs_a, _ = pq_fit_encode_subspace(
-        emb, "vec_id", "embedding", dim=64, m=4, k=8, iters=2,
-        train_cap=n + 1,
-    )
-    codes_b, cbs_b, _ = pq_fit_encode_subspace(
-        emb, "vec_id", "embedding", dim=64, m=4, k=8, iters=2,
-        train_cap=None,
-    )
-    assert cbs_a == cbs_b
-    ra = sorted(tuple(r) for r in codes_a.collect())
-    rb = sorted(tuple(r) for r in codes_b.collect())
-    assert ra == rb
-    codes_a.unpersist()
-    codes_b.unpersist()
-
-
 def test_kmeans_fewer_points_than_k_is_empty(spark):
     df = spark.createDataFrame(
         [(1, [1.0, 2.0])], "id long, v array<double>"
@@ -319,51 +271,127 @@ def test_pq_adc_single_scan(spark, sf_dir):
 
 
 def test_sql_rendered_argmin_matches_python_mirror(spark):
-    """Round 14: `_assign` / `_assign_multi` render their k argmin entries
-    as one SQL string (driver build went ~1.9s -> ~0.5s).  Pin the parsed
-    expression's semantics against the independent pure-Python mirror
-    (`_local_argmin` — same IEEE op sequence, same low-index tie-break)
-    row by row on real fixture vectors."""
+    """Both shapes of the one SQL argmin renderer (`argmin_sql`) agree row
+    by row with the NumPy mirror ``sq_dists(...).argmin(axis=1)`` on real
+    fixture vectors: literal centroid arrays (k-means, shared PQ) and
+    ``element_at(<array of arrays>, sub + 1)`` centroids (per-subspace
+    PQ, checked through the codes it encodes)."""
+    import numpy as np
+
     from unstructured_data_pipeline_spark.operators.clustering import (
-        _assign,
-        _local_argmin,
-        _local_lloyd,
+        kmeans_assignments,
+        lloyd_fit,
         quantize_vec,
+        sq_dists,
+        train_sample,
     )
-    from unstructured_data_pipeline_spark.operators.pq import _assign_multi
+    from unstructured_data_pipeline_spark.operators.pq import (
+        pq_fit_encode_subspace,
+    )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     pts = emb.select(
         F.col("vec_id").alias("id"),
         quantize_vec(F.col("embedding"), 1000).alias("x"),
     )
-    rows = [(r["id"], list(r["x"])) for r in pts.collect()]
-    d = len(rows[0][1])
+    rows = sorted((r["id"], list(r["x"])) for r in pts.collect())
+    ids = [i for i, _ in rows]
+    x = np.array([v for _, v in rows], dtype=np.int64)
+    k, m = 4, 4
+    dsub = x.shape[1] // m
+    sample = train_sample(pts, k)
 
-    # shared-codebook shape (clustering._assign)
-    cents = _local_lloyd(rows, k=4, iters=2)
-    got = {
-        (r["id"], r["k"]) for r in _assign(pts, cents, d).collect()
-    }
-    want = {(i, _local_argmin(x, cents)) for i, x in rows}
-    assert got == want
+    # literal shape: every corpus point against one fit
+    got = sorted(
+        (r["id"], r["k"])
+        for r in kmeans_assignments(emb, "vec_id", "embedding", k=k).collect()
+    )
+    want = sq_dists(x, *lloyd_fit(sample, k, 2)).argmin(axis=1)
+    assert got == list(zip(ids, want.tolist()))
 
-    # per-subspace shape (pq._assign_multi): m codebooks over slices
-    m = 4
-    dsub = d // m
-    sub_cents = [
-        _local_lloyd(
-            [(i, x[s * dsub : (s + 1) * dsub]) for i, x in rows], k=4, iters=2
-        )
+    # subspace-indexed shape: code c{s} = argmin against subspace s's fit
+    codes, _, _ = pq_fit_encode_subspace(
+        emb, "vec_id", "embedding", dim=64, m=m, k=k, iters=2
+    )
+    got_m = sorted(tuple(r) for r in codes.collect())
+    cols = [
+        sq_dists(
+            x[:, s * dsub : (s + 1) * dsub],
+            *lloyd_fit(sample[:, s * dsub : (s + 1) * dsub], k, 2),
+        ).argmin(axis=1)
         for s in range(m)
     ]
-    got_m = {
-        (r["id"], r["sub"], r["kk"])
-        for r in _assign_multi(pts, sub_cents, dsub, m).collect()
-    }
-    want_m = {
-        (i, s, _local_argmin(x[s * dsub : (s + 1) * dsub], sub_cents[s]))
-        for i, x in rows
-        for s in range(m)
-    }
-    assert got_m == want_m
+    assert got_m == [
+        (i, *(int(c[r]) for c in cols)) for r, i in enumerate(ids)
+    ]
+    codes.unpersist()
+
+
+def test_sq_dists_casts_before_dividing_like_spark(spark):
+    """Above 2^53 the exact Python ``int / int`` rounds once, but Spark
+    (and DuckDB) cast the sum to double first.  `sq_dists` must give the
+    engine's double bit for bit: x=0, s=2^53+1, n=3."""
+    import numpy as np
+
+    from unstructured_data_pipeline_spark.operators.clustering import (
+        argmin_sql,
+        sq_dists,
+    )
+
+    s = 2**53 + 1
+    got = sq_dists(
+        np.array([[0]], dtype=np.int64),
+        np.array([[s]], dtype=np.int64),
+        np.array([3], dtype=np.int64),
+    )[0, 0]
+    # the distance sub-expression of the rendered argmin (one centroid)
+    expr = argmin_sql("x", [(f"array({s}L)", "3L")], 1)
+    assert expr.endswith("['k']")
+    df = spark.createDataFrame([([0],)], "x array<bigint>")
+    want = df.select(F.expr(expr[: -len("['k']")] + "['d']")).first()[0]
+    assert got.hex() == float(want).hex()
+    assert got != (0 - s / 3) ** 2  # the exact divide would differ here
+
+
+def test_lloyd_fit_above_2_53_matches_spark_argmin(spark):
+    """Centroid sums past 2^53 need no guard: `lloyd_fit` (which once raised
+    OverflowError here) assigns exactly like `argmin_sql` evaluated by
+    Spark, iteration by iteration, with the integer state rebuilt by a
+    Spark aggregation."""
+    import numpy as np
+
+    from unstructured_data_pipeline_spark.operators.clustering import (
+        argmin_sql,
+        array_sql,
+        lloyd_fit,
+        sq_dists,
+    )
+
+    big = 2**51
+    rows = np.array(
+        [[big + 3 * i, -big - 7 * i] for i in range(6)]
+        + [[-big + 5 * i, big + 11 * i] for i in range(6)]
+        + [[big + 1, big + 2], [3, -4]],
+        dtype=np.int64,
+    )
+    k, iters = 3, 3
+    df = spark.createDataFrame(
+        [(i, r.tolist()) for i, r in enumerate(rows)], "id long, x array<bigint>"
+    )
+    sums, counts = rows[:k].copy(), np.ones(k, dtype=np.int64)
+    for it in range(iters + 1):
+        cents = [(array_sql(s), f"{int(n)}L") for s, n in zip(sums, counts)]
+        a = df.select("id", "x", F.expr(argmin_sql("x", cents, 2)).alias("k"))
+        got = [r["k"] for r in a.orderBy("id").collect()]
+        assert got == sq_dists(rows, sums, counts).argmin(axis=1).tolist()
+        if it == iters:
+            break
+        for r in a.groupBy("k").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.element_at("x", 1)).alias("s0"),
+            F.sum(F.element_at("x", 2)).alias("s1"),
+        ).collect():
+            sums[r["k"]], counts[r["k"]] = [r["s0"], r["s1"]], r["n"]
+    assert np.abs(sums).max() >= 2**53
+    fit = lloyd_fit(rows, k, iters)
+    assert (fit[0] == sums).all() and (fit[1] == counts).all()

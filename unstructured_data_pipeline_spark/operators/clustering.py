@@ -1,10 +1,9 @@
-"""Distributed Lloyd's k-means over an embedding column.
+"""Exact k-means over an embedding column: one driver-side Lloyd fit on a
+bounded sample, one distributed argmin over the corpus.
 
 The reference app has no clustering; this extends the training-data-pipeline
-surface (semantic clustering for data mixing / diversity sampling) in the
-standard distributed shape Spark MLlib uses: centroids live on the driver
-(k*d values, tiny), each iteration is ONE distributed aggregation, points
-never leave the executors.
+surface (semantic clustering for data mixing / diversity sampling, SemDeDup
+blocking, the PQ codebooks of ``operators/pq.py``).
 
 Engineered for *cross-engine exactness* so the whole iterative algorithm can
 carry a DuckDB oracle (see ``queries.kmeans_embeddings_clusters``):
@@ -12,36 +11,27 @@ carry a DuckDB oracle (see ``queries.kmeans_embeddings_clusters``):
 * Embeddings are quantized to integers (``floor(v*scale + 0.5)``, the cents
   trick) at ingest; centroid state is an EXACT integer pair
   ``(elementwise sum, count)`` — aggregation order cannot change it.
-* Assignment distances are computed in doubles, but from exact integers via
-  the same IEEE op sequence in both engines: ``s[i]/n`` (one double divide),
-  subtract, square, then a *sequential* left fold over the dimensions
-  (Spark ``aggregate`` HOF == DuckDB ``list_reduce``; the ``0.0`` initial
-  accumulator is exact because every term is ``>= +0.0``).
-* Ties in the argmin break on the lower cluster index (struct ordering).
+* Distances are doubles computed from those integers by one op sequence in
+  every engine: cast the sum and the count to double, divide, subtract,
+  square, then a *sequential* left fold over the dimensions from ``0.0``
+  (Spark ``aggregate`` == DuckDB ``list_reduce`` == :func:`sq_dists`).
+  Spark's ``bigint / bigint`` and DuckDB's ``BIGINT / BIGINT`` both cast
+  before they divide, so the three agree for any sum below 2^63.
+* Ties in the argmin break on the lower cluster index.
 
-Scale notes (100 TB): with ``train_cap`` set (the recommended shape), the
-corpus is scanned exactly TWICE regardless of ``iters`` — once by the
-TakeOrdered md5-sample extraction (per-partition heaps, ``cap`` rows of
-state) and once by the final full-corpus assignment; every Lloyd iteration
-runs on the cached ≤``cap``-row sample.  A codebook/centroid set is a
-statistic a bounded sample estimates as well as the full corpus, so this
-is strictly better than the legacy ``train_cap=None`` path (``iters``
-full scans).  Per iteration the only distributed work is one
-map-side-combinable groupBy on ``k`` producing ``k`` rows of ``d+1``
-aggregates — no shuffle of point data, no cross join, nothing quadratic.
-The driver holds ``k*(d+1)`` integers.  Empty clusters carry the previous
-centroid forward (deterministic, mirrors the oracle's LEFT JOIN COALESCE).
+Scale shape (100 TB): the corpus is scanned exactly TWICE whatever
+``iters`` is — once by the TakeOrdered md5-sample extraction (per-partition
+heaps of ``100 * k`` rows) and once by the final row-local assignment,
+whose centroids enter the plan as literals.  The Lloyd iterations run on
+the collected sample in NumPy (``O(100*k * k * d)``), and empty clusters
+carry the previous centroid forward (the oracle's LEFT JOIN COALESCE).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-RESULT_SCHEMA = (
-    "k int, n_points bigint, dim1_sum bigint, total_q_sum bigint, "
-    "centroid_dim1 double"
-)
 
 
 def quantize_vec(vec, scale: int):
@@ -53,108 +43,72 @@ def quantize_vec(vec, scale: int):
     )
 
 
-def _local_argmin(x: list[int], centroids: list[tuple[list[int], int]]) -> int:
-    """Driver-side mirror of one `_assign` row: the same IEEE op sequence
-    (``s[i]/n`` double divide, subtract, square, sequential left fold from
-    ``0.0``) and the same low-index tie-break.  Python floats ARE IEEE
-    doubles and int->float conversion is exact below 2^53, so the chosen
-    cluster (and the downstream integer centroid state) is bit-identical
-    to the distributed expression."""
-    best_d = None
-    best_j = 0
-    for j, (s, n) in enumerate(centroids):
-        acc = 0.0
-        for i in range(len(x)):
-            diff = x[i] - s[i] / n
-            acc += diff * diff
-        if best_d is None or acc < best_d:
-            best_d = acc
-            best_j = j
-    return best_j
+def train_sample(pts: DataFrame, k: int) -> np.ndarray:
+    """The training set of an ``(id, x)`` frame: the ``100 * k`` points
+    whose id string has the lowest md5 hex, ties on id (the oracle's
+    ``ORDER BY md5 ... LIMIT``), collected as an int64 matrix in id order.
+    One TakeOrdered pass, bounded by construction."""
+    rows = (
+        pts.orderBy(F.md5(F.col("id").cast("string")), "id")
+        .limit(100 * k)
+        .collect()
+    )
+    rows.sort(key=lambda r: r["id"])
+    return np.array([r["x"] for r in rows], dtype=np.int64)
 
 
-def _local_lloyd(
-    rows: list[tuple[int, list[int]]],
-    k: int,
-    iters: int,
-) -> list[tuple[list[int], int]]:
-    """Driver-side Lloyd's over an already-collected bounded training
-    sample: seeds = the ``k`` lowest-id rows, each iteration assigns every
-    sample point (`_local_argmin`) and rebuilds the exact integer
-    ``(elementwise sum, count)`` state; empty clusters carry the previous
-    centroid forward — the same update rule as the distributed loop and
-    the DuckDB oracle.
+def sq_dists(x: np.ndarray, s: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """``(points, clusters)`` squared distances of integer points ``x`` to
+    the centroids ``s / n`` — the engine's op sequence exactly: cast sum and
+    count to double, divide, subtract, square, and fold the dimensions left
+    to right from ``0.0`` (not ``sum(axis=...)``, which sums pairwise)."""
+    c = s.astype(np.float64) / n.astype(np.float64)[:, None]
+    xf = x.astype(np.float64)
+    acc = np.zeros((len(xf), len(c)))
+    for i in range(c.shape[1]):
+        diff = xf[:, i, None] - c[:, i]
+        acc = acc + diff * diff
+    return acc
 
-    Round-13 optimization (guide §1.2 "the distributed algorithm", §5
-    "the driver should do almost no data work" — and this is almost none):
-    the training set is ALREADY bounded (``train_cap`` rows, collected
-    anyway in spirit — seeds and per-iteration k-row updates came to the
-    driver before), and profiling showed each distributed in-sample
-    iteration cost 1.5-3 s of pure driver plan-compile (k wide literal
-    fold expressions re-analyzed/re-codegen'd per iteration, on a
-    2000-row frame).  Fitting the collected sample locally is
-    O(cap*k*d) ≈ 2M float ops — microseconds — and bit-identical; the
-    corpus-scale work (sample extraction + final full-corpus encode)
-    stays distributed and unchanged."""
-    rows = sorted(rows, key=lambda r: r[0])
-    centroids: list[tuple[list[int], int]] = [
-        (list(x), 1) for _, x in rows[:k]
-    ]
+
+def lloyd_fit(
+    rows: np.ndarray, k: int, iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Lloyd's over an id-ordered int64 sample (see :func:`train_sample`):
+    seeds are the ``k`` lowest-id rows; each iteration assigns every row
+    (first index wins a tie) and rebuilds the exact int64 ``(sums,
+    counts)``; an empty cluster keeps its previous centroid."""
+    sums, counts = rows[:k].copy(), np.ones(k, dtype=np.int64)
     for _ in range(iters):
-        sums: dict[int, tuple[list[int], int]] = {}
-        for _, x in rows:
-            j = _local_argmin(x, centroids)
-            if j in sums:
-                s, n = sums[j]
-                for i, v in enumerate(x):
-                    s[i] += v
-                sums[j] = (s, n + 1)
-            else:
-                sums[j] = (list(x), 1)
-        centroids = [sums.get(j, centroids[j]) for j in range(k)]
-        # ADVICE r13: bit-identity with the distributed `_assign` holds only
-        # while every |sum| < 2^53 — Python divides the exact big int in one
-        # rounding, Spark casts bigint->double FIRST (a second rounding).
-        # Guard the bound instead of silently diverging; callers hitting it
-        # must shrink train_cap/scale or use train_cap=None (distributed
-        # fit, which matches the oracle's own double-cast arithmetic).
-        for s, _n in centroids:
-            if any(abs(v) >= 2**53 for v in s):
-                raise OverflowError(
-                    "_local_lloyd centroid sum exceeds 2^53: the driver-side "
-                    "fit would diverge from the distributed/oracle "
-                    "arithmetic; lower train_cap or quantization scale, or "
-                    "pass train_cap=None for the distributed fit"
-                )
-    return centroids
+        a = sq_dists(rows, sums, counts).argmin(axis=1)
+        n = np.bincount(a, minlength=k)
+        s = np.zeros_like(sums)
+        np.add.at(s, a, rows)
+        hit = n > 0
+        sums[hit], counts[hit] = s[hit], n[hit]
+    return sums, counts
 
 
-def _assign(pts: DataFrame, centroids: list[tuple[list[int], int]], d: int) -> DataFrame:
-    """Add the argmin cluster id.  One struct-array min per row — row-local,
-    zero shuffle; centroids enter the plan as array *literals* (constant,
-    not re-built per element).
+def array_sql(v) -> str:
+    """An integer vector as a Spark SQL ``array<bigint>`` literal."""
+    return "array(" + ", ".join(f"{int(e)}L" for e in v) + ")"
 
-    Round 14: the k entries are rendered as ONE SQL string parsed JVM-side
-    instead of composed Column-by-Column — the py4j round-trips of the old
-    build cost ~1 s of driver time per call (the plan is rebuilt every
-    run; see `pq._assign_multi` for the measured twin).  Tree unchanged:
-    array<bigint> centroid literals, int count (PySpark's lit() int32
-    rule mirrored), the identical divide/subtract/multiply/sequential-fold
-    op sequence, low-index struct-min tie-break — assignments
-    bit-identical (pinned by tests + the hash-gated oracles)."""
+
+def argmin_sql(vec: str, cents: list[tuple[str, str]], d: int) -> str:
+    """SQL for the index of the nearest centroid to the ``d``-dim integer
+    array column ``vec``.  ``cents[j]`` is centroid ``j``'s sum array and
+    count as SQL text.  The k entries are rendered as ONE string parsed
+    JVM-side (one py4j call instead of one per ``functions.*`` node);
+    ``array_min`` over ``(d, k)`` structs breaks ties on the lower index."""
     entries = []
-    for j, (s, n) in enumerate(centroids):
-        s_lit = "array(" + ", ".join(f"{int(v)}L" for v in s) + ")"
-        n_i = int(n)
-        n_lit = str(n_i) if -(2**31) <= n_i < 2**31 else f"{n_i}L"
-        diff = f"(element_at(x, i) - element_at({s_lit}, i) / {n_lit})"
+    for j, (s, n) in enumerate(cents):
+        diff = f"(element_at({vec}, i) - element_at({s}, i) / {n})"
         dist = (
             f"aggregate(sequence(1, {d}), 0.0D, "
             f"(acc, i) -> acc + ({diff} * {diff}))"
         )
         entries.append(f"named_struct('d', {dist}, 'k', {j})")
-    kk = f"array_min(array({', '.join(entries)}))['k']"
-    return pts.select("id", "x", F.expr(kk).alias("k"))
+    return f"array_min(array({', '.join(entries)}))['k']"
 
 
 def kmeans_assignments(
@@ -164,76 +118,24 @@ def kmeans_assignments(
     k: int = 8,
     iters: int = 2,
     scale: int = 1000,
-    train_cap: int | None = None,
 ) -> DataFrame:
-    """Run ``iters`` Lloyd updates seeded from the ``k`` lowest-id points
-    and return the final assignment ``(id, x, k)`` — the building block
+    """Fit ``iters`` Lloyd updates on the md5 training sample
+    (:func:`train_sample`, :func:`lloyd_fit`) and return the final
+    full-corpus assignment ``(id, x, k)`` — the building block
     :func:`kmeans_embeddings` aggregates into stats and SemDeDup blocks
-    near-dup search on.  Same exactness contract as the module docstring
-    (quantized integers, sequential-fold distances, low-index tie-break).
-
-    ``train_cap`` bounds the TRAINING set: the Lloyd iterations (and the
-    seeds) run on the ``train_cap`` points with the lowest
-    ``md5(CAST(id AS STRING))`` — a deterministic, engine-mirrorable
-    sample (DuckDB: ``ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT cap``).
-    The FINAL assignment always covers the full corpus.  A codebook is a
-    statistic a bounded sample estimates as well as the corpus does, so at
-    100 TB this turns ``iters`` full-corpus scans into ONE TakeOrdered
-    pass (per-partition heaps, ``cap`` rows of driver/executor state) plus
-    in-sample iterations, leaving a single full scan for the final encode.
-    ``None`` keeps the legacy full-corpus fit (exact same results when
-    ``train_cap >= |corpus|``, since the sample is then the whole set and
-    seeds re-sort by id)."""
-    spark = df.sparkSession
+    near-dup search on.  Fewer than ``k`` sampled points -> empty."""
     pts = df.select(
         F.col(id_col).alias("id"), quantize_vec(F.col(vec_col), scale).alias("x")
     )
-    if train_cap is not None:
-        # bounded-sample fit: extract the deterministic md5-prefix sample
-        # (ONE TakeOrdered pass — per-partition heaps, ``cap`` rows of
-        # state), collect it (bounded by construction), and run the Lloyd
-        # iterations DRIVER-SIDE (`_local_lloyd` — bit-identical argmin /
-        # integer state; round-13: each distributed in-sample iteration
-        # was 1.5-3 s of plan-compile on a <=cap-row frame).  The final
-        # full-corpus assignment below stays the one distributed scan.
-        sample = [
-            (r["id"], list(r["x"]))
-            for r in pts.orderBy(
-                F.md5(F.col("id").cast("string")), "id"
-            ).limit(train_cap).collect()
-        ]
-        if len(sample) < k:  # degenerate input (fewer points than clusters)
-            return spark.createDataFrame([], "id long, x array<bigint>, k int")
-        d = len(sample[0][1])
-        centroids = _local_lloyd(sample, k, iters)
-        return _assign(pts, centroids, d)
-
-    train = pts.persist()
-    try:
-        seeds = train.orderBy("id").limit(k).collect()
-        if len(seeds) < k:  # degenerate input (fewer points than clusters)
-            return spark.createDataFrame([], "id long, x array<bigint>, k int")
-        d = len(seeds[0]["x"])
-        centroids: list[tuple[list[int], int]] = [
-            (list(r["x"]), 1) for r in seeds
-        ]
-        for _ in range(iters):
-            assigned = _assign(train, centroids, d)
-            rows = assigned.groupBy("k").agg(
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(F.element_at("x", i + 1)).alias(f"s{i}")
-                    for i in range(d)
-                ],
-            ).collect()
-            updated = {
-                r["k"]: ([r[f"s{i}"] for i in range(d)], r["n"]) for r in rows
-            }
-            centroids = [updated.get(j, centroids[j]) for j in range(k)]
-    finally:
-        train.unpersist(blocking=False)
-
-    return _assign(pts, centroids, d)
+    sample = train_sample(pts, k)
+    if len(sample) < k:  # degenerate input (fewer points than clusters)
+        return df.sparkSession.createDataFrame(
+            [], "id long, x array<bigint>, k int"
+        )
+    sums, counts = lloyd_fit(sample, k, iters)
+    cents = [(array_sql(s), f"{int(n)}L") for s, n in zip(sums, counts)]
+    kk = argmin_sql("x", cents, sample.shape[1])
+    return pts.select("id", "x", F.expr(kk).alias("k"))
 
 
 def kmeans_embeddings(
@@ -243,15 +145,11 @@ def kmeans_embeddings(
     k: int = 8,
     iters: int = 2,
     scale: int = 1000,
-    train_cap: int | None = None,
 ) -> DataFrame:
-    """Run ``iters`` Lloyd updates seeded from the ``k`` lowest-id points,
-    then return per-cluster stats of the final assignment:
+    """Per-cluster stats of :func:`kmeans_assignments`:
     ``(k, n_points, dim1_sum, total_q_sum, centroid_dim1)`` — all exact
-    integers except the final rounded centroid coordinate.  ``train_cap``
-    = deterministic md5-sample training bound (see
-    :func:`kmeans_assignments`)."""
-    final = kmeans_assignments(df, id_col, vec_col, k, iters, scale, train_cap)
+    integers except the final rounded centroid coordinate."""
+    final = kmeans_assignments(df, id_col, vec_col, k, iters, scale)
     return (
         final.groupBy("k")
         .agg(

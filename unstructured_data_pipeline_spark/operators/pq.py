@@ -11,40 +11,107 @@ query stays un-quantized; per (subspace, code) squared distances are
 precomputed into a tiny table, so scoring a document is ``m`` table lookups
 + ``m-1`` additions — no float vector is ever read at query time.
 
-This implementation uses a SHARED codebook across subspaces (all subvector
-slices train ONE k-means; a documented simplification of classic per-
-subspace codebooks that keeps the entire train->encode->search pipeline a
-single deterministic Lloyd's chain, mirrored unrolled in the DuckDB
-oracle).  Exactness contract is inherited from `operators/clustering.py`:
-integer-quantized inputs, exact integer centroid state, sequential-fold
-double distances, low-index tie-breaks.
+Two codebook shapes share one fit and one encode: :func:`pq_fit_encode`
+trains ONE codebook on all subvector slices (a documented simplification
+that keeps train->encode->search a single Lloyd's chain, mirrored unrolled
+in the DuckDB oracle); :func:`pq_fit_encode_subspace` trains one codebook
+per subspace (Jégou et al. proper).  Exactness contract and fit are
+`operators/clustering.py`'s: integer-quantized inputs, exact integer
+centroid state, cast-first sequential-fold double distances, low-index
+tie-breaks.
 
-Scale shape (100 TB): training = `clustering.kmeans_assignments` over a
-deterministic md5-prefix sample (``train_cap`` slices — a 16-entry
-codebook is a statistic a bounded sample estimates as well as the corpus,
-so the corpus is scanned twice total: sample extraction + final encode,
-never ``iters`` times); encode = row-local argmin against literal
-centroids; the codebook is ``k*(d/m+1)`` integers on the driver (a
-bounded collect, like IVF's centroids); ADC scoring is ONE scan of the
-codes relation however many queries there are — the per-(query, subspace,
-code) distance tables ride along as one broadcast relation, each code row
-explodes per query, and per-qid top-k is one rank window that Spark's
-WindowGroupLimit pushdown splits into partial per-partition heaps before
-the exchange, so only ``|Q| * partitions * k`` rows shuffle.
+Scale shape (100 TB): training reads one md5-prefix sample of ``100 * k``
+rows (a codebook is a statistic a bounded sample estimates as well as the
+corpus), so the corpus is scanned twice total: sample extraction + final
+encode.  The encode is a row-local argmin per slice; the codebook is
+``k*(d/m+1)`` integers per subspace on the driver (a bounded collect, like
+IVF's centroids); ADC scoring is ONE scan of the codes relation however
+many queries there are — the per-(query, subspace, code) distance tables
+ride along as one broadcast relation, each code row explodes per query,
+and per-qid top-k is one rank window that Spark's WindowGroupLimit
+pushdown splits into partial per-partition heaps before the exchange, so
+only ``|Q| * partitions * k`` rows shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.operators.clustering import (
-    _local_lloyd,
-    kmeans_assignments,
+    argmin_sql,
+    array_sql,
+    lloyd_fit,
     quantize_vec,
+    sq_dists,
+    train_sample,
 )
 
-__all__ = ["pq_fit_encode", "pq_adc_topk"]
+__all__ = ["pq_fit_encode", "pq_fit_encode_subspace", "pq_adc_topk"]
+
+
+def _slices(pts: DataFrame, dsub: int, m: int) -> DataFrame:
+    """``(id, sub, sv)``: the ``m`` contiguous slices of every ``x`` as one
+    row-local explode — one corpus scan, input partitioning kept."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(s).alias("sub"),
+                F.slice("x", s * dsub + 1, dsub).alias("sv"),
+            )
+            for s in range(m)
+        ]
+    )
+    return pts.select("id", F.explode(subs).alias("e")).select(
+        "id", F.col("e.sub").alias("sub"), F.col("e.sv").alias("sv")
+    )
+
+
+def _encode(pts: DataFrame, cents: list[tuple[str, str]], dsub: int, m: int):
+    """Encode every vector of ``pts`` against ``cents`` (SQL text, see
+    `clustering.argmin_sql`).  Returns the cached, materialized codes
+    ``(id, c0..c{m-1})`` and the exact per-(sub, code) state as
+    ``[(sub, code, sums, count)]`` — the codebook ADC scores against."""
+    final = _slices(pts, dsub, m).select(
+        "id", "sub", "sv", F.expr(argmin_sql("sv", cents, dsub)).alias("kk")
+    ).persist()
+    try:
+        rows = final.groupBy("sub", "kk").agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(F.element_at("sv", i + 1)).alias(f"s{i}") for i in range(dsub)],
+        ).collect()  # bounded: m*k rows of dsub+1 integers
+        # `codes` stays cached for the caller (it is the PQ index — callers
+        # search it repeatedly)
+        codes = final.groupBy("id").agg(
+            *[
+                F.max(F.when(F.col("sub") == s, F.col("kk"))).alias(f"c{s}")
+                for s in range(m)
+            ]
+        ).persist()
+        codes.count()  # materialize while `final` is cached
+    finally:
+        final.unpersist(blocking=False)
+    state = [
+        (r["sub"], r["kk"], [r[f"s{i}"] for i in range(dsub)], r["n"])
+        for r in rows
+    ]
+    return codes, state
+
+
+def _points(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int, scale: int):
+    """``(id, x)`` quantized points, checking that ``m`` divides ``dim``."""
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+    return df.select(
+        F.col(id_col).alias("id"), quantize_vec(F.col(vec_col), scale).alias("x")
+    )
+
+
+def _no_codes(df: DataFrame, m: int) -> DataFrame:
+    return df.sparkSession.createDataFrame(
+        [], "id long, " + ", ".join(f"c{s} int" for s in range(m))
+    )
 
 
 def pq_fit_encode(
@@ -56,7 +123,6 @@ def pq_fit_encode(
     k: int = 16,
     iters: int = 2,
     scale: int = 1000,
-    train_cap: int | None = "auto",
 ):
     """Train the shared codebook and encode every vector.
 
@@ -64,78 +130,23 @@ def pq_fit_encode(
     ``(id, c0..c{m-1})`` (one small int per subspace), ``codebook`` is a
     dict ``code -> (sum_vector, count)`` of EXACT integers (centroid ==
     elementwise ``sum/count``, the same half-step-after-assignment state
-    the oracle derives), and ``dsub = dim // m``.
-
-    ``train_cap`` bounds the Lloyd's TRAINING set to the ``cap`` slice
-    rows with the lowest ``md5(CAST(pid AS STRING))`` (deterministic,
-    mirrored by the oracle's ``ORDER BY md5(...) LIMIT cap``); the encode
-    still covers every vector.  Default ``"auto"`` = ``100 * k`` — the
-    bounded-sample codebook fit that keeps a 100 TB corpus at two scans
-    total instead of ``iters`` full passes.  ``None`` = legacy full fit.
+    the oracle derives), and ``dsub = dim // m``.  All slices feed ONE
+    Lloyd's fit, sampled by the composite slice id ``pid = id*m + sub``.
     """
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if train_cap == "auto":
-        train_cap = 100 * k
-    dsub = dim // m
-    # composite-keyed slice relation: pid = id*m + sub — all subspaces feed
-    # ONE Lloyd's run (shared codebook).  Row-local explode, not a union of
-    # m selects: ONE corpus scan and the input partitioning carries through
-    # (a union would scan the corpus m times and multiply the partition
-    # count by m — pure overhead at any scale)
-    vec = F.col(vec_col).cast("array<double>")
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(sub).alias("sub"),
-                F.slice(vec, sub * dsub + 1, dsub).alias("sv"),
-            )
-            for sub in range(m)
-        ]
+    pts, dsub = _points(df, id_col, vec_col, dim, m, scale), dim // m
+    pids = _slices(pts, dsub, m).select(
+        (F.col("id") * m + F.col("sub")).alias("id"), F.col("sv").alias("x")
     )
-    sliced = df.select(
-        F.col(id_col).alias("bid"), F.explode(subs).alias("e")
-    ).select(
-        (F.col("bid") * m + F.col("e.sub")).alias("pid"),
-        F.col("e.sv").alias("sv"),
-    )
-    assigned = kmeans_assignments(
-        sliced, "pid", "sv", k=k, iters=iters, scale=scale,
-        train_cap=train_cap,
-    ).persist()
-    try:
-        # final-cluster integer state: the codebook ADC scores against
-        cb_rows = assigned.groupBy("k").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum(F.element_at("x", i + 1)).alias(f"s{i}")
-                for i in range(dsub)
-            ],
-        ).collect()  # bounded: k rows of dsub+1 integers
-        codebook = {
-            r["k"]: ([r[f"s{i}"] for i in range(dsub)], r["n"]) for r in cb_rows
-        }
-        codes = (
-            assigned.select(
-                F.floor(F.col("id") / m).cast("long").alias("vid"),
-                F.pmod(F.col("id"), m).cast("int").alias("sub"),
-                F.col("k").alias("code"),
-            )
-            .groupBy("vid")
-            .agg(
-                *[
-                    F.max(
-                        F.when(F.col("sub") == s, F.col("code"))
-                    ).alias(f"c{s}")
-                    for s in range(m)
-                ]
-            )
-            .withColumnRenamed("vid", "id")
-        )
-        codes = codes.persist()
-        codes.count()  # materialize while `assigned` is still cached
-    finally:
-        assigned.unpersist(blocking=False)
+    sample = train_sample(pids, k)
+    if len(sample) < k:  # degenerate input (fewer slices than clusters)
+        return _no_codes(df, m), {}, dsub
+    sums, counts = lloyd_fit(sample, k, iters)
+    cents = [(array_sql(s), f"{int(n)}L") for s, n in zip(sums, counts)]
+    codes, state = _encode(pts, cents, dsub, m)
+    codebook: dict = {}
+    for _, code, s, n in state:
+        s0, n0 = codebook.get(code, ([0] * dsub, 0))
+        codebook[code] = ([a + b for a, b in zip(s0, s)], n0 + n)
     return codes, codebook, dsub
 
 
@@ -148,206 +159,45 @@ def pq_fit_encode_subspace(
     k: int = 16,
     iters: int = 2,
     scale: int = 1000,
-    train_cap: int | None = "auto",
 ):
     """Classic per-subspace PQ (Jégou et al. 2011 proper): ONE codebook per
-    subspace — m independent Lloyd's runs over the m slice relations, then
-    an id-equi-join of the m assignment frames into the codes table.
+    subspace — m independent Lloyd's fits over the slices of one md5 sample
+    (keyed by id, so the m training sets are the same rows sliced m ways),
+    then one encode whose argmin picks subspace ``sub``'s centroids at run
+    time.
 
     Returns ``(codes, codebooks, dsub)`` where ``codebooks`` is a LIST of
     per-subspace ``code -> (sum_vector, count)`` dicts (pass straight to
     :func:`pq_adc_topk`).  vs the shared-codebook variant: m× the codebook
-    memory (still tiny) and m joins at encode time; each subspace's
-    codebook models its own slice distribution — the standard
-    quantization-error win on real embedding distributions.  Measured
-    caveat (bench `pq_subspace_recall`): on the SMALL near-isotropic
-    fixture corpus the shared codebook actually wins recall@5 (it trains
-    on m× the slices for the same k) — the per-subspace advantage needs
-    per-subspace structure and enough training data, which is exactly the
-    100 TB regime.  At scale the encode joins co-locate after one
-    repartition on the id.  ``train_cap`` as in :func:`pq_fit_encode`
-    (``"auto"`` = ``100 * k`` md5-sampled training rows per subspace)."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if train_cap == "auto":
-        train_cap = 100 * k
-    dsub = dim // m
-    spark = df.sparkSession
-    empty_schema = "id long, " + ", ".join(f"c{s} int" for s in range(m))
-    pts = df.select(
-        F.col(id_col).alias("id"),
-        quantize_vec(F.col(vec_col), scale).alias("x"),
-    )
-    # ONE md5-sample serves every subspace (the sample is keyed by id, so
-    # the m per-subspace training sets are the same rows sliced m ways) —
-    # the earlier shape ran m independent kmeans_assignments chains, i.e.
-    # m sample-extraction scans + m final-assignment scans + an m-way
-    # id-join at encode, glued by driver threads; this one is 2 corpus
-    # scans TOTAL (sample + encode), no joins, no threads, same results
-    # bit-for-bit (same sample ids, same seeds, same fold order).
-    #
-    # Round-13: with ``train_cap`` set, the sample is COLLECTED once and
-    # the m per-subspace Lloyd chains run driver-side on its slices
-    # (`clustering._local_lloyd` — bit-identical argmin and integer
-    # state).  The distributed in-sample iterations they replace were
-    # pure plan-compile overhead: 1.5-3 s per iteration of re-analyzing/
-    # re-codegen'ing the k-wide literal fold expressions against a
-    # <=cap-row frame.  ``train_cap=None`` (unbounded legacy fit) keeps
-    # the distributed loop.
-    if train_cap is not None:
-        sample = [
-            (r["id"], list(r["x"]))
-            for r in pts.orderBy(F.md5(F.col("id").cast("string")), "id")
-            .limit(train_cap)
-            .collect()
-        ]
-        if len(sample) < k:  # degenerate input (fewer points than clusters)
-            return (
-                spark.createDataFrame([], empty_schema),
-                [dict() for _ in range(m)],
-                dsub,
-            )
-        cents = [
-            _local_lloyd(
-                [(i, x[s * dsub : (s + 1) * dsub]) for i, x in sample],
-                k,
-                iters,
-            )
-            for s in range(m)
-        ]
-    else:
-        train = pts.persist()
-        try:
-            seeds = train.orderBy("id").limit(k).collect()
-            if len(seeds) < k:  # degenerate input
-                return (
-                    spark.createDataFrame([], empty_schema),
-                    [dict() for _ in range(m)],
-                    dsub,
-                )
-            cents = [
-                [(list(r["x"])[s * dsub : (s + 1) * dsub], 1) for r in seeds]
-                for s in range(m)
-            ]
-            for _ in range(iters):
-                # every subspace's argmin in ONE exploded row-local pass
-                # over the cached sample, then ONE groupBy updates all m
-                # codebooks (m*k rows of dsub+1 integers to the driver)
-                assigned = _assign_multi(train, cents, dsub, m)
-                rows = _subspace_sums(assigned, dsub).collect()
-                upd = {
-                    (r["sub"], r["kk"]): (
-                        [r[f"s{i}"] for i in range(dsub)],
-                        r["n"],
-                    )
-                    for r in rows
-                }
-                cents = [
-                    [upd.get((s, j), cents[s][j]) for j in range(k)]
-                    for s in range(m)
-                ]
-        finally:
-            train.unpersist(blocking=False)
-    # final FULL-corpus encode: one scan, all m argmins row-local; the
-    # codebook state (half-step-after-assignment over the full corpus,
-    # what ADC scores against) aggregates from the same cached frame
-    final = _assign_multi(pts, cents, dsub, m).persist()
-    try:
-        cb_rows = _subspace_sums(final, dsub).collect()
-        codebooks: list[dict] = [dict() for _ in range(m)]
-        for r in cb_rows:
-            codebooks[r["sub"]][r["kk"]] = (
-                [r[f"s{i}"] for i in range(dsub)],
-                r["n"],
-            )
-        # `codes` stays cached for the caller (it is the PQ index —
-        # callers search it repeatedly)
-        codes = (
-            final.groupBy("id")
-            .agg(
-                *[
-                    F.max(F.when(F.col("sub") == s, F.col("kk"))).alias(f"c{s}")
-                    for s in range(m)
-                ]
-            )
-            .persist()
-        )
-        codes.count()  # materialize while `final` is cached
-    finally:
-        final.unpersist(blocking=False)
-    return codes, codebooks, dsub
-
-
-def _assign_multi(
-    pts: DataFrame, cents: list[list[tuple[list[int], int]]], dsub: int, m: int
-) -> DataFrame:
-    """Exploded per-subspace assignment ``(id, sub, sv, kk)``: m slice rows
-    per vector, ONE set of k argmin entries whose centroid literals are
-    arrays-of-arrays indexed by ``sub`` at runtime.  Same IEEE op sequence
-    as `clustering._assign` per slice (the subspace lookup selects the
-    same integers the per-subspace chains used; division, subtraction and
-    the sequential fold are unchanged), but the codegen stays k HOFs wide
-    — a k*m-wide single projection JIT-bailed and ran interpreted."""
-    k = len(cents[0])
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice("x", s * dsub + 1, dsub).alias("sv"),
-            )
-            for s in range(m)
-        ]
-    )
-    ex = pts.select("id", F.explode(subs).alias("e")).select(
-        "id", F.col("e.sub").alias("sub"), F.col("e.sv").alias("sv")
-    )
-    # Round 14 (guide §1.2 "per-task work" applied to the DRIVER): the k
-    # argmin entries used to be composed Column-by-Column — ~1600 py4j
-    # round-trips that cost ~1 s of pure driver time on EVERY call (the
-    # plan is rebuilt per run).  The same expression tree is now rendered
-    # as ONE SQL string and parsed JVM-side in one call (measured 1.95 s
-    # -> 0.54 s build at m=4, k=16; assignments bit-identical — the tree
-    # is the same: array<bigint> literals, the identical divide/subtract/
-    # multiply/fold op sequence, low-index struct-min tie-break).
-    entries = []
+    memory (still tiny); each subspace's codebook models its own slice
+    distribution — the standard quantization-error win on real embedding
+    distributions.  Measured caveat (bench `pq_subspace_recall`): on the
+    SMALL near-isotropic fixture corpus the shared codebook actually wins
+    recall@5 (it trains on m× the slices for the same k) — the
+    per-subspace advantage needs per-subspace structure and enough
+    training data, which is exactly the 100 TB regime."""
+    pts, dsub = _points(df, id_col, vec_col, dim, m, scale), dim // m
+    sample = train_sample(pts, k)
+    if len(sample) < k:  # degenerate input (fewer points than clusters)
+        return _no_codes(df, m), [dict() for _ in range(m)], dsub
+    fits = [
+        lloyd_fit(sample[:, s * dsub : (s + 1) * dsub], k, iters)
+        for s in range(m)
+    ]
+    # centroid j of subspace `sub`, picked per slice row at run time
+    at_sub = "CAST((sub + 1) AS INT)"
+    cents = []
     for j in range(k):
-        s_all = "array(" + ", ".join(
-            "array(" + ", ".join(f"{int(v)}L" for v in cents[s][j][0]) + ")"
-            for s in range(m)
-        ) + ")"
-        n_all = "array(" + ", ".join(
-            f"{int(cents[s][j][1])}L" for s in range(m)
-        ) + ")"
-        srow = f"element_at({s_all}, CAST((sub + 1) AS INT))"
-        nrow = f"element_at({n_all}, CAST((sub + 1) AS INT))"
-        diff = f"(element_at(sv, i) - element_at({srow}, i) / {nrow})"
-        dist = (
-            f"aggregate(sequence(1, {dsub}), 0.0D, "
-            f"(acc, i) -> acc + ({diff} * {diff}))"
+        s_all = ", ".join(array_sql(s[j]) for s, _ in fits)
+        n_all = array_sql(n[j] for _, n in fits)
+        cents.append(
+            (f"element_at(array({s_all}), {at_sub})", f"element_at({n_all}, {at_sub})")
         )
-        entries.append(f"named_struct('d', {dist}, 'k', {j})")
-    kk = f"array_min(array({', '.join(entries)}))['k']"
-    return ex.select("id", "sub", "sv", F.expr(kk).alias("kk"))
-
-
-def _subspace_sums(assigned: DataFrame, dsub: int) -> DataFrame:
-    """Per (subspace, cluster) count + elementwise slice sums from an
-    `_assign_multi` frame — one map-side-combinable groupBy."""
-    return assigned.groupBy("sub", "kk").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(F.element_at("sv", i + 1)).alias(f"s{i}") for i in range(dsub)],
-    )
-
-
-def _sq_dist(qx: list[int], s: list[int], n: int) -> float:
-    """Sequential-fold squared distance — the exact IEEE op sequence of the
-    engine side (`clustering._assign`) and the DuckDB oracle's
-    ``list_reduce``: one divide, subtract, square, left-fold add."""
-    acc = 0.0
-    for i in range(len(qx)):
-        diff = qx[i] - s[i] / n
-        acc += diff * diff
-    return acc
+    codes, state = _encode(pts, cents, dsub, m)
+    codebooks: list[dict] = [dict() for _ in range(m)]
+    for sub, code, s, n in state:
+        codebooks[sub][code] = (s, n)
+    return codes, codebooks, dsub
 
 
 def pq_adc_topk(
@@ -361,54 +211,47 @@ def pq_adc_topk(
     """ADC top-k over ONE scan of ``codes``, however many queries there
     are.  ``queries`` are (qid, quantized-int full vector).  The
     per-(query, subspace, code) distance tables are computed driver-side
-    (``len(queries)*m*k`` doubles — tiny) and ship as ONE broadcast
-    relation ``(qid, tabs)``; every code row joins it (broadcast nested
-    loop, bounded by |Q|), scores as ``m`` array lookups + ``m-1`` adds,
-    and per-qid top-k is one ``row_number() <= topk`` window: Spark's
-    rank-limit pushdown (WindowGroupLimit, SPARK-37099) plans it as a
-    PARTIAL per-input-partition top-k BEFORE the exchange plus a FINAL
-    one after, so only ``|Q| * partitions * topk`` candidate rows shuffle
-    — the distributed-heap shape, never a global sort of the scored
-    relation.  (The previous implementation planned one
-    ``orderBy().limit()`` scan of ``codes`` PER query — linear scan count
-    in |Q|; this form is one scan total with identical results.)  Ties
-    break on the lower document id, so the result is independent of the
-    input partitioning.  ``codebook`` is either one shared dict
-    (`pq_fit_encode`) or a per-subspace list of dicts
+    by `clustering.sq_dists` (``len(queries)*m*k`` doubles — tiny) and
+    ship as ONE broadcast relation ``(qid, tabs)``; every code row joins
+    it (broadcast nested loop, bounded by |Q|), scores as ``m`` array
+    lookups + ``m-1`` adds, and per-qid top-k is one ``row_number() <=
+    topk`` window: Spark's rank-limit pushdown (WindowGroupLimit,
+    SPARK-37099) plans it as a PARTIAL per-input-partition top-k BEFORE
+    the exchange plus a FINAL one after, so only ``|Q| * partitions *
+    topk`` candidate rows shuffle — never a global sort of the scored
+    relation.  Ties break on the lower document id, so the result is
+    independent of the input partitioning.  ``codebook`` is either one
+    shared dict (`pq_fit_encode`) or a per-subspace list of dicts
     (`pq_fit_encode_subspace`)."""
-    if not queries:  # empty corpus / no query vectors — typed empty result
-        return codes.sparkSession.createDataFrame(
-            [], "qid long, id long, dist double"
-        )
     per_sub = codebook if isinstance(codebook, list) else [codebook] * m
-    if any(not cb for cb in per_sub):  # no codebook => codes is empty too
+    if not queries or any(not cb for cb in per_sub):
+        # no query vectors, or no codebook (=> codes is empty too)
         return codes.sparkSession.createDataFrame(
             [], "qid long, id long, dist double"
         )
-    qrows = []
-    for qid, qx in queries:
-        tables = []
-        for sub in range(m):
-            cb = per_sub[sub]
-            qslice = qx[sub * dsub : (sub + 1) * dsub]
-            row = [float("inf")] * ((max(cb) if cb else -1) + 1)
-            for code, (s, n) in cb.items():
-                row[code] = _sq_dist(qslice, s, n)
-            tables.append(row)
-        qrows.append((int(qid), tables))
+    qx = np.array([q for _, q in queries], dtype=np.int64)
+    tabs = []
+    for sub, cb in enumerate(per_sub):
+        ks = sorted(cb)
+        tab = np.full((len(queries), ks[-1] + 1), np.inf)  # absent code: inf
+        tab[:, ks] = sq_dists(
+            qx[:, sub * dsub : (sub + 1) * dsub],
+            np.array([cb[j][0] for j in ks], dtype=np.int64),
+            np.array([cb[j][1] for j in ks], dtype=np.int64),
+        )
+        tabs.append(tab.tolist())
     qdf = codes.sparkSession.createDataFrame(
-        qrows, "qid long, tabs array<array<double>>"
+        [(int(qid), [t[i] for t in tabs]) for i, (qid, _) in enumerate(queries)],
+        "qid long, tabs array<array<double>>",
     )
     # dist = ((t0 + t1) + t2) + ... left-assoc, mirroring the oracle's
-    # scalar + chain; identical doubles to the former per-query literals
+    # scalar + chain
     dist = None
     for sub in range(m):
         term = F.element_at(
             F.element_at("tabs", sub + 1), F.col(f"c{sub}") + 1
         )
         dist = term if dist is None else dist + term
-    from pyspark.sql import Window
-
     scored = codes.join(F.broadcast(qdf)).select(
         "qid", "id", dist.alias("dist")
     )  # |Q|-bounded broadcast fan-out per code row

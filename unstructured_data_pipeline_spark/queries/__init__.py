@@ -341,14 +341,13 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # the shared co-purchase graph operator (operators/graph.py)
-    "association_rules_report",
-    "kcore_decomposition",
-    "triangle_count_copurchase",
-    "triangle_count_sampled",
-    # dedup_clusters now frees each superseded checkpoint generation
-    "dedup_clusters_report",
-    "dedup_end_to_end_report",
+    # the one exact k-means core (operators/clustering.py) and the PQ
+    # encode built on it (operators/pq.py)
+    "kmeans_embeddings_clusters",
+    "semdedup_report",
+    "ann_pq_topk_contract",
+    "ann_pq_recall",
+    "ann_pq_subspace_topk",
 ]
 
 

@@ -742,26 +742,27 @@ FROM est ORDER BY event_type
 
 
 def kmeans_embeddings_clusters(spark, sf_dir):
-    """Distributed Lloyd's k-means (k=8, 2 updates + final assignment) over
-    the embeddings table — the semantic-clustering / data-mixing building
+    """Lloyd's k-means (k=8, 2 updates + final assignment) over the
+    embeddings table — the semantic-clustering / data-mixing building
     block.  The ENTIRE iterative algorithm is oracle-checked: integer-
     quantized vectors, exact integer centroid state, and a sequential
     double fold for distances make every iteration bit-identical to the
     unrolled DuckDB mirror (see operators/clustering.py for the exactness
-    contract and the 100 TB shape: training on a deterministic md5-prefix
-    sample of 100*k points — two corpus scans total (sample TakeOrdered +
-    final assignment) instead of one per iteration; one map-side-
-    combinable aggregation per in-sample iteration, centroids broadcast
-    as literals, no point ever leaves its executor)."""
+    contract and the 100 TB shape: the updates run driver-side on a
+    deterministic md5-prefix sample of 100*k points — two corpus scans
+    total (sample TakeOrdered + final assignment) — and the final
+    assignment is row-local against literal centroids, so no point ever
+    leaves its executor)."""
     from unstructured_data_pipeline_spark.operators import clustering as CL
 
     emb = _heavy(spark, sf_dir, "embeddings")
     return CL.kmeans_embeddings(
-        emb, "vec_id", "embedding", k=8, iters=2, scale=1000, train_cap=800
+        emb, "vec_id", "embedding", k=8, iters=2, scale=1000
     )
 
 
 def _kmeans_sql(
+    train_cap: int,
     k: int = 8,
     d: int = 64,
     iters: int = 2,
@@ -770,7 +771,6 @@ def _kmeans_sql(
     tail_sql: str | None = None,
     prefix: str = "",
     with_clause: bool = True,
-    train_cap: int | None = None,
 ) -> str:
     """Unrolled DuckDB mirror of ``operators/clustering.kmeans_embeddings``:
     same quantization, same sequential-fold distance (list_reduce == the
@@ -785,8 +785,8 @@ def _kmeans_sql(
     ``with_clause=False`` omits the leading WITH so several independent
     chains can stack in one statement — used by the per-subspace PQ oracle
     (one Lloyd's chain per subspace).  ``train_cap`` mirrors the engine's
-    deterministic md5-sample training bound: seeds and the Lloyd
-    iterations read the ``cap`` points with the lowest
+    deterministic md5-sample training bound (``100 * k``): seeds and the
+    Lloyd iterations read the ``cap`` points with the lowest
     ``md5(CAST(id AS VARCHAR))``; the FINAL assignment still covers every
     point."""
     dist = (
@@ -797,15 +797,11 @@ def _kmeans_sql(
     source = source_sql or "SELECT vec_id, embedding FROM embeddings"
     P = prefix
     lead = "WITH " if with_clause else ",\n"
-    train = f"{P}train" if train_cap is not None else f"{P}pts"
-    train_cte = (
-        f""",
+    train = f"{P}train"
+    train_cte = f""",
 {P}train AS (
   SELECT id, x FROM {P}pts ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT {train_cap}
 )"""
-        if train_cap is not None
-        else ""
-    )
     parts = [
         f"""{lead}{P}src AS ({source}),
 {P}pts AS (

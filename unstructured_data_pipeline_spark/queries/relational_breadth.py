@@ -330,7 +330,7 @@ def semdedup_report(spark, sf_dir):
     )
     corpus = emb.unionByName(planted)
     assign = CL.kmeans_assignments(
-        corpus, "vec_id", "emb", k=8, iters=2, scale=1000, train_cap=800
+        corpus, "vec_id", "emb", k=8, iters=2, scale=1000
     ).select(F.col("id").alias("vec_id"), "k")
     blocked = corpus.join(assign, "vec_id")
     pairs = SIM.embedding_near_dup_blocked(
@@ -1734,8 +1734,8 @@ def ann_pq_topk_contract(spark, sf_dir):
     """Product-quantization ADC top-k (`operators/pq.py` — Jégou et al.
     2011), completing the ANN family (brute -> LSH -> IVF -> PQ): every
     64-dim embedding is stored as 4 small codes against a shared 16-entry
-    codebook trained by the SAME deterministic Lloyd's chain the k-means
-    query uses (all subvector slices feed one run under a composite id);
+    codebook trained by the SAME deterministic Lloyd's fit the k-means
+    query uses (all subvector slices feed one fit under a composite id);
     search never touches a float vector — per-(query, subspace, code)
     squared distances are precomputed into a tiny literal table and each
     document scores as 4 lookups + 3 adds feeding TakeOrderedAndProject.
@@ -1743,8 +1743,8 @@ def ann_pq_topk_contract(spark, sf_dir):
     an unrolled DuckDB mirror (codebook = exact integer (sum, count) state;
     distances = the sequential-fold IEEE sequence of clustering.py; ties
     break on document id).  Scale: codes are m ints/vector (the compression
-    that keeps a 100 TB corpus hot), training is one map-side-combinable
-    agg per iteration, the codebook is a bounded k-row collect, and top-k
+    that keeps a 100 TB corpus hot), training is a driver-side fit on a
+    bounded md5 sample, the codebook is a bounded k-row collect, and top-k
     is per-partition heaps — no crossJoin, no global sort."""
     from unstructured_data_pipeline_spark.operators import pq as PQ
     from unstructured_data_pipeline_spark.operators.clustering import quantize_vec
@@ -1952,13 +1952,12 @@ ANN_PQ_SUBSPACE_SQL = _pq_subspace_sql()
 def ann_pq_subspace_topk(spark, sf_dir):
     """Classic per-subspace PQ (`pq.pq_fit_encode_subspace` — Jégou et al.
     2011 proper, completing the PQ pair with the shared-codebook contract):
-    m=4 INDEPENDENT Lloyd's runs, one codebook per subspace, codes = the
-    id-join of the four assignment frames, ADC search identical in shape.
+    m=4 INDEPENDENT Lloyd's fits on one sample, one codebook per subspace,
+    codes from one exploded encode pass, ADC search identical in shape.
     The oracle unrolls all four chains (CTE-prefixed) plus the cross-
     subspace code join — the heaviest fully-hash-gated iterative mirror in
     the registry.  Scale notes as the shared variant; the extra cost is m
-    codebooks (still driver-tiny) and the encode-time id-join (co-located
-    after one repartition)."""
+    codebooks (still driver-tiny)."""
     from unstructured_data_pipeline_spark.operators import pq as PQ
     from unstructured_data_pipeline_spark.operators.clustering import quantize_vec
 
