@@ -112,7 +112,7 @@ def main() -> None:
         CommitConflictError,
     )
 
-    base = t.latest_committed()
+    base = t.current_version()
     stamp = lambda seg, v: t.read_version(base).withColumn(
         "tier", F.when(F.col("c_mktsegment") == seg, F.lit(v)).otherwise(
             F.col("tier")

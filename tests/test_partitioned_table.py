@@ -138,15 +138,17 @@ def test_upsert_idempotent(spark, table):
 
 
 def test_crash_before_publish_keeps_old_version(spark, table, monkeypatch):
-    """A failure after writing the new version dir but before the pointer
-    swap must leave the previous version fully live (inherited pointer-
-    commit safety)."""
+    """A failure after the new snapshot is fully staged (rows written,
+    untouched partitions carried) but before its claim must leave the
+    previous version fully live (inherited commit protocol)."""
     before = sorted(tuple(r) for r in table.read().collect())
+    carry = table._carry_over
 
-    def boom(_version):
+    def boom(old_dir, new_dir, touched_keys):
+        carry(old_dir, new_dir, touched_keys)
         raise RuntimeError("crash before publish")
 
-    monkeypatch.setattr(table, "_publish", boom)
+    monkeypatch.setattr(table, "_carry_over", boom)
     with pytest.raises(RuntimeError):
         table.upsert(_mk(spark, [(0, "A", 9.9)]), keys=["k", "seg"])
     monkeypatch.undo()

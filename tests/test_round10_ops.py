@@ -112,7 +112,7 @@ def test_occ_conflict_detected_and_retry_preserves_both_writes(spark, tmp_path):
     winner's GC drops it and the loser sees retention aging instead —
     transact() retries on either)."""
     t, schema = _make(spark, tmp_path, retain=2)
-    base = t.latest_committed()
+    base = t.current_version()
     add = lambda df, k: df.unionByName(
         df.sparkSession.createDataFrame([(k, 1)], schema)
     )
@@ -162,7 +162,7 @@ def test_occ_retention_gc_and_pointer(spark, tmp_path):
     ]
     assert len(vdirs) == 2  # retention honored
     assert t.current_version() == max(vdirs)  # pointer at the newest
-    assert t.current_version() == t.latest_committed()
+    assert t.current_version() == t._pointer_version()  # cache caught up
     # dropped versions' marker files went with their dirs
     markers = [d for d in os.listdir(t.path) if d.endswith((".commit", ".claim"))]
     assert all(m.rsplit(".", 1)[0] in vdirs for m in markers)
@@ -173,7 +173,7 @@ def test_occ_pointer_never_regresses(spark, tmp_path):
     t, schema = _make(spark, tmp_path, retain=4)
     t.transact(lambda df: df)
     newer = t.current_version()
-    t._occ_publish("v-00000001")  # a slow old winner publishing late
+    t._advance_pointer("v-00000001")  # a slow old winner publishing late
     assert t.current_version() == newer
 
 
@@ -192,32 +192,35 @@ def test_occ_recover_stale_claims_and_stages(spark, tmp_path):
 
 
 def test_occ_recover_never_deletes_live_legacy_snapshot(spark, tmp_path):
-    """A claim burnt by losing to a legacy publish points AT the live
-    snapshot: recover must drop only the claim file, never the data."""
+    """A marker-less claim AT the live snapshot (the pointer names the
+    version, its commit marker is missing): recover must drop only the
+    claim file, never the data."""
     t, schema = _make(spark, tmp_path)
-    base = t.latest_committed()
-    # legacy writer publishes base+1 without any marker
-    t.upsert(spark.createDataFrame([("legacy", 7)], schema), ["k"])
+    t.upsert(spark.createDataFrame([("upsert", 7)], schema), ["k"])
     live = t.current_version()
-    # OCC writer's claim for the same number now loses
-    with pytest.raises(CommitConflictError):
-        t.commit_rewrite(t.read_version(live), base)
+    # plant the marker-less claim: the live version keeps its dir and the
+    # pointer, but loses its commit marker and gets a foreign claim
+    os.unlink(t._commit_marker(live))
+    with open(t._claim_marker(live), "w") as fh:
+        fh.write("planted")
+    assert t.current_version() == live  # the pointer still serves it
     removed = t.recover_stale()
     assert removed == [f"{live}.claim"]
-    assert ("legacy", 7) in _rows(t)  # live data untouched
+    assert os.path.isdir(os.path.join(t.path, live))
+    assert ("upsert", 7) in _rows(t)  # live data untouched
 
 
 def test_occ_then_legacy_sequential_mixing(spark, tmp_path):
-    """Sequential mixing is supported: a legacy mutation after OCC commits
-    must see the OCC version, not crash on marker files, and vice versa."""
+    """An upsert after transact() commits builds on the transact's
+    version, and a transact after the upsert builds on the upsert's."""
     t, schema = _make(spark, tmp_path)
     t.transact(
         lambda df: df.unionByName(
             df.sparkSession.createDataFrame([("occ", 1)], schema)
         )
     )
-    t.upsert(spark.createDataFrame([("legacy", 2)], schema), ["k"])
-    assert _rows(t) == [("legacy", 2), ("occ", 1), ("seed", 0)]
+    t.upsert(spark.createDataFrame([("upsert", 2)], schema), ["k"])
+    assert _rows(t) == [("occ", 1), ("seed", 0), ("upsert", 2)]
     t.transact(
         lambda df: df.unionByName(
             df.sparkSession.createDataFrame([("occ2", 3)], schema)
@@ -268,16 +271,16 @@ def test_occ_partitioned_table_keeps_hive_layout(spark, tmp_path):
 
 
 def test_occ_transact_refuses_read_time_defaults(spark, tmp_path):
-    """read_version() shows snapshots as-stored (no ALTER-default
-    backfill), so transact() must refuse rather than commit stored NULLs
-    where read() shows the default."""
+    """A committed rewrite carries no pre-alter epoch dirs, so transact()
+    must refuse rather than risk committing stored NULLs where read()
+    shows the default."""
     from pyspark.sql import types as T
 
     t, schema = _make(spark, tmp_path)
     t.add_column("grade", T.StringType(), default="unrated")
     with pytest.raises(ValueError, match="read-time ALTER defaults"):
         t.transact(lambda df: df)
-    # the error's remediation must actually unblock: a legacy rewrite
+    # the error's remediation must actually unblock: an upsert rewrite
     # materializes the backfill into storage and SPENDS the defaults
     t.upsert(t.read(), ["k"])
     assert t._defaults == {}  # cleared (and persisted via schema.json)
@@ -286,27 +289,10 @@ def test_occ_transact_refuses_read_time_defaults(spark, tmp_path):
     assert [r.grade for r in t.read().collect()] == ["unrated"]
 
 
-def test_legacy_publish_cannot_destroy_committed_occ_version(spark, tmp_path):
-    """A raced/regressed legacy publish (e.g. a slow creator finishing
-    after an OCC commit) must neither hide nor GC a committed version:
-    current_version() derives truth from commit markers, and the legacy
-    GC skips marker-committed dirs above the published version."""
-    t, schema = _make(spark, tmp_path)
-    t.transact(
-        lambda df: df.unionByName(
-            df.sparkSession.createDataFrame([("occ", 1)], schema)
-        )
-    )
-    assert t.current_version() == "v-00000002"
-    t._publish("v-00000001")  # the destructive interleaving, replayed
-    assert t.current_version() == "v-00000002"  # markers beat the cache
-    assert ("occ", 1) in _rows(t)  # snapshot survived the legacy GC
-
-
 def test_pointer_behind_marker_heals_and_legacy_builds_on_it(spark, tmp_path):
     """A writer that dies between its commit marker and the pointer
     advance must not lose its commit: reads serve the marker, and a later
-    sequential legacy rewrite bases on it instead of overwriting it."""
+    upsert bases on it instead of overwriting it."""
     t, schema = _make(spark, tmp_path, retain=2)
     t.transact(
         lambda df: df.unionByName(
@@ -315,16 +301,16 @@ def test_pointer_behind_marker_heals_and_legacy_builds_on_it(spark, tmp_path):
     )
     t._write_atomic(t._pointer(), "v-00000001")  # simulate the crash window
     assert t.current_version() == "v-00000002"
-    t.upsert(spark.createDataFrame([("legacy", 2)], schema), ["k"])
+    t.upsert(spark.createDataFrame([("upsert", 2)], schema), ["k"])
     assert t.current_version() == "v-00000003"  # built ON the OCC commit
-    assert _rows(t) == [("legacy", 2), ("occ", 1), ("seed", 0)]
+    assert _rows(t) == [("occ", 1), ("seed", 0), ("upsert", 2)]
 
 
 def test_burnt_claim_fails_fast_without_staging(spark, tmp_path):
     """A claim left by a crashed writer must conflict BEFORE the expensive
     staged table write, not after."""
     t, schema = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     open(t._claim_marker(nxt), "w").close()  # burnt claim, no dir/marker
     with pytest.raises(CommitConflictError):

@@ -61,7 +61,7 @@ def test_commit_rewrite_refuses_read_time_defaults_directly(spark, tmp_path):
     read()'s backfill silently stops applying."""
     t, schema = _make(spark, tmp_path)
     t.add_column("grade", T.StringType(), default="unrated")
-    base = t.latest_committed()
+    base = t.current_version()
     snap = t.read_version(base)
     with pytest.raises(ValueError, match="read-time ALTER defaults"):
         t.commit_rewrite(snap, base)
@@ -156,7 +156,7 @@ def test_pointer_lock_future_mtime_still_stolen(spark, tmp_path):
     t.lock_steal_after = 0.3
     try:
         start = time.monotonic()
-        t._occ_publish(t.current_version())  # must steal, not time out
+        t._advance_pointer(t.current_version())  # must steal, not time out
         assert time.monotonic() - start < 10.0
     finally:
         del t.lock_steal_after  # restore the class default
@@ -185,7 +185,7 @@ def test_pointer_lock_token_change_resets_staleness_clock(spark, tmp_path):
     th = threading.Thread(target=churner)
     th.start()
     try:
-        t._occ_publish(t.current_version())
+        t._advance_pointer(t.current_version())
     finally:
         stop.set()
         th.join()
@@ -202,7 +202,7 @@ def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
     observed-persistence model) is a crashed writer: transact()'s retry
     loop must reclaim it and commit WITHOUT a manual recover_stale()."""
     t, schema = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     open(t._claim_marker(nxt), "w").close()
     t.claim_ttl = 0.05  # observed window fits inside transact()'s sleeps
@@ -220,7 +220,7 @@ def test_fresh_dead_claim_still_conflicts(spark, tmp_path):
     microseconds from its rename: it must still conflict (and fail fast,
     before staging)."""
     t, _ = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     open(t._claim_marker(nxt), "w").close()  # mtime = now
     with pytest.raises(CommitConflictError):
@@ -275,7 +275,7 @@ def test_ensure_loser_never_stages(spark, tmp_path):
         w._write_snapshot(spark.createDataFrame([], schema), stage)
         os.rename(stage, os.path.join(w.path, "v-00000001"))
         w._write_atomic(w._commit_marker("v-00000001"), "")
-        w._occ_publish("v-00000001")
+        w._advance_pointer("v-00000001")
 
     th = threading.Thread(target=winner_publishes)
     th.start()

@@ -12,9 +12,8 @@ ADVICE r11 findings, each regression-pinned here:
    persisted claim_ttl as measured between two SAME-FILESYSTEM mtimes
    (sidecar vs fresh probe file) — client-vs-server clock skew (NFS) can
    never reclaim a LIVE writer's fresh claim;
-3. ensure()'s legacy-publish-race branch unlinks its own just-won claim
-   marker instead of leaving a permanent residue only recover_stale()
-   could remove;
+3. (retired) ensure() has no separate publish race left to clean up
+   after: creation commits through the same claim path as every version;
 4. occ_lifecycle's step 08 and these tests drive the heal through the
    observation protocol rather than mtime backdating.
 
@@ -105,7 +104,7 @@ def test_backdated_fresh_claim_never_instantly_reclaimed(spark, tmp_path):
     of its own clock.  Under the old mtime-age rule this reclaimed
     immediately and could orphan the live writer's commit."""
     t, _ = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     open(t._claim_marker(nxt), "w").close()
     skewed = time.time() - 100 * ParquetTable.claim_ttl
@@ -123,7 +122,7 @@ def test_reclaim_observation_restarts_on_claim_replacement(spark, tmp_path):
     same path (old one resolved, new writer claimed), the staleness clock
     restarts: the new instance must earn its own full window."""
     t, _ = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     claim = t._claim_marker(nxt)
     open(claim, "w").close()
@@ -144,7 +143,7 @@ def test_transact_conflict_not_healed_within_default_ttl(spark, tmp_path):
     reclaim a just-created foreign claim — its retries span ~0.2 s of
     observation, far below the window — and must surface the conflict."""
     t, schema = _make(spark, tmp_path)
-    base = t.latest_committed()
+    base = t.current_version()
     open(t._claim_marker(f"v-{int(base[2:]) + 1:08d}"), "w").close()
     with pytest.raises(CommitConflictError):
         t.transact(
@@ -153,42 +152,6 @@ def test_transact_conflict_not_healed_within_default_ttl(spark, tmp_path):
             ),
             max_attempts=2,
         )
-
-
-# -- 3. ensure() legacy-publish race leaves no residue ---------------------
-
-
-def test_ensure_legacy_race_unlinks_own_claim(spark, tmp_path):
-    """When ensure() wins the creation claim but a legacy publish landed
-    v-00000001 in the meantime, it must remove its own claim marker —
-    the dir exists, so the dead-claim reclaimer would never touch it and
-    the residue would otherwise persist until a manual recover_stale()."""
-    schema = _schema()
-    t = ParquetTable(spark, str(tmp_path), "legacy12", schema)
-    os.makedirs(t.path, exist_ok=True)
-    calls = {"n": 0}
-    real = ParquetTable.current_version
-
-    def raced(self):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            return None  # pre-claim checks: table looks fresh
-        # post-claim check: a legacy publish just landed v-00000001
-        if not os.path.isdir(os.path.join(self.path, "v-00000001")):
-            stage = os.path.join(self.path, "stage-legacy")
-            self._write_snapshot(spark.createDataFrame([], schema), stage)
-            os.rename(stage, os.path.join(self.path, "v-00000001"))
-            self._write_atomic(self._commit_marker("v-00000001"), "")
-        return real(self)
-
-    t.current_version = raced.__get__(t)
-    try:
-        t.ensure()
-    finally:
-        del t.current_version
-    assert t.current_version() == "v-00000001"
-    assert not os.path.exists(t._claim_marker("v-00000001"))  # no residue
-    assert t.recover_stale() == []  # truly nothing left behind
 
 
 # -- 4. recover_stale sweeps crashed holders' token temp files -------------
@@ -220,7 +183,7 @@ def test_dead_claim_heal_converges_across_instances(spark, tmp_path):
     schema = _schema()
     a = ParquetTable(spark, str(tmp_path), "conv12", schema).ensure()
     a.append(spark.createDataFrame([("seed", 0)], schema))
-    nxt = f"v-{int(a.latest_committed()[2:]) + 1:08d}"
+    nxt = f"v-{int(a.current_version()[2:]) + 1:08d}"
     open(a._claim_marker(nxt), "w").close()
     a.claim_ttl = 0.05
     assert a._reclaim_dead_claim(nxt) is False  # instance A sights+records
@@ -240,7 +203,7 @@ def test_obs_sidecar_dropped_when_claim_resolves(spark, tmp_path):
     the version commits, the next reclaim probe clears the stale .obs so
     a FUTURE claim at the same path starts a fresh window."""
     t, schema = _make(spark, tmp_path, name="obs12")
-    base = t.latest_committed()
+    base = t.current_version()
     nxt = f"v-{int(base[2:]) + 1:08d}"
     open(t._claim_marker(nxt), "w").close()
     t.claim_ttl = 0.05
@@ -272,7 +235,7 @@ def test_recover_stale_clears_wedged_lock_state(spark, tmp_path):
     assert not os.path.exists(lock + ".stale-deadbeef")
     assert not os.path.exists(probe)
     # and the table still publishes normally afterwards
-    t._occ_publish(t.current_version())
+    t._advance_pointer(t.current_version())
 
 
 def test_spurious_eexist_link_still_acquires(spark, tmp_path, monkeypatch):

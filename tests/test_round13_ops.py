@@ -78,11 +78,11 @@ def test_lock_token_fsynced_before_link(spark, tmp_path, monkeypatch):
 
 
 def test_claims_born_with_unique_cookie(spark, tmp_path):
-    """Both claim writers (commit_rewrite and ensure) stamp a unique
-    cookie into the claim, so no two claim instances this code creates
-    can ever share a reclamation identity."""
+    """Every claim (a rewrite's and ensure()'s creation claim) carries a
+    unique cookie, so no two claim instances this code creates can ever
+    share a reclamation identity."""
     t, schema = _make(spark, tmp_path, retain=3)
-    base = t.latest_committed()
+    base = t.current_version()
     v = t.commit_rewrite(t.read_version(base), base)
     # commit_rewrite's claim: "<base>:<32-hex cookie>"
     with open(t._claim_marker(v)) as fh:

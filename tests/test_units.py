@@ -447,8 +447,9 @@ def test_parquet_table_compact(spark, tmp_path):
 
 
 def test_parquet_table_crash_before_publish_keeps_old_data(spark, tmp_path):
-    """VERDICT r1 #4: a rewrite that dies after writing the new version but
-    BEFORE the pointer swap must leave the previous snapshot fully live."""
+    """VERDICT r1 #4: a rewrite that dies after writing the new snapshot
+    but BEFORE its commit (stage written, version not yet claimed) must
+    leave the previous snapshot fully live."""
     from pyspark.sql import types as T
 
     from unstructured_data_pipeline_spark.operators.dml import ParquetTable
@@ -460,11 +461,13 @@ def test_parquet_table_crash_before_publish_keeps_old_data(spark, tmp_path):
     t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema))
     before = sorted(map(tuple, t.read().collect()))
 
-    # simulate the crash: new version dir fully written, publish never runs
+    # simulate the crash: the staged snapshot is fully written, the claim
+    # (and everything after it) never runs
     boom = RuntimeError("crash before publish")
 
     class Crashing(ParquetTable):
-        def _publish(self, version):
+        def _write_snapshot(self, df, path):
+            super()._write_snapshot(df, path)
             raise boom
 
     t2 = Crashing(spark, str(tmp_path), "tbl", schema)
@@ -473,13 +476,20 @@ def test_parquet_table_crash_before_publish_keeps_old_data(spark, tmp_path):
         raise AssertionError("expected crash")
     except RuntimeError as e:
         assert e is boom
-    # old snapshot still the live one, fully readable
+    # old snapshot still the live one, fully readable; the failed commit
+    # removed its stage
     assert sorted(map(tuple, t.read().collect())) == before
+    assert not [d for d in os.listdir(t.path) if d.startswith("stage-")]
     # recovery: the same upsert on a healthy table lands atomically and the
-    # orphaned version dir from the crash is garbage-collected
+    # crash left no version dir behind (only snapshot dirs are counted: the
+    # live version's claim/commit marker files share the v- prefix)
     t.upsert(spark.createDataFrame([(2, "B"), (3, "c")], schema), ["k"])
     assert sorted(map(tuple, t.read().collect())) == [(1, "a"), (2, "B"), (3, "c")]
-    vdirs = [d for d in os.listdir(t.path) if d.startswith("v-")]
+    vdirs = [
+        d
+        for d in os.listdir(t.path)
+        if d.startswith("v-") and os.path.isdir(os.path.join(t.path, d))
+    ]
     assert vdirs == [t.current_version()]
 
 

@@ -17,11 +17,11 @@ Scale notes: the anti-join is a shuffle on the key — unavoidable for a
 key-matched merge — but the small side (a batch of new uploads / prompt
 edits) broadcasts, so at 100 TB the target is never shuffled: plan is
 BroadcastHashJoin(LeftAnti) over a straight scan.  ``ParquetTable`` gives
-the durable form with atomic pointer-commit overwrite; single-writer by
-default (the reference has no concurrency control either), with an
-opt-in optimistic multi-writer protocol (``transact``/``commit_rewrite``,
-Delta-style O_EXCL version claims) for pipelines where several jobs
-mutate one table.
+the durable form: every new version commits through one optimistic
+protocol (Delta-style O_EXCL version claims, see ``ParquetTable._commit``),
+so a writer whose snapshot went stale gets ``CommitConflictError`` instead
+of overwriting another writer's commit — the guarantee the reference
+gets from Snowflake ``MERGE`` atomicity.
 """
 
 from __future__ import annotations
@@ -158,31 +158,44 @@ def snapshot_diff(
     )
 
 
+def _link_tree(src: str, dst: str) -> None:
+    """Hardlink every file under ``src`` to the same relative path under
+    ``dst`` — a metadata-only copy (no data bytes move)."""
+    for base, _dirs, files in os.walk(src):
+        d = os.path.join(dst, os.path.relpath(base, src))
+        os.makedirs(d, exist_ok=True)
+        for fn in files:
+            os.link(os.path.join(base, fn), os.path.join(d, fn))
+
+
 class ParquetTable:
     """A durable table over a versioned parquet directory with CREATE IF NOT
     EXISTS, append, upsert, delete — the engine's stand-in for the reference's
     five Snowflake tables (`app.py:38-81`).
 
     Layout (the classic pointer-commit design — same idea as Delta/Iceberg's
-    metadata pointer, minus multi-writer coordination)::
+    metadata pointer)::
 
         <root>/<name>/
-            CURRENT        # text file naming the live version dir
-            v-00000001/    # immutable-once-published parquet snapshots
-            v-00000002/
+            CURRENT            # pointer cache naming the live version dir
+            v-00000001/        # immutable-once-committed parquet snapshots
+            v-00000001.claim   # O_EXCL claim on the version number
+            v-00000001.commit  # commit marker: the version is visible
+            stage-<uuid>/      # a version being written (not yet claimed)
 
-    Rewrites (upsert/delete/compact) write a NEW version dir, then publish it
-    by atomically replacing CURRENT (``os.replace`` on a same-dir temp file).
-    A crash at ANY point before the publish leaves the previous version
-    live and fully readable — there is no moment where the table is partial
-    (the round-1 two-step overwrite had exactly that window; VERDICT r1 #4).
-    Appends add files inside the live version dir (Spark's file committer
-    makes each visible only on task commit).
+    Every new version — creation, upsert/delete/compact, ALTER epochs,
+    clones, OCC rewrites — is written into a fresh ``stage-<uuid>/`` and
+    committed by :meth:`_commit` (claim, rename, marker, pointer).  A
+    crash at ANY point before the commit marker leaves the previous
+    version live and fully readable — there is no moment where the table
+    is partial (the round-1 two-step overwrite had exactly that window;
+    VERDICT r1 #4).  Appends add files inside the live version dir
+    (Spark's file committer makes each visible only on task commit).
 
-    Single-writer assumption, same as the reference.  MERGE cost is
-    O(table) per call — fine for the reference's small control tables
-    (class_prompts, new_uploads); for big fact tables the production path
-    is Delta/Iceberg with real transactional MERGE, as SCALE.md documents.
+    MERGE cost is O(table) per call — fine for the reference's small
+    control tables (class_prompts, new_uploads); for big fact tables the
+    production path is Delta/Iceberg with real transactional MERGE, as
+    SCALE.md documents.
     """
 
     def __init__(
@@ -205,8 +218,8 @@ class ParquetTable:
         self._load_meta()
         # snapshot retention (Snowflake-style time travel, the reference
         # platform's DATA_RETENTION knob): keep the newest `retain`
-        # published snapshots; older ones and crashed-orphan dirs are GC'd
-        # at publish.  retain=1 == the original keep-only-CURRENT behavior;
+        # committed snapshots; older ones are GC'd at each commit.
+        # retain=1 == the original keep-only-CURRENT behavior;
         # read_version()/versions() expose the retained history.
         if retain < 1:
             raise ValueError("retain must be >= 1")
@@ -265,13 +278,11 @@ class ParquetTable:
             return None
 
     def current_version(self) -> str | None:
-        """Newest committed version.  The CURRENT pointer is a CACHE: OCC
+        """Newest committed version.  The CURRENT pointer is a CACHE:
         commit markers (append-only facts, written only after the snapshot
         dir is complete) win when they are ahead — so a writer that died
-        between its commit marker and the pointer advance, or a transient
-        pointer regression from a raced legacy publish, never hides or
-        loses a committed snapshot.  Tables never touched by OCC have no
-        markers and read the pointer exactly as before."""
+        between its commit marker and the pointer advance never hides or
+        loses a committed snapshot."""
         best = self._pointer_version()
         best_n = int(best[2:]) if best else 0
         try:
@@ -293,13 +304,8 @@ class ParquetTable:
             raise FileNotFoundError(f"table {self.name} has no published version")
         return os.path.join(self.path, v)
 
-    def _next_version(self) -> str:
-        cur = self.current_version()
-        n = int(cur[2:]) if cur else 0
-        return f"v-{n + 1:08d}"
-
     def _drop_version(self, d: str) -> None:
-        """The one copy of snapshot deletion: dir + OCC markers +
+        """The one copy of snapshot deletion: dir + commit/claim markers +
         merge-on-read tombstones go together (a marker outliving its dir
         would haunt current_version(); a tombstone outliving its snapshot
         is folded state nothing reads)."""
@@ -317,135 +323,25 @@ class ParquetTable:
                 pass
         shutil.rmtree(self._tombstone_dir(d), ignore_errors=True)
 
-    def _publish(self, version: str) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        self._write_atomic(self._pointer(), version)
-        # GC: keep the newest `retain` published snapshots (numbered <= the
-        # just-published version); drop older snapshots and orphaned
-        # (crashed-before-publish) dirs numbered above it — EXCEPT dirs
-        # carrying an OCC commit marker above this version: those are
-        # another writer's committed (or in-flight-published) snapshots,
-        # not crash orphans, and current_version() serves them
-        cur_n = int(version[2:])
-        published = sorted(
-            (
-                d
-                for d in os.listdir(self.path)
-                # isdir BEFORE the int parse: OCC marker FILES are named
-                # v-XXXXXXXX.commit / .claim and must neither crash the
-                # parse nor count as snapshots
-                if d.startswith("v-")
-                and os.path.isdir(os.path.join(self.path, d))
-                and int(d[2:]) <= cur_n
-            ),
-            key=lambda d: int(d[2:]),
-            reverse=True,
-        )
-        keep = set(published[: self.retain])
-        for d in os.listdir(self.path):
-            full = os.path.join(self.path, d)
-            if (
-                d.startswith("v-")
-                and os.path.isdir(full)
-                and d not in keep
-                and not (
-                    int(d[2:]) > cur_n
-                    and os.path.exists(self._commit_marker(d))
-                )
-            ):
-                self._drop_version(d)
-            # stale markers for versions at/below the published one whose
-            # dir is in the keep set stay; the rest went with _drop_version
-            elif (
-                (
-                    d.endswith(".commit")
-                    or d.endswith(".claim")
-                    or d.endswith(".claim.obs")
-                )
-                and d.startswith("v-")
-            ):
-                mv = d.rsplit(".", 2 if d.endswith(".claim.obs") else 1)[0]
-                # never touch markers ABOVE the published version — they
-                # may be another writer's in-flight claim or commit
-                if mv not in keep and int(mv[2:]) <= cur_n:
-                    try:
-                        os.unlink(full)
-                    except OSError:
-                        pass
-            elif d.startswith("tombstones-") and d[len("tombstones-"):] not in keep:
-                # merge-on-read tombstones ride their snapshot's lifetime
-                # (rewrites fold them into the successor via read())
-                if int(d[len("tombstones-v-"):]) <= cur_n:
-                    import shutil
-
-                    shutil.rmtree(full, ignore_errors=True)
-
     # -- CREATE TABLE IF NOT EXISTS (`app.py:38-81`) ------------------------
     def ensure(self) -> "ParquetTable":
-        """Concurrent-safe CREATE IF NOT EXISTS: creation commits through
-        the OCC claim protocol (one O_EXCL winner for v-00000001; losers
-        wait for the winner's publish), so two processes racing ensure()
-        on a fresh table can neither double-create nor — via the legacy
-        publish GC — destroy a version the other already committed."""
-        if self.current_version() is not None:
-            return self
-        import shutil
+        """Concurrent-safe CREATE IF NOT EXISTS: the empty first version
+        commits through :meth:`_commit` like every other, so racing
+        creators get exactly one O_EXCL winner for v-00000001; the losers
+        wait for its commit (and reclaim the claim of a creator that died
+        mid-commit, then retry)."""
         import time
-        import uuid
 
-        os.makedirs(self.path, exist_ok=True)
-        target = "v-00000001"
         deadline = time.monotonic() + self.claim_ttl + 60.0
-        while True:
-            if self.current_version() is not None:
-                return self
-            if not os.path.exists(self._claim_marker(target)):
-                # stage only when the claim looks winnable — fail-fast
-                # parity with commit_rewrite (ADVICE r10): racing losers
-                # shouldn't pay a full discarded snapshot write
-                stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
-                self._write_snapshot(
-                    self.spark.createDataFrame([], self.schema), stage
+        while self.current_version() is None:
+            try:
+                self._commit(
+                    None,
+                    lambda stage: self._write_snapshot(
+                        self.spark.createDataFrame([], self.schema), stage
+                    ),
                 )
-                try:
-                    fd = os.open(
-                        self._claim_marker(target),
-                        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-                    )
-                    try:
-                        # unique cookie — same collision-proof reclamation
-                        # identity as commit_rewrite's claims (ADVICE r12)
-                        os.write(fd, f"create:{uuid.uuid4().hex}".encode())
-                        os.fsync(fd)
-                    finally:
-                        os.close(fd)
-                except FileExistsError:
-                    # another creator won the claim while we staged: fall
-                    # through to the wait loop below
-                    shutil.rmtree(stage, ignore_errors=True)
-                else:
-                    if self.current_version() is not None:
-                        # raced a legacy publish that claims nothing — also
-                        # remove OUR just-won claim marker, else it lingers
-                        # forever (the version dir exists, so the dead-claim
-                        # reclaimer will never touch it — ADVICE r11)
-                        shutil.rmtree(stage, ignore_errors=True)
-                        try:
-                            os.unlink(self._claim_marker(target))
-                        except OSError:
-                            pass
-                        return self
-                    os.rename(stage, os.path.join(self.path, target))
-                    self._write_atomic(self._commit_marker(target), "")
-                    self._occ_publish(target)
-                    return self
-            # a claim exists: wait for its publish; if the creator died
-            # mid-commit, reclaim its aged claim and retry creation
-            while self.current_version() is None:
-                if not os.path.exists(self._claim_marker(target)):
-                    break  # reclaimed (here or elsewhere) — retry creation
-                if self._reclaim_dead_claim(target):
-                    break
+            except CommitConflictError:
                 if time.monotonic() > deadline:
                     raise TimeoutError(
                         f"table {self.name}: creation claim exists but no "
@@ -453,34 +349,10 @@ class ParquetTable:
                         "recover_stale() with writers stopped)"
                     ) from None
                 time.sleep(0.01)
+        return self
 
     def read(self) -> DataFrame:
-        self.ensure()
-        df = (
-            self.spark.read.schema(self.schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(self.data_dir())
-        )
-        if self._defaults:
-            # Backfill ONLY rows from pre-ALTER files — they live under the
-            # `pre-alter-<col>/` epoch dirs the ALTER hardlinked them into,
-            # identified by the file path metadata column.  Rows appended
-            # AFTER the ALTER keep an explicitly-stored NULL as NULL
-            # (Snowflake ALTER semantics; the round-4 blanket coalesce
-            # conflated the two — ADVICE r4).
-            path = F.col("_metadata.file_path")
-            for name, default in self._defaults.items():
-                pre = path.contains(f"/pre-alter-{name}/")
-                df = df.withColumn(
-                    name,
-                    F.when(
-                        pre, F.coalesce(F.col(name), F.lit(default))
-                    ).otherwise(F.col(name)),
-                )
-        return self._apply_tombstones(
-            df.select(*[f.name for f in self.schema.fields]),
-            self.current_version(),
-        )
+        return self.read_version(self.ensure().current_version())
 
     def add_column(self, name: str, data_type, default=None) -> None:
         """ALTER TABLE ADD COLUMN — METADATA-ONLY schema evolution
@@ -504,7 +376,7 @@ class ParquetTable:
           instance opened on this directory sees the column;
         - when a ``default`` is given, the current files are HARDLINKED
           (zero copy) into a ``pre-alter-<col>/`` epoch dir inside a new
-          published version.  Reads backfill the default only under that
+          committed version.  Reads backfill the default only under that
           marker, so a post-ALTER row that stores NULL explicitly reads
           back as NULL, not as the default.  Stacked ALTERs nest the
           markers, giving each column its own exact epoch boundary.
@@ -524,23 +396,19 @@ class ParquetTable:
         self._save_meta()
 
     def _link_alter_epoch(self, col: str) -> None:
-        """Hardlink every current data file into ``pre-alter-<col>/`` of a
-        new version and publish it — metadata-only (no parquet bytes move),
+        """Commit a new version holding every current data file hardlinked
+        under ``pre-alter-<col>/`` — metadata-only (no parquet bytes move),
         preserving inner epoch markers from earlier ALTERs."""
-        if self.current_version() is None:
-            return  # nothing published yet: no pre-ALTER rows exist
-        old_dir = self.data_dir()
-        v = self._next_version()
-        epoch_root = os.path.join(self.path, v, f"pre-alter-{col}")
-        for base, _dirs, files in os.walk(old_dir):
-            rel = os.path.relpath(base, old_dir)
-            dst = (
-                epoch_root if rel == "." else os.path.join(epoch_root, rel)
-            )
-            os.makedirs(dst, exist_ok=True)
-            for fn in files:
-                os.link(os.path.join(base, fn), os.path.join(dst, fn))
-        self._publish(v)
+        base = self.current_version()
+        if base is None:
+            return  # nothing committed yet: no pre-ALTER rows exist
+        self._commit(
+            base,
+            lambda stage: _link_tree(
+                os.path.join(self.path, base),
+                os.path.join(stage, f"pre-alter-{col}"),
+            ),
+        )
 
     # -- zero-copy clone -----------------------------------------------------
     def _sibling(self, name: str) -> "ParquetTable":
@@ -564,33 +432,22 @@ class ParquetTable:
         at GC), appends land in each table's own current dir.  On an
         object store the hardlink walk becomes a manifest copy, same as
         the partitioned carry-over (SCALE.md)."""
-        src_dir = self.ensure().data_dir()
+        src = self.ensure().current_version()
         dst = self._sibling(name)
         if dst.current_version() is not None:
             raise ValueError(f"table {name!r} already exists")
-        v = dst._next_version()
-        for base, _dirs, files in os.walk(src_dir):
-            rel = os.path.relpath(base, src_dir)
-            d = (
-                os.path.join(dst.path, v)
-                if rel == "."
-                else os.path.join(dst.path, v, rel)
-            )
-            os.makedirs(d, exist_ok=True)
-            for fn in files:
-                os.link(os.path.join(base, fn), os.path.join(d, fn))
-        # pending merge-on-read tombstones are part of the logical table
-        # state — hardlink-carry them too, renamed to the clone's version,
-        # or the clone would resurrect deleted keys
-        src_tomb = self._tombstone_dir(self.current_version())
-        if os.path.isdir(src_tomb):
-            dtomb = dst._tombstone_dir(v)
-            os.makedirs(dtomb, exist_ok=True)
-            for fn in os.listdir(src_tomb):
-                if os.path.isfile(os.path.join(src_tomb, fn)):
-                    os.link(os.path.join(src_tomb, fn), os.path.join(dtomb, fn))
+        src_tomb = self._tombstone_dir(src)
+
+        def fill(stage: str) -> None:
+            _link_tree(os.path.join(self.path, src), stage)
+            # pending merge-on-read tombstones are part of the logical
+            # table state — hardlink-carry them too, renamed to the clone's
+            # first version, or the clone would resurrect deleted keys
+            if os.path.isdir(src_tomb):
+                _link_tree(src_tomb, dst._tombstone_dir("v-00000001"))
+
         dst._defaults = dict(self._defaults)
-        dst._publish(v)
+        dst._commit(None, fill)
         dst._save_meta()
         return dst
 
@@ -601,23 +458,52 @@ class ParquetTable:
             (
                 d
                 for d in os.listdir(self.path)
-                # dirs only: OCC marker FILES are named v-XXXXXXXX.commit
+                # dirs only: marker FILES are named v-XXXXXXXX.commit
                 if d.startswith("v-") and os.path.isdir(os.path.join(self.path, d))
             ),
             key=lambda d: int(d[2:]),
         )
 
+    def _scan(self, path: str) -> DataFrame:
+        """Every parquet file under one snapshot dir, ALTER epoch dirs
+        included (the hive-partitioned subclass reads partition dirs)."""
+        return (
+            self.spark.read.schema(self.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(path)
+        )
+
     def read_version(self, version: str) -> DataFrame:
-        """AS-OF read of a retained snapshot (immutable once published).
-        Raises if the snapshot has aged out of the retention window."""
+        """AS-OF read of a retained snapshot (immutable once committed),
+        with the same DEFAULT backfill and tombstones as :meth:`read` —
+        which is this method on the current version.  Raises if the
+        snapshot has aged out of the retention window."""
         p = os.path.join(self.path, version)
         if not os.path.isdir(p):
             raise FileNotFoundError(
                 f"snapshot {version} of table {self.name} is not retained "
                 f"(retain={self.retain}; have {self.versions()})"
             )
+        df = self._scan(p)
+        if self._defaults:
+            # Backfill ONLY rows from pre-ALTER files — they live under the
+            # `pre-alter-<col>/` epoch dirs the ALTER hardlinked them into,
+            # identified by the file path metadata column.  Rows appended
+            # AFTER the ALTER keep an explicitly-stored NULL as NULL
+            # (Snowflake ALTER semantics; the round-4 blanket coalesce
+            # conflated the two — ADVICE r4).  A snapshot older than the
+            # ALTER has no epoch dir, so it reads the column as NULL.
+            path = F.col("_metadata.file_path")
+            for name, default in self._defaults.items():
+                pre = path.contains(f"/pre-alter-{name}/")
+                df = df.withColumn(
+                    name,
+                    F.when(
+                        pre, F.coalesce(F.col(name), F.lit(default))
+                    ).otherwise(F.col(name)),
+                )
         return self._apply_tombstones(
-            self.spark.read.schema(self.schema).parquet(p), version
+            df.select(*[f.name for f in self.schema.fields]), version
         )
 
     def _conform(self, df: DataFrame) -> DataFrame:
@@ -656,21 +542,26 @@ class ParquetTable:
         self.ensure()
         self._conform(df).write.mode("append").parquet(self.data_dir())
 
-    def _replace(self, df: DataFrame) -> None:
-        self.ensure()
-        v = self._next_version()
-        df.write.mode("overwrite").parquet(os.path.join(self.path, v))
-        self._publish(v)
+    def _replace(self, rewrite) -> None:
+        """Commit ``rewrite(snapshot)`` as the next version, where
+        ``snapshot`` is the version current when the call starts (read
+        like :meth:`read`).  If another writer commits first this raises
+        :class:`CommitConflictError` instead of overwriting that commit;
+        :meth:`transact` is the retrying form."""
+        base = self.ensure().current_version()
+        df = rewrite(self.read_version(base))
+        self._commit(base, lambda stage: self._write_snapshot(df, stage))
         if self._defaults:
-            # every _replace caller derives df from read(), whose DEFAULT
-            # backfill is now materialized in storage — the read-time
-            # defaults are spent, and clearing them re-enables transact()
-            # (which refuses while they could mask stored NULLs)
+            # the snapshot was read with the DEFAULT backfill, which is now
+            # materialized in storage — the read-time defaults are spent,
+            # and clearing them re-enables transact() (which refuses while
+            # they could mask stored NULLs)
             self._defaults = {}
             self._save_meta()
 
     def upsert(self, source: DataFrame, keys: list[str]) -> None:
-        self._replace(upsert(self.read(), self._conform(source), keys))
+        src = self._conform(source)
+        self._replace(lambda cur: upsert(cur, src, keys))
 
     def anti_insert(self, source: DataFrame, keys: list[str]) -> None:
         # Round 14 measured-and-kept: probing `fresh` for emptiness to skip
@@ -687,7 +578,7 @@ class ParquetTable:
         self.append(fresh)
 
     def delete_where(self, predicate: Column) -> None:
-        self._replace(delete_where(self.read(), predicate))
+        self._replace(lambda cur: delete_where(cur, predicate))
 
     # -- merge-on-read deletes (deletion-vector cost shape) -----------------
     def _tombstone_dir(self, version: str) -> str:
@@ -734,7 +625,7 @@ class ParquetTable:
         file count after compaction."""
         import glob
 
-        df = self.read()
+        self.ensure()
         if target_files is None:
             raw = self.spark.conf.get(
                 "spark.sql.files.maxPartitionBytes", "134217728"
@@ -745,49 +636,90 @@ class ParquetTable:
                 for p in glob.glob(os.path.join(self.data_dir(), "*.parquet"))
             )
             target_files = max(1, size // max_bytes + 1)
-        self._replace(df.coalesce(int(target_files)))
+        self._replace(lambda cur: cur.coalesce(int(target_files)))
         return len(glob.glob(os.path.join(self.data_dir(), "*.parquet")))
 
-    # -- optimistic multi-writer concurrency (OCC) ---------------------------
+    # -- the commit protocol ------------------------------------------------
     #
     # The classic Delta-style optimistic protocol, expressed with the two
     # atomic primitives a POSIX filesystem gives us (O_CREAT|O_EXCL create
-    # and same-dir rename):
+    # and same-dir rename).  Every version any method creates goes through
+    # _commit():
     #
     #   1. read the latest COMMITTED snapshot N (its base);
-    #   2. stage the full rewritten table into stage-<uuid>/;
+    #   2. stage the full new table into stage-<uuid>/;
     #   3. claim version N+1 by O_EXCL-creating v-XXXXXXXX.claim — exactly
     #      one writer per version number can win this, so commits serialize
     #      without a coordinator (Delta's "mutual exclusion on the log
     #      entry", here on the claim file);
     #   4. rename the staging dir to v-XXXXXXXX (atomic: the snapshot
     #      appears complete or not at all);
-    #   5. O_EXCL-create v-XXXXXXXX.commit — only now is the version
-    #      COMMITTED and visible to latest_committed();
+    #   5. write v-XXXXXXXX.commit — only now is the version COMMITTED and
+    #      visible to current_version();
     #   6. advance the CURRENT pointer monotonically (never backwards, so
     #      a slow winner of version N can't clobber the already-published
     #      N+1) and GC snapshots below the retention window.
     #
     # A writer that loses the claim race had computed its rewrite against a
-    # stale snapshot: it raises CommitConflictError and transact() retries
-    # the whole read-rewrite-commit loop from the NEW snapshot — i.e. the
-    # lost-update anomaly is impossible, at the cost of recomputing the
-    # loser's work (the optimistic trade, same as Delta/Iceberg).  Size
-    # ``retain`` to cover writer lag: a base snapshot GC'd mid-rewrite
-    # surfaces as retention aging, which transact() also retries.
-    #
-    # Scope: OCC writers coordinate with each other.  Mixing transact()
-    # with the legacy single-writer mutations (upsert/delete_where/...)
-    # CONCURRENTLY is unsupported (sequential mixing is fine — both sides
-    # see the other's versions); the legacy path stays the default because
-    # the reference's own tables are single-writer.  On an object store the
-    # claim's O_EXCL becomes a conditional PUT (If-None-Match), same shape.
+    # stale snapshot: it raises CommitConflictError — upsert/delete_where/
+    # compact surface it to the caller, transact() retries the whole
+    # read-rewrite-commit loop from the NEW snapshot.  Either way the
+    # lost-update anomaly is impossible (the optimistic trade, same as
+    # Delta/Iceberg).  Size ``retain`` to cover writer lag: a base snapshot
+    # GC'd mid-rewrite surfaces as retention aging, which transact() also
+    # retries.  On an object store the claim's O_EXCL becomes a conditional
+    # PUT (If-None-Match), same shape.
 
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
-        """Write ``df`` as a full snapshot at ``path`` in this table's
-        physical layout (overridden by the hive-partitioned subclass so
-        OCC commits keep the layout its pruned merges parse)."""
-        self._conform(df).write.mode("overwrite").parquet(path)
+        """Write ``df`` — already in the table schema — as a full snapshot
+        at ``path`` in this table's physical layout (overridden by the
+        hive-partitioned subclass so its snapshots keep the layout its
+        pruned merges parse)."""
+        df.write.mode("overwrite").parquet(path)
+
+    def _commit(self, base: str | None, fill) -> str:
+        """The one way a version is born: ``fill(stage)`` writes the whole
+        new snapshot into a fresh ``stage-<uuid>/``, then version
+        ``base + 1`` is claimed (O_EXCL, with a unique cookie), the stage
+        renamed into place, the commit marker written and the pointer
+        advanced.  ``base`` is None only for the first version.
+
+        Raises :class:`CommitConflictError` when another writer holds the
+        claim — checked before the stage is filled (fail fast: a burnt
+        claim costs no snapshot write, unless its writer demonstrably
+        died, see :meth:`_reclaim_dead_claim`) and authoritatively by the
+        O_EXCL.  Any failure before the claim removes the stage.  Returns
+        the committed version name."""
+        import shutil
+        import uuid
+
+        target = f"v-{(int(base[2:]) if base else 0) + 1:08d}"
+        claim = self._claim_marker(target)
+        if os.path.exists(claim) and not self._reclaim_dead_claim(target):
+            raise CommitConflictError(self.name, str(base), target)
+        os.makedirs(self.path, exist_ok=True)
+        stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
+        try:
+            fill(stage)
+            try:
+                fd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                raise CommitConflictError(self.name, str(base), target) from None
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+        try:
+            # base version + a unique cookie: the cookie makes the claim's
+            # reclamation identity collision-proof across inode/mtime-
+            # quantum reuse (see _reclaim_dead_claim._ident, ADVICE r12)
+            os.write(fd, f"{base or 'create'}:{uuid.uuid4().hex}".encode())
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+        os.rename(stage, os.path.join(self.path, target))
+        self._write_atomic(self._commit_marker(target), base or "")
+        self._advance_pointer(target)
+        return target
 
     def _commit_marker(self, version: str) -> str:
         return os.path.join(self.path, f"{version}.commit")
@@ -972,9 +904,9 @@ class ParquetTable:
             """(ino, mtime_ns, size, content-digest) of the claim if it is
             currently dir-less and marker-less, else None (not reclaimable
             right now).  The digest covers the unique cookie every claim
-            this code writes carries (see ``commit_rewrite``/``ensure``),
-            so on filesystems with coarse mtime granularity (1 s NFSv3)
-            inode reuse within one timestamp quantum can no longer alias a
+            this code writes carries (see ``_commit``), so on filesystems
+            with coarse mtime granularity (1 s NFSv3) inode reuse within
+            one timestamp quantum can no longer alias a
             FRESH claim with a previously-observed dead one and inherit
             its reclamation window (ADVICE r12).  A foreign zero-byte
             claim still gets (ino, mtime_ns, 0, digest-of-empty) — the
@@ -1068,12 +1000,6 @@ class ParquetTable:
         finally:
             self._release_pointer_lock(lock, token)
 
-    def latest_committed(self) -> str | None:
-        """Newest version an OCC writer may base a rewrite on — since
-        current_version() itself consults the commit markers, this is the
-        same value under the OCC-facing name."""
-        return self.current_version()
-
     def commit_rewrite(self, df: DataFrame, base_version: str) -> str:
         """Commit ``df`` as the FULL table content of version base+1,
         failing with :class:`CommitConflictError` if any other writer
@@ -1086,58 +1012,23 @@ class ParquetTable:
         unchanged for :attr:`claim_ttl` and reclaims it (so writers that
         keep retrying self-heal); ``recover_stale()`` (with writers
         stopped) remains the immediate manual path."""
-        import shutil
-        import uuid
-
         if self._defaults:
-            # read_version() shows a snapshot as-stored (no read-time
-            # DEFAULT backfill), so a committed rewrite of one would land
-            # stored NULLs in a snapshot with no pre-alter epoch dirs —
-            # read()'s backfill silently stops applying.  Guarded HERE so
-            # every OCC commit path (transact() included) refuses loudly.
+            # the committed snapshot has no pre-alter epoch dirs, so
+            # read()'s DEFAULT backfill stops applying: any stored NULL
+            # the caller's rows carry for an ALTER-ed column becomes data.
+            # Guarded HERE so every direct commit path (transact()
+            # included) refuses loudly; _replace folds the defaults.
             raise ValueError(
                 f"table {self.name} has read-time ALTER defaults "
-                f"({sorted(self._defaults)}); an OCC commit would write "
+                f"({sorted(self._defaults)}); a commit_rewrite would write "
                 "their stored NULLs as data — fold the defaults with a "
-                "legacy rewrite (e.g. upsert of read()) first"
+                "rewrite (e.g. upsert of read()) first"
             )
         self.ensure()
-        target = f"v-{int(base_version[2:]) + 1:08d}"
-        if os.path.exists(self._claim_marker(target)) and not self._reclaim_dead_claim(
-            target
-        ):
-            # fail fast BEFORE the expensive staged write: the claim is
-            # already burnt (racing winner, or a crashed writer awaiting
-            # reclamation); the O_EXCL below remains the authority
-            raise CommitConflictError(self.name, base_version, target)
-        stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
-        self._write_snapshot(df, stage)
-        try:
-            fd = os.open(
-                self._claim_marker(target),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        except FileExistsError:
-            shutil.rmtree(stage, ignore_errors=True)
-            raise CommitConflictError(self.name, base_version, target) from None
-        try:
-            # base version + a unique cookie: the cookie makes the claim's
-            # reclamation identity collision-proof across inode/mtime-
-            # quantum reuse (see _reclaim_dead_claim._ident, ADVICE r12)
-            os.write(fd, f"{base_version}:{uuid.uuid4().hex}".encode())
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        if os.path.isdir(os.path.join(self.path, target)):
-            # the version dir pre-exists a fresh claim only when a LEGACY
-            # publish (which claims nothing) raced us — same staleness,
-            # same answer; our claim file stays (its number is burnt)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise CommitConflictError(self.name, base_version, target)
-        os.rename(stage, os.path.join(self.path, target))
-        self._write_atomic(self._commit_marker(target), base_version)
-        self._occ_publish(target)
-        return target
+        df = self._conform(df)
+        return self._commit(
+            base_version, lambda stage: self._write_snapshot(df, stage)
+        )
 
     def transact(self, rewrite, max_attempts: int = 5) -> str:
         """Optimistic serializable rewrite: ``rewrite`` maps the latest
@@ -1153,7 +1044,7 @@ class ParquetTable:
         for attempt in range(max_attempts):
             if attempt:
                 time.sleep(0.02 * attempt)  # let the racing winner finish
-            base = self.latest_committed()
+            base = self.current_version()
             try:
                 out = rewrite(self.read_version(base))
                 return self.commit_rewrite(out, base)
@@ -1188,11 +1079,11 @@ class ParquetTable:
         assert last is not None
         raise last
 
-    def _occ_publish(self, version: str) -> None:
-        """Monotonic CURRENT advance + below-window GC, serialized by a
-        tiny O_EXCL lock file (microsecond critical section; a crashed
-        holder's lock is stolen after 10 s).  Unlike the legacy
-        ``_publish`` this NEVER deletes dirs above the pointer — a
+    def _advance_pointer(self, version: str) -> None:
+        """The last step of :meth:`_commit`: monotonic CURRENT advance +
+        below-window GC, serialized by a tiny O_EXCL lock file
+        (microsecond critical section; a crashed holder's lock is stolen
+        after 10 s).  It NEVER deletes dirs above the pointer — a
         higher-numbered dir may be another writer's commit in flight.
 
         The lock protects only the pointer CACHE: current_version()
@@ -1294,10 +1185,10 @@ class ParquetTable:
             elif d.endswith(".claim") and d.startswith("v-"):
                 v = d.rsplit(".", 1)[0]
                 if not os.path.exists(self._commit_marker(v)):
-                    # only versions ABOVE the pointer can be crashed OCC
-                    # commits; at or below it the dir is a LIVE legacy
-                    # snapshot that merely burnt this claim's number —
-                    # drop just the stale claim file, never the data
+                    # only versions ABOVE the pointer can be crashed
+                    # commits; at or below it the dir is LIVE data whatever
+                    # its markers say — drop just the stale claim file,
+                    # never the data
                     vdir = os.path.join(self.path, v)
                     if int(v[2:]) > cur_n and os.path.isdir(vdir):
                         shutil.rmtree(vdir, ignore_errors=True)
@@ -1321,8 +1212,8 @@ class PartitionedParquetTable(ParquetTable):
     2. reads ONLY those partitions of the live version (the filter is on
        the partition columns, so Spark prunes at the file listing — no
        bytes of untouched partitions are read),
-    3. writes the merged rows for those partitions into the next version
-       dir, and
+    3. writes the merged rows for those partitions into the staged next
+       version, and
     4. carries every untouched partition over by HARDLINKING its files
        into the new version (metadata-only, zero data copy; the GC of a
        superseded version just drops link counts).
@@ -1330,8 +1221,8 @@ class PartitionedParquetTable(ParquetTable):
     So MERGE cost is O(touched partitions + batch) — the copy-on-write
     granularity Delta/Iceberg give you, here at directory level.  On an
     object store the hardlink step becomes a manifest write (SCALE.md);
-    the pointer-commit crash safety is inherited unchanged: a crash at any
-    point before publish leaves the previous version fully live.
+    the commit protocol is inherited unchanged: a crash at any point
+    before the commit marker leaves the previous version fully live.
 
     Constraints: partition columns must be non-null scalars (hive dir
     naming), and a MERGE batch must carry its partition columns.  A key
@@ -1389,33 +1280,15 @@ class PartitionedParquetTable(ParquetTable):
     def _value_key(row: tuple) -> tuple:
         return tuple(None if v is None else str(v) for v in row)
 
-    # ensure() is inherited: the base class's claim-based creation writes
-    # the empty snapshot through _write_snapshot, which the override below
-    # keeps hive-partitioned.
+    # ensure(), read() and read_version() are inherited: the empty first
+    # snapshot goes through _write_snapshot and every scan through _scan,
+    # both of which the overrides below keep hive-partitioned.
 
-    def read(self) -> DataFrame:
-        self.ensure()
-        return self._apply_tombstones(
+    def _scan(self, path: str) -> DataFrame:
+        return (
             self.spark.read.schema(self.schema)
-            .option("basePath", self.data_dir())
-            .parquet(self.data_dir())
-            .select(*[f.name for f in self.schema.fields]),
-            self.current_version(),
-        )
-
-    def read_version(self, version: str) -> DataFrame:
-        p = os.path.join(self.path, version)
-        if not os.path.isdir(p):
-            raise FileNotFoundError(
-                f"snapshot {version} of table {self.name} is not retained "
-                f"(retain={self.retain}; have {self.versions()})"
-            )
-        return self._apply_tombstones(
-            self.spark.read.schema(self.schema)
-            .option("basePath", p)
-            .parquet(p)
-            .select(*[f.name for f in self.schema.fields]),
-            version,
+            .option("basePath", path)
+            .parquet(path)
         )
 
     def append(self, df: DataFrame) -> None:
@@ -1425,12 +1298,10 @@ class PartitionedParquetTable(ParquetTable):
         ).parquet(self.data_dir())
 
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
-        # OCC commits must keep the hive layout: a flat snapshot would be
+        # every snapshot must keep the hive layout: a flat one would be
         # readable but the NEXT pruned merge parses `pcol=value/` dirs to
         # decide touched-vs-carried partitions and would find none
-        self._conform(df).write.partitionBy(*self.partition_by).mode(
-            "overwrite"
-        ).parquet(path)
+        df.write.partitionBy(*self.partition_by).mode("overwrite").parquet(path)
 
     def _sibling(self, name: str) -> "PartitionedParquetTable":
         return PartitionedParquetTable(
@@ -1493,19 +1364,20 @@ class PartitionedParquetTable(ParquetTable):
 
     def _pruned_rewrite(self, src_values: list[tuple], rewrite_fn) -> None:
         """Shared partition-pruned copy-on-write: ``rewrite_fn(touched_df)``
-        returns the replacement rows for exactly the touched partitions."""
-        self.ensure()
-        old_dir = self.data_dir()
-        pred = self._touched_pred(src_values)
-        touched_df = self.read().filter(pred)  # partition-pruned scan
+        returns the replacement rows for exactly the touched partitions;
+        the untouched ones are hardlink-carried from the base version."""
+        base = self.ensure().current_version()
+        touched_df = self.read_version(base).filter(
+            self._touched_pred(src_values)
+        )  # partition-pruned scan
         out = rewrite_fn(touched_df)
-        v = self._next_version()
-        new_dir = os.path.join(self.path, v)
-        out.write.partitionBy(*self.partition_by).mode("overwrite").parquet(new_dir)
-        self._carry_over(
-            old_dir, new_dir, {self._value_key(row) for row in src_values}
-        )
-        self._publish(v)
+        touched = {self._value_key(row) for row in src_values}
+
+        def fill(stage: str) -> None:
+            self._write_snapshot(out, stage)
+            self._carry_over(os.path.join(self.path, base), stage, touched)
+
+        self._commit(base, fill)
 
     def upsert(self, source: DataFrame, keys: list[str]) -> None:
         src = self._conform(source)

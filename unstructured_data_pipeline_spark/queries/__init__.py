@@ -341,13 +341,23 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # the one exact k-means core (operators/clustering.py) and the PQ
-    # encode built on it (operators/pq.py)
-    "kmeans_embeddings_clusters",
-    "semdedup_report",
-    "ann_pq_topk_contract",
-    "ann_pq_recall",
-    "ann_pq_subspace_topk",
+    # every ParquetTable version now commits through one claim path
+    # (operators/dml.py ParquetTable._commit); the rollup's batch
+    # watermark commits inside its version
+    "dml_upsert_customers",
+    "dml_delete_append_lifecycle",
+    "merge_partitioned_lifecycle",
+    "table_time_travel_report",
+    "table_changes_stream_report",
+    "schema_evolution_report",
+    "table_clone_report",
+    "compaction_report",
+    "gdpr_erasure_lifecycle",
+    "continuous_rollup_events",
+    "occ_transact_lifecycle",
+    "occ_partitioned_lifecycle",
+    "occ_recover_stale_lifecycle",
+    "streaming_intake_eav",
 ]
 
 

@@ -81,7 +81,7 @@ def occ_transact_lifecycle(spark, sf_dir):
         t.ensure()
         record("01_create", t.current_version())
 
-        # 02: seed rows land via an OCC transact (not the legacy publish)
+        # 02: seed rows land via an OCC transact
         v = t.transact(lambda df: df.unionByName(seed))
         record("02_seed", v)
 
@@ -102,7 +102,7 @@ def occ_transact_lifecycle(spark, sf_dir):
         # the +2 writer wins the claim, the +1 writer's direct commit_rewrite
         # fail-fasts on the burnt claim (no stage- dir is ever created), then
         # lands via transact() ON TOP of the winner (lost update impossible)
-        base = t.latest_committed()
+        base = t.current_version()
         winner = t.read_version(base).withColumn(
             "c_acctbal", F.col("c_acctbal") + 2.0
         )

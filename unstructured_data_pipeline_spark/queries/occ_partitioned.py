@@ -5,14 +5,14 @@ The hive-layout-preserving OCC commit path on
 :class:`~unstructured_data_pipeline_spark.operators.dml.PartitionedParquetTable`
 (``_write_snapshot`` override: ``commit_rewrite`` stages with
 ``partitionBy`` so an OCC snapshot keeps its ``pcol=value/`` dirs) had
-unit evidence only.  This query executes the full mixed-mode protocol on
-a scratch partitioned table and hash-gates every step against a DuckDB
-oracle, falsifying any of:
+unit evidence only.  This query executes the full protocol on a scratch
+partitioned table and hash-gates every step against a DuckDB oracle,
+falsifying any of:
 
 * an OCC commit flattening the hive layout (step 03 counts the
   ``seg=`` dirs ON DISK inside the OCC-committed version dir);
 * a lost update in the raced commit pair, or a loser that stages;
-* a partition-PRUNED legacy merge landing wrong rows when its base
+* a partition-PRUNED merge landing wrong rows when its base
   snapshot was OCC-committed — the exact regression the
   ``_write_snapshot`` override exists to prevent (a flat snapshot would
   make the pruned merge find no partitions and silently degrade);
@@ -45,7 +45,7 @@ def occ_partitioned_lifecycle(spark, sf_dir):
     """Nine-step OCC lifecycle on a hive-partitioned scratch table:
     create -> OCC seed -> on-disk layout check -> OCC partition-targeted
     rewrite -> raced commit pair (loser fail-fasts without staging) ->
-    partition-pruned legacy merge ON TOP of the OCC-committed snapshot ->
+    partition-pruned merge ON TOP of the OCC-committed snapshot ->
     hardlink-carry check -> final read-back.  Cites ``transact()`` /
     ``commit_rewrite()`` / ``PartitionedParquetTable._write_snapshot``
     in `operators/dml.py` (symbols, per the round-12 citation
@@ -135,7 +135,7 @@ def occ_partitioned_lifecycle(spark, sf_dir):
 
         # 05/06: raced pair from the same base — winner commits +2 on all,
         # loser fail-fasts on the burnt claim WITHOUT staging
-        base = t.latest_committed()
+        base = t.current_version()
         winner = t.read_version(base).withColumn(
             "c_acctbal", F.col("c_acctbal") + 2.0
         )
@@ -152,7 +152,7 @@ def occ_partitioned_lifecycle(spark, sf_dir):
             conflict = f"conflict@{t.current_version()}" if not staged else "STAGED"
         record("06_race_loser_conflict", conflict)
 
-        # 07: partition-pruned LEGACY merge on top of the OCC-committed
+        # 07: partition-pruned merge on top of the OCC-committed
         # snapshot — keys include the partition column, so the merge is
         # statically partition-local (no complement scan); only seg=s1 is
         # read and rewritten, the other three partitions are hardlink-carried

@@ -9,9 +9,12 @@ the hypertable restriction); mergeable-distinct needs a sketch column
 (see `queries.kmv_distinct_sketch` for the deterministic KMV shape).
 
 Exactly-once: foreachBatch delivery is at-least-once, and an additive
-merge double-counts on replay — so the table carries a batch-id
-high-watermark (`_last_batch` beside the data) and `merge_rollup_batch`
-skips batches at-or-below it.  Replays of the same epoch therefore no-op,
+merge double-counts on replay — so each table version carries the
+batch-id high-watermark it was built from (`_last_batch` inside the
+version dir, committed with the rows in one commit — the Structured
+Streaming rule that a sink's output and its progress commit together)
+and `merge_rollup_batch` skips batches at-or-below it.  Replays of the
+same epoch therefore no-op, even after a crash at any point of the merge,
 and the final table equals the one-shot batch aggregate regardless of how
 arrivals were micro-batched (tested, and oracle-checked via
 `queries.continuous_rollup_events`).
@@ -33,13 +36,9 @@ from pyspark.sql import functions as F
 from unstructured_data_pipeline_spark.operators.dml import ParquetTable
 
 
-def _hwm_path(table: ParquetTable) -> str:
-    return os.path.join(table.path, "_last_batch")
-
-
 def last_applied_batch(table: ParquetTable) -> int:
     try:
-        with open(_hwm_path(table)) as f:
+        with open(os.path.join(table.data_dir(), "_last_batch")) as f:
             return int(f.read().strip())
     except (FileNotFoundError, ValueError):
         return -1
@@ -54,12 +53,12 @@ def merge_rollup_batch(
 ) -> bool:
     """Additively merge one micro-batch's partial aggregate; returns False
     (no-op) for an already-applied ``batch_id`` (replay)."""
+    base = table.ensure().current_version()
     if batch_id <= last_applied_batch(table):
         return False
-    table.ensure()
     # suffix the metric columns per side; USING full-outer join coalesces
     # the key columns natively
-    cur = table.read().select(
+    cur = table.read_version(base).select(
         *keys, *[F.col(m).alias(f"{m}_c") for m in metrics]
     )
     p = partial.select(*keys, *[F.col(m).alias(f"{m}_p") for m in metrics])
@@ -73,9 +72,13 @@ def merge_rollup_batch(
             for m in metrics
         ],
     )
-    table._replace(merged)
-    tmp = _hwm_path(table) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-    os.replace(tmp, _hwm_path(table))  # atomic, like the CURRENT pointer
+
+    def fill(stage: str) -> None:
+        # Spark's reader skips `_`-prefixed files, so the watermark rides
+        # inside the snapshot it describes without becoming a row
+        table._write_snapshot(merged, stage)
+        with open(os.path.join(stage, "_last_batch"), "w") as f:
+            f.write(str(batch_id))
+
+    table._commit(base, fill)
     return True
