@@ -7,6 +7,7 @@ phrases)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.queries import (
@@ -21,7 +22,9 @@ from unstructured_data_pipeline_spark.queries import (
     k_anonymity_audit,
     kcore_decomposition,
     ndcg_mrr_eval,
+    pagerank_part_copurchase,
     rake_keyphrases,
+    recursive_bom_closure_report,
     referential_integrity_audit,
     _t,
 )
@@ -184,4 +187,26 @@ def test_kcore_releases_round_checkpoints(spark, sf_dir):
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     kcore_decomposition(spark, sf_dir).collect()
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+@pytest.mark.parametrize("query", [pagerank_part_copurchase, recursive_bom_closure_report])
+def test_persisted_edges_released_on_success_and_failure(spark, sf_dir, monkeypatch, query):
+    """The persisted edge table is freed after the result is collected, and
+    also when the collect raises."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert query(spark, sf_dir).collect()
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+    frame = type(spark.range(1))
+    collect = frame.collect
+
+    def boom(self):
+        collect(self)  # runs the plan, so the edges are materialized
+        raise RuntimeError("collect failed")
+
+    monkeypatch.setattr(frame, "collect", boom)
+    with pytest.raises(RuntimeError, match="collect failed"):
+        query(spark, sf_dir)
     assert set(jsc.getPersistentRDDs().keys()) <= before

@@ -3,12 +3,12 @@
 The reference's History tab runs three queries over the persisted tables,
 sharing one dynamically-built predicate (`app/Auto-Magic Document AI.py:
 663-674`).  Rebuilt here as DataFrame ops with the correlated subqueries
-decorrelated by hand (aggregate-once + equi-join — what Snowflake's optimizer
-did implicitly, and what Catalyst would do given the SQL form):
+decorrelated by hand into aggregates and a semi-join flag (what Snowflake's
+optimizer did implicitly, and what Catalyst does given the SQL form):
 
 * class_summary     — COUNT(DISTINCT file_ref) per class      (`app.py:678-693`)
-* documents_latest  — latest run per (file_ref, class_name) via window dedup
-                      (the QUALIFY ROW_NUMBER query, `app.py:698-741`), with
+* documents_latest  — current state per (file_ref, class_name) (the
+                      QUALIFY ROW_NUMBER query, `app.py:698-741`), with
                       fields_extracted (J2), timestamp backfill (J1), and
                       has_ocr (P5 EXISTS semi-join)
 * field_flatten     — field-level projection + TO_JSON        (`app.py:744-759`)
@@ -17,17 +17,18 @@ Schema drift: ``processed_at``/``extracted_at`` are OPTIONAL (the app-side
 DDL omits them); the reference retries a timestamp-free SQL variant on error
 (`app.py:738-741`) — here we introspect ``df.columns`` instead (C7).
 
-Scale notes: the window dedup shuffles once on (file_ref, class_name);
-fields_extracted reuses that same key so AQE can pipeline the exchanges;
-has_ocr is a left-semi broadcast when document_ocr is small, shuffle-semi
-otherwise — both picked by the planner, not hand-scheduled.
+Scale notes: documents_latest shuffles once, on (file_ref, class_name): EAV
+and ``processed`` rows fold in one aggregate, so the backfill needs no join.
+Each result is collected by one process (the History UI or the caller), so
+it is sorted in one task rather than range-partitioned (no sampling job); the
+scans and partial aggregates stay parallel.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.functions.scalars import stage_from_file_url
@@ -71,7 +72,8 @@ def class_summary(eav: DataFrame, filters: HistoryFilters | None = None) -> Data
         narrowed.filter(f.predicate(narrowed))
         .groupBy("class_name")
         .agg(F.countDistinct("file_ref").alias("docs"))
-        .orderBy(F.desc("docs"), F.asc("class_name"))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("docs"), F.asc("class_name"))
     )
 
 
@@ -90,29 +92,30 @@ def documents_latest(
     """
     f = filters or HistoryFilters()
     df = eav.filter(f.predicate(eav))
+    kept = [c for c in ("file_url", "extracted_at") if c in df.columns]
+    rows = df.select("file_ref", "class_name", F.lit(1).alias("_e"), *kept)
+    # J2 decorrelated: per-key field count (was a correlated COUNT subquery);
+    # only EAV rows carry _e, so count(_e) counts fields
+    agg_cols = [F.count("_e").alias("fields_extracted")]
+    agg_cols += [F.max(c).alias(c) for c in kept]
+    ts = F.col("extracted_at") if "extracted_at" in kept else F.lit(None).cast("timestamp_ntz")
 
-    has_ts = "extracted_at" in df.columns
-    # J2 decorrelated: per-key field count (was a correlated COUNT subquery)
-    agg_cols = [F.count(F.lit(1)).alias("fields_extracted")]
-    if "file_url" in df.columns:
-        agg_cols.append(F.max("file_url").alias("file_url"))
-    if has_ts:
-        agg_cols.append(F.max("extracted_at").alias("extracted_at"))
-    per_key = df.groupBy("file_ref", "class_name").agg(*agg_cols)
-
-    # J1 decorrelated: timestamp backfill from the master table's MAX
+    # J1 decorrelated: the master table's MAX(processed_at) folds into the
+    # same aggregate; null keys match nothing in the reference's equi-join
     if processed is not None and "processed_at" in processed.columns:
-        backfill = processed.groupBy("file_ref", "class_name").agg(
-            F.max("processed_at").alias("_backfill_ts")
-        )
-        per_key = per_key.join(backfill, ["file_ref", "class_name"], "left")
-        ts = F.coalesce(
-            F.col("extracted_at") if has_ts else F.lit(None).cast("timestamp_ntz"),
-            F.col("_backfill_ts"),
-        )
-    else:
-        ts = F.col("extracted_at") if has_ts else F.lit(None).cast("timestamp_ntz")
-    per_key = per_key.withColumn("processed_at", ts)
+        backfill = processed.filter(
+            F.col("file_ref").isNotNull() & F.col("class_name").isNotNull()
+        ).select("file_ref", "class_name", F.col("processed_at").alias("_backfill_ts"))
+        rows = rows.unionByName(backfill, allowMissingColumns=True)
+        agg_cols.append(F.max("_backfill_ts").alias("_backfill_ts"))
+        ts = F.coalesce(ts, F.col("_backfill_ts"))
+    # the reference drives from the EAV rows: a key only in processed is dropped
+    per_key = (
+        rows.groupBy("file_ref", "class_name")
+        .agg(*agg_cols)
+        .filter(F.col("fields_extracted") > 0)
+        .withColumn("processed_at", ts)
+    )
 
     # P5: EXISTS -> left-semi-derived boolean flag
     if ocr is not None:
@@ -122,9 +125,7 @@ def documents_latest(
     else:
         per_key = per_key.withColumn("has_ocr", F.lit(False))
 
-    stage = (
-        stage_from_file_url("file_url") if "file_url" in per_key.columns else F.lit("")
-    )
+    stage = stage_from_file_url("file_url") if "file_url" in kept else F.lit("")
     out = per_key.select(
         "file_ref",
         "class_name",
@@ -133,35 +134,24 @@ def documents_latest(
         "has_ocr",
         "processed_at",
     )
-
-    # W1: latest run per key.  When the EAV rows carry per-run timestamps the
-    # groupBy above already collapsed runs via MAX; the window form below is
-    # the general dedup for callers passing run-grained frames.
-    return out.orderBy(F.col("processed_at").desc_nulls_last(), "file_ref", "class_name")
-
-
-def latest_run_per_document(runs: DataFrame, ts_col: str = "processed_at") -> DataFrame:
-    """W1 verbatim: QUALIFY ROW_NUMBER() OVER (PARTITION BY file_ref,
-    class_name ORDER BY ts DESC NULLS LAST) = 1 (`app.py:717`) — Spark SQL has
-    no QUALIFY, so Window + filter."""
-    w = Window.partitionBy("file_ref", "class_name").orderBy(
-        F.col(ts_col).desc_nulls_last()
-    )
-    return (
-        runs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    return out.coalesce(1).sortWithinPartitions(
+        F.col("processed_at").desc_nulls_last(), "file_ref", "class_name"
     )
 
 
 def field_flatten(eav: DataFrame, filters: HistoryFilters | None = None) -> DataFrame:
     """Field-level flatten (`app.py:744-759`): projection + TO_JSON(field
-    value) + three-key ORDER BY."""
+    value) + three-key ORDER BY.  A one-partition shuffle (not a coalesce)
+    keeps the scan parallel."""
     f = filters or HistoryFilters()
     df = eav.filter(f.predicate(eav))
-    return df.select(
-        "file_ref",
-        "class_name",
-        "field_name",
-        F.col("field_value").alias("field_value_json"),
-    ).orderBy("file_ref", "class_name", "field_name")
+    return (
+        df.select(
+            "file_ref",
+            "class_name",
+            "field_name",
+            F.col("field_value").alias("field_value_json"),
+        )
+        .repartition(1)
+        .sortWithinPartitions("file_ref", "class_name", "field_name")
+    )

@@ -341,23 +341,11 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # every ParquetTable version now commits through one claim path
-    # (operators/dml.py ParquetTable._commit); the rollup's batch
-    # watermark commits inside its version
-    "dml_upsert_customers",
-    "dml_delete_append_lifecycle",
-    "merge_partitioned_lifecycle",
-    "table_time_travel_report",
-    "table_changes_stream_report",
-    "schema_evolution_report",
-    "table_clone_report",
-    "compaction_report",
-    "gdpr_erasure_lifecycle",
-    "continuous_rollup_events",
-    "occ_transact_lifecycle",
-    "occ_partitioned_lifecycle",
-    "occ_recover_stale_lifecycle",
-    "streaming_intake_eav",
+    # the History operators (operators/history.py) fold documents_latest's
+    # backfill into its one aggregate and end every query in a one-task sort
+    "history_class_summary",
+    "history_documents_current",
+    "history_field_flatten_filtered",
 ]
 
 

@@ -837,28 +837,30 @@ def pagerank_part_copurchase(spark, sf_dir):
         .withColumn("outw", F.sum("w").over(Window.partitionBy("src")))
         .persist()
     )
-    ranks = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1_000_000).cast("long").alias("r")
-    )
-    for _ in range(3):
-        ranks = (
-            edges.join(ranks, edges["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(
-                (
-                    F.lit(150_000).cast("long")
-                    + F.sum(F.expr("(850 * r * w) div (1000 * outw)"))
-                ).alias("r")
-            )
-            .select(F.col("dst").alias("node"), "r")
+    try:
+        ranks = edges.select(F.col("src").alias("node")).distinct().select(
+            "node", F.lit(1_000_000).cast("long").alias("r")
         )
-    out = (
-        ranks.orderBy(F.desc("r"), "node")
-        .limit(20)
-        .select(F.col("node").alias("part"), F.col("r").alias("pagerank_micro"))
-    )
-    rows = out.collect()  # 20 rows; lets the persisted edges release below
-    edges.unpersist(blocking=False)
+        for _ in range(3):
+            ranks = (
+                edges.join(ranks, edges["src"] == ranks["node"])
+                .groupBy("dst")
+                .agg(
+                    (
+                        F.lit(150_000).cast("long")
+                        + F.sum(F.expr("(850 * r * w) div (1000 * outw)"))
+                    ).alias("r")
+                )
+                .select(F.col("dst").alias("node"), "r")
+            )
+        out = (
+            ranks.orderBy(F.desc("r"), "node")
+            .limit(20)
+            .select(F.col("node").alias("part"), F.col("r").alias("pagerank_micro"))
+        )
+        rows = out.collect()  # 20 rows; lets the persisted edges release below
+    finally:
+        edges.unpersist(blocking=False)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -1769,34 +1771,36 @@ def recursive_bom_closure_report(spark, sf_dir):
         )
         .persist()
     )
-    frontier = edges.select(
-        F.col("parent").alias("ancestor"),
-        F.col("child").alias("descendant"),
-        F.lit(1).alias("depth"),
-    )
-    closure = frontier
-    for _ in range(2):
-        # alias both sides: the frontier derives from edges, so the
-        # self-join needs qualified names
-        f, e = frontier.alias("f"), edges.alias("e")
-        frontier = f.join(
-            e, F.col("f.descendant") == F.col("e.parent")
-        ).select(
-            F.col("f.ancestor").alias("ancestor"),
-            F.col("e.child").alias("descendant"),
-            (F.col("f.depth") + 1).alias("depth"),
+    try:
+        frontier = edges.select(
+            F.col("parent").alias("ancestor"),
+            F.col("child").alias("descendant"),
+            F.lit(1).alias("depth"),
         )
-        closure = closure.unionByName(frontier)
-    out = (
-        closure.groupBy("depth")
-        .agg(
-            F.count(F.lit(1)).alias("n_paths"),
-            F.sum("descendant").alias("sum_desc"),
+        closure = frontier
+        for _ in range(2):
+            # alias both sides: the frontier derives from edges, so the
+            # self-join needs qualified names
+            f, e = frontier.alias("f"), edges.alias("e")
+            frontier = f.join(
+                e, F.col("f.descendant") == F.col("e.parent")
+            ).select(
+                F.col("f.ancestor").alias("ancestor"),
+                F.col("e.child").alias("descendant"),
+                (F.col("f.depth") + 1).alias("depth"),
+            )
+            closure = closure.unionByName(frontier)
+        out = (
+            closure.groupBy("depth")
+            .agg(
+                F.count(F.lit(1)).alias("n_paths"),
+                F.sum("descendant").alias("sum_desc"),
+            )
+            .orderBy("depth")
         )
-        .orderBy("depth")
-    )
-    rows = out.collect()  # ≤3 rows; lets the persisted edges release
-    edges.unpersist(blocking=False)
+        rows = out.collect()  # ≤3 rows; lets the persisted edges release
+    finally:
+        edges.unpersist(blocking=False)
     return spark.createDataFrame(rows, out.schema)
 
 
