@@ -3,6 +3,8 @@ counterparts (`app.py:108-140`, `setup_database.sql:145-168`)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.catalog import (
@@ -82,3 +84,49 @@ def test_verify_table_counts_per_table(spark, tmp_path):
     assert [r["table_name"] for r in rows] == sorted(tables)
     assert got["class_prompts"] == 1
     assert all(v == 0 for k, v in got.items() if k != "class_prompts")
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_bootstrap_is_metadata_only(spark, tmp_path):
+    """CREATE IF NOT EXISTS of the five tables submits no Spark job and
+    writes no data file; every table reads back zero rows with its
+    declared columns."""
+    from unstructured_data_pipeline_spark.schemas import pipeline_tables
+
+    root = tmp_path / "wh"
+    before = _next_job_id(spark)
+    tables = bootstrap_warehouse(spark, str(root))
+    assert _next_job_id(spark) == before
+    for t in tables.values():
+        assert os.listdir(t.data_dir()) == []
+    assert not [f for _, _, fs in os.walk(root) for f in fs if "parquet" in f]
+    for name, schema in pipeline_tables(False).items():
+        df = tables[name].read()
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schema
+        ]
+        assert df.collect() == []
+
+
+def test_seed_row_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """The seed row is built JVM-side (a LocalRelation), not from a Python
+    RDD, so seeding starts no Python worker pool."""
+    from unstructured_data_pipeline_spark.operators.dml import ParquetTable
+
+    seen = []
+    real = ParquetTable.anti_insert
+
+    def spy(self, source, keys):
+        seen.append(source._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, source, keys)
+
+    monkeypatch.setattr(ParquetTable, "anti_insert", spy)
+    tables = bootstrap_warehouse(spark, str(tmp_path / "wh"))
+    seed_invoice_prompts(spark, tables)
+    assert len(seen) == 1 and seen[0].startswith("LocalRelation")
+    (row,) = tables["class_prompts"].read().collect()
+    assert row["class_name"] == "invoice" and row["created_at"] is None
+    assert '"invoice_number":"What is the invoice number?"' in row["prompts"]

@@ -257,22 +257,30 @@ def test_reclaim_never_touches_committed_or_inflight_claims(spark, tmp_path):
 # -- 5. ensure() fail-fast ------------------------------------------------
 
 
-def test_ensure_loser_never_stages(spark, tmp_path):
+def test_ensure_loser_never_stages(spark, tmp_path, monkeypatch):
     """With the creation claim already taken, a racing ensure() must wait
-    for the winner's publish WITHOUT paying a snapshot write of its own."""
+    for the winner's publish WITHOUT creating a stage dir of its own.  The
+    winner publishes the one-empty-parquet-file first version older tables
+    hold, which must stay readable."""
     schema = _schema()
     t = ParquetTable(spark, str(tmp_path), "race11", schema)
     os.makedirs(t.path, exist_ok=True)
     open(t._claim_marker("v-00000001"), "w").close()  # foreign fresh claim
-    writes = []
-    orig = t._write_snapshot
-    t._write_snapshot = lambda df, p: (writes.append(p), orig(df, p))
+    stages = []
+    real_makedirs = os.makedirs
+
+    def makedirs(path, *args, **kwargs):
+        if os.path.basename(path).startswith("stage-"):
+            stages.append(path)
+        return real_makedirs(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "makedirs", makedirs)
 
     def winner_publishes():
         time.sleep(0.3)
         w = ParquetTable(spark, str(tmp_path), "race11", schema)
         stage = os.path.join(w.path, "stage-winner")
-        w._write_snapshot(spark.createDataFrame([], schema), stage)
+        spark.createDataFrame([], schema).write.parquet(stage)
         os.rename(stage, os.path.join(w.path, "v-00000001"))
         w._write_atomic(w._commit_marker("v-00000001"), "")
         w._advance_pointer("v-00000001")
@@ -283,7 +291,7 @@ def test_ensure_loser_never_stages(spark, tmp_path):
         t.ensure()
     finally:
         th.join()
-    assert writes == []  # the loser staged NOTHING
+    assert stages == []  # the loser staged NOTHING
     assert t.current_version() == "v-00000001"
     assert t.read().count() == 0
 

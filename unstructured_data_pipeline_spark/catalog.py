@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.operators.dml import ParquetTable
 from unstructured_data_pipeline_spark.schemas import (
-    PIPELINE_TABLES,
     VARIANT_NATIVE_CONF,
     pipeline_tables,
 )
@@ -40,13 +39,8 @@ def bootstrap_warehouse(
         name: ParquetTable(spark, root, name, schema)
         for name, schema in pipeline_tables(variant_native).items()
     }
-    # round 13: each fresh ensure() writes one empty snapshot (a Spark
-    # job); the five tables are disjoint, so overlap the creations
-    # (guide §2.6) — ensure() is concurrent-safe by design (OCC claim)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        list(pool.map(lambda t: t.ensure(), tables.values()))
+    for t in tables.values():
+        t.ensure()  # metadata-only: a few filesystem calls, no Spark job
     return tables
 
 
@@ -67,9 +61,12 @@ def seed_invoice_prompts(spark: SparkSession, tables: dict[str, ParquetTable]) -
         "subtotal": "What is the subtotal before tax?",
         "payment_terms": "What are the payment terms?",
     }
-    src = spark.createDataFrame(
-        [("invoice", canonical_json(seed), None, None)],
-        PIPELINE_TABLES["class_prompts"],
+    # inline VALUES is a LocalRelation: no Python worker pool for one row
+    src = spark.sql(
+        "SELECT * FROM VALUES (:class_name, :prompts,"
+        " CAST(NULL AS TIMESTAMP_NTZ), CAST(NULL AS TIMESTAMP_NTZ))"
+        " AS t(class_name, prompts, created_at, updated_at)",
+        args={"class_name": "invoice", "prompts": canonical_json(seed)},
     )
     tables["class_prompts"].anti_insert(src, ["class_name"])
 

@@ -74,7 +74,9 @@ def upsert(
     backfill-sized merge must not be force-broadcast (ADVICE r1)."""
     cols = target.columns
     src = source.select(*cols)
-    key_set = src.select(*keys).distinct()
+    # no distinct(): a LEFT ANTI join ignores duplicate right-side keys,
+    # and the dedup would cost an aggregate exchange per upsert
+    key_set = src.select(*keys)
     if broadcast is True:
         key_set = F.broadcast(key_set)
     kept = target.join(key_set, on=keys, how="left_anti")
@@ -179,6 +181,7 @@ class ParquetTable:
         <root>/<name>/
             CURRENT            # pointer cache naming the live version dir
             v-00000001/        # immutable-once-committed parquet snapshots
+                               # (a just-created table's is an empty dir)
             v-00000001.claim   # O_EXCL claim on the version number
             v-00000001.commit  # commit marker: the version is visible
             stage-<uuid>/      # a version being written (not yet claimed)
@@ -325,22 +328,19 @@ class ParquetTable:
 
     # -- CREATE TABLE IF NOT EXISTS (`app.py:38-81`) ------------------------
     def ensure(self) -> "ParquetTable":
-        """Concurrent-safe CREATE IF NOT EXISTS: the empty first version
-        commits through :meth:`_commit` like every other, so racing
-        creators get exactly one O_EXCL winner for v-00000001; the losers
-        wait for its commit (and reclaim the claim of a creator that died
-        mid-commit, then retry)."""
+        """Concurrent-safe CREATE IF NOT EXISTS, metadata-only: the first
+        version is an empty dir (no Spark job, no data file; every scan
+        passes the table schema, so it reads as zero rows) committed
+        through :meth:`_commit` like every other, so racing creators get
+        exactly one O_EXCL winner for v-00000001; the losers wait for its
+        commit (and reclaim the claim of a creator that died mid-commit,
+        then retry)."""
         import time
 
         deadline = time.monotonic() + self.claim_ttl + 60.0
         while self.current_version() is None:
             try:
-                self._commit(
-                    None,
-                    lambda stage: self._write_snapshot(
-                        self.spark.createDataFrame([], self.schema), stage
-                    ),
-                )
+                self._commit(None, os.makedirs)
             except CommitConflictError:
                 if time.monotonic() > deadline:
                     raise TimeoutError(
@@ -1281,8 +1281,8 @@ class PartitionedParquetTable(ParquetTable):
         return tuple(None if v is None else str(v) for v in row)
 
     # ensure(), read() and read_version() are inherited: the empty first
-    # snapshot goes through _write_snapshot and every scan through _scan,
-    # both of which the overrides below keep hive-partitioned.
+    # version holds no partition dirs yet, and every scan goes through the
+    # hive-partitioned _scan below.
 
     def _scan(self, path: str) -> DataFrame:
         return (
