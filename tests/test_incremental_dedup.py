@@ -5,6 +5,8 @@ idempotence of the index, and that verdicts match the one-shot batch LSH."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,3 +155,54 @@ def test_incremental_dedup_in_streaming_intake(spark, tmp_path):
     drain()
     got = {r["doc_id"]: r["is_dup"] for r in flags_tbl.read().collect()}
     assert got == {10: False, 11: False, 12: True}
+
+
+def test_batch_crash_in_fill_leaves_index_unchanged(spark, tmp_path, corpus, monkeypatch):
+    """A crash while a batch's bands are being written commits nothing:
+    the index and its ledger are unchanged, no stage is left, and the
+    replay lands the batch once with the same verdicts."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from unstructured_data_pipeline_spark.operators.dedup import IncrementalLshDedup
+    from unstructured_data_pipeline_spark.operators.dml import last_applied_batch
+
+    inc = IncrementalLshDedup(spark, str(tmp_path / "wh"))
+    b0 = corpus.filter(F.col("doc_id").isin([2, 4]))
+    b1 = corpus.filter(F.col("doc_id").isin([1, 3, 5, 6]))
+    inc.process_batch(b0, corpus, 0)
+    n0 = inc.table.read().count()
+    real = DataFrameWriter.parquet
+
+    class Crash(RuntimeError):
+        pass
+
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        raise Crash(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Crash):
+        inc.process_batch(b1, corpus, 1)
+    monkeypatch.undo()
+    assert inc.table.read().count() == n0
+    assert last_applied_batch(inc.table) == 0
+    assert not [d for d in os.listdir(inc.table.path) if d.startswith("stage-")]
+    got = {r["doc_id"]: r["is_dup"] for r in inc.process_batch(b1, corpus, 1).collect()}
+    assert got == {1: True, 3: False, 5: False, 6: False}
+    assert last_applied_batch(inc.table) == 1
+    # 1, 3 and 6 shingle (5 is too short): 4 bands each, exactly once
+    assert inc.table.read().count() == n0 + 3 * 4
+
+
+def test_index_root_does_not_grow_with_batches(spark, tmp_path, corpus):
+    """The batch ledger lives inside the index's version dir: the index
+    root holds as many entries after six batches as after one."""
+    from unstructured_data_pipeline_spark.operators.dedup import IncrementalLshDedup
+
+    inc = IncrementalLshDedup(spark, str(tmp_path / "wh"))
+    sizes = []
+    for batch_id, doc_id in enumerate([1, 2, 3, 4, 5, 6]):
+        batch = corpus.filter(F.col("doc_id") == doc_id)
+        inc.process_batch(batch, corpus, batch_id)
+        sizes.append(len(os.listdir(inc.table.path)))
+    assert sizes == [sizes[0]] * 6

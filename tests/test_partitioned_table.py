@@ -460,21 +460,23 @@ def _flat(spark, tmp_path, name="mor_flat"):
 
 
 def test_mor_delete_is_o_of_keys(spark, tmp_path):
-    """delete_keys_mor hides the keys WITHOUT touching any data file —
-    the deletion-vector cost shape: O(delete keys) written, zero rewritten."""
+    """delete_keys_mor hides the keys WITHOUT rewriting any data file —
+    the deletion-vector cost shape: O(delete keys) written, zero rewritten.
+    The new version holds the base's files as the same inodes, plus its
+    `_tombstones/`."""
+
+    def stat(p):
+        st = os.stat(os.path.join(t.data_dir(), p))
+        return st.st_ino, st.st_mtime_ns
+
     t = _flat(spark, tmp_path)
-    before = {
-        p: os.stat(os.path.join(t.data_dir(), p)).st_mtime_ns
-        for p in os.listdir(t.data_dir())
-    }
+    before = {p: stat(p) for p in os.listdir(t.data_dir())}
     v_before = t.current_version()
     t.delete_keys_mor(_mk(spark, [(i, "A", 0.0) for i in range(10)]).select("k"), ["k"])
-    assert t.current_version() == v_before  # no rewrite, no new snapshot
-    after = {
-        p: os.stat(os.path.join(t.data_dir(), p)).st_mtime_ns
-        for p in os.listdir(t.data_dir())
-    }
-    assert after == before  # data files untouched
+    assert t.current_version() != v_before  # a new version, no rewrite
+    assert set(os.listdir(t.data_dir())) == {*before, "_tombstones"}
+    after = {p: stat(p) for p in before}
+    assert after == before  # data files untouched: the same inodes
     assert sorted(r.k for r in t.read().collect()) == list(range(10, 30))
 
 
@@ -483,12 +485,12 @@ def test_mor_folds_on_any_rewrite(spark, tmp_path):
     the stale tombstone dir is GC'd with its snapshot."""
     t = _flat(spark, tmp_path)
     t.delete_keys_mor(_mk(spark, [(i, "A", 0.0) for i in range(10)]).select("k"), ["k"])
-    old_tomb = t._tombstone_dir(t.current_version())
+    old_tomb = os.path.join(t.data_dir(), "_tombstones")
     assert os.path.isdir(old_tomb)
     t.compact(target_files=1)
     assert sorted(r.k for r in t.read().collect()) == list(range(10, 30))
     assert not os.path.isdir(old_tomb)
-    assert not os.path.isdir(t._tombstone_dir(t.current_version()))
+    assert not os.path.isdir(os.path.join(t.data_dir(), "_tombstones"))
 
 
 def test_mor_key_semantics_until_fold(spark, tmp_path):

@@ -294,15 +294,17 @@ def test_pointer_behind_marker_heals_and_legacy_builds_on_it(spark, tmp_path):
     advance must not lose its commit: reads serve the marker, and a later
     upsert bases on it instead of overwriting it."""
     t, schema = _make(spark, tmp_path, retain=2)
-    t.transact(
+    base = t.current_version()
+    occ = t.transact(
         lambda df: df.unionByName(
             df.sparkSession.createDataFrame([("occ", 1)], schema)
         )
     )
-    t._write_atomic(t._pointer(), "v-00000001")  # simulate the crash window
-    assert t.current_version() == "v-00000002"
+    t._write_atomic(t._pointer(), base)  # simulate the crash window
+    assert t.current_version() == occ
     t.upsert(spark.createDataFrame([("upsert", 2)], schema), ["k"])
-    assert t.current_version() == "v-00000003"  # built ON the OCC commit
+    # built ON the OCC commit
+    assert t.current_version() == f"v-{int(occ[2:]) + 1:08d}"
     assert _rows(t) == [("occ", 1), ("seed", 0), ("upsert", 2)]
 
 

@@ -314,9 +314,9 @@ def test_ensure_self_heals_dead_creation_claim(spark, tmp_path):
 
 
 def test_transact_retries_tombstone_retention_aging(spark, tmp_path):
-    """Retention GC drops a version's merge-on-read tombstone sidecar
-    together with its dir; a JVM error naming `tombstones-v-XXXXXXXX`
-    is the same staleness and must retry, not re-raise (review #1)."""
+    """Retention GC drops a version's merge-on-read tombstones together
+    with its dir; a JVM error naming `v-XXXXXXXX/_tombstones/` is the
+    same staleness and must retry, not re-raise (review #1)."""
     t, schema = _make(spark, tmp_path)
     state = {"first": True}
 
@@ -325,7 +325,7 @@ def test_transact_retries_tombstone_retention_aging(spark, tmp_path):
             state["first"] = False
             raise RuntimeError(
                 f"java.io.FileNotFoundException: File {t.path}/"
-                "tombstones-v-00000001/part-0.parquet does not exist"
+                "v-00000001/_tombstones/part-0.parquet does not exist"
             )
         return df.unionByName(
             df.sparkSession.createDataFrame([("tombstoned", 1)], schema)

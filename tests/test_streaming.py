@@ -268,11 +268,11 @@ def test_rollup_merge_is_replay_safe(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from unstructured_data_pipeline_spark.operators.dml import ParquetTable
-    from unstructured_data_pipeline_spark.streaming.rollup import (
+    from unstructured_data_pipeline_spark.operators.dml import (
+        ParquetTable,
         last_applied_batch,
-        merge_rollup_batch,
     )
+    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
 
     table = ParquetTable(
         spark,
@@ -303,11 +303,11 @@ def test_rollup_replay_after_crash_at_commit_counts_once(
     of adding the batch a second time."""
     from pyspark.sql import types as T
 
-    from unstructured_data_pipeline_spark.operators.dml import ParquetTable
-    from unstructured_data_pipeline_spark.streaming.rollup import (
+    from unstructured_data_pipeline_spark.operators.dml import (
+        ParquetTable,
         last_applied_batch,
-        merge_rollup_batch,
     )
+    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
 
     schema = "dim string, n long"
     table = ParquetTable(
@@ -338,6 +338,27 @@ def test_rollup_replay_after_crash_at_commit_counts_once(
     merge_rollup_batch(table, batch, ["dim"], ["n"], 0)
     assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
     assert last_applied_batch(table) == 0
+
+
+def test_rollup_compact_keeps_the_batch_ledger(spark, tmp_path):
+    """compact() rewrites the rollup's rows but not its progress: the
+    ledger rides into the compacted version, so a replay stays a no-op."""
+    from pyspark.sql import types as T
+
+    from unstructured_data_pipeline_spark.operators.dml import (
+        ParquetTable,
+        last_applied_batch,
+    )
+    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
+
+    schema = "dim string, n long"
+    table = ParquetTable(spark, str(tmp_path), "rollup_c", T.StructType.fromDDL(schema))
+    batch = spark.createDataFrame([("a", 1)], schema)
+    assert merge_rollup_batch(table, batch, ["dim"], ["n"], 4)
+    table.compact(target_files=1)
+    assert last_applied_batch(table) == 4
+    assert not merge_rollup_batch(table, batch, ["dim"], ["n"], 4)
+    assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
 
 
 def test_stream_stream_interval_join(spark, tmp_path):

@@ -203,3 +203,213 @@ def test_upsert_duplicate_source_keys_without_key_aggregate(spark):
     qe = out._jdf.queryExecution()
     assert "Aggregate" not in qe.optimizedPlan().toString()
     assert "HashAggregate" not in qe.executedPlan().toString()
+
+
+def test_anti_insert_without_key_aggregate(spark, tmp_path, monkeypatch):
+    """Duplicate target keys: the LEFT ANTI join ignores them, so neither
+    anti_insert form plans an aggregate over the target keys."""
+    from unstructured_data_pipeline_spark.operators.dml import anti_insert
+
+    target = _df(spark, [("a", 1), ("a", 1), ("b", 2)], SCHEMA)
+    source = _df(spark, [("a", 10), ("c", 3), ("c", 3)], SCHEMA)
+    out = anti_insert(target, source, ["k"])
+    assert _rows(out) == [("a", 1), ("a", 1), ("b", 2), ("c", 3), ("c", 3)]
+    assert "Aggregate" not in out._jdf.queryExecution().optimizedPlan().toString()
+
+    t = ParquetTable(spark, str(tmp_path), "ai", SCHEMA).ensure()
+    t.append(target)
+    plans = []
+    real = ParquetTable._write_snapshot
+
+    def spy(self, df, path):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, df, path)
+
+    monkeypatch.setattr(ParquetTable, "_write_snapshot", spy)
+    t.anti_insert(source, ["k"])
+    monkeypatch.undo()
+    assert len(plans) == 1 and "Aggregate" not in plans[0]
+    assert _rows(t.read()) == [("a", 1), ("a", 1), ("b", 2), ("c", 3), ("c", 3)]
+
+
+# -- every write is a commit: appends and MOR deletes ----------------------
+
+
+class Crash(RuntimeError):
+    pass
+
+
+def _crash_on_write_under(monkeypatch, table):
+    """Make the next parquet write into ``table``'s dir raise right after
+    its files are written — a crash inside the commit's fill."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if str(path).startswith(table.path + os.sep):
+            raise Crash(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _staged(t):
+    return [d for d in os.listdir(t.path) if d.startswith("stage-")]
+
+
+def test_append_during_a_rewrite_is_not_lost(spark, tmp_path):
+    """A rewrite whose snapshot was read before an append lands must not
+    commit over the append: it raises, and both appended rows stay."""
+    from unstructured_data_pipeline_spark.operators.dml import upsert
+
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    t.append(_df(spark, [("a", 1)], SCHEMA))
+
+    def rewrite(cur):
+        t.append(_df(spark, [("b", 9)], SCHEMA))
+        return upsert(cur, _df(spark, [("a", 2)], SCHEMA), ["k"])
+
+    with pytest.raises(CommitConflictError):
+        t._replace(rewrite)
+    assert _rows(t.read()) == [("a", 1), ("b", 9)]
+
+
+def test_append_overtaken_during_fill_retries(spark, tmp_path, monkeypatch):
+    """Another writer commits while an append's new files are being
+    written: the append loses the claim, retries from the new base, and
+    both rows land."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    other = ParquetTable(spark, str(tmp_path), "t", SCHEMA)
+    real = DataFrameWriter.parquet
+    fired = []
+
+    def parquet(self, path, *args, **kwargs):
+        if not fired and str(path).startswith(t.path + os.sep):
+            fired.append(path)
+            other.append(_df(spark, [("b", 2)], SCHEMA))
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    t.append(_df(spark, [("a", 1)], SCHEMA))
+    monkeypatch.undo()
+    assert fired
+    assert _rows(t.read()) == [("a", 1), ("b", 2)]
+    assert not _staged(t)
+
+
+def test_concurrent_appends_all_land(spark, tmp_path):
+    """More appenders than cores race on one table (retain=1, so a lost
+    base is also GC'd under a loser's link walk): each append retries
+    until it commits, and no row is lost."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    n = min((os.cpu_count() or 4) + 2, 10)  # each round one of n writes wins
+    rows = [(f"r{i}", i) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as ex:
+            futures = [ex.submit(t.append, _df(spark, [r], SCHEMA)) for r in rows]
+            for f in futures:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert _rows(t.read()) == sorted(rows)
+    assert int(t.current_version()[2:]) == n + 1
+    assert not _staged(t)
+
+
+def test_append_leaves_the_base_version_untouched(spark, fresh):
+    """An append commits a new version; no file of the base version it
+    hardlinks from is written, its `_SUCCESS` marker included."""
+
+    def files(vdir):
+        return {
+            os.path.relpath(os.path.join(d, f), vdir): os.stat(os.path.join(d, f))
+            for d, _, fs in os.walk(vdir)
+            for f in fs
+        }
+
+    fresh.append(_df(spark, ROWS[:1]))
+    base = fresh.data_dir()
+    before = {p: (st.st_ino, st.st_mtime_ns) for p, st in files(base).items()}
+    fresh.append(_df(spark, ROWS[1:]))
+    assert fresh.data_dir() != base
+    after = files(base)
+    assert {p: (st.st_ino, st.st_mtime_ns) for p, st in after.items()} == before
+    carried = files(fresh.data_dir())
+    shared = [p for p in before if "_SUCCESS" not in p]  # the new one is its own
+    assert shared and all(carried[p].st_ino == before[p][0] for p in shared)
+
+
+def test_append_crash_in_fill_leaves_table_unchanged(spark, fresh, monkeypatch):
+    fresh.append(_df(spark, ROWS[:1]))
+    _crash_on_write_under(monkeypatch, fresh)
+    with pytest.raises(Crash):
+        fresh.append(_df(spark, ROWS[1:]))
+    monkeypatch.undo()
+    assert _rows(fresh.read()) == ROWS[:1]
+    assert not _staged(fresh)
+    fresh.append(_df(spark, ROWS[1:]))  # the replay lands once
+    assert _rows(fresh.read()) == ROWS
+
+
+def test_mor_delete_crash_in_fill_leaves_table_unchanged(spark, fresh, monkeypatch):
+    fresh.append(_df(spark, ROWS))
+    _crash_on_write_under(monkeypatch, fresh)
+    with pytest.raises(Crash):
+        fresh.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    monkeypatch.undo()
+    assert _rows(fresh.read()) == ROWS
+    assert not _staged(fresh)
+    fresh.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    assert _rows(fresh.read()) == ROWS[1:]
+
+
+def test_tombstones_survive_alter_append_and_pruned_upsert(spark, tmp_path):
+    """MOR-deleted keys stay hidden through every write that does not fold
+    them: an ALTER epoch, an append, and a partition-pruned upsert of
+    another partition."""
+    flat = ParquetTable(spark, str(tmp_path), "flat", SCHEMA3).ensure()
+    flat.append(_df(spark, ROWS))
+    flat.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    flat.add_column("g", T.StringType(), default="d")
+    assert _rows(flat.read()) == [("b", "y", 2, "d")]
+    flat.append(_df(spark, [("c", "x", 3, None)], flat.schema))
+    assert _rows(flat.read()) == [("b", "y", 2, "d"), ("c", "x", 3, None)]
+
+    part = PartitionedParquetTable(spark, str(tmp_path), "part", SCHEMA3, ["p"])
+    part.ensure().append(_df(spark, ROWS))
+    part.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    part.upsert(_df(spark, [("b", "y", 5)]), ["k", "p"])
+    assert _rows(part.read()) == [("b", "y", 5)]
+    part.append(_df(spark, [("c", "y", 3)]))
+    assert _rows(part.read()) == [("b", "y", 5), ("c", "y", 3)]
+
+
+def test_pruned_upsert_reinserting_a_tombstoned_key_shows_it(spark, tmp_path):
+    """The pruned merge drops the tombstones of keys its rewritten rows
+    re-insert, and keeps the others."""
+    t = PartitionedParquetTable(spark, str(tmp_path), "t", SCHEMA3, ["p"])
+    t.ensure().append(_df(spark, [*ROWS, ("c", "x", 3)]))
+    t.delete_keys_mor(_df(spark, [("a", "x", 0), ("c", "x", 0)]), ["k"])
+    t.upsert(_df(spark, [("a", "x", 7)]), ["k", "p"])
+    assert _rows(t.read()) == [("a", "x", 7), ("b", "y", 2)]
+
+
+def test_pruned_upsert_keeps_tombstone_of_a_key_in_an_untouched_partition(
+    spark, tmp_path
+):
+    """A tombstone on a key whose deleted row sits in an untouched
+    partition must survive a pruned upsert that writes the key elsewhere:
+    dropping it would resurrect the carried row beside the new one."""
+    t = PartitionedParquetTable(spark, str(tmp_path), "t", SCHEMA3, ["p"])
+    t.ensure().append(_df(spark, ROWS))
+    t.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    t.upsert(_df(spark, [("a", "y", 7)]), ["k"])
+    assert _rows(t.read()) == [("b", "y", 2)]  # key-based: hidden until fold

@@ -13,9 +13,7 @@ from unstructured_data_pipeline_spark.operators.history import (
 from unstructured_data_pipeline_spark.operators.pivot import dynamic_pivot
 from unstructured_data_pipeline_spark.operators.dedup import (
     exact_dedup,
-    minhash_signatures,
     lsh_candidate_pairs,
-    jaccard_pairs,
     simhash,
 )
 from unstructured_data_pipeline_spark.operators.similarity import (
@@ -39,9 +37,7 @@ __all__ = [
     "HistoryFilters",
     "dynamic_pivot",
     "exact_dedup",
-    "minhash_signatures",
     "lsh_candidate_pairs",
-    "jaccard_pairs",
     "simhash",
     "cosine_topk",
     "lsh_bucketed_topk",

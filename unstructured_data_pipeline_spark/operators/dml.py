@@ -48,17 +48,6 @@ class CommitConflictError(RuntimeError):
         self.target_version = target_version
 
 
-def _key_cond(keys: list[str]):
-    def cond(t: DataFrame, s: DataFrame) -> Column:
-        c = None
-        for k in keys:
-            e = t[k].eqNullSafe(s[k])
-            c = e if c is None else (c & e)
-        return c
-
-    return cond
-
-
 def upsert(
     target: DataFrame,
     source: DataFrame,
@@ -86,7 +75,8 @@ def upsert(
 def anti_insert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """INSERT ... WHERE NOT EXISTS (D2): append only source rows whose key is
     absent from target (`app.py:488`; `setup_database.sql:142`)."""
-    fresh = source.join(target.select(*keys).distinct(), on=keys, how="left_anti")
+    # no distinct(): a LEFT ANTI join ignores duplicate right-side keys
+    fresh = source.join(target.select(*keys), on=keys, how="left_anti")
     return target.unionByName(fresh.select(*target.columns))
 
 
@@ -162,12 +152,39 @@ def snapshot_diff(
 
 def _link_tree(src: str, dst: str) -> None:
     """Hardlink every file under ``src`` to the same relative path under
-    ``dst`` — a metadata-only copy (no data bytes move)."""
+    ``dst`` — a metadata-only copy (no data bytes move).  A name ``dst``
+    already holds keeps its own file (an append's fresh ``_SUCCESS``)."""
     for base, _dirs, files in os.walk(src):
         d = os.path.join(dst, os.path.relpath(base, src))
         os.makedirs(d, exist_ok=True)
         for fn in files:
-            os.link(os.path.join(base, fn), os.path.join(d, fn))
+            try:
+                os.link(os.path.join(base, fn), os.path.join(d, fn))
+            except FileExistsError:
+                pass
+
+
+# Per-version state lives INSIDE the version dir under `_`-prefixed names,
+# which Spark's and pyarrow's listings skip: it commits with the rows it
+# describes and ages out with them.
+_LEDGER = "_last_batch"  # batch-id high-watermark of a batch sink
+_TOMBSTONES = "_tombstones"  # merge-on-read deleted keys
+
+
+def _write_ledger(stage: str, batch_id: int) -> None:
+    # replaces the name: a carried ledger is a hardlink shared with the base
+    ParquetTable._write_atomic(os.path.join(stage, _LEDGER), str(batch_id))
+
+
+def last_applied_batch(table: "ParquetTable") -> int:
+    """Highest batch id committed into ``table``'s current version by a
+    batch sink (``merge_rollup_batch``, ``IncrementalLshDedup``), or -1 —
+    the one reader of the ``_last_batch`` ledger."""
+    try:
+        with open(os.path.join(table.data_dir(), _LEDGER)) as f:
+            return int(f.read().strip())
+    except (FileNotFoundError, ValueError):
+        return -1
 
 
 class ParquetTable:
@@ -182,18 +199,21 @@ class ParquetTable:
             CURRENT            # pointer cache naming the live version dir
             v-00000001/        # immutable-once-committed parquet snapshots
                                # (a just-created table's is an empty dir)
+                _tombstones/   # merge-on-read deleted keys (if any)
+                _last_batch    # batch sink ledger (if any)
             v-00000001.claim   # O_EXCL claim on the version number
             v-00000001.commit  # commit marker: the version is visible
             stage-<uuid>/      # a version being written (not yet claimed)
 
-    Every new version — creation, upsert/delete/compact, ALTER epochs,
-    clones, OCC rewrites — is written into a fresh ``stage-<uuid>/`` and
+    Every write is a new version — creation, append, anti-insert,
+    upsert/delete/compact, merge-on-read deletes, ALTER epochs, clones,
+    OCC rewrites, batch sinks — written into a fresh ``stage-<uuid>/`` and
     committed by :meth:`_commit` (claim, rename, marker, pointer).  A
     crash at ANY point before the commit marker leaves the previous
     version live and fully readable — there is no moment where the table
     is partial (the round-1 two-step overwrite had exactly that window;
-    VERDICT r1 #4).  Appends add files inside the live version dir
-    (Spark's file committer makes each visible only on task commit).
+    VERDICT r1 #4).  Appends stage a hardlink copy of the base version
+    plus their new files (:meth:`_commit_append`).
 
     MERGE cost is O(table) per call — fine for the reference's small
     control tables (class_prompts, new_uploads); for big fact tables the
@@ -308,10 +328,9 @@ class ParquetTable:
         return os.path.join(self.path, v)
 
     def _drop_version(self, d: str) -> None:
-        """The one copy of snapshot deletion: dir + commit/claim markers +
-        merge-on-read tombstones go together (a marker outliving its dir
-        would haunt current_version(); a tombstone outliving its snapshot
-        is folded state nothing reads)."""
+        """The one copy of snapshot deletion: dir + commit/claim markers go
+        together (a marker outliving its dir would haunt
+        current_version())."""
         import shutil
 
         shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
@@ -324,7 +343,6 @@ class ParquetTable:
                 os.unlink(marker)
             except OSError:
                 pass
-        shutil.rmtree(self._tombstone_dir(d), ignore_errors=True)
 
     # -- CREATE TABLE IF NOT EXISTS (`app.py:38-81`) ------------------------
     def ensure(self) -> "ParquetTable":
@@ -398,17 +416,20 @@ class ParquetTable:
     def _link_alter_epoch(self, col: str) -> None:
         """Commit a new version holding every current data file hardlinked
         under ``pre-alter-<col>/`` — metadata-only (no parquet bytes move),
-        preserving inner epoch markers from earlier ALTERs."""
+        preserving inner epoch markers from earlier ALTERs.  The version's
+        own state (tombstones, ledger) stays at the top level."""
         base = self.current_version()
         if base is None:
             return  # nothing committed yet: no pre-ALTER rows exist
-        self._commit(
-            base,
-            lambda stage: _link_tree(
-                os.path.join(self.path, base),
-                os.path.join(stage, f"pre-alter-{col}"),
-            ),
-        )
+
+        def fill(stage: str) -> None:
+            epoch = os.path.join(stage, f"pre-alter-{col}")
+            _link_tree(os.path.join(self.path, base), epoch)
+            for name in os.listdir(epoch):
+                if name.startswith("_"):
+                    os.rename(os.path.join(epoch, name), os.path.join(stage, name))
+
+        self._commit(base, fill)
 
     # -- zero-copy clone -----------------------------------------------------
     def _sibling(self, name: str) -> "ParquetTable":
@@ -429,25 +450,16 @@ class ParquetTable:
         pre-alter backfill epochs carry over).  The tables are fully
         independent afterwards: every mutation copy-on-writes into that
         table's own next version dir (shared inodes just drop link counts
-        at GC), appends land in each table's own current dir.  On an
-        object store the hardlink walk becomes a manifest copy, same as
-        the partitioned carry-over (SCALE.md)."""
+        at GC).  Pending merge-on-read tombstones and the batch ledger live
+        in the version dir, so the clone carries them too.  On an object
+        store the hardlink walk becomes a manifest copy, same as the
+        partitioned carry-over (SCALE.md)."""
         src = self.ensure().current_version()
         dst = self._sibling(name)
         if dst.current_version() is not None:
             raise ValueError(f"table {name!r} already exists")
-        src_tomb = self._tombstone_dir(src)
-
-        def fill(stage: str) -> None:
-            _link_tree(os.path.join(self.path, src), stage)
-            # pending merge-on-read tombstones are part of the logical
-            # table state — hardlink-carry them too, renamed to the clone's
-            # first version, or the clone would resurrect deleted keys
-            if os.path.isdir(src_tomb):
-                _link_tree(src_tomb, dst._tombstone_dir("v-00000001"))
-
         dst._defaults = dict(self._defaults)
-        dst._commit(None, fill)
+        dst._commit(None, lambda stage: _link_tree(os.path.join(self.path, src), stage))
         dst._save_meta()
         return dst
 
@@ -539,8 +551,48 @@ class ParquetTable:
         return df.select(*cols)
 
     def append(self, df: DataFrame) -> None:
+        df = self._conform(df)
+        self._commit_append(lambda _base, stage: self._write_snapshot(df, stage))
+
+    def _commit_append(self, write, batch_id: int | None = None) -> bool:
+        """The blind write behind append, anti_insert, delete_keys_mor and
+        batch sinks: the next version is whatever ``write(base, stage)``
+        writes into the fresh stage plus the base version's files,
+        hardlinked in after it (so no write can reach a file the base
+        shares).  A lost claim (or a base aged out mid-link) retries from
+        the new base, so concurrent appends all land; like :meth:`ensure`,
+        the retries also outlast a dead writer's claim until it is
+        reclaimed.  With ``batch_id`` the batch ledger commits with the
+        new files, and a batch at or below the base's ledger writes
+        nothing and returns False."""
+        import time
+
         self.ensure()
-        self._conform(df).write.mode("append").parquet(self.data_dir())
+        deadline = time.monotonic() + self.claim_ttl + 60.0
+        while True:
+            base = self.current_version()
+            vdir = os.path.join(self.path, base)
+            # read after the base: a skip trusts a committed ledger, and a
+            # commit on a base that is no longer current conflicts
+            if batch_id is not None and batch_id <= last_applied_batch(self):
+                return False
+
+            def fill(stage: str) -> None:
+                write(base, stage)
+                _link_tree(vdir, stage)
+                if batch_id is not None:
+                    _write_ledger(stage, batch_id)
+
+            try:
+                self._commit(base, fill)
+                return True
+            except (CommitConflictError, FileNotFoundError) as e:
+                stale = base != self.current_version()
+                if (isinstance(e, FileNotFoundError) and not stale) or (
+                    time.monotonic() > deadline
+                ):
+                    raise
+            time.sleep(0.01)  # let the racing winner finish
 
     def _replace(self, rewrite) -> None:
         """Commit ``rewrite(snapshot)`` as the next version, where
@@ -571,28 +623,37 @@ class ParquetTable:
         # escalation runs several sequential jobs on an empty anti-join)
         # vs limit(1).count()-probe 3.87 s.  Any emptiness proof must pay
         # the same anti-join compute the append pays; the empty-file write
-        # it would skip costs less than the probe job.
-        fresh = self._conform(source).join(
-            self.read().select(*keys).distinct(), on=keys, how="left_anti"
+        # it would skip costs less than the probe job.  No distinct() on
+        # the target keys: a LEFT ANTI join ignores duplicate right-side
+        # keys.  The anti-join reads the base the append stages from, so a
+        # retry recomputes it against the new base.
+        src = self._conform(source)
+        self._commit_append(
+            lambda base, stage: self._write_snapshot(
+                src.join(
+                    self.read_version(base).select(*keys), on=keys, how="left_anti"
+                ),
+                stage,
+            )
         )
-        self.append(fresh)
 
     def delete_where(self, predicate: Column) -> None:
         self._replace(lambda cur: delete_where(cur, predicate))
 
     # -- merge-on-read deletes (deletion-vector cost shape) -----------------
-    def _tombstone_dir(self, version: str) -> str:
-        return os.path.join(self.path, f"tombstones-{version}")
-
     def delete_keys_mor(self, source: DataFrame, keys: list[str]) -> None:
-        """Merge-on-read DELETE: write the matched KEYS as a tombstone
-        parquet next to the live snapshot — O(delete keys), while
-        ``delete_where`` is O(table) per call.  This is the cost shape of
-        Delta/Iceberg v2 deletion vectors / Hudi merge-on-read, keyed by
-        record key rather than (file, position): ``read()`` anti-joins the
-        tombstones (they're broadcast-sized until folded), and ANY rewrite
-        (upsert / delete_where / compact) folds them into the next
-        snapshot because rewrites read through ``read()``.
+        """Merge-on-read DELETE: commit a new version that hardlinks the
+        base's files and adds the matched KEYS as a tombstone parquet under
+        its ``_tombstones/`` — O(delete keys) written, no data file
+        rewritten, while ``delete_where`` is O(table) per call.  This is
+        the cost shape of Delta/Iceberg v2 deletion vectors / Hudi
+        merge-on-read, keyed by record key rather than (file, position):
+        ``read()`` anti-joins the tombstones (they're broadcast-sized until
+        folded), and ANY full rewrite (upsert / delete_where / compact)
+        folds them into the next snapshot because rewrites read through
+        ``read()``.  Appends, ALTER epochs and clones carry them; a
+        partition-pruned merge carries them minus the keys its rewritten
+        rows re-insert.
 
         Key-based semantics: a tombstoned key stays hidden even if
         re-appended later; to resurrect a key, fold first (``compact()``)
@@ -601,16 +662,13 @@ class ParquetTable:
         past broadcast size.  NULL keys never match under SQL join
         semantics (same rule as ``snapshot_diff``), so a NULL-keyed
         tombstone row deletes nothing."""
-        self.ensure()
-        v = self.current_version()
-        source.select(*keys).distinct().write.mode("append").parquet(
-            self._tombstone_dir(v)
+        tomb = source.select(*keys).distinct()
+        self._commit_append(
+            lambda _base, stage: tomb.write.parquet(os.path.join(stage, _TOMBSTONES))
         )
 
-    def _apply_tombstones(self, df: DataFrame, version: str | None) -> DataFrame:
-        if version is None:
-            return df
-        td = self._tombstone_dir(version)
+    def _apply_tombstones(self, df: DataFrame, version: str) -> DataFrame:
+        td = os.path.join(self.path, version, _TOMBSTONES)
         if not os.path.isdir(td):
             return df
         tomb = self.spark.read.parquet(td)
@@ -671,10 +729,11 @@ class ParquetTable:
     # PUT (If-None-Match), same shape.
 
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
-        """Write ``df`` — already in the table schema — as a full snapshot
-        at ``path`` in this table's physical layout (overridden by the
-        hive-partitioned subclass so its snapshots keep the layout its
-        pruned merges parse)."""
+        """Write ``df`` — already in the table schema — into the fresh
+        stage at ``path`` in this table's physical layout: a full snapshot,
+        or an append's new files (overridden by the hive-partitioned
+        subclass so its snapshots keep the layout its pruned merges
+        parse)."""
         df.write.mode("overwrite").parquet(path)
 
     def _commit(self, base: str | None, fill) -> str:
@@ -682,7 +741,8 @@ class ParquetTable:
         new snapshot into a fresh ``stage-<uuid>/``, then version
         ``base + 1`` is claimed (O_EXCL, with a unique cookie), the stage
         renamed into place, the commit marker written and the pointer
-        advanced.  ``base`` is None only for the first version.
+        advanced.  ``base`` is None only for the first version.  A fill
+        that writes no ``_last_batch`` ledger gets the base's (hardlinked).
 
         Raises :class:`CommitConflictError` when another writer holds the
         claim — checked before the stage is filled (fail fast: a burnt
@@ -701,6 +761,15 @@ class ParquetTable:
         stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
         try:
             fill(stage)
+            if base is not None:
+                # a batch sink's progress survives compaction and rewrites
+                try:
+                    os.link(
+                        os.path.join(self.path, base, _LEDGER),
+                        os.path.join(stage, _LEDGER),
+                    )
+                except (FileNotFoundError, FileExistsError):
+                    pass
             try:
                 fd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
             except FileExistsError:
@@ -1061,18 +1130,14 @@ class ParquetTable:
                 # retention aging can also strike DURING the lazy stage
                 # write, surfacing as a JVM FileNotFoundException via
                 # Py4J.  Qualify only errors naming a retained-VERSION dir
-                # of THIS table — `v-XXXXXXXX/` or its merge-on-read
-                # tombstone sidecar `tombstones-v-XXXXXXXX/`, both GC'd
-                # together by _drop_version — a caller bug whose message
-                # merely mentions the table path, or a Spark message-format
-                # drift, must re-raise rather than burn max_attempts
-                # recomputes (ADVICE r10; tombstone form round-11 review).
+                # of THIS table (`v-XXXXXXXX/`, its tombstones included) — a
+                # caller bug whose message merely mentions the table path,
+                # or a Spark message-format drift, must re-raise rather
+                # than burn max_attempts recomputes (ADVICE r10).
                 msg = str(e)
                 retryable = (
                     "FileNotFoundException" in msg or "PATH_NOT_FOUND" in msg
-                ) and re.search(
-                    re.escape(self.path) + r"[/\\](?:tombstones-)?v-\d{8}", msg
-                )
+                ) and re.search(re.escape(self.path) + r"[/\\]v-\d{8}", msg)
                 if not retryable:
                     raise
                 last = e
@@ -1291,12 +1356,6 @@ class PartitionedParquetTable(ParquetTable):
             .parquet(path)
         )
 
-    def append(self, df: DataFrame) -> None:
-        self.ensure()
-        self._conform(df).write.partitionBy(*self.partition_by).mode(
-            "append"
-        ).parquet(self.data_dir())
-
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
         # every snapshot must keep the hive layout: a flat one would be
         # readable but the NEXT pruned merge parses `pcol=value/` dirs to
@@ -1345,10 +1404,13 @@ class PartitionedParquetTable(ParquetTable):
     ) -> None:
         """Hardlink every untouched partition dir from the old version into
         the new one — metadata-only carry, no data bytes move.  Touched-ness
-        is decided by parsing the dir name back to values (see above)."""
-        for base, _dirs, files in os.walk(old_dir):
+        is decided by parsing the dir name back to values (see above).
+        Only hive dirs are walked: the version's `_`-prefixed state is the
+        caller's to carry."""
+        for base, dirs, files in os.walk(old_dir):
             rel = os.path.relpath(base, old_dir)
             if rel == ".":
+                dirs[:] = [d for d in dirs if "=" in d]
                 continue
             is_leaf = any(f.endswith(".parquet") for f in files)
             if not is_leaf:
@@ -1367,24 +1429,44 @@ class PartitionedParquetTable(ParquetTable):
         returns the replacement rows for exactly the touched partitions;
         the untouched ones are hardlink-carried from the base version."""
         base = self.ensure().current_version()
-        touched_df = self.read_version(base).filter(
-            self._touched_pred(src_values)
-        )  # partition-pruned scan
-        out = rewrite_fn(touched_df)
+        base_dir = os.path.join(self.path, base)
+        pred = self._touched_pred(src_values)
+        out = rewrite_fn(self.read_version(base).filter(pred))  # pruned scan
         touched = {self._value_key(row) for row in src_values}
 
         def fill(stage: str) -> None:
             self._write_snapshot(out, stage)
-            self._carry_over(os.path.join(self.path, base), stage, touched)
+            self._carry_tombstones(base_dir, stage, pred)
+            self._carry_over(base_dir, stage, touched)
 
         self._commit(base, fill)
+
+    def _carry_tombstones(self, base_dir: str, stage: str, pred: Column) -> None:
+        """Carry the base's tombstones into a pruned rewrite's stage, minus
+        the keys its rewritten rows (already written to ``stage``, read
+        through the tombstones) re-insert.  A key that still has a
+        tombstoned row in an untouched partition keeps its tombstone: the
+        untouched files are carried as they are."""
+        td = os.path.join(base_dir, _TOMBSTONES)
+        if not os.path.isdir(td):
+            return
+        tomb = self.spark.read.parquet(td)
+        cols = tomb.columns
+        revived = self._scan(stage).select(*cols)
+        if not set(self.partition_by) <= set(cols):
+            stale = self._scan(base_dir).filter(~pred).select(*cols)
+            revived = revived.join(stale, on=cols, how="left_anti")
+        tomb.join(revived, on=cols, how="left_anti").write.parquet(
+            os.path.join(stage, _TOMBSTONES)
+        )
 
     def upsert(self, source: DataFrame, keys: list[str]) -> None:
         src = self._conform(source)
         values = self._touched_values(src)
         if not values:
             return
-        keyset = src.select(*keys).distinct()
+        # no distinct(): the guard's LEFT SEMI join ignores duplicate keys
+        keyset = src.select(*keys)
 
         def rewrite(touched_df: DataFrame) -> DataFrame:
             return upsert(touched_df, src, keys)

@@ -403,8 +403,8 @@ def hashed_bow_embedding(
     vocabulary state to ship, so it runs at scan speed on any corpus size;
     md5-derived buckets/signs make the vectors bit-identical in the DuckDB
     oracle.  The md5 array is materialized as its own projection first
-    (Catalyst inlines lambda bodies without CSE — the ``shingle_set``
-    lesson), keeping the bucket fold O(dim * tokens) integer ops per doc.
+    (Catalyst inlines lambda bodies without CSE — the
+    ``dedup.shingle_arrays`` lesson), keeping the bucket fold O(dim * tokens) integer ops per doc.
 
     Documents whose buckets fully cancel (zero vector — no direction, so
     cosine is undefined) are dropped, mirroring the SQL side's norm > 0

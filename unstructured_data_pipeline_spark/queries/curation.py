@@ -1944,11 +1944,13 @@ GROUP BY COALESCE(d.version, 0) ORDER BY version
 
 def mor_delete_lifecycle_report(spark, sf_dir):
     """Merge-on-read DELETE lifecycle through the REAL table layer
-    (`ParquetTable.delete_keys_mor`): deletes write only the matched KEYS
-    as tombstones next to the live snapshot — O(keys) per DELETE instead
-    of `delete_where`'s O(table) rewrite (the Delta/Iceberg v2
+    (`ParquetTable.delete_keys_mor`): each delete commits a new version
+    that hardlinks the base's files and writes only the matched KEYS, as
+    tombstones under the version's `_tombstones/` — O(keys) per DELETE
+    instead of `delete_where`'s O(table) rewrite (the Delta/Iceberg v2
     deletion-vector cost shape; unit tests in
-    tests/test_partitioned_table.py assert zero data files are touched).
+    tests/test_partitioned_table.py assert the data files keep their
+    inodes).
     Lifecycle hash-gated here: (1) MOR-delete a 1/16 md5 key sample →
     reads anti-join the tombstones; (2) compact() folds the tombstones
     into the next snapshot (stage values must be IDENTICAL before and

@@ -106,14 +106,14 @@ def incremental_dedup_report(spark, sf_dir):
     three batches (id % 3); each batch is flagged against the accumulated
     LSH band-key index (`operators/dedup.IncrementalLshDedup`: row-local
     signatures, bucket equi-join vs the index table, exact-Jaccard verify
-    against raw text, idempotent index append through the versioned
-    ParquetTable layer).  A doc is a duplicate iff some verified match was
+    against raw text, then the batch's bands and batch id committed as one
+    version of the ParquetTable index).  A doc is a duplicate iff some verified match was
     seen first (earlier batch, or same batch with smaller id) — the index
     keeps every doc's bands, so the whole sequential history is
     recomputable by the one-shot DuckDB mirror.  Output: per-batch
     (n_docs, n_dups, n_kept).  The driver row therefore covers the
-    stateful multi-batch path: index create -> 3x (read, delete, append,
-    verify) -> report."""
+    stateful multi-batch path: index create -> 3x (read, verify, append
+    commit) -> report."""
     import tempfile
 
     from unstructured_data_pipeline_spark.operators.dedup import IncrementalLshDedup

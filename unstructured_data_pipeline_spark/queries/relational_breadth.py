@@ -1142,7 +1142,7 @@ def table_time_travel_report(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="udp_tt_")
     t = ParquetTable(spark, root, "customers_tt", cust.schema, retain=3)
     t.ensure()
-    t.append(cust)  # snapshot 1 (seed lands in the live version)
+    t.append(cust)  # snapshot 1 (the empty creation version ages out)
     t.upsert(
         cust.filter(F.col("c_custkey") % 100 == 0).withColumn(
             "c_acctbal", F.col("c_acctbal") + 500.0
@@ -1215,7 +1215,7 @@ def table_changes_stream_report(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="udp_cdc_")
     t = ParquetTable(spark, root, "customers_cdc", cust.schema, retain=3)
     t.ensure()
-    t.append(cust)  # v1
+    t.append(cust)  # v1 (the empty creation version ages out)
     bumped = cust.filter(F.col("c_custkey") % 100 == 0).withColumn(
         "c_acctbal", F.col("c_acctbal") + 500.0
     )

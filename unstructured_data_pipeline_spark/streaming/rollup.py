@@ -10,10 +10,12 @@ the hypertable restriction); mergeable-distinct needs a sketch column
 
 Exactly-once: foreachBatch delivery is at-least-once, and an additive
 merge double-counts on replay — so each table version carries the
-batch-id high-watermark it was built from (`_last_batch` inside the
-version dir, committed with the rows in one commit — the Structured
-Streaming rule that a sink's output and its progress commit together)
-and `merge_rollup_batch` skips batches at-or-below it.  Replays of the
+batch-id high-watermark it was built from (the `_last_batch` ledger
+inside the version dir, committed with the rows in one commit — the
+Structured Streaming rule that a sink's output and its progress commit
+together; `operators/dml.py` owns it, and every later rewrite of the
+table, `compact()` included, carries it) and `merge_rollup_batch` skips
+batches at-or-below it.  Replays of the
 same epoch therefore no-op, even after a crash at any point of the merge,
 and the final table equals the one-shot batch aggregate regardless of how
 arrivals were micro-batched (tested, and oracle-checked via
@@ -28,20 +30,14 @@ a production deployment swaps in a merge-on-read table format.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unstructured_data_pipeline_spark.operators.dml import ParquetTable
-
-
-def last_applied_batch(table: ParquetTable) -> int:
-    try:
-        with open(os.path.join(table.data_dir(), "_last_batch")) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return -1
+from unstructured_data_pipeline_spark.operators.dml import (
+    ParquetTable,
+    _write_ledger,
+    last_applied_batch,
+)
 
 
 def merge_rollup_batch(
@@ -74,11 +70,8 @@ def merge_rollup_batch(
     )
 
     def fill(stage: str) -> None:
-        # Spark's reader skips `_`-prefixed files, so the watermark rides
-        # inside the snapshot it describes without becoming a row
         table._write_snapshot(merged, stage)
-        with open(os.path.join(stage, "_last_batch"), "w") as f:
-            f.write(str(batch_id))
+        _write_ledger(stage, batch_id)
 
     table._commit(base, fill)
     return True
