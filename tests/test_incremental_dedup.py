@@ -194,6 +194,30 @@ def test_batch_crash_in_fill_leaves_index_unchanged(spark, tmp_path, corpus, mon
     assert inc.table.read().count() == n0 + 3 * 4
 
 
+def test_failed_batch_releases_cached_bands_and_flags(spark, tmp_path, corpus, monkeypatch):
+    """A batch whose index write raises leaves nothing cached: the persisted
+    bands and the checkpointed flags are both released on the way out."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from unstructured_data_pipeline_spark.operators.dedup import IncrementalLshDedup
+
+    inc = IncrementalLshDedup(spark, str(tmp_path / "wh"))
+    inc.process_batch(corpus.filter(F.col("doc_id").isin([2, 4])), corpus, 0)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    class Crash(RuntimeError):
+        pass
+
+    def parquet(self, path, *args, **kwargs):
+        raise Crash(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(Crash):
+        inc.process_batch(corpus.filter(F.col("doc_id").isin([1, 3])), corpus, 1)
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_index_root_does_not_grow_with_batches(spark, tmp_path, corpus):
     """The batch ledger lives inside the index's version dir: the index
     root holds as many entries after six batches as after one."""

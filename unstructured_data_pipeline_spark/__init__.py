@@ -30,7 +30,12 @@ Layout:
                  the reference's NEW_UPLOADS.processed bookkeeping)
 """
 
+from unstructured_data_pipeline_spark.dist import install_zip_cache_check
 from unstructured_data_pipeline_spark.session import get_spark
+
+# executor workers import this package when they unpickle a UDF: from then
+# on their per-task invalidate_caches() skips unchanged zips (see dist.py)
+install_zip_cache_check()
 
 __all__ = ["get_spark"]
 __version__ = "0.1.0"

@@ -10,7 +10,6 @@ from unstructured_data_pipeline_spark.functions.prompts import (
 from unstructured_data_pipeline_spark.functions.scalars import (
     stage_from_file_url,
     is_nullish,
-    not_nullish,
 )
 
 __all__ = [
@@ -21,5 +20,4 @@ __all__ = [
     "DEFAULT_FALLBACK_QUESTION",
     "stage_from_file_url",
     "is_nullish",
-    "not_nullish",
 ]

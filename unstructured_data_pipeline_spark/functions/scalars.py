@@ -26,10 +26,6 @@ def is_nullish(col: Column | str) -> Column:
     return c.isNull() | F.lower(F.trim(c)).isin(*NULLISH)
 
 
-def not_nullish(col: Column | str) -> Column:
-    return ~is_nullish(col)
-
-
 def try_to_timestamp(col: Column | str) -> Column:
     """Error-safe timestamp cast, Snowflake TRY_TO_TIMESTAMP_NTZ semantics
     (`app.py:701,709`): null on failure instead of raising."""

@@ -98,20 +98,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return word_shingles_from_tokens(tokens_ws(text), n)
 
 
-def minhash_hex(shingle: Column, seed: int) -> Column:
-    """One MinHash hash value: a 4-hex-char (16-bit) slice of md5(shingle).
-
-    One md5 per shingle serves up to 8 hash functions (seed k = chars
-    4k+1..4k+4) — 8x cheaper than hashing per seed, and md5 is identical in
-    Spark and DuckDB, which keeps the whole MinHash-LSH pipeline
-    oracle-checkable.  16-bit min-values are plenty for banding; candidate
-    false-positives are removed by the exact-Jaccard verify step.
-    """
-    if not 0 <= seed < 8:
-        raise ValueError("md5 slicing supports seeds 0..7")
-    return F.substring(F.md5(shingle), seed * 4 + 1, 4)
-
-
 _HEX = "0123456789abcdef"
 
 
@@ -142,9 +128,3 @@ def rolling_kgram_hashes(text: Column | str, k: int = 8) -> Column:
     rolling-hash pass of document fingerprinting (Rabin/winnowing style;
     md5 stands in for the rolling polynomial so the DuckDB oracle matches)."""
     return F.transform(rolling_kgrams(text, k), lambda g: F.md5(g))
-
-
-def doc_fingerprint_min(text: Column | str, k: int = 8) -> Column:
-    """Winnowing-lite document fingerprint: the MIN k-gram hash.  Two docs
-    sharing long runs of text collide on it with high probability."""
-    return F.array_min(rolling_kgram_hashes(text, k))

@@ -660,59 +660,69 @@ class IncrementalLshDedup:
             batch_sh = shingle_arrays(d, "id", "text", self.n)
         sig = minhash_signature_cols(batch_sh, self.num_hashes)
         bands_new = lsh_band_keys(sig, self.num_hashes, self.bands).persist()
-        prior = self.table.read().filter(F.col("batch_id") < batch_id)
-        # one distinct over the unioned candidate set (below) subsumes the
-        # per-branch distincts the round-13 shape paid — two exchanges
-        # fewer, identical candidate set (round 14)
-        cross = bands_new.join(
-            prior.select(F.col("doc_id").alias("a"), "band", "sig"),
-            ["band", "sig"],
-        ).select("a", F.col("id").alias("b"))
-        x, y = bands_new.alias("x"), bands_new.alias("y")
-        within = x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig") == F.col("y.sig"))
-            & (F.col("x.id") < F.col("y.id")),
-        ).select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        cand = cross.unionByName(within).distinct()
-        corpus_sh = (
-            corpus_shingles
-            if corpus_shingles is not None
-            else shingle_arrays(
-                corpus_texts.select(F.col(id_col), F.col(text_col)),
-                id_col,
-                text_col,
-                self.n,
+        # the bands stay cached, and a failed commit's flags checkpointed,
+        # only for the call: both are released on every exit path
+        flags = None
+        try:
+            prior = self.table.read().filter(F.col("batch_id") < batch_id)
+            # one distinct over the unioned candidate set (below) subsumes the
+            # per-branch distincts the round-13 shape paid — two exchanges
+            # fewer, identical candidate set (round 14)
+            cross = bands_new.join(
+                prior.select(F.col("doc_id").alias("a"), "band", "sig"),
+                ["band", "sig"],
+            ).select("a", F.col("id").alias("b"))
+            x, y = bands_new.alias("x"), bands_new.alias("y")
+            within = x.join(
+                y,
+                (F.col("x.band") == F.col("y.band"))
+                & (F.col("x.sig") == F.col("y.sig"))
+                & (F.col("x.id") < F.col("y.id")),
+            ).select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
+            cand = cross.unionByName(within).distinct()
+            corpus_sh = (
+                corpus_shingles
+                if corpus_shingles is not None
+                else shingle_arrays(
+                    corpus_texts.select(F.col(id_col), F.col(text_col)),
+                    id_col,
+                    text_col,
+                    self.n,
+                )
             )
-        )
-        dup_ids = (
-            jaccard_pairs_arr(corpus_sh, cand)
-            .filter(F.col("jaccard") >= self.threshold)
-            .select(F.col("b").alias("id"))
-            .distinct()
-            .withColumn("_d", F.lit(1))
-        )
-        flags = (
-            d.select("id")
-            .join(dup_ids, "id", "left")
-            .select(
+            dup_ids = (
+                jaccard_pairs_arr(corpus_sh, cand)
+                .filter(F.col("jaccard") >= self.threshold)
+                .select(F.col("b").alias("id"))
+                .distinct()
+                .withColumn("_d", F.lit(1))
+            )
+            verdicts = (
+                d.select("id")
+                .join(dup_ids, "id", "left")
+                .select(
+                    F.col("id").alias("doc_id"),
+                    F.col("_d").isNotNull().alias("is_dup"),
+                )
+            )
+            # flags' plan reads the index version the append below supersedes
+            # (and retention drops): materialize the verdicts first
+            flags = verdicts.localCheckpoint(eager=True)
+            rows = bands_new.select(
                 F.col("id").alias("doc_id"),
-                F.col("_d").isNotNull().alias("is_dup"),
+                F.lit(batch_id).cast("long").alias("batch_id"),
+                "band",
+                "sig",
             )
-        )
-        # flags' plan reads the index version the append below supersedes
-        # (and retention drops): materialize the verdicts first
-        flags = flags.localCheckpoint(eager=True)
-        rows = bands_new.select(
-            F.col("id").alias("doc_id"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "band",
-            "sig",
-        )
-        # bands and ledger commit together; a replay skips the append
-        self.table._commit_append(
-            lambda _base, stage: self.table._write_snapshot(rows, stage), batch_id
-        )
-        bands_new.unpersist()
+            # bands and ledger commit together; a replay skips the append
+            self.table._commit_append(
+                lambda _base, stage: self.table._write_snapshot(rows, stage),
+                batch_id,
+            )
+        except BaseException:
+            if flags is not None:
+                graph.release_checkpoint(flags)
+            raise
+        finally:
+            bands_new.unpersist()
         return flags

@@ -341,21 +341,16 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # every ParquetTable write commits a new version: appends and MOR
-    # deletes hardlink the base and add their files, tombstones and batch
-    # ledgers live inside the version dir, anti_insert skips its distinct()
+    # a failed dedup batch releases its cached bands and flags
     "incremental_dedup_report",
-    "mor_delete_lifecycle_report",
-    "gdpr_erasure_lifecycle",
-    "continuous_rollup_events",
-    "schema_evolution_report",
-    "table_clone_report",
-    "merge_partitioned_lifecycle",
-    "table_time_travel_report",
-    "table_changes_stream_report",
-    "dml_delete_append_lifecycle",
-    "compaction_report",
-    "warehouse_bootstrap_report",
+    # Python workers re-read a zip's directory only when its stat changed
+    "pdf_ocr_roundtrip_contract",
+    "image_glyph_ocr_contract",
+    "pipeline_extract_eav",
+    "summarize_documents",
+    "history_documents_current",
+    "dedup_embedding_cosine",
+    "pipeline_flaky_transport_recovery",
 ]
 
 
