@@ -101,7 +101,7 @@ def test_bootstrap_is_metadata_only(spark, tmp_path):
     tables = bootstrap_warehouse(spark, str(root))
     assert _next_job_id(spark) == before
     for t in tables.values():
-        assert os.listdir(t.data_dir()) == []
+        assert os.listdir(t.data_dir()) == ["_base"]  # no data file
     assert not [f for _, _, fs in os.walk(root) for f in fs if "parquet" in f]
     for name, schema in pipeline_tables(False).items():
         df = tables[name].read()

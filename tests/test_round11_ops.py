@@ -1,34 +1,21 @@
 """Round-11: ADVICE r10 hardening of the OCC layer (`operators/dml.py`).
 
-Five findings, each regression-pinned here:
+Findings regression-pinned here:
 1. (medium) the ALTER-defaults refusal moved INTO commit_rewrite() so both
    OCC commit paths are guarded, not just transact();
 2. transact()'s retryable-staleness detection narrowed to (a) our own
    typed+format-stable read_version error and (b) JVM messages naming a
-   retained-VERSION dir — caller bugs mentioning the table path re-raise;
-3. pointer-lock steal staleness is waiter-observed (token + the waiter's
-   monotonic clock) instead of wall-clock-vs-mtime, so clock skew can
-   neither double-grant nor permanently wedge the lock;
-4. an aged claim with no dir and no commit marker (writer died mid-commit)
-   is reclaimed automatically, so transact() self-heals without a manual
-   recover_stale();
-5. ensure() fail-fasts BEFORE staging when the creation claim is taken
-   (racing losers no longer pay a discarded snapshot write).
+   retained-VERSION dir — caller bugs mentioning the table path re-raise.
 """
 
 from __future__ import annotations
 
 import os
-import threading
-import time
 
 import pytest
 from pyspark.sql import types as T
 
-from unstructured_data_pipeline_spark.operators.dml import (
-    CommitConflictError,
-    ParquetTable,
-)
+from unstructured_data_pipeline_spark.operators.dml import ParquetTable
 
 
 def _schema():
@@ -139,177 +126,6 @@ def test_transact_retries_retention_aging_signals(spark, tmp_path):
     assert ("RuntimeError", 1) in _rows(t)
 
 
-# -- 3. waiter-observed lock staleness -----------------------------------
-
-
-def test_pointer_lock_future_mtime_still_stolen(spark, tmp_path):
-    """Under the old mtime heuristic a lock whose mtime lands in the
-    future (writer-side clock skew) NEVER went stale → TimeoutError after
-    30 s.  Waiter-observed staleness ignores mtime entirely: an unchanged
-    token is stolen after lock_steal_after seconds of the waiter's own
-    monotonic clock."""
-    t, _ = _make(spark, tmp_path)
-    lock = t._pointer() + ".lock"
-    with open(lock, "w") as fh:
-        fh.write("deadholder")
-    os.utime(lock, (time.time() + 86400, time.time() + 86400))
-    t.lock_steal_after = 0.3
-    try:
-        start = time.monotonic()
-        t._advance_pointer(t.current_version())  # must steal, not time out
-        assert time.monotonic() - start < 10.0
-    finally:
-        del t.lock_steal_after  # restore the class default
-    assert not os.path.exists(lock)  # released after the publish
-
-
-def test_pointer_lock_token_change_resets_staleness_clock(spark, tmp_path):
-    """A live holder is identified by its token: while tokens keep
-    changing (fresh holders), no steal happens, and the waiter acquires
-    only once the lock is actually released."""
-    t, _ = _make(spark, tmp_path)
-    lock = t._pointer() + ".lock"
-    t.lock_steal_after = 0.5
-    stop = threading.Event()
-
-    def churner():
-        # a sequence of short-lived legitimate holders
-        for i in range(20):
-            if stop.is_set():
-                return
-            with open(lock, "w") as fh:
-                fh.write(f"holder-{i}")
-            time.sleep(0.05)
-        os.unlink(lock)  # final holder releases cleanly
-
-    th = threading.Thread(target=churner)
-    th.start()
-    try:
-        t._advance_pointer(t.current_version())
-    finally:
-        stop.set()
-        th.join()
-        del t.lock_steal_after
-    assert t.current_version() is not None  # publish completed
-
-
-# -- 4. dead-claim self-heal ----------------------------------------------
-
-
-def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
-    """A dir-less marker-less claim the reclaimer OBSERVES persist
-    unchanged for claim_ttl (its own monotonic clock — round-12
-    observed-persistence model) is a crashed writer: transact()'s retry
-    loop must reclaim it and commit WITHOUT a manual recover_stale()."""
-    t, schema = _make(spark, tmp_path)
-    base = t.current_version()
-    nxt = f"v-{int(base[2:]) + 1:08d}"
-    open(t._claim_marker(nxt), "w").close()
-    t.claim_ttl = 0.05  # observed window fits inside transact()'s sleeps
-    t.transact(
-        lambda df: df.unionByName(
-            df.sparkSession.createDataFrame([("healed", 1)], schema)
-        )
-    )
-    assert ("healed", 1) in _rows(t)
-    assert t.current_version() == nxt  # the burnt number was RECLAIMED
-
-
-def test_fresh_dead_claim_still_conflicts(spark, tmp_path):
-    """Below the TTL a dir-less marker-less claim may be a writer
-    microseconds from its rename: it must still conflict (and fail fast,
-    before staging)."""
-    t, _ = _make(spark, tmp_path)
-    base = t.current_version()
-    nxt = f"v-{int(base[2:]) + 1:08d}"
-    open(t._claim_marker(nxt), "w").close()  # mtime = now
-    with pytest.raises(CommitConflictError):
-        t.commit_rewrite(t.read_version(base), base)
-    assert [d for d in os.listdir(t.path) if d.startswith("stage-")] == []
-
-
-def test_reclaim_never_touches_committed_or_inflight_claims(spark, tmp_path):
-    """Aged claims whose version HAS a dir or a commit marker are not
-    reclaimable — one is a committed snapshot, the other an in-flight
-    writer between rename and marker."""
-    t, schema = _make(spark, tmp_path, retain=3)
-    # committed: v-00000002 exists with dir + marker + claim
-    t.transact(
-        lambda df: df.unionByName(
-            df.sparkSession.createDataFrame([("x", 1)], schema)
-        )
-    )
-    v2 = t.current_version()
-    t.claim_ttl = 0.0  # even a fully-observed claim must be spared
-    assert t._reclaim_dead_claim(v2) is False
-    time.sleep(0.01)
-    assert t._reclaim_dead_claim(v2) is False
-    assert os.path.exists(t._claim_marker(v2))
-    # in-flight: dir exists, marker missing
-    nxt = f"v-{int(v2[2:]) + 1:08d}"
-    os.makedirs(os.path.join(t.path, nxt))
-    open(t._claim_marker(nxt), "w").close()
-    assert t._reclaim_dead_claim(nxt) is False
-    time.sleep(0.01)
-    assert t._reclaim_dead_claim(nxt) is False
-
-
-# -- 5. ensure() fail-fast ------------------------------------------------
-
-
-def test_ensure_loser_never_stages(spark, tmp_path, monkeypatch):
-    """With the creation claim already taken, a racing ensure() must wait
-    for the winner's publish WITHOUT creating a stage dir of its own.  The
-    winner publishes the one-empty-parquet-file first version older tables
-    hold, which must stay readable."""
-    schema = _schema()
-    t = ParquetTable(spark, str(tmp_path), "race11", schema)
-    os.makedirs(t.path, exist_ok=True)
-    open(t._claim_marker("v-00000001"), "w").close()  # foreign fresh claim
-    stages = []
-    real_makedirs = os.makedirs
-
-    def makedirs(path, *args, **kwargs):
-        if os.path.basename(path).startswith("stage-"):
-            stages.append(path)
-        return real_makedirs(path, *args, **kwargs)
-
-    monkeypatch.setattr(os, "makedirs", makedirs)
-
-    def winner_publishes():
-        time.sleep(0.3)
-        w = ParquetTable(spark, str(tmp_path), "race11", schema)
-        stage = os.path.join(w.path, "stage-winner")
-        spark.createDataFrame([], schema).write.parquet(stage)
-        os.rename(stage, os.path.join(w.path, "v-00000001"))
-        w._write_atomic(w._commit_marker("v-00000001"), "")
-        w._advance_pointer("v-00000001")
-
-    th = threading.Thread(target=winner_publishes)
-    th.start()
-    try:
-        t.ensure()
-    finally:
-        th.join()
-    assert stages == []  # the loser staged NOTHING
-    assert t.current_version() == "v-00000001"
-    assert t.read().count() == 0
-
-
-def test_ensure_self_heals_dead_creation_claim(spark, tmp_path):
-    """A creation claim whose writer died (observed unchanged past
-    claim_ttl, no dir, no marker) must not wedge ensure(): its wait loop
-    observes, reclaims and creates."""
-    schema = _schema()
-    t = ParquetTable(spark, str(tmp_path), "heal11", schema)
-    os.makedirs(t.path, exist_ok=True)
-    open(t._claim_marker("v-00000001"), "w").close()
-    t.claim_ttl = 0.1  # ensure()'s 10 ms poll loop supplies the observation
-    t.ensure()
-    assert t.current_version() == "v-00000001"
-    assert t.read().count() == 0
-
-
 # -- round-11 post-review hardening ----------------------------------------
 
 
@@ -335,62 +151,35 @@ def test_transact_retries_tombstone_retention_aging(spark, tmp_path):
     assert ("tombstoned", 1) in _rows(t)
 
 
-def test_reclaim_race_exactly_one_winner(spark, tmp_path):
-    """N threads racing _reclaim_dead_claim on the same aged claim:
-    exactly one may win (the destructive step is serialized on the
-    pointer lock and re-verified under it — review #2)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    t, _ = _make(spark, tmp_path)
-    nxt = f"v-{int(t.current_version()[2:]) + 1:08d}"
-    open(t._claim_marker(nxt), "w").close()
-    t.claim_ttl = 0.05
-    assert t._reclaim_dead_claim(nxt) is False  # first sighting: observe
-    time.sleep(0.12)
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        wins = list(ex.map(lambda _: t._reclaim_dead_claim(nxt), range(8)))
-    assert wins.count(True) == 1
-    assert not os.path.exists(t._claim_marker(nxt))
-
-
-def test_stalled_holder_release_spares_stealers_fresh_lock(spark, tmp_path):
-    """A holder that stalls past the steal window must NOT unlink the
-    lock on release once a stealer owns it (token mismatch) — the blind
-    unlink would readmit a third writer mid-critical-section (review #3)."""
-    t, _ = _make(spark, tmp_path)
-    lock, token = t._acquire_pointer_lock()
-    # simulate: waiter deemed us stale, stole, and re-acquired
-    with open(lock, "w") as fh:
-        fh.write("stealer-token")
-    t._release_pointer_lock(lock, token)
-    assert os.path.exists(lock)  # the stealer's lock survived our release
-    with open(lock) as fh:
-        assert fh.read() == "stealer-token"
-    os.unlink(lock)
-    # and the normal path still releases
-    lock, token = t._acquire_pointer_lock()
-    t._release_pointer_lock(lock, token)
-    assert not os.path.exists(lock)
+def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
+    """A claim file that a writer of the older claim protocol left on the
+    next number when it died: transact() commits that number on its first
+    attempt, without a manual recover_stale()."""
+    t, schema = _make(spark, tmp_path)
+    base = t.current_version()
+    nxt = f"v-{int(base[2:]) + 1:08d}"
+    open(os.path.join(t.path, f"{nxt}.claim"), "w").close()
+    v = t.transact(
+        lambda df: df.unionByName(
+            df.sparkSession.createDataFrame([("healed", 1)], schema)
+        ),
+        max_attempts=1,
+    )
+    assert v == nxt
+    assert t.current_version() == nxt
+    assert ("healed", 1) in _rows(t)
 
 
-def test_unreadable_lock_times_out_instead_of_spinning(spark, tmp_path):
-    """A lock path that persistently exists but cannot be read as a file
-    (here: a directory) must end in TimeoutError after lock_timeout, not
-    an unbounded 100%-CPU spin (review #4)."""
-    t, _ = _make(spark, tmp_path)
-    lock = t._pointer() + ".lock"
-    os.makedirs(lock)  # O_EXCL -> FileExistsError; open() -> OSError forever
-    t.lock_timeout = 0.5
-    t.lock_steal_after = 10.0
-    try:
-        start = time.monotonic()
-        with pytest.raises(TimeoutError, match="stuck"):
-            t._acquire_pointer_lock()
-        assert time.monotonic() - start < 5.0
-    finally:
-        del t.lock_timeout
-        del t.lock_steal_after
-        os.rmdir(lock)
+def test_ensure_self_heals_dead_creation_claim(spark, tmp_path):
+    """A creation claim whose older-protocol writer died must not wedge
+    ensure(): it commits v-00000001 at once."""
+    schema = _schema()
+    t = ParquetTable(spark, str(tmp_path), "heal11", schema)
+    os.makedirs(t.path, exist_ok=True)
+    open(os.path.join(t.path, "v-00000001.claim"), "w").close()
+    t.ensure()
+    assert t.current_version() == "v-00000001"
+    assert t.read().count() == 0
 
 
 def test_queries_surface_has_no_stdlib_leaks():

@@ -294,52 +294,6 @@ def test_rollup_merge_is_replay_safe(spark, tmp_path):
     assert got == {1: (3, 17), 2: (1, 5), 3: (4, 2)}
 
 
-def test_rollup_replay_after_crash_at_commit_counts_once(
-    spark, tmp_path, monkeypatch
-):
-    """Crash injection: the process dies right after the merged snapshot
-    is made CURRENT, before merge_rollup_batch returns.  The batch id
-    must have committed with the rows, so the replay is a no-op instead
-    of adding the batch a second time."""
-    from pyspark.sql import types as T
-
-    from unstructured_data_pipeline_spark.operators.dml import (
-        ParquetTable,
-        last_applied_batch,
-    )
-    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
-
-    schema = "dim string, n long"
-    table = ParquetTable(
-        spark, str(tmp_path), "rollup_crash", T.StructType.fromDDL(schema)
-    ).ensure()
-    batch = spark.createDataFrame([("a", 1)], schema)
-
-    class Crash(BaseException):
-        pass
-
-    real = ParquetTable._write_atomic
-
-    def crash_after_pointer(path, text):
-        real(path, text)
-        if path == table._pointer():
-            raise Crash
-
-    monkeypatch.setattr(ParquetTable, "_write_atomic", staticmethod(crash_after_pointer))
-    try:
-        merge_rollup_batch(table, batch, ["dim"], ["n"], 0)
-        raise AssertionError("expected the injected crash")
-    except Crash:
-        pass
-    monkeypatch.undo()
-    assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
-
-    # the restarted stream re-delivers batch 0: counted once, not ("a", 2)
-    merge_rollup_batch(table, batch, ["dim"], ["n"], 0)
-    assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
-    assert last_applied_batch(table) == 0
-
-
 def test_rollup_compact_keeps_the_batch_ledger(spark, tmp_path):
     """compact() rewrites the rollup's rows but not its progress: the
     ledger rides into the compacted version, so a replay stays a no-op."""

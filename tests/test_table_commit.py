@@ -1,8 +1,12 @@
 """ParquetTable's one commit path (`operators/dml.py` ``ParquetTable._commit``):
-every version is staged, claimed O_EXCL, renamed into place and marked
-committed, so a rewrite computed from a stale snapshot fails instead of
-overwriting another writer's commit, and every read of a version goes
-through one reader (``read_version``)."""
+every version is staged in full, with a ``_base`` file naming its base and
+a unique cookie, and committed by renaming the stage onto the next version
+number, which fails when that version exists.  So a rewrite computed from
+a stale snapshot fails instead of overwriting another writer's commit, a
+crash at any step leaves a readable, writable table, and every read of a
+version goes through one reader (``read_version``).  Tables written by the
+older claim protocol (``CURRENT`` pointer, ``.claim``/``.commit`` files)
+read the same and take the next commit."""
 
 from __future__ import annotations
 
@@ -95,7 +99,7 @@ def fresh(request, spark, tmp_path):
         )
     t.ensure()
     assert t.current_version() == "v-00000001"
-    assert os.listdir(t.data_dir()) == []
+    assert os.listdir(t.data_dir()) == ["_base"]  # no data file
     return t
 
 
@@ -343,7 +347,8 @@ def test_append_leaves_the_base_version_untouched(spark, fresh):
     after = files(base)
     assert {p: (st.st_ino, st.st_mtime_ns) for p, st in after.items()} == before
     carried = files(fresh.data_dir())
-    shared = [p for p in before if "_SUCCESS" not in p]  # the new one is its own
+    # the new version's _SUCCESS and _base are its own
+    shared = [p for p in before if "_SUCCESS" not in p and p != "_base"]
     assert shared and all(carried[p].st_ino == before[p][0] for p in shared)
 
 
@@ -413,3 +418,350 @@ def test_pruned_upsert_keeps_tombstone_of_a_key_in_an_untouched_partition(
     t.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
     t.upsert(_df(spark, [("a", "y", 7)]), ["k"])
     assert _rows(t.read()) == [("b", "y", 2)]  # key-based: hidden until fold
+
+
+# -- the rename is the commit ----------------------------------------------
+
+
+def _make(spark, tmp_path, retain=1):
+    """A table whose current version v-00000002 holds one row."""
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA, retain=retain).ensure()
+    t.append(_df(spark, [("seed", 0)], SCHEMA))
+    return t
+
+
+def _next(version):
+    return f"v-{int(version[2:]) + 1:08d}"
+
+
+def test_versions_born_with_unique_cookie(spark, tmp_path):
+    """Every version holds a `_base` file naming its base version (or
+    `create`) and a unique cookie.  It keeps even a just-created table's
+    version dir non-empty, so a rename onto an existing version fails."""
+    t = _make(spark, tmp_path, retain=3)
+    base = t.current_version()
+    v = t.commit_rewrite(t.read_version(base), base)
+    bodies = {}
+    for version in t.versions():
+        with open(os.path.join(t.path, version, "_base")) as fh:
+            bodies[version] = fh.read()
+    assert bodies[v].startswith(base + ":") and len(bodies[v]) == len(base) + 33
+    first = bodies["v-00000001"]
+    assert first.startswith("create:") and len(first) == len("create:") + 32
+    assert len(set(bodies.values())) == 3
+
+
+def test_stale_base_fails_fast_without_staging(spark, tmp_path, monkeypatch):
+    """A rewrite whose base is no longer the newest version conflicts
+    before the expensive staged write, not after."""
+    t = _make(spark, tmp_path, retain=2)
+    base = t.current_version()
+    t.append(_df(spark, [("b", 1)], SCHEMA))
+    writes = []
+    monkeypatch.setattr(ParquetTable, "_write_snapshot", lambda *a: writes.append(a))
+    with pytest.raises(CommitConflictError):
+        t.commit_rewrite(t.read_version(base), base)
+    monkeypatch.undo()
+    assert writes == [] and not _staged(t)
+    t.transact(lambda df: df)  # the table takes the next commit
+    assert _rows(t.read()) == [("b", 1), ("seed", 0)]
+
+
+def test_racing_commits_on_one_base_have_one_winner(spark, tmp_path):
+    """Writers that all staged a version on the same base race to rename
+    it into place: exactly one wins, the others raise CommitConflictError
+    and leave no stage behind."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = _make(spark, tmp_path)
+    base = t.current_version()
+    n = 8
+    all_staged = threading.Barrier(n)
+
+    def commit(i):
+        def fill(stage):
+            os.makedirs(stage)
+            open(os.path.join(stage, f"writer-{i}"), "w").close()
+            all_staged.wait(timeout=60)
+
+        try:
+            return t._commit(base, fill)
+        except CommitConflictError:
+            return None
+
+    with ThreadPoolExecutor(max_workers=n) as ex:
+        wins = [v for v in ex.map(commit, range(n)) if v]
+    assert wins == [_next(base)]
+    assert t.versions() == wins
+    assert len([f for f in os.listdir(t.data_dir()) if f.startswith("writer-")]) == 1
+    assert not _staged(t)
+
+
+def test_rename_error_after_a_landed_rename_counts_as_commit(
+    spark, tmp_path, monkeypatch
+):
+    """NFS can lose a rename's reply, and the client's retry then fails
+    although the first rename landed.  The commit finds its own cookie in
+    the version's `_base` and counts as committed, once.  A rename error
+    with no landed rename behind it is raised, and the stage removed."""
+    import errno
+
+    t = _make(spark, tmp_path)
+    real = os.rename
+
+    def lost_reply(src, dst):
+        real(src, dst)
+        if os.path.basename(dst).startswith("v-"):
+            raise FileNotFoundError(errno.ENOENT, "retransmitted rename", src)
+
+    monkeypatch.setattr(os, "rename", lost_reply)
+    t.append(_df(spark, [("a", 1)], SCHEMA))
+    monkeypatch.undo()
+    assert t.versions() == ["v-00000003"]
+    assert _rows(t.read()) == [("a", 1), ("seed", 0)]
+
+    def refused(src, dst):
+        if os.path.basename(dst).startswith("v-"):
+            raise PermissionError(errno.EACCES, "refused", dst)
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", refused)
+    with pytest.raises(PermissionError):
+        t.append(_df(spark, [("b", 2)], SCHEMA))
+    monkeypatch.undo()
+    assert t.versions() == ["v-00000003"] and not _staged(t)
+
+
+def test_commit_on_a_base_gcd_during_its_fill_conflicts(spark, tmp_path):
+    """With retain=1, two other writers commit v-2 and v-3 while a commit
+    based on v-1 fills its stage, and their GC drops v-1 and v-2.  The
+    commit must raise CommitConflictError, not land on the freed
+    v-00000002 below the current version, where no read sees its rows."""
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    other = ParquetTable(spark, str(tmp_path), "t", SCHEMA)
+
+    def fill(stage):
+        other.append(_df(spark, [("b", 2)], SCHEMA))
+        other.append(_df(spark, [("c", 3)], SCHEMA))
+        _df(spark, [("a", 1)], SCHEMA).write.parquet(stage)
+
+    with pytest.raises(CommitConflictError):
+        t._commit("v-00000001", fill)
+    assert t.versions() == ["v-00000003"]
+    assert _rows(t.read()) == [("b", 2), ("c", 3)]
+    assert not _staged(t)
+
+
+@pytest.mark.parametrize("step", ["fill", "rename", "after_rename", "gc"])
+def test_crash_at_each_commit_step_leaves_a_writable_table(
+    spark, tmp_path, monkeypatch, step
+):
+    """Crash injection at each step of an append's commit: inside the
+    fill, at the rename, after the rename before the retention GC, and
+    inside the GC (its delete dies after one file).  Each leaves a
+    readable table whose root holds only version dirs plus stage/temp
+    residue; no partly deleted version is listed; and the next append
+    commits without recover_stale()."""
+    import shutil
+
+    t = _make(spark, tmp_path)
+    old = t.current_version()
+    new = _next(old)
+    if step == "fill":
+        _crash_on_write_under(monkeypatch, t)
+    elif step in ("rename", "after_rename"):
+        real_rename = os.rename
+
+        def rename(src, dst):
+            if not os.path.basename(dst).startswith("v-"):
+                return real_rename(src, dst)
+            if step == "after_rename":
+                real_rename(src, dst)
+            raise Crash(dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+    else:
+        real_rmtree = shutil.rmtree
+
+        def rmtree(path, *args, **kwargs):
+            if not str(path).startswith(t.path + os.sep):
+                return real_rmtree(path, *args, **kwargs)
+            for d, _, files in os.walk(path):
+                if files:
+                    os.unlink(os.path.join(d, files[0]))
+                    break
+            raise Crash(path)
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(Crash):
+        t.append(_df(spark, [("a", 1)], SCHEMA))
+    monkeypatch.undo()
+    committed = step in ("after_rename", "gc")
+    assert _rows(t.read()) == [("a", 1)] * committed + [("seed", 0)]
+    assert t.versions() == {
+        "fill": [old],
+        "rename": [old],
+        "after_rename": [old, new],
+        "gc": [new],
+    }[step]
+    assert all(
+        d.startswith(("v-", "stage-")) or ".tmp-" in d for d in os.listdir(t.path)
+    )
+    t.append(_df(spark, [("b", 2)], SCHEMA))
+    assert t.versions() == [_next(new if committed else old)]
+    assert ("b", 2) in _rows(t.read())
+
+
+def test_rollup_replay_after_crash_at_commit_counts_once(
+    spark, tmp_path, monkeypatch
+):
+    """Crash injection: the process dies right after the rename commits
+    the merged snapshot, before merge_rollup_batch returns.  The batch id
+    committed with the rows, so the replay is a no-op instead of adding
+    the batch a second time."""
+    from unstructured_data_pipeline_spark.operators.dml import last_applied_batch
+    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
+
+    schema = "dim string, n long"
+    table = ParquetTable(
+        spark, str(tmp_path), "rollup_crash", T.StructType.fromDDL(schema)
+    ).ensure()
+    batch = spark.createDataFrame([("a", 1)], schema)
+
+    class Died(BaseException):
+        pass
+
+    real = os.rename
+
+    def die_after_commit(src, dst):
+        real(src, dst)
+        if os.path.basename(dst).startswith("v-"):
+            raise Died
+
+    monkeypatch.setattr(os, "rename", die_after_commit)
+    with pytest.raises(Died):
+        merge_rollup_batch(table, batch, ["dim"], ["n"], 0)
+    monkeypatch.undo()
+    assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
+
+    # the restarted stream re-delivers batch 0: counted once, not ("a", 2)
+    assert not merge_rollup_batch(table, batch, ["dim"], ["n"], 0)
+    assert sorted(map(tuple, table.read().collect())) == [("a", 1)]
+    assert last_applied_batch(table) == 0
+
+
+def test_ensure_loser_never_stages(spark, tmp_path, monkeypatch):
+    """A creator that saw no table, then lost the race to another
+    creator, finds v-00000001 committed: it stages nothing and reads the
+    winner's empty version."""
+    t = ParquetTable(spark, str(tmp_path), "race", SCHEMA)
+    winner = ParquetTable(spark, str(tmp_path), "race", SCHEMA)
+    real_current = ParquetTable.current_version
+    real_makedirs = os.makedirs
+    raced, stages = [], []
+
+    def current_version(self):
+        if self is t and not raced:
+            raced.append(winner.ensure().current_version())
+            return None  # the loser's check ran before the winner's commit
+        return real_current(self)
+
+    def makedirs(path, *args, **kwargs):
+        if raced and os.path.basename(path).startswith("stage-"):
+            stages.append(path)
+        return real_makedirs(path, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetTable, "current_version", current_version)
+    monkeypatch.setattr(os, "makedirs", makedirs)
+    t.ensure()
+    monkeypatch.undo()
+    assert raced == ["v-00000001"] and stages == []
+    assert t.versions() == ["v-00000001"]
+    assert t.read().count() == 0
+
+
+def test_retention_keeps_the_newest_versions(spark, tmp_path):
+    """retain=2 keeps the two newest versions, both readable; the GC
+    leaves nothing else in the table root."""
+    t = _make(spark, tmp_path, retain=2)
+    for i in range(4):
+        t.transact(
+            lambda df, i=i: df.unionByName(_df(spark, [(f"r{i}", i)], SCHEMA))
+        )
+    assert t.versions() == ["v-00000005", "v-00000006"]
+    assert t.current_version() == "v-00000006"
+    assert sorted(os.listdir(t.path)) == t.versions()
+    assert t.read_version("v-00000005").count() == 4
+    assert t.read().count() == 5
+
+
+def _claim_protocol_table(spark, root):
+    """A table dir as the older claim protocol wrote it: an empty
+    v-00000001/, a v-00000002/ with rows, a `.claim` and a `.commit` file
+    per version, and a CURRENT pointer one version behind (its writer
+    died between the commit marker and the pointer advance)."""
+    path = os.path.join(root, "legacy")
+    os.makedirs(os.path.join(path, "v-00000001"))
+    _df(spark, [("a", 1), ("b", 2)], SCHEMA).write.parquet(
+        os.path.join(path, "v-00000002")
+    )
+    for v, base in (("v-00000001", ""), ("v-00000002", "v-00000001")):
+        with open(os.path.join(path, f"{v}.claim"), "w") as fh:
+            fh.write(f"{base or 'create'}:{'0' * 32}")
+        with open(os.path.join(path, f"{v}.commit"), "w") as fh:
+            fh.write(base)
+    with open(os.path.join(path, "CURRENT"), "w") as fh:
+        fh.write("v-00000001")
+    return ParquetTable(spark, root, "legacy", SCHEMA, retain=2)
+
+
+def test_claim_protocol_table_reads_the_same_and_takes_the_next_commits(
+    spark, tmp_path
+):
+    """A table written by the older claim protocol reads its newest
+    version whatever its CURRENT pointer says, and takes an append, an
+    upsert and a transact on top of it."""
+    t = _claim_protocol_table(spark, str(tmp_path))
+    assert t.current_version() == "v-00000002"
+    assert _rows(t.read()) == [("a", 1), ("b", 2)]
+    assert t.read_version("v-00000001").collect() == []
+    t.append(_df(spark, [("c", 3)], SCHEMA))
+    t.upsert(_df(spark, [("a", 10)], SCHEMA), ["k"])
+    assert t.transact(lambda df: df.filter("k != 'b'")) == "v-00000005"
+    assert _rows(t.read()) == [("a", 10), ("c", 3)]
+    assert t.versions() == ["v-00000004", "v-00000005"]
+
+
+def test_recover_stale_keeps_only_versions_and_schema(spark, tmp_path):
+    """With writers stopped, recover_stale() removes every entry of the
+    table root but the version dirs and schema.json: stage dirs, crashed
+    `_write_atomic` temps, and the pointer, claim, marker and lock files
+    of the older claim protocol, including the claim on the live
+    version, whose data stays."""
+    t = _claim_protocol_table(spark, str(tmp_path))
+    t._save_meta()
+    legacy = sorted(
+        d for d in os.listdir(t.path) if d not in ("schema.json", *t.versions())
+    )
+    planted = [
+        "v-00000003.claim",
+        "v-00000003.claim.obs",
+        "CURRENT.lock",
+        "CURRENT.lock.tok-deadbeef0000",
+        "CURRENT.lock.stale-deadbeef",
+        ".now-probe-deadbeef0000",
+        "CURRENT.tmp-12345-ab",
+        "v-00000002.commit.tmp-12345-ef",
+        "schema.json.tmp-12345-01",
+    ]
+    for name in planted:
+        open(os.path.join(t.path, name), "w").close()
+    os.makedirs(os.path.join(t.path, "stage-deadbeef", "p=1"))
+    removed = t.recover_stale()
+    assert sorted(removed) == sorted([*legacy, *planted, "stage-deadbeef"])
+    assert sorted(os.listdir(t.path)) == ["schema.json", "v-00000001", "v-00000002"]
+    assert _rows(t.read()) == [("a", 1), ("b", 2)]
+    assert t.recover_stale() == []
+    t.append(_df(spark, [("c", 3)], SCHEMA))
+    assert _rows(t.read()) == [("a", 1), ("b", 2), ("c", 3)]

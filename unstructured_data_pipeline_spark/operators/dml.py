@@ -17,9 +17,9 @@ Scale notes: the anti-join is a shuffle on the key — unavoidable for a
 key-matched merge — but the small side (a batch of new uploads / prompt
 edits) broadcasts, so at 100 TB the target is never shuffled: plan is
 BroadcastHashJoin(LeftAnti) over a straight scan.  ``ParquetTable`` gives
-the durable form: every new version commits through one optimistic
-protocol (Delta-style O_EXCL version claims, see ``ParquetTable._commit``),
-so a writer whose snapshot went stale gets ``CommitConflictError`` instead
+the durable form: every new version is staged in full and committed by one
+atomic rename onto the next version number (``ParquetTable._commit``), so
+a writer whose snapshot went stale gets ``CommitConflictError`` instead
 of overwriting another writer's commit — the guarantee the reference
 gets from Snowflake ``MERGE`` atomicity.
 """
@@ -169,6 +169,7 @@ def _link_tree(src: str, dst: str) -> None:
 # describes and ages out with them.
 _LEDGER = "_last_batch"  # batch-id high-watermark of a batch sink
 _TOMBSTONES = "_tombstones"  # merge-on-read deleted keys
+_BASE = "_base"  # "<base version or create>:<cookie>" of the commit
 
 
 def _write_ledger(stage: str, batch_id: int) -> None:
@@ -192,28 +193,28 @@ class ParquetTable:
     EXISTS, append, upsert, delete — the engine's stand-in for the reference's
     five Snowflake tables (`app.py:38-81`).
 
-    Layout (the classic pointer-commit design — same idea as Delta/Iceberg's
-    metadata pointer)::
+    Layout (one directory per committed version; the highest number is
+    the current one)::
 
         <root>/<name>/
-            CURRENT            # pointer cache naming the live version dir
+            schema.json        # ALTER-ed schema + defaults (if any)
             v-00000001/        # immutable-once-committed parquet snapshots
-                               # (a just-created table's is an empty dir)
+                _base          # "<base version or create>:<cookie>"
+                               # (a just-created table's only file)
                 _tombstones/   # merge-on-read deleted keys (if any)
                 _last_batch    # batch sink ledger (if any)
-            v-00000001.claim   # O_EXCL claim on the version number
-            v-00000001.commit  # commit marker: the version is visible
-            stage-<uuid>/      # a version being written (not yet claimed)
+            stage-<uuid>/      # a version being written, or being dropped
 
     Every write is a new version — creation, append, anti-insert,
     upsert/delete/compact, merge-on-read deletes, ALTER epochs, clones,
     OCC rewrites, batch sinks — written into a fresh ``stage-<uuid>/`` and
-    committed by :meth:`_commit` (claim, rename, marker, pointer).  A
-    crash at ANY point before the commit marker leaves the previous
-    version live and fully readable — there is no moment where the table
-    is partial (the round-1 two-step overwrite had exactly that window;
-    VERDICT r1 #4).  Appends stage a hardlink copy of the base version
-    plus their new files (:meth:`_commit_append`).
+    committed by :meth:`_commit`, whose one commit point is the rename of
+    the stage to the next version number.  A crash at ANY point before
+    the rename leaves the previous version live and fully readable —
+    there is no moment where the table is partial (the round-1 two-step
+    overwrite had exactly that window; VERDICT r1 #4).  Appends stage a
+    hardlink copy of the base version plus their new files
+    (:meth:`_commit_append`).
 
     MERGE cost is O(table) per call — fine for the reference's small
     control tables (class_prompts, new_uploads); for big fact tables the
@@ -234,15 +235,16 @@ class ParquetTable:
         self.schema = schema
         self._defaults: dict = {}
         self.path = os.path.join(root, name)
-        # ALTER-ed schema/defaults persist in schema.json next to CURRENT;
-        # a second instance opened on the same directory must see them
-        # (ADVICE r4: in-memory-only evolution silently lost the column).
+        # ALTER-ed schema/defaults persist in schema.json next to the
+        # version dirs; a second instance opened on the same directory
+        # must see them (ADVICE r4: in-memory-only evolution silently lost
+        # the column).
         # The persisted evolution wins over the constructor schema.
         self._load_meta()
         # snapshot retention (Snowflake-style time travel, the reference
         # platform's DATA_RETENTION knob): keep the newest `retain`
         # committed snapshots; older ones are GC'd at each commit.
-        # retain=1 == the original keep-only-CURRENT behavior;
+        # retain=1 keeps only the current version;
         # read_version()/versions() expose the retained history.
         if retain < 1:
             raise ValueError("retain must be >= 1")
@@ -264,9 +266,9 @@ class ParquetTable:
         self._defaults = dict(meta.get("defaults", {}))
 
     def _save_meta(self) -> None:
-        """Publish schema/defaults atomically (same temp+replace protocol
-        as the version pointer).  Defaults must be JSON scalars — exactly
-        what an ALTER ... DEFAULT literal is."""
+        """Publish schema/defaults atomically (:meth:`_write_atomic`).
+        Defaults must be JSON scalars — exactly what an ALTER ... DEFAULT
+        literal is."""
         import json
 
         os.makedirs(self.path, exist_ok=True)
@@ -277,14 +279,12 @@ class ParquetTable:
             ),
         )
 
-    # -- version pointer ----------------------------------------------------
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
+    # -- committed versions -------------------------------------------------
     @staticmethod
     def _write_atomic(path: str, text: str) -> None:
         """The one copy of the temp-write + fsync + rename publish idiom
-        (pointer, schema.json, commit markers all commit through here)."""
+        (schema.json and every version's ``_base`` go through here).  It
+        replaces the name, so it never writes through a hardlink."""
         tmp = f"{path}.tmp-{os.getpid()}-{id(text) & 0xFFFF:x}"
         with open(tmp, "w") as f:
             f.write(text)
@@ -292,34 +292,29 @@ class ParquetTable:
             os.fsync(f.fileno())
         os.replace(tmp, path)  # atomic on POSIX
 
-    def _pointer_version(self) -> str | None:
-        try:
-            with open(self._pointer()) as f:
-                v = f.read().strip()
-            return v or None
-        except FileNotFoundError:
-            return None
-
-    def current_version(self) -> str | None:
-        """Newest committed version.  The CURRENT pointer is a CACHE:
-        commit markers (append-only facts, written only after the snapshot
-        dir is complete) win when they are ahead — so a writer that died
-        between its commit marker and the pointer advance never hides or
-        loses a committed snapshot."""
-        best = self._pointer_version()
-        best_n = int(best[2:]) if best else 0
+    def versions(self) -> list[str]:
+        """Committed snapshot names, oldest first (last == current).  A
+        ``v-*`` dir only ever appears by the committing rename of a full
+        stage, so every one listed is complete."""
         try:
             entries = os.listdir(self.path)
         except FileNotFoundError:
-            return best
-        for d in entries:
-            if d.endswith(".commit") and d.startswith("v-"):
-                v = d.rsplit(".", 1)[0]
-                if int(v[2:]) > best_n and os.path.isdir(
-                    os.path.join(self.path, v)
-                ):
-                    best, best_n = v, int(v[2:])
-        return best
+            return []
+        return sorted(
+            (
+                d
+                for d in entries
+                # dirs only: tables written by the older claim protocol
+                # also hold v-XXXXXXXX.claim / .commit FILES
+                if d.startswith("v-") and os.path.isdir(os.path.join(self.path, d))
+            ),
+            key=lambda d: int(d[2:]),
+        )
+
+    def current_version(self) -> str | None:
+        """Newest committed version: the highest-numbered version dir."""
+        vs = self.versions()
+        return vs[-1] if vs else None
 
     def data_dir(self) -> str:
         v = self.current_version()
@@ -327,46 +322,19 @@ class ParquetTable:
             raise FileNotFoundError(f"table {self.name} has no published version")
         return os.path.join(self.path, v)
 
-    def _drop_version(self, d: str) -> None:
-        """The one copy of snapshot deletion: dir + commit/claim markers go
-        together (a marker outliving its dir would haunt
-        current_version())."""
-        import shutil
-
-        shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        for marker in (
-            self._commit_marker(d),
-            self._claim_marker(d),
-            self._claim_marker(d) + ".obs",
-        ):
-            try:
-                os.unlink(marker)
-            except OSError:
-                pass
-
     # -- CREATE TABLE IF NOT EXISTS (`app.py:38-81`) ------------------------
     def ensure(self) -> "ParquetTable":
         """Concurrent-safe CREATE IF NOT EXISTS, metadata-only: the first
-        version is an empty dir (no Spark job, no data file; every scan
-        passes the table schema, so it reads as zero rows) committed
-        through :meth:`_commit` like every other, so racing creators get
-        exactly one O_EXCL winner for v-00000001; the losers wait for its
-        commit (and reclaim the claim of a creator that died mid-commit,
-        then retry)."""
-        import time
-
-        deadline = time.monotonic() + self.claim_ttl + 60.0
-        while self.current_version() is None:
+        version holds only its ``_base`` (no Spark job, no data file; every
+        scan passes the table schema, so it reads as zero rows) and commits
+        through :meth:`_commit` like every other, so of racing creators
+        exactly one renames its stage to v-00000001; a loser finds that
+        version committed."""
+        if self.current_version() is None:
             try:
                 self._commit(None, os.makedirs)
             except CommitConflictError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"table {self.name}: creation claim exists but no "
-                        "version was published (crashed creator? run "
-                        "recover_stale() with writers stopped)"
-                    ) from None
-                time.sleep(0.01)
+                pass  # another creator committed v-00000001 first
         return self
 
     def read(self) -> DataFrame:
@@ -464,18 +432,6 @@ class ParquetTable:
         return dst
 
     # -- time travel (retained snapshots) -----------------------------------
-    def versions(self) -> list[str]:
-        """Retained snapshot names, oldest first (last == CURRENT)."""
-        return sorted(
-            (
-                d
-                for d in os.listdir(self.path)
-                # dirs only: marker FILES are named v-XXXXXXXX.commit
-                if d.startswith("v-") and os.path.isdir(os.path.join(self.path, d))
-            ),
-            key=lambda d: int(d[2:]),
-        )
-
     def _scan(self, path: str) -> DataFrame:
         """Every parquet file under one snapshot dir, ALTER epoch dirs
         included (the hive-partitioned subclass reads partition dirs)."""
@@ -559,16 +515,14 @@ class ParquetTable:
         batch sinks: the next version is whatever ``write(base, stage)``
         writes into the fresh stage plus the base version's files,
         hardlinked in after it (so no write can reach a file the base
-        shares).  A lost claim (or a base aged out mid-link) retries from
-        the new base, so concurrent appends all land; like :meth:`ensure`,
-        the retries also outlast a dead writer's claim until it is
-        reclaimed.  With ``batch_id`` the batch ledger commits with the
-        new files, and a batch at or below the base's ledger writes
-        nothing and returns False."""
+        shares).  A conflict (or a base aged out mid-link) retries from
+        the new base, so concurrent appends all land.  With ``batch_id``
+        the batch ledger commits with the new files, and a batch at or
+        below the base's ledger writes nothing and returns False."""
         import time
 
         self.ensure()
-        deadline = time.monotonic() + self.claim_ttl + 60.0
+        deadline = time.monotonic() + 60.0
         while True:
             base = self.current_version()
             vdir = os.path.join(self.path, base)
@@ -699,34 +653,28 @@ class ParquetTable:
 
     # -- the commit protocol ------------------------------------------------
     #
-    # The classic Delta-style optimistic protocol, expressed with the two
-    # atomic primitives a POSIX filesystem gives us (O_CREAT|O_EXCL create
-    # and same-dir rename).  Every version any method creates goes through
-    # _commit():
+    # Every version any method creates goes through _commit(), whose one
+    # commit point is a POSIX rename:
     #
-    #   1. read the latest COMMITTED snapshot N (its base);
-    #   2. stage the full new table into stage-<uuid>/;
-    #   3. claim version N+1 by O_EXCL-creating v-XXXXXXXX.claim — exactly
-    #      one writer per version number can win this, so commits serialize
-    #      without a coordinator (Delta's "mutual exclusion on the log
-    #      entry", here on the claim file);
-    #   4. rename the staging dir to v-XXXXXXXX (atomic: the snapshot
-    #      appears complete or not at all);
-    #   5. write v-XXXXXXXX.commit — only now is the version COMMITTED and
-    #      visible to current_version();
-    #   6. advance the CURRENT pointer monotonically (never backwards, so
-    #      a slow winner of version N can't clobber the already-published
-    #      N+1) and GC snapshots below the retention window.
+    #   1. read the newest committed version N (the base);
+    #   2. stage the full new table into stage-<uuid>/, plus a `_base` file
+    #      naming N and a unique cookie;
+    #   3. rename stage-<uuid>/ to v-(N+1)/.  Renaming a directory onto an
+    #      existing non-empty one fails (ENOTEMPTY/EEXIST), and every
+    #      version holds its `_base`, so exactly one writer per version
+    #      number wins, without a coordinator, and the snapshot appears
+    #      complete or not at all;
+    #   4. drop versions below the retention window.
     #
-    # A writer that loses the claim race had computed its rewrite against a
-    # stale snapshot: it raises CommitConflictError — upsert/delete_where/
-    # compact surface it to the caller, transact() retries the whole
-    # read-rewrite-commit loop from the NEW snapshot.  Either way the
-    # lost-update anomaly is impossible (the optimistic trade, same as
-    # Delta/Iceberg).  Size ``retain`` to cover writer lag: a base snapshot
-    # GC'd mid-rewrite surfaces as retention aging, which transact() also
-    # retries.  On an object store the claim's O_EXCL becomes a conditional
-    # PUT (If-None-Match), same shape.
+    # A writer whose base is no longer the newest version computed its
+    # rewrite against a stale snapshot: it raises CommitConflictError —
+    # upsert/delete_where/compact surface it to the caller, transact()
+    # retries the whole read-rewrite-commit loop from the NEW snapshot.
+    # Either way the lost-update anomaly is impossible (the optimistic
+    # trade, same as Delta/Iceberg).  Size ``retain`` to cover writer lag:
+    # a base snapshot GC'd mid-rewrite surfaces as retention aging, which
+    # transact() also retries.  On an object store the rename becomes a
+    # conditional PUT (If-None-Match) of the version manifest, same shape.
 
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
         """Write ``df`` — already in the table schema — into the fresh
@@ -738,27 +686,36 @@ class ParquetTable:
 
     def _commit(self, base: str | None, fill) -> str:
         """The one way a version is born: ``fill(stage)`` writes the whole
-        new snapshot into a fresh ``stage-<uuid>/``, then version
-        ``base + 1`` is claimed (O_EXCL, with a unique cookie), the stage
-        renamed into place, the commit marker written and the pointer
-        advanced.  ``base`` is None only for the first version.  A fill
-        that writes no ``_last_batch`` ledger gets the base's (hardlinked).
+        new snapshot into a fresh ``stage-<uuid>/``, ``_base`` records
+        ``"<base or create>:<cookie>"`` in it, and renaming the stage to
+        version ``base + 1`` commits it.  ``base`` is None only for the
+        first version.  A fill that writes no ``_last_batch`` ledger gets
+        the base's (hardlinked).
 
-        Raises :class:`CommitConflictError` when another writer holds the
-        claim — checked before the stage is filled (fail fast: a burnt
-        claim costs no snapshot write, unless its writer demonstrably
-        died, see :meth:`_reclaim_dead_claim`) and authoritatively by the
-        O_EXCL.  Any failure before the claim removes the stage.  Returns
-        the committed version name."""
+        Raises :class:`CommitConflictError` unless ``base`` is the newest
+        version — checked at entry (fail fast: nothing is staged), again
+        after the fill, and authoritatively by the rename, which fails on
+        an existing version.  A rename error of any other kind counts as
+        success only if the version holds this writer's ``_base`` (an NFS
+        retransmission whose first rename landed).  Any failure before the
+        rename removes the stage.  Returns the committed version name.
+
+        One window stays open: between the second check and the rename,
+        other writers may commit ``base + 1`` and ``base + 2`` and
+        retention GC may drop ``base + 1``.  The rename then lands on the
+        freed number below the newest version, so it returns as if
+        committed although no reader ever sees it as current."""
+        import errno
         import shutil
         import uuid
 
         target = f"v-{(int(base[2:]) if base else 0) + 1:08d}"
-        claim = self._claim_marker(target)
-        if os.path.exists(claim) and not self._reclaim_dead_claim(target):
+        if self.current_version() != base:
             raise CommitConflictError(self.name, str(base), target)
         os.makedirs(self.path, exist_ok=True)
         stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
+        vdir = os.path.join(self.path, target)
+        cookie = f"{base or 'create'}:{uuid.uuid4().hex}"
         try:
             fill(stage)
             if base is not None:
@@ -770,317 +727,52 @@ class ParquetTable:
                     )
                 except (FileNotFoundError, FileExistsError):
                     pass
+            self._write_atomic(os.path.join(stage, _BASE), cookie)
+            if self.current_version() != base:
+                raise CommitConflictError(self.name, str(base), target)
             try:
-                fd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                raise CommitConflictError(self.name, str(base), target) from None
+                os.rename(stage, vdir)
+            except OSError as e:
+                if self._read_base(target) != cookie:
+                    if e.errno in (errno.ENOTEMPTY, errno.EEXIST):
+                        raise CommitConflictError(
+                            self.name, str(base), target
+                        ) from None
+                    raise
         except BaseException:
             shutil.rmtree(stage, ignore_errors=True)
             raise
-        try:
-            # base version + a unique cookie: the cookie makes the claim's
-            # reclamation identity collision-proof across inode/mtime-
-            # quantum reuse (see _reclaim_dead_claim._ident, ADVICE r12)
-            os.write(fd, f"{base or 'create'}:{uuid.uuid4().hex}".encode())
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        os.rename(stage, os.path.join(self.path, target))
-        self._write_atomic(self._commit_marker(target), base or "")
-        self._advance_pointer(target)
+        self._gc()
         return target
 
-    def _commit_marker(self, version: str) -> str:
-        return os.path.join(self.path, f"{version}.commit")
+    def _read_base(self, version: str) -> str | None:
+        try:
+            with open(os.path.join(self.path, version, _BASE)) as f:
+                return f.read()
+        except OSError:
+            return None
 
-    def _claim_marker(self, version: str) -> str:
-        return os.path.join(self.path, f"{version}.claim")
-
-    # A claim with no snapshot dir and no commit marker that has been
-    # OBSERVED persist unchanged for this long — measured between two
-    # timestamps the FILESYSTEM itself stamped (the .obs sidecar's mtime
-    # vs a fresh probe file's mtime; no client clock anywhere, see
-    # _reclaim_dead_claim) — is a writer that died between claim creation
-    # and rename.  That live window is microseconds (write/fsync/close +
-    # isdir + rename), so 60 s leaves 6+ orders of magnitude of slack;
-    # the observation requirement means client-vs-server clock skew can
-    # never reclaim a live writer's claim.
-    claim_ttl: float = 60.0
-
-    # How long a waiter watches one unchanged pointer-lock token (its own
-    # monotonic clock) before stealing the lock as crashed — see
-    # _acquire_pointer_lock; the critical section it guards is
-    # microseconds.  lock_timeout bounds the whole wait (TimeoutError).
-    lock_steal_after: float = 10.0
-    lock_timeout: float = 30.0
-
-    def _acquire_pointer_lock(self) -> tuple[str, str]:
-        """Acquire the table's pointer lock; returns ``(path, token)``
-        for :meth:`_release_pointer_lock`.
-
-        Staleness is WAITER-observed: each holder writes a unique token
-        into the lock, and a waiter steals only after watching the SAME
-        token persist > :attr:`lock_steal_after` seconds of its OWN
-        monotonic clock.  No wall-clock / mtime comparison anywhere, so
-        NFS/container clock skew can neither cause a premature steal
-        (two holders) nor a future-dated lock that never goes stale
-        (ADVICE r10).  The lock is born WITH its token (written to a
-        temp file, then hardlinked into place — link(2) fails EEXIST
-        like O_EXCL), so it is never observable empty; distinct holders
-        can therefore never alias on an empty read and an empty or
-        unreadable read is treated as no-observation (ADVICE r11).
-        Every non-acquiring branch — including a persistently
-        unreadable lock — falls through to the shared deadline check
-        and poll sleep, so the wait is bounded and never busy-spins
-        (round-11 review)."""
-        import time
+    def _gc(self) -> None:
+        """Retention GC: drop every version below the newest ``retain``.
+        A dropped version is first renamed to a ``stage-`` name, so a
+        crash partway through the delete leaves residue, never a partial
+        snapshot that :meth:`versions` would list."""
+        import shutil
         import uuid
 
-        lock = self._pointer() + ".lock"
-        token = uuid.uuid4().hex
-        deadline = time.monotonic() + self.lock_timeout
-        steal_after = self.lock_steal_after
-        seen_token: str | None = None
-        seen_at = 0.0
-        tmp = f"{lock}.tok-{token[:12]}"
-        # fsync BEFORE the link publishes the token: a kernel crash after
-        # link(2) but before the data hit disk could otherwise resurrect a
-        # published lock with EMPTY content — deliberately unstealable, so
-        # every writer would wedge until recover_stale() (ADVICE r12)
-        with open(tmp, "w") as fh:
-            fh.write(token)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            while True:
-                try:
-                    os.link(tmp, lock)
-                    return lock, token
-                except FileExistsError:
-                    # spurious EEXIST (NFS lost-reply retransmission, the
-                    # documented link(2) caveat): if OUR temp file now has
-                    # two links, the first transmission succeeded and we
-                    # DO hold the lock — without this check we'd watch our
-                    # own token "persist" and steal our own lock after
-                    # lock_steal_after (round-12 review)
-                    try:
-                        if os.stat(tmp).st_nlink == 2:
-                            return lock, token
-                    except OSError:
-                        pass
-                    try:
-                        with open(lock, "rb") as fh:
-                            holder = fh.read().decode("ascii", "replace")
-                    except OSError:
-                        # released between the two calls (likely acquirable
-                        # next poll) — or persistently unreadable, which the
-                        # deadline below turns into TimeoutError, not a spin
-                        holder = None
-                    if not holder:
-                        # empty ⇒ not a token this code wrote (locks are born
-                        # with content): same treatment as unreadable
-                        seen_token = None
-                    elif holder != seen_token:
-                        # new holder instance — restart the staleness clock
-                        seen_token, seen_at = holder, time.monotonic()
-                    elif time.monotonic() - seen_at > steal_after:
-                        # steal by ATOMIC rename-then-unlink: of two concurrent
-                        # stealers exactly one wins the rename, while a plain
-                        # unlink could remove the other stealer's FRESH lock
-                        try:
-                            grave = f"{lock}.stale-{uuid.uuid4().hex[:8]}"
-                            os.rename(lock, grave)
-                            os.unlink(grave)
-                        except OSError:
-                            pass
-                        seen_token = None
-                        continue
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"CURRENT lock on table {self.name} stuck"
-                        ) from None
-                    time.sleep(0.005)
-        finally:
-            # the acquired lock is a SECOND link to the same inode — this
-            # removes only the temp name, never the token content
+        for d in self.versions()[: -self.retain]:
+            grave = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
             try:
-                os.unlink(tmp)
+                os.rename(os.path.join(self.path, d), grave)
             except OSError:
-                pass
-
-    def _release_pointer_lock(self, lock: str, token: str) -> None:
-        """Unlink the lock only if it still holds OUR token: after a
-        staleness steal the path holds the stealer's FRESH lock, which
-        the old blind unlink would have destroyed — readmitting a third
-        writer while the stealer is inside the critical section
-        (round-11 review).  The residual read-then-unlink window is
-        microseconds and, like the documented steal race, can at worst
-        leave the pointer CACHE transiently behind the markers."""
-        try:
-            with open(lock, "rb") as fh:
-                if fh.read().decode("ascii", "replace") != token:
-                    return  # stolen from us — the lock is someone else's
-        except OSError:
-            return  # already gone
-        try:
-            os.unlink(lock)
-        except OSError:
-            pass
-
-    def _reclaim_dead_claim(self, version: str) -> bool:
-        """Reclaim ``version``'s claim if its writer demonstrably died
-        mid-commit, so ``transact()`` self-heals instead of wedging every
-        later commit until a manual ``recover_stale()`` (ADVICE r10).
-        Returns True if the claim was removed and the caller may retry
-        its O_EXCL.
-
-        Deadness is OBSERVED, never inferred from a client clock
-        (ADVICE r11): the first reclaimer to sight a dir-less
-        marker-less claim records its identity (inode, mtime_ns, size,
-        and a digest of the claim's unique creation cookie — so neither
-        inode reuse nor a coarse-mtime quantum can alias two claim
-        instances, ADVICE r12) in a persistent ``.obs`` sidecar next to
-        it; the claim is reclaimable
-        only once the SAME identity has persisted for > :attr:`claim_ttl`
-        as measured by comparing the sidecar's mtime against the mtime
-        of a freshly-created probe file — two timestamps stamped by the
-        SAME filesystem clock, so client-vs-server skew (NFS) can never
-        age a LIVE writer's fresh claim into reclamation.  Because the
-        sidecar lives on disk, the observation window survives process
-        restarts: a fleet of short-lived writers (one ParquetTable
-        instance per cron run) converges on the heal after ``claim_ttl``
-        just like a long-lived one (round-12 review — the in-memory
-        first-seen map never converged across instances).
-
-        First sighting returns False and starts the clock; callers that
-        need the heal (``ensure()``'s wait loop, ``transact()``'s retry
-        loop) poll through here.
-
-        The destructive step is serialized on the pointer lock and both
-        deadness AND identity re-verified under it: between an unlocked
-        check and an unlink, another reclaimer could remove the observed
-        claim and a new claimant could land a FRESH one at the same
-        path (round-11 review).  Under the lock a fresh claim cannot
-        appear (O_EXCL creation needs the path absent, and the only
-        removers — other reclaimers — are locked out), so once identity
-        matches the observed-dead file a plain unlink is safe."""
-        import uuid
-
-        claim = self._claim_marker(version)
-        obs = claim + ".obs"
-
-        def _ident():
-            """(ino, mtime_ns, size, content-digest) of the claim if it is
-            currently dir-less and marker-less, else None (not reclaimable
-            right now).  The digest covers the unique cookie every claim
-            this code writes carries (see ``_commit``), so on filesystems
-            with coarse mtime granularity (1 s NFSv3) inode reuse within
-            one timestamp quantum can no longer alias a
-            FRESH claim with a previously-observed dead one and inherit
-            its reclamation window (ADVICE r12).  A foreign zero-byte
-            claim still gets (ino, mtime_ns, 0, digest-of-empty) — the
-            pre-cookie behavior, with the documented quantum caveat."""
-            import hashlib
-
-            if os.path.isdir(os.path.join(self.path, version)):
-                return None  # snapshot landed: real (or in-flight) commit
-            if os.path.exists(self._commit_marker(version)):
-                return None  # committed: the conflict is genuine staleness
-            try:
-                st = os.stat(claim)
-                with open(claim, "rb") as fh:
-                    body = fh.read(128)
-            except OSError:
-                return None  # vanished or contended — treat as not ours
-            return (
-                st.st_ino,
-                st.st_mtime_ns,
-                st.st_size,
-                hashlib.sha256(body).hexdigest()[:16],
-            )
-
-        def _obs_read():
-            """(recorded identity, sidecar mtime_ns) or None.  A sidecar
-            in the pre-r13 ``ino:mtime`` format fails the JSON parse and
-            reads as no-observation — the safe direction (the window
-            merely restarts)."""
-            import json
-
-            try:
-                with open(obs) as fh:
-                    recorded = tuple(json.loads(fh.read()))
-                return recorded, os.stat(obs).st_mtime_ns
-            except (OSError, ValueError, TypeError):
-                # TypeError: a JSON scalar ('3', 'null') is not iterable —
-                # same corrupt-sidecar treatment as a parse failure
-                return None
-
-        ident = _ident()
-        if ident is None:
-            # resolved (or contended): drop a now-stale sidecar so a
-            # future claim at this path starts a fresh window
-            try:
-                os.unlink(obs)
-            except OSError:
-                pass
-            return False
-        seen = _obs_read()
-        if seen is None or seen[0] != ident:
-            # first sighting of THIS claim instance — record it; the
-            # sidecar's own mtime is the filesystem-stamped epoch of the
-            # observation (concurrent first-sighters write identical
-            # content, so last-replace-wins is harmless)
-            import json
-
-            self._write_atomic(obs, json.dumps(ident))
-            return False
-        # age = same-filesystem now (a fresh probe file's mtime) minus the
-        # sidecar's mtime — no client clock anywhere
-        probe = os.path.join(self.path, f".now-probe-{uuid.uuid4().hex[:12]}")
-        try:
-            with open(probe, "w"):
-                pass
-            now_ns = os.stat(probe).st_mtime_ns
-        except OSError:
-            return False
-        finally:
-            try:
-                os.unlink(probe)
-            except OSError:
-                pass
-        if now_ns - seen[1] <= self.claim_ttl * 1e9:
-            return False  # observed, but not long enough yet
-        lock, token = self._acquire_pointer_lock()
-        try:
-            cur = _obs_read()
-            if _ident() != ident or cur is None or cur[0] != ident:
-                # replaced/resolved while we waited for the lock — the
-                # file there now (if any) is NOT the one we observed dead
-                return False
-            try:
-                os.unlink(claim)
-            except OSError:
-                return False
-            try:
-                os.unlink(obs)
-            except OSError:
-                pass
-            return True
-        finally:
-            self._release_pointer_lock(lock, token)
+                continue  # a concurrent GC dropped it first
+            shutil.rmtree(grave, ignore_errors=True)
 
     def commit_rewrite(self, df: DataFrame, base_version: str) -> str:
         """Commit ``df`` as the FULL table content of version base+1,
         failing with :class:`CommitConflictError` if any other writer
         committed base+1 first (the caller's snapshot is then stale).
-        Returns the committed version name.
-
-        A claim file with no commit marker and no snapshot dir is a
-        writer that died mid-commit: it burns its version number and
-        conflicts later writers until a retrying writer has OBSERVED it
-        unchanged for :attr:`claim_ttl` and reclaims it (so writers that
-        keep retrying self-heal); ``recover_stale()`` (with writers
-        stopped) remains the immediate manual path."""
+        Returns the committed version name."""
         if self._defaults:
             # the committed snapshot has no pre-alter epoch dirs, so
             # read()'s DEFAULT backfill stops applying: any stored NULL
@@ -1144,122 +836,29 @@ class ParquetTable:
         assert last is not None
         raise last
 
-    def _advance_pointer(self, version: str) -> None:
-        """The last step of :meth:`_commit`: monotonic CURRENT advance +
-        below-window GC, serialized by a tiny O_EXCL lock file
-        (microsecond critical section; a crashed holder's lock is stolen
-        after 10 s).  It NEVER deletes dirs above the pointer — a
-        higher-numbered dir may be another writer's commit in flight.
-
-        The lock protects only the pointer CACHE: current_version()
-        derives truth from the commit markers, so even the residual
-        steal race (a stealer's staleness check vs a fresh acquirer)
-        can at worst leave the cache transiently behind — never hide or
-        lose a committed snapshot."""
-        lock, token = self._acquire_pointer_lock()
-        try:
-            cur = self._pointer_version()
-            if cur is None or int(version[2:]) > int(cur[2:]):
-                self._write_atomic(self._pointer(), version)
-                cur = version
-        finally:
-            self._release_pointer_lock(lock, token)
-        # retention GC strictly below the keep window of the pointer —
-        # OUTSIDE the lock: a big snapshot's rmtree can outlast the steal
-        # timeout (stolen lock -> two writers in the critical section), and
-        # the GC is idempotent + safe to race (concurrent writers delete
-        # the same below-window dirs; ignore_errors absorbs the overlap),
-        # so only the pointer advance needs mutual exclusion
-        cur_n = int(cur[2:])
-        dirs = sorted(
-            (
-                d
-                for d in os.listdir(self.path)
-                if d.startswith("v-")
-                and os.path.isdir(os.path.join(self.path, d))
-                and int(d[2:]) <= cur_n
-            ),
-            key=lambda d: int(d[2:]),
-            reverse=True,
-        )
-        for d in dirs[self.retain:]:
-            self._drop_version(d)
-
     def recover_stale(self) -> list[str]:
-        """Crash cleanup, to run when NO writers are active: drop staging
-        dirs, claimed-but-never-committed versions (a writer that died
-        between claim and commit marker), and every pointer-lock /
-        observation residue a crash can leave — the CURRENT.lock itself
-        (an empty or corrupt lock is unstealable by design, so with
-        writers stopped this is THE recovery path for it — round-12
-        review), ``.lock.tok-`` token temps, ``.lock.stale-`` steal
-        graves, ``.now-probe-`` age probes, orphaned ``.claim.obs``
-        sidecars, and ``_write_atomic`` temp files (``*.tmp-*`` —
-        CURRENT/commit-marker/obs/schema.json publishes that crashed
-        between write and rename; ADVICE r12).  Returns what was
-        removed."""
+        """Crash cleanup, to run when NO writers are active: remove every
+        entry of the table root that is not a version dir or schema.json.
+        That covers the ``stage-`` dirs of a writer or a retention GC that
+        died partway, crashed :meth:`_write_atomic` temps, and the
+        pointer, claim, marker and lock files of tables written by the
+        older claim protocol.  Returns what was removed."""
         import shutil
 
-        removed = []
         try:
             entries = os.listdir(self.path)
         except FileNotFoundError:
-            return removed
-        cur = self.current_version()
-        cur_n = int(cur[2:]) if cur else 0
+            return []
+        removed = []
         for d in entries:
             full = os.path.join(self.path, d)
-            if d.startswith("stage-") and os.path.isdir(full):
+            if d == "schema.json" or (d.startswith("v-") and os.path.isdir(full)):
+                continue
+            if os.path.isdir(full):
                 shutil.rmtree(full, ignore_errors=True)
-                removed.append(d)
-            elif (
-                d == "CURRENT.lock"
-                or ".lock.tok-" in d
-                or ".lock.stale-" in d
-                or d.startswith(".now-probe-")
-            ):
-                # with writers stopped, any lock state is a dead holder's:
-                # the lock itself (incl. the unstealable empty/corrupt
-                # case), a crashed holder's token temp, a crashed
-                # stealer's grave, or a reclaimer's age probe
-                try:
-                    os.unlink(full)
-                    removed.append(d)
-                except OSError:
-                    pass
-            elif ".tmp-" in d and os.path.isfile(full):
-                # a crashed _write_atomic (temp written, rename never ran):
-                # with writers stopped every `<target>.tmp-<pid>-<tag>` is
-                # residue — the target either committed via an earlier
-                # rename or will be rewritten by the next publish
-                try:
-                    os.unlink(full)
-                    removed.append(d)
-                except OSError:
-                    pass
-            elif d.endswith(".claim.obs") and d.startswith("v-"):
-                # observation sidecar: meaningful only while its claim is
-                # live and unresolved — with writers stopped the claim is
-                # being removed below (or is already gone/committed), so
-                # the sidecar is residue either way
-                try:
-                    os.unlink(full)
-                    removed.append(d)
-                except OSError:
-                    pass
-            elif d.endswith(".claim") and d.startswith("v-"):
-                v = d.rsplit(".", 1)[0]
-                if not os.path.exists(self._commit_marker(v)):
-                    # only versions ABOVE the pointer can be crashed
-                    # commits; at or below it the dir is LIVE data whatever
-                    # its markers say — drop just the stale claim file,
-                    # never the data
-                    vdir = os.path.join(self.path, v)
-                    if int(v[2:]) > cur_n and os.path.isdir(vdir):
-                        shutil.rmtree(vdir, ignore_errors=True)
-                        removed.append(v)
-                    os.unlink(full)
-                    removed.append(d)
+            else:
+                os.unlink(full)
+            removed.append(d)
         return removed
 
 
@@ -1287,7 +886,7 @@ class PartitionedParquetTable(ParquetTable):
     granularity Delta/Iceberg give you, here at directory level.  On an
     object store the hardlink step becomes a manifest write (SCALE.md);
     the commit protocol is inherited unchanged: a crash at any point
-    before the commit marker leaves the previous version fully live.
+    before the committing rename leaves the previous version fully live.
 
     Constraints: partition columns must be non-null scalars (hive dir
     naming), and a MERGE batch must carry its partition columns.  A key

@@ -341,16 +341,13 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # a failed dedup batch releases its cached bands and flags
+    # the rename of a staged version dir is the one commit point: no claim
+    # files, commit markers or CURRENT pointer
+    "occ_transact_lifecycle",
+    "occ_recover_stale_lifecycle",
+    "occ_partitioned_lifecycle",
     "incremental_dedup_report",
-    # Python workers re-read a zip's directory only when its stat changed
-    "pdf_ocr_roundtrip_contract",
-    "image_glyph_ocr_contract",
-    "pipeline_extract_eav",
-    "summarize_documents",
-    "history_documents_current",
-    "dedup_embedding_cosine",
-    "pipeline_flaky_transport_recovery",
+    "streaming_intake_eav",
 ]
 
 

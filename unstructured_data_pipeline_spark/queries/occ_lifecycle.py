@@ -1,15 +1,16 @@
 """round 11: optimistic-concurrency lifecycle driver row (VERDICT r10 #3).
 
-The round-10 OCC layer (``operators/dml.py`` — ``commit_rewrite()``,
-``transact()``, O_EXCL version claims, commit markers, monotonic pointer,
-retention GC) had unit/race/probe evidence but no hash-gated driver row.
+The OCC layer (``operators/dml.py`` — ``commit_rewrite()``,
+``transact()``, the committing rename of a staged version dir, retention
+GC) had unit/race/probe evidence but no hash-gated driver row.
 This query executes the whole protocol on a scratch ``ParquetTable`` and
 reports one row per lifecycle step — committed version name, row count,
 retained-snapshot count, and a cents-exact balance sum read back FROM THE
 PUBLISHED SNAPSHOT after every commit — so the oracle falsifies any of:
 a skipped/duplicated commit, a version number that didn't advance
 monotonically, a lost update in the raced pair, retention GC keeping the
-wrong window, or the dead-claim self-heal handing out the wrong number.
+wrong window, or a leftover claim file of the older claim protocol
+blocking or renumbering the next commit.
 
 The race is deterministic by construction: both writers compute from the
 same base and their rewrites commute (+2 and +1 on every balance), so the
@@ -17,11 +18,11 @@ conflict only reorders recomputes — the final table content and the full
 version sequence are fixed.  Reference parity: the app's writers rely on
 Snowflake's transactional MERGE/INSERT for exactly this lost-update
 safety (`app/Auto-Magic Document AI.py:185-195,920-926`); the Spark-first
-form is the Delta-style claim protocol exercised here.
+form is the rename-commit protocol exercised here.
 
 Scale shape: every step is one snapshot write (the Delta/Iceberg commit
-cost) plus microsecond filesystem markers; only per-step scalar
-aggregates reach the driver.
+cost) plus one directory rename; only per-step scalar aggregates reach
+the driver.
 """
 
 from __future__ import annotations
@@ -34,9 +35,9 @@ OCC_SEGMENT = "BUILDING"
 def occ_transact_lifecycle(spark, sf_dir):
     """Nine-step OCC lifecycle on a scratch table seeded from ``customer``
     (every 10th key): create -> seed -> two sequential transacts -> a
-    raced pair (winner commits, loser fail-fasts on the burnt claim
+    raced pair (winner commits, loser fail-fasts on the stale base
     WITHOUT staging, then retries optimistically on top of the winner)
-    -> an observed-dead claim self-healed by transact() -> final read-back.
+    -> a commit past a leftover claim file -> final read-back.
     Cites ``transact()`` in `operators/dml.py` (symbol, not line — the
     line drifted between rounds; ADVICE r11) per VERDICT r10 #3."""
     # function-local stdlib imports: the package __init__ re-exports every
@@ -77,7 +78,7 @@ def occ_transact_lifecycle(spark, sf_dir):
             n, s = stats()
             steps.append((step, version, n, len(t.versions()), s))
 
-        # 01: CREATE TABLE IF NOT EXISTS commits v-00000001 through the claim
+        # 01: CREATE TABLE IF NOT EXISTS commits v-00000001 by rename
         t.ensure()
         record("01_create", t.current_version())
 
@@ -99,8 +100,8 @@ def occ_transact_lifecycle(spark, sf_dir):
         record("04_inc_all", v)
 
         # 05/06/07: the raced pair — both writers compute from the same base;
-        # the +2 writer wins the claim, the +1 writer's direct commit_rewrite
-        # fail-fasts on the burnt claim (no stage- dir is ever created), then
+        # the +2 writer commits first, the +1 writer's direct commit_rewrite
+        # fail-fasts on its stale base (no stage- dir is ever created), then
         # lands via transact() ON TOP of the winner (lost update impossible)
         base = t.current_version()
         winner = t.read_version(base).withColumn(
@@ -119,19 +120,13 @@ def occ_transact_lifecycle(spark, sf_dir):
         v = t.transact(lambda df: df.withColumn("c_acctbal", F.col("c_acctbal") + 1.0))
         record("07_race_loser_retry", v)
 
-        # 08: a writer crashed between claim and rename — transact()'s retry
-        # loop must OBSERVE the dir-less marker-less claim persist unchanged
-        # for claim_ttl on its own monotonic clock (no mtime/wall-clock aging
-        # — ADVICE r11), then reclaim it and reuse its number.  A short
-        # instance window keeps the observed wait inside transact()'s retry
-        # sleeps (0.02+0.04+0.06+0.08 s ≫ 0.05 s).
+        # 08: a claim file on the next number, as a writer of the older
+        # claim protocol left it when it died before its rename, does not
+        # block the next commit: the rename is the only commit point, so
+        # transact() commits that number on its first attempt
         dead = f"v-{int(t.current_version()[2:]) + 1:08d}"
-        open(t._claim_marker(dead), "w").close()
-        t.claim_ttl = 0.05
-        try:
-            v = t.transact(lambda df: df)
-        finally:
-            t.claim_ttl = ParquetTable.claim_ttl
+        open(os.path.join(t.path, f"{dead}.claim"), "w").close()
+        v = t.transact(lambda df: df)
         record("08_dead_claim_selfheal", v)
 
         # 09: final read-back from the published snapshot

@@ -3,36 +3,32 @@ next-round #6 — "the one OCC surface whose evidence is still unit-only").
 
 ``ParquetTable.recover_stale()`` (`operators/dml.py`, symbol citation per
 the round-12 convention) is the manual crash-recovery path: with writers
-stopped it must clear EVERY residue class a crash can leave and hand the
-table back intact and writable.  This query deliberately wedges one
-instance of every class on a scratch table —
+stopped it removes every entry of the table root that is not a version
+dir or ``schema.json``, and hands the table back intact and writable.
+This query deliberately plants one residue of every kind on a scratch
+table —
 
-* a ``stage-`` staging dir (writer died mid-snapshot-write);
-* an orphan version dir + claim with no commit marker (died between
-  rename and marker);
-* a dir-less claim (died between claim and rename) plus its ``.obs``
-  observation sidecar;
-* an EMPTY ``CURRENT.lock`` (the deliberately-unstealable corrupt-lock
-  case recover_stale() is THE documented path for), a ``.lock.tok-``
-  token temp, a ``.lock.stale-`` steal grave, and a ``.now-probe-`` age
-  probe;
+* a ``stage-`` dir (a writer or a retention GC died partway);
+* the files a table written by the older claim protocol carries: the
+  ``CURRENT`` pointer, a claim on the next number and a dir-less claim
+  beyond it with its ``.obs`` observation sidecar, an EMPTY
+  ``CURRENT.lock``, a ``.lock.tok-`` token temp, a ``.lock.stale-``
+  steal grave and a ``.now-probe-`` age probe;
 * two crashed ``_write_atomic`` temps (``CURRENT.tmp-*``,
-  ``*.obs.tmp-*``) — the ADVICE r12 class that previously matched no
-  sweep pattern —
+  ``*.obs.tmp-*``) —
 
 then runs the recovery and hash-gates, step by step: reads keep working
-THROUGH the wedge (the residues never corrupt the published snapshot),
-the sweep removes exactly the 11 planted residues and nothing else, the
-post-recovery read-back is bitwise-identical, and the next ``transact()``
-commits cleanly, reusing the reclaimed version number (a wedged writer
-would instead TimeoutError on the planted empty lock).
+THROUGH the wedge (no residue is a version dir, so none changes the
+published snapshot), the sweep removes exactly the 11 planted residues
+and nothing else, the post-recovery read-back is bitwise-identical, and
+the next ``transact()`` commits cleanly on the next version number.
 
 Reference parity: the app delegates exactly this crash hygiene to
 Snowflake's transactional engine (`app/Auto-Magic Document AI.py:185-195`
 relies on MERGE atomicity; failed statements leave no partial state) —
-the Spark-first form is this explicit residue sweep over the Delta-style
-commit markers.  Scale shape: every step is one snapshot write plus
-microsecond filesystem markers; recovery itself is a single O(dir-entry)
+the Spark-first form is this explicit residue sweep beside the
+rename-committed version dirs.  Scale shape: every step is one snapshot
+write plus one directory rename; recovery itself is a single O(dir-entry)
 listing, and only per-step scalar aggregates reach the driver.
 """
 
@@ -46,8 +42,8 @@ def occ_recover_stale_lifecycle(spark, sf_dir):
     ``customer`` (every 10th key): create -> OCC seed -> OCC rewrite ->
     wedge (plant all 11 crash-residue classes; reads must still work) ->
     recover_stale() (exactly 11 removals; read-back intact) -> a clean
-    post-recovery transact that reuses the reclaimed version number ->
-    final read-back.  Cites ``recover_stale()`` / ``transact()`` in
+    post-recovery transact on the next version number -> final
+    read-back.  Cites ``recover_stale()`` / ``transact()`` in
     `operators/dml.py`."""
     import os
     import shutil
@@ -85,7 +81,7 @@ def occ_recover_stale_lifecycle(spark, sf_dir):
             n, s = stats()
             steps.append((step, version, n, n_items, len(t.versions()), s))
 
-        # 01: claim-protocol CREATE
+        # 01: CREATE commits v-00000001 by rename
         t.ensure()
         record("01_create", t.current_version())
 
@@ -99,12 +95,12 @@ def occ_recover_stale_lifecycle(spark, sf_dir):
         )
         record("03_bump", v)
 
-        # 04: the wedge — one planted instance of every crash-residue
-        # class recover_stale() documents.  n_items reports the plant
-        # count; the read in record() proves residues never corrupt the
-        # published snapshot (every marker below is non-committed state).
+        # 04: the wedge — one planted instance of every residue kind
+        # recover_stale() sweeps.  n_items reports the plant count; the
+        # read in record() proves residues never change the published
+        # snapshot (none of them is a version dir).
         cur_n = int(t.current_version()[2:])
-        orphan, deadclaim = f"v-{cur_n + 1:08d}", f"v-{cur_n + 2:08d}"
+        nxt, deadclaim = f"v-{cur_n + 1:08d}", f"v-{cur_n + 2:08d}"
         residues = []
 
         def plant_file(name):
@@ -113,10 +109,9 @@ def occ_recover_stale_lifecycle(spark, sf_dir):
 
         os.makedirs(os.path.join(t.path, "stage-deadc0dedead"))
         residues.append("stage-deadc0dedead")
-        os.makedirs(os.path.join(t.path, orphan))
-        residues.append(orphan)
-        plant_file(f"{orphan}.claim")  # died between rename and marker
-        plant_file(f"{deadclaim}.claim")  # died between claim and rename
+        plant_file("CURRENT")  # the older protocol's pointer
+        plant_file(f"{nxt}.claim")  # died between claim and rename
+        plant_file(f"{deadclaim}.claim")
         plant_file(f"{deadclaim}.claim.obs")  # its observation sidecar
         plant_file("CURRENT.lock")  # empty = unstealable corrupt lock
         plant_file("CURRENT.lock.tok-deadbeef0000")
@@ -134,10 +129,8 @@ def occ_recover_stale_lifecycle(spark, sf_dir):
         n_removed = len(removed) if set(removed) == set(residues) else -1
         record("05_recover", t.current_version(), n_items=n_removed)
 
-        # 06: the table is WRITABLE again — without the recovery the
-        # planted empty lock would TimeoutError this commit's publish,
-        # and the dead claim would burn its number; instead the transact
-        # commits cleanly and REUSES the reclaimed version number
+        # 06: the table is writable after the sweep: the transact
+        # commits the next version number
         v = t.transact(
             lambda df: df.withColumn("c_acctbal", F.col("c_acctbal") + 5.0)
         )
@@ -176,7 +169,7 @@ SELECT step, version, n_rows, n_items, n_versions, sum_bal FROM (
          CAST(1 AS BIGINT) AS n_versions, CAST(0.0 AS DOUBLE) AS sum_bal
   UNION ALL SELECT '02_seed', 'v-00000002', n, 0, 2, s2 FROM s
   UNION ALL SELECT '03_bump', 'v-00000003', n, 0, 3, s3 FROM s
-  UNION ALL SELECT '04_wedge', 'v-00000003', n, 11, 4, s3 FROM s
+  UNION ALL SELECT '04_wedge', 'v-00000003', n, 11, 3, s3 FROM s
   UNION ALL SELECT '05_recover', 'v-00000003', n, 11, 3, s3 FROM s
   UNION ALL SELECT '06_commit_after', 'v-00000004', n, 0, 3, s4 FROM s
   UNION ALL SELECT '07_final', 'v-00000004', n, 0, 3, s4 FROM s
