@@ -79,7 +79,7 @@ def main() -> None:
     )
     print("ivm rollup == recompute: ok")
 
-    # schema evolution: metadata-only ADD COLUMN with read-time default
+    # schema evolution: metadata-only ADD COLUMN with a default
     from pyspark.sql import types as T
 
     t.add_column("tier", T.StringType(), default="standard")

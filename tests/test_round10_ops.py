@@ -207,25 +207,6 @@ def test_occ_partitioned_table_keeps_hive_layout(spark, tmp_path):
     assert got == [("a", "x", 10), ("b", "y", 2), ("c", "z", 3), ("d", "x", 4)]
 
 
-def test_occ_transact_refuses_read_time_defaults(spark, tmp_path):
-    """A committed rewrite carries no pre-alter epoch dirs, so transact()
-    must refuse rather than risk committing stored NULLs where read()
-    shows the default."""
-    from pyspark.sql import types as T
-
-    t, schema = _make(spark, tmp_path)
-    t.add_column("grade", T.StringType(), default="unrated")
-    with pytest.raises(ValueError, match="read-time ALTER defaults"):
-        t.transact(lambda df: df)
-    # the error's remediation must actually unblock: an upsert rewrite
-    # materializes the backfill into storage and SPENDS the defaults
-    t.upsert(t.read(), ["k"])
-    assert t._defaults == {}  # cleared (and persisted via schema.json)
-    assert [r.grade for r in t.read().collect()] == ["unrated"]
-    t.transact(lambda df: df)  # now permitted
-    assert [r.grade for r in t.read().collect()] == ["unrated"]
-
-
 def test_occ_recover_stale_claims_and_stages(spark, tmp_path):
     """A writer that died mid-fill leaves its stage dir, and one of the
     older claim protocol leaves a claim on the next number: recover_stale()

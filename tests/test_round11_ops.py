@@ -1,11 +1,9 @@
 """Round-11: ADVICE r10 hardening of the OCC layer (`operators/dml.py`).
 
-Findings regression-pinned here:
-1. (medium) the ALTER-defaults refusal moved INTO commit_rewrite() so both
-   OCC commit paths are guarded, not just transact();
-2. transact()'s retryable-staleness detection narrowed to (a) our own
-   typed+format-stable read_version error and (b) JVM messages naming a
-   retained-VERSION dir — caller bugs mentioning the table path re-raise.
+Finding regression-pinned here: transact()'s retryable-staleness
+detection is narrowed to (a) our own typed+format-stable read_version
+error and (b) JVM messages naming a retained-VERSION dir — caller bugs
+mentioning the table path re-raise.
 """
 
 from __future__ import annotations
@@ -38,29 +36,7 @@ def _rows(t):
     return sorted((r.k, r.v) for r in t.read().collect())
 
 
-# -- 1. defaults guard lives in commit_rewrite ---------------------------
-
-
-def test_commit_rewrite_refuses_read_time_defaults_directly(spark, tmp_path):
-    """Calling commit_rewrite() directly (bypassing transact) on a table
-    with live ALTER defaults must refuse BEFORE staging — otherwise the
-    committed snapshot has stored NULLs and no pre-alter epoch dirs, so
-    read()'s backfill silently stops applying."""
-    t, schema = _make(spark, tmp_path)
-    t.add_column("grade", T.StringType(), default="unrated")
-    base = t.current_version()
-    snap = t.read_version(base)
-    with pytest.raises(ValueError, match="read-time ALTER defaults"):
-        t.commit_rewrite(snap, base)
-    stages = [d for d in os.listdir(t.path) if d.startswith("stage-")]
-    assert stages == []  # refused before paying the staged write
-    assert [r.grade for r in t.read().collect()] == ["unrated"]  # intact
-    # transact() stays guarded transitively (the r10 behavior preserved)
-    with pytest.raises(ValueError, match="read-time ALTER defaults"):
-        t.transact(lambda df: df)
-
-
-# -- 2. narrowed retryable-staleness detection ---------------------------
+# -- narrowed retryable-staleness detection ---------------------------
 
 
 def test_transact_reraises_caller_file_not_found(spark, tmp_path):

@@ -10,6 +10,7 @@ read the same and take the next commit."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -32,10 +33,9 @@ def _rows(df):
 
 
 def test_read_version_of_current_keeps_pre_alter_rows(spark, tmp_path):
-    """read() and read_version(current_version()) are one read: both see
-    the rows hardlinked under the ALTER's `pre-alter-<col>/` epoch dir,
-    backfilled with the default.  A snapshot older than the ALTER still
-    reads the new column as NULL."""
+    """read() and read_version(current_version()) are one read: both fill
+    the ALTER default into the rows stored before it.  A snapshot older
+    than the ALTER reads in its own schema, without the new column."""
     t = ParquetTable(spark, str(tmp_path), "alter", SCHEMA, retain=3).ensure()
     t.append(spark.createDataFrame([("a", 1)], SCHEMA))
     before_alter = t.current_version()
@@ -44,7 +44,8 @@ def test_read_version_of_current_keeps_pre_alter_rows(spark, tmp_path):
     want = [("a", 1, "unrated"), ("b", 2, None)]
     assert _rows(t.read()) == want
     assert _rows(t.read_version(t.current_version())) == want
-    assert _rows(t.read_version(before_alter)) == [("a", 1, None)]
+    assert t.read_version(before_alter).columns == ["k", "v"]
+    assert _rows(t.read_version(before_alter)) == [("a", 1)]
 
 
 def test_upsert_raises_on_lost_update(spark, tmp_path, monkeypatch):
@@ -162,12 +163,9 @@ def test_fresh_table_compact(spark, fresh):
 
 def test_fresh_table_add_column(spark, fresh):
     schema4 = T.StructType([*SCHEMA3.fields, T.StructField("g", T.StringType())])
-    if isinstance(fresh, PartitionedParquetTable):
-        with pytest.raises(ValueError):
-            fresh.add_column("g", T.StringType(), default="d")
-        fresh.add_column("g", T.StringType())
-    else:
-        fresh.add_column("g", T.StringType(), default="d")
+    fresh.add_column("g", T.StringType(), default="d")
+    assert fresh.current_version() == "v-00000002"
+    assert sorted(os.listdir(fresh.data_dir())) == ["_base", "_schema"]
     assert fresh.read().schema.names == schema4.names
     assert fresh.read().collect() == []
     fresh.append(_df(spark, [("a", "x", 1, None), ("b", "y", 2, "z")], schema4))
@@ -713,6 +711,8 @@ def _claim_protocol_table(spark, root):
             fh.write(base)
     with open(os.path.join(path, "CURRENT"), "w") as fh:
         fh.write("v-00000001")
+    with open(os.path.join(path, "schema.json"), "w") as fh:
+        json.dump({"schema": SCHEMA.jsonValue(), "defaults": {}}, fh)
     return ParquetTable(spark, root, "legacy", SCHEMA, retain=2)
 
 
@@ -721,12 +721,15 @@ def test_claim_protocol_table_reads_the_same_and_takes_the_next_commits(
 ):
     """A table written by the older claim protocol reads its newest
     version whatever its CURRENT pointer says, and takes an append, an
-    upsert and a transact on top of it."""
+    upsert and a transact on top of it.  Its first commit unlinks the
+    pointer, claim and marker files: the root then holds only version
+    dirs and the legacy schema.json."""
     t = _claim_protocol_table(spark, str(tmp_path))
     assert t.current_version() == "v-00000002"
     assert _rows(t.read()) == [("a", 1), ("b", 2)]
     assert t.read_version("v-00000001").collect() == []
     t.append(_df(spark, [("c", 3)], SCHEMA))
+    assert sorted(os.listdir(t.path)) == ["schema.json", *t.versions()]
     t.upsert(_df(spark, [("a", 10)], SCHEMA), ["k"])
     assert t.transact(lambda df: df.filter("k != 'b'")) == "v-00000005"
     assert _rows(t.read()) == [("a", 10), ("c", 3)]
@@ -740,7 +743,6 @@ def test_recover_stale_keeps_only_versions_and_schema(spark, tmp_path):
     of the older claim protocol, including the claim on the live
     version, whose data stays."""
     t = _claim_protocol_table(spark, str(tmp_path))
-    t._save_meta()
     legacy = sorted(
         d for d in os.listdir(t.path) if d not in ("schema.json", *t.versions())
     )

@@ -13,7 +13,6 @@ Error contract (AI7): the extract UDF catches per-row failures and encodes
 
 from __future__ import annotations
 
-import json
 from typing import Callable
 
 import pandas as pd
@@ -28,10 +27,11 @@ from unstructured_data_pipeline_spark.functions.variant import canonical_json
 
 
 def make_udfs(backend: DocumentAIBackend | None = None) -> dict[str, Callable]:
-    """Build the five AI pandas UDFs over ``backend`` (stub by default).
+    """Build the per-row AI pandas UDFs over ``backend`` (stub by default).
 
-    Returned dict keys: classify, extract, ocr, summarize.
-    (generate_prompts is a driver-side call — it runs once per *class*, not
+    Returned dict keys: classify, ocr, summarize.  (Extraction runs fused
+    with classification in the pipeline's ``classify_extract``, and
+    generate_prompts is a driver-side call — it runs once per *class*, not
     per row; see pipelines/batch.py.)
     """
     b = backend or DeterministicStubBackend()
@@ -39,16 +39,6 @@ def make_udfs(backend: DocumentAIBackend | None = None) -> dict[str, Callable]:
     @F.pandas_udf(T.StringType())
     def classify(text: pd.Series) -> pd.Series:
         return text.map(lambda t: b.classify(t or ""))
-
-    @F.pandas_udf(T.StringType())
-    def extract(text: pd.Series, prompts_json: pd.Series) -> pd.Series:
-        def one(t, p):
-            try:
-                return canonical_json({"response": b.extract(t or "", p or "{}")})
-            except Exception as e:  # AI7 error envelope, never throw
-                return canonical_json({"error": str(e)})
-
-        return pd.Series([one(t, p) for t, p in zip(text, prompts_json)])
 
     @F.pandas_udf(T.StringType())
     def ocr(content: pd.Series) -> pd.Series:
@@ -68,7 +58,7 @@ def make_udfs(backend: DocumentAIBackend | None = None) -> dict[str, Callable]:
     def summarize(text: pd.Series) -> pd.Series:
         return text.map(lambda t: b.summarize(t or ""))
 
-    return {"classify": classify, "extract": extract, "ocr": ocr, "summarize": summarize}
+    return {"classify": classify, "ocr": ocr, "summarize": summarize}
 
 
 @F.pandas_udf(T.BinaryType())

@@ -71,11 +71,6 @@ def seed_invoice_prompts(spark: SparkSession, tables: dict[str, ParquetTable]) -
     tables["class_prompts"].anti_insert(src, ["class_name"])
 
 
-def list_tables(spark: SparkSession) -> DataFrame:
-    """S4 catalog scan."""
-    return spark.sql("SHOW TABLES")
-
-
 def list_stages(
     spark: SparkSession,
     roots: list[str],

@@ -51,13 +51,3 @@ def stringify_display(value: Any) -> str:
         return canonical_json(value)
     return str(value)
 
-
-def parse_variant(s: str | None) -> Any:
-    """Best-effort decode of a VARIANT-ish string: JSON if it parses,
-    otherwise the raw string (mirrors the reference's tolerant reads)."""
-    if s is None:
-        return None
-    try:
-        return json.loads(s)
-    except (ValueError, TypeError):
-        return s

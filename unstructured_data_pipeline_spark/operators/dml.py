@@ -170,6 +170,8 @@ def _link_tree(src: str, dst: str) -> None:
 _LEDGER = "_last_batch"  # batch-id high-watermark of a batch sink
 _TOMBSTONES = "_tombstones"  # merge-on-read deleted keys
 _BASE = "_base"  # "<base version or create>:<cookie>" of the commit
+_SCHEMA = "_schema"  # StructType JSON, written by ALTER and clone
+_LEGACY_SCHEMA = "schema.json"  # root schema of tables ALTERed before _schema
 
 
 def _write_ledger(stage: str, batch_id: int) -> None:
@@ -188,6 +190,12 @@ def last_applied_batch(table: "ParquetTable") -> int:
         return -1
 
 
+def _default_sql(value, data_type: T.DataType) -> str:
+    """``value`` as the SQL literal a field's ``EXISTS_DEFAULT`` holds."""
+    text = str(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{text}' AS {data_type.simpleString()})"
+
+
 class ParquetTable:
     """A durable table over a versioned parquet directory with CREATE IF NOT
     EXISTS, append, upsert, delete — the engine's stand-in for the reference's
@@ -197,24 +205,26 @@ class ParquetTable:
     the current one)::
 
         <root>/<name>/
-            schema.json        # ALTER-ed schema + defaults (if any)
             v-00000001/        # immutable-once-committed parquet snapshots
                 _base          # "<base version or create>:<cookie>"
                                # (a just-created table's only file)
+                _schema        # the schema, once ALTERed or cloned
                 _tombstones/   # merge-on-read deleted keys (if any)
                 _last_batch    # batch sink ledger (if any)
             stage-<uuid>/      # a version being written, or being dropped
+            schema.json        # legacy only: see schema_of()
 
     Every write is a new version — creation, append, anti-insert,
-    upsert/delete/compact, merge-on-read deletes, ALTER epochs, clones,
-    OCC rewrites, batch sinks — written into a fresh ``stage-<uuid>/`` and
+    upsert/delete/compact, merge-on-read deletes, ALTERs, clones, OCC
+    rewrites, batch sinks — written into a fresh ``stage-<uuid>/`` and
     committed by :meth:`_commit`, whose one commit point is the rename of
     the stage to the next version number.  A crash at ANY point before
     the rename leaves the previous version live and fully readable —
     there is no moment where the table is partial (the round-1 two-step
     overwrite had exactly that window; VERDICT r1 #4).  Appends stage a
     hardlink copy of the base version plus their new files
-    (:meth:`_commit_append`).
+    (:meth:`_commit_append`).  The schema is per-version state too: every
+    read and write takes it from the version it reads or bases on.
 
     MERGE cost is O(table) per call — fine for the reference's small
     control tables (class_prompts, new_uploads); for big fact tables the
@@ -232,15 +242,9 @@ class ParquetTable:
     ):
         self.spark = spark
         self.name = name
-        self.schema = schema
-        self._defaults: dict = {}
+        # the schema of versions that carry none (never ALTERed or cloned)
+        self._declared = schema
         self.path = os.path.join(root, name)
-        # ALTER-ed schema/defaults persist in schema.json next to the
-        # version dirs; a second instance opened on the same directory
-        # must see them (ADVICE r4: in-memory-only evolution silently lost
-        # the column).
-        # The persisted evolution wins over the constructor schema.
-        self._load_meta()
         # snapshot retention (Snowflake-style time travel, the reference
         # platform's DATA_RETENTION knob): keep the newest `retain`
         # committed snapshots; older ones are GC'd at each commit.
@@ -250,41 +254,46 @@ class ParquetTable:
             raise ValueError("retain must be >= 1")
         self.retain = retain
 
-    # -- persisted schema evolution -----------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "schema.json")
+    # -- the schema of a version ---------------------------------------------
+    @property
+    def schema(self) -> T.StructType:
+        """The current version's schema (:meth:`schema_of`)."""
+        return self.schema_of(self.current_version())
 
-    def _load_meta(self) -> None:
+    def schema_of(self, version: str | None) -> T.StructType:
+        """The schema ``version`` was committed with: its ``_schema``, else
+        the root ``schema.json`` of a table ALTERed by the older layout,
+        else the constructor schema.  An ALTER default is the field's
+        ``EXISTS_DEFAULT`` metadata, which Spark's Parquet reader fills for
+        the files that lack the column; a stored NULL stays NULL."""
         import json
 
+        if version is not None:
+            try:
+                with open(os.path.join(self.path, version, _SCHEMA)) as f:
+                    return T.StructType.fromJson(json.load(f))
+            except FileNotFoundError:
+                pass
         try:
-            with open(self._meta_path()) as f:
+            with open(os.path.join(self.path, _LEGACY_SCHEMA)) as f:
                 meta = json.load(f)
         except FileNotFoundError:
-            return
-        self.schema = T.StructType.fromJson(meta["schema"])
-        self._defaults = dict(meta.get("defaults", {}))
-
-    def _save_meta(self) -> None:
-        """Publish schema/defaults atomically (:meth:`_write_atomic`).
-        Defaults must be JSON scalars — exactly what an ALTER ... DEFAULT
-        literal is."""
-        import json
-
-        os.makedirs(self.path, exist_ok=True)
-        self._write_atomic(
-            self._meta_path(),
-            json.dumps(
-                {"schema": self.schema.jsonValue(), "defaults": self._defaults}
-            ),
-        )
+            return self._declared
+        # the older layout backfilled its `defaults` for the rows of files
+        # hardlinked under `pre-alter-<col>/` dirs: the files lacking <col>
+        schema = T.StructType.fromJson(meta["schema"])
+        for f in schema.fields:
+            if f.name in meta.get("defaults", {}):
+                default = _default_sql(meta["defaults"][f.name], f.dataType)
+                f.metadata = {"EXISTS_DEFAULT": default}
+        return schema
 
     # -- committed versions -------------------------------------------------
     @staticmethod
     def _write_atomic(path: str, text: str) -> None:
         """The one copy of the temp-write + fsync + rename publish idiom
-        (schema.json and every version's ``_base`` go through here).  It
-        replaces the name, so it never writes through a hardlink."""
+        (a version's ``_base``, ``_schema`` and ledger go through here).
+        It replaces the name, so it never writes through a hardlink."""
         tmp = f"{path}.tmp-{os.getpid()}-{id(text) & 0xFFFF:x}"
         with open(tmp, "w") as f:
             f.write(text)
@@ -347,75 +356,50 @@ class ParquetTable:
         CREATE IF NOT EXISTS omits, and queries degrade gracefully;
         `database/setup_database.sql:49-50` vs `app.py:45-78`).
 
-        No data BYTES are touched or rewritten: parquet files written
-        before the ALTER simply lack the column, and the explicit read
-        schema surfaces it as NULL, backfilled to ``default`` at read
-        time.  At 100 TB this is the only viable ALTER — a rewrite of
-        every file for a new column is a full-table write.  Appends after
-        the ALTER must include the column (`_conform` projects onto the
-        current schema).
-
-        Two pieces of metadata ARE written so the evolution is durable and
-        exact (ADVICE r4):
-
-        - schema.json records the evolved schema + defaults, so any other
-          instance opened on this directory sees the column;
-        - when a ``default`` is given, the current files are HARDLINKED
-          (zero copy) into a ``pre-alter-<col>/`` epoch dir inside a new
-          committed version.  Reads backfill the default only under that
-          marker, so a post-ALTER row that stores NULL explicitly reads
-          back as NULL, not as the default.  Stacked ALTERs nest the
-          markers, giving each column its own exact epoch boundary.
-
-        Retained pre-ALTER snapshots read via :meth:`read_version` show
-        the column as NULL (the snapshot predates it) — documented,
-        matching time-travel-before-DDL expectations.
-        """
-        if name in self.schema.fieldNames():
+        Commits one new version: the base's files hardlinked (no parquet
+        byte is touched — at 100 TB the only viable ALTER) plus a
+        ``_schema`` with ``default`` as the new field's ``EXISTS_DEFAULT``.
+        Files written before the ALTER lack the column and read it as
+        ``default``; later writes store it, so a stored NULL stays NULL.  A
+        default that does not cast to ``data_type`` raises ValueError.  A
+        snapshot older than the ALTER reads without the column, as in
+        Delta/Iceberg time travel."""
+        base = self.ensure().current_version()
+        schema = self.schema_of(base)
+        if name in schema.fieldNames():
             raise ValueError(f"column {name!r} already exists on {self.name}")
-        self.schema = T.StructType(
-            [*self.schema.fields, T.StructField(name, data_type, True)]
-        )
+        meta = {}
         if default is not None:
-            self._defaults[name] = default
-            self._link_alter_epoch(name)
-        self._save_meta()
-
-    def _link_alter_epoch(self, col: str) -> None:
-        """Commit a new version holding every current data file hardlinked
-        under ``pre-alter-<col>/`` — metadata-only (no parquet bytes move),
-        preserving inner epoch markers from earlier ALTERs.  The version's
-        own state (tombstones, ledger) stays at the top level."""
-        base = self.current_version()
-        if base is None:
-            return  # nothing committed yet: no pre-ALTER rows exist
+            meta["EXISTS_DEFAULT"] = sql = _default_sql(default, data_type)
+            # TRY_CAST is NULL where the reader's CAST fails, ANSI or not
+            if self.spark.sql(f"SELECT TRY_{sql}").first()[0] is None:
+                raise ValueError(f"{sql} fails: the default does not cast")
+        evolved = T.StructType(
+            [*schema.fields, T.StructField(name, data_type, True, meta)]
+        ).json()
 
         def fill(stage: str) -> None:
-            epoch = os.path.join(stage, f"pre-alter-{col}")
-            _link_tree(os.path.join(self.path, base), epoch)
-            for name in os.listdir(epoch):
-                if name.startswith("_"):
-                    os.rename(os.path.join(epoch, name), os.path.join(stage, name))
+            _link_tree(os.path.join(self.path, base), stage)
+            self._write_atomic(os.path.join(stage, _SCHEMA), evolved)
 
         self._commit(base, fill)
 
     # -- zero-copy clone -----------------------------------------------------
     def _sibling(self, name: str) -> "ParquetTable":
-        return ParquetTable(
-            self.spark,
-            os.path.dirname(self.path),
-            name,
-            self.schema,
-            retain=self.retain,
-        )
+        """A handle like this one (layout, schema, retention) on ``name``."""
+        import copy
+
+        dst = copy.copy(self)
+        dst.name, dst.path = name, os.path.join(os.path.dirname(self.path), name)
+        return dst
 
     def clone(self, name: str) -> "ParquetTable":
         """Zero-copy CLONE (Snowflake ``CREATE TABLE ... CLONE`` parity —
         the reference platform's cheap-environment-copy feature): the new
         table's first version is a HARDLINK forest of this table's current
-        snapshot — metadata-only, no parquet bytes copied — plus a copy of
-        the evolved schema/defaults (schema.json, so ALTER history and the
-        pre-alter backfill epochs carry over).  The tables are fully
+        snapshot — metadata-only, no parquet bytes copied — plus a
+        ``_schema`` of that snapshot's schema, ALTER defaults included, so
+        it commits with the rows it describes.  The tables are fully
         independent afterwards: every mutation copy-on-writes into that
         table's own next version dir (shared inodes just drop link counts
         at GC).  Pending merge-on-read tombstones and the batch ledger live
@@ -426,57 +410,46 @@ class ParquetTable:
         dst = self._sibling(name)
         if dst.current_version() is not None:
             raise ValueError(f"table {name!r} already exists")
-        dst._defaults = dict(self._defaults)
-        dst._commit(None, lambda stage: _link_tree(os.path.join(self.path, src), stage))
-        dst._save_meta()
+        schema = self.schema_of(src).json()
+
+        def fill(stage: str) -> None:
+            _link_tree(os.path.join(self.path, src), stage)
+            self._write_atomic(os.path.join(stage, _SCHEMA), schema)
+
+        dst._commit(None, fill)
         return dst
 
     # -- time travel (retained snapshots) -----------------------------------
-    def _scan(self, path: str) -> DataFrame:
-        """Every parquet file under one snapshot dir, ALTER epoch dirs
-        included (the hive-partitioned subclass reads partition dirs)."""
+    def _scan(self, path: str, schema: T.StructType) -> DataFrame:
+        """Every parquet file under one snapshot dir, legacy ALTER epoch
+        dirs included (the hive-partitioned subclass reads partition dirs)."""
         return (
-            self.spark.read.schema(self.schema)
+            self.spark.read.schema(schema)
             .option("recursiveFileLookup", "true")
             .parquet(path)
         )
 
     def read_version(self, version: str) -> DataFrame:
-        """AS-OF read of a retained snapshot (immutable once committed),
-        with the same DEFAULT backfill and tombstones as :meth:`read` —
-        which is this method on the current version.  Raises if the
-        snapshot has aged out of the retention window."""
+        """AS-OF read of a retained snapshot (immutable once committed) in
+        its own schema, with its tombstones applied — :meth:`read` is this
+        method on the current version.  Raises if the snapshot has aged
+        out of the retention window."""
         p = os.path.join(self.path, version)
         if not os.path.isdir(p):
             raise FileNotFoundError(
                 f"snapshot {version} of table {self.name} is not retained "
                 f"(retain={self.retain}; have {self.versions()})"
             )
-        df = self._scan(p)
-        if self._defaults:
-            # Backfill ONLY rows from pre-ALTER files — they live under the
-            # `pre-alter-<col>/` epoch dirs the ALTER hardlinked them into,
-            # identified by the file path metadata column.  Rows appended
-            # AFTER the ALTER keep an explicitly-stored NULL as NULL
-            # (Snowflake ALTER semantics; the round-4 blanket coalesce
-            # conflated the two — ADVICE r4).  A snapshot older than the
-            # ALTER has no epoch dir, so it reads the column as NULL.
-            path = F.col("_metadata.file_path")
-            for name, default in self._defaults.items():
-                pre = path.contains(f"/pre-alter-{name}/")
-                df = df.withColumn(
-                    name,
-                    F.when(
-                        pre, F.coalesce(F.col(name), F.lit(default))
-                    ).otherwise(F.col(name)),
-                )
+        schema = self.schema_of(version)
         return self._apply_tombstones(
-            df.select(*[f.name for f in self.schema.fields]), version
+            self._scan(p, schema).select(*schema.fieldNames()), version
         )
 
-    def _conform(self, df: DataFrame) -> DataFrame:
-        """Project ``df`` onto the table schema, converting at the
-        string<->VariantType boundary so callers can hand either encoding:
+    def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
+        """Project ``df`` onto ``schema`` (the schema of the version a
+        write bases on, so a handle opened before an ALTER keeps the new
+        column), converting at the string<->VariantType boundary so
+        callers can hand either encoding:
 
         - string -> variant: JSON text parses as its JSON value; non-JSON
           text becomes a variant *string* (matching Snowflake's VARIANT
@@ -484,9 +457,9 @@ class ParquetTable:
         - variant -> string: ``to_json`` (canonical JSON bytes).
         """
         cols = []
-        for f in self.schema.fields:
+        for f in schema.fields:
             c = F.col(f.name)
-            actual = df.schema[f.name].dataType
+            actual = df.schema[f.name].dataType  # KeyError: rows lack f
             want_v = isinstance(f.dataType, T.VariantType)
             have_v = isinstance(actual, T.VariantType)
             if want_v and not have_v:
@@ -507,8 +480,11 @@ class ParquetTable:
         return df.select(*cols)
 
     def append(self, df: DataFrame) -> None:
-        df = self._conform(df)
-        self._commit_append(lambda _base, stage: self._write_snapshot(df, stage))
+        self._commit_append(
+            lambda base, stage: self._write_snapshot(
+                self._conform(df, self.schema_of(base)), stage
+            )
+        )
 
     def _commit_append(self, write, batch_id: int | None = None) -> bool:
         """The blind write behind append, anti_insert, delete_keys_mor and
@@ -557,17 +533,11 @@ class ParquetTable:
         base = self.ensure().current_version()
         df = rewrite(self.read_version(base))
         self._commit(base, lambda stage: self._write_snapshot(df, stage))
-        if self._defaults:
-            # the snapshot was read with the DEFAULT backfill, which is now
-            # materialized in storage — the read-time defaults are spent,
-            # and clearing them re-enables transact() (which refuses while
-            # they could mask stored NULLs)
-            self._defaults = {}
-            self._save_meta()
 
     def upsert(self, source: DataFrame, keys: list[str]) -> None:
-        src = self._conform(source)
-        self._replace(lambda cur: upsert(cur, src, keys))
+        self._replace(
+            lambda cur: upsert(cur, self._conform(source, cur.schema), keys)
+        )
 
     def anti_insert(self, source: DataFrame, keys: list[str]) -> None:
         # Round 14 measured-and-kept: probing `fresh` for emptiness to skip
@@ -581,10 +551,9 @@ class ParquetTable:
         # the target keys: a LEFT ANTI join ignores duplicate right-side
         # keys.  The anti-join reads the base the append stages from, so a
         # retry recomputes it against the new base.
-        src = self._conform(source)
         self._commit_append(
             lambda base, stage: self._write_snapshot(
-                src.join(
+                self._conform(source, self.schema_of(base)).join(
                     self.read_version(base).select(*keys), on=keys, how="left_anti"
                 ),
                 stage,
@@ -605,7 +574,7 @@ class ParquetTable:
         ``read()`` anti-joins the tombstones (they're broadcast-sized until
         folded), and ANY full rewrite (upsert / delete_where / compact)
         folds them into the next snapshot because rewrites read through
-        ``read()``.  Appends, ALTER epochs and clones carry them; a
+        ``read()``.  Appends, ALTERs and clones carry them; a
         partition-pruned merge carries them minus the keys its rewritten
         rows re-insert.
 
@@ -689,8 +658,8 @@ class ParquetTable:
         new snapshot into a fresh ``stage-<uuid>/``, ``_base`` records
         ``"<base or create>:<cookie>"`` in it, and renaming the stage to
         version ``base + 1`` commits it.  ``base`` is None only for the
-        first version.  A fill that writes no ``_last_batch`` ledger gets
-        the base's (hardlinked).
+        first version.  A fill that writes no ``_last_batch`` ledger or
+        ``_schema`` gets the base's (hardlinked).
 
         Raises :class:`CommitConflictError` unless ``base`` is the newest
         version — checked at entry (fail fast: nothing is staged), again
@@ -718,12 +687,12 @@ class ParquetTable:
         cookie = f"{base or 'create'}:{uuid.uuid4().hex}"
         try:
             fill(stage)
-            if base is not None:
-                # a batch sink's progress survives compaction and rewrites
+            # a batch sink's progress and an ALTER survive every rewrite
+            for state in (_LEDGER, _SCHEMA) if base is not None else ():
                 try:
                     os.link(
-                        os.path.join(self.path, base, _LEDGER),
-                        os.path.join(stage, _LEDGER),
+                        os.path.join(self.path, base, state),
+                        os.path.join(stage, state),
                     )
                 except (FileNotFoundError, FileExistsError):
                     pass
@@ -756,10 +725,20 @@ class ParquetTable:
         """Retention GC: drop every version below the newest ``retain``.
         A dropped version is first renamed to a ``stage-`` name, so a
         crash partway through the delete leaves residue, never a partial
-        snapshot that :meth:`versions` would list."""
+        snapshot that :meth:`versions` would list.  Every file at the
+        table root but a legacy ``schema.json`` goes too: no write puts a
+        file there, so each is a pointer, claim, marker, lock or probe
+        file of the older claim protocol."""
         import shutil
         import uuid
 
+        with os.scandir(self.path) as entries:
+            for e in entries:
+                if e.name != _LEGACY_SCHEMA and e.is_file(follow_symlinks=False):
+                    try:
+                        os.unlink(e.path)
+                    except FileNotFoundError:
+                        pass  # a concurrent GC unlinked it first
         for d in self.versions()[: -self.retain]:
             grave = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
             try:
@@ -773,20 +752,8 @@ class ParquetTable:
         failing with :class:`CommitConflictError` if any other writer
         committed base+1 first (the caller's snapshot is then stale).
         Returns the committed version name."""
-        if self._defaults:
-            # the committed snapshot has no pre-alter epoch dirs, so
-            # read()'s DEFAULT backfill stops applying: any stored NULL
-            # the caller's rows carry for an ALTER-ed column becomes data.
-            # Guarded HERE so every direct commit path (transact()
-            # included) refuses loudly; _replace folds the defaults.
-            raise ValueError(
-                f"table {self.name} has read-time ALTER defaults "
-                f"({sorted(self._defaults)}); a commit_rewrite would write "
-                "their stored NULLs as data — fold the defaults with a "
-                "rewrite (e.g. upsert of read()) first"
-            )
         self.ensure()
-        df = self._conform(df)
+        df = self._conform(df, self.schema_of(base_version))
         return self._commit(
             base_version, lambda stage: self._write_snapshot(df, stage)
         )
@@ -852,7 +819,7 @@ class ParquetTable:
         removed = []
         for d in entries:
             full = os.path.join(self.path, d)
-            if d == "schema.json" or (d.startswith("v-") and os.path.isdir(full)):
+            if d == _LEGACY_SCHEMA or (d.startswith("v-") and os.path.isdir(full)):
                 continue
             if os.path.isdir(full):
                 shutil.rmtree(full, ignore_errors=True)
@@ -948,9 +915,9 @@ class PartitionedParquetTable(ParquetTable):
     # version holds no partition dirs yet, and every scan goes through the
     # hive-partitioned _scan below.
 
-    def _scan(self, path: str) -> DataFrame:
+    def _scan(self, path: str, schema: T.StructType) -> DataFrame:
         return (
-            self.spark.read.schema(self.schema)
+            self.spark.read.schema(schema)
             .option("basePath", path)
             .parquet(path)
         )
@@ -960,30 +927,6 @@ class PartitionedParquetTable(ParquetTable):
         # readable but the NEXT pruned merge parses `pcol=value/` dirs to
         # decide touched-vs-carried partitions and would find none
         df.write.partitionBy(*self.partition_by).mode("overwrite").parquet(path)
-
-    def _sibling(self, name: str) -> "PartitionedParquetTable":
-        return PartitionedParquetTable(
-            self.spark,
-            os.path.dirname(self.path),
-            name,
-            self.schema,
-            self.partition_by,
-            retain=self.retain,
-        )
-
-    def add_column(self, name: str, data_type, default=None) -> None:
-        """Metadata-only ADD COLUMN for the partitioned layout (persisted
-        via schema.json like the base class).  Read-time DEFAULT backfill
-        is a flat-layout feature — its epoch-marker dirs would break hive
-        partition discovery — so a default is rejected here rather than
-        silently ignored; pre-ALTER rows read as NULL."""
-        if default is not None:
-            raise ValueError(
-                "PartitionedParquetTable.add_column does not support a "
-                "read-time default (epoch markers conflict with hive "
-                "partition dirs); add the column with default=None"
-            )
-        super().add_column(name, data_type, None)
 
     def _touched_values(self, src: DataFrame) -> list[tuple]:
         rows = src.select(*self.partition_by).distinct().collect()
@@ -1035,12 +978,14 @@ class PartitionedParquetTable(ParquetTable):
 
         def fill(stage: str) -> None:
             self._write_snapshot(out, stage)
-            self._carry_tombstones(base_dir, stage, pred)
+            self._carry_tombstones(base_dir, stage, pred, self.schema_of(base))
             self._carry_over(base_dir, stage, touched)
 
         self._commit(base, fill)
 
-    def _carry_tombstones(self, base_dir: str, stage: str, pred: Column) -> None:
+    def _carry_tombstones(
+        self, base_dir: str, stage: str, pred: Column, schema: T.StructType
+    ) -> None:
         """Carry the base's tombstones into a pruned rewrite's stage, minus
         the keys its rewritten rows (already written to ``stage``, read
         through the tombstones) re-insert.  A key that still has a
@@ -1051,16 +996,16 @@ class PartitionedParquetTable(ParquetTable):
             return
         tomb = self.spark.read.parquet(td)
         cols = tomb.columns
-        revived = self._scan(stage).select(*cols)
+        revived = self._scan(stage, schema).select(*cols)
         if not set(self.partition_by) <= set(cols):
-            stale = self._scan(base_dir).filter(~pred).select(*cols)
+            stale = self._scan(base_dir, schema).filter(~pred).select(*cols)
             revived = revived.join(stale, on=cols, how="left_anti")
         tomb.join(revived, on=cols, how="left_anti").write.parquet(
             os.path.join(stage, _TOMBSTONES)
         )
 
     def upsert(self, source: DataFrame, keys: list[str]) -> None:
-        src = self._conform(source)
+        src = self._conform(source, self.schema)
         values = self._touched_values(src)
         if not values:
             return

@@ -28,16 +28,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-IMAGE_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = (
     "id string, mime string, width int, height int, feat array<float>"

@@ -203,10 +203,9 @@ def run_document_pipeline(
     )
 
 
-def _write_sinks(outputs: PipelineOutputs, tables, uploads, write) -> None:
-    """Run ``write(table, frame, keys)`` for the three document sinks, plus
-    the NEW_UPLOADS processed=TRUE upsert, concurrently (the targets are
-    disjoint tables, guide §2.6).  The shared cached stage is materialized
+def _write_sinks(outputs: PipelineOutputs, tables, write) -> None:
+    """Run ``write(table, frame, keys)`` for the three document sinks
+    concurrently (the targets are disjoint tables, guide §2.6).  The shared cached stage is materialized
     FIRST — concurrent sinks would otherwise race to compute the same cached
     partitions and duplicate the AI stage — and that count doubles as the
     empty-batch guard: no documents, no write, no new table version.  The
@@ -227,9 +226,6 @@ def _write_sinks(outputs: PipelineOutputs, tables, uploads, write) -> None:
             ),
             partial(write, tables["document_ocr"], outputs.ocr, ["file_name"]),
         ]
-        if uploads is not None and "new_uploads" in tables:
-            done = uploads.withColumn("processed", F.lit(True))
-            steps.append(partial(tables["new_uploads"].upsert, done, ["file_name"]))
         with ThreadPoolExecutor(max_workers=len(steps)) as pool:
             for f in [pool.submit(s) for s in steps]:
                 f.result()
@@ -239,12 +235,10 @@ def _write_sinks(outputs: PipelineOutputs, tables, uploads, write) -> None:
 
 
 def persist_pipeline_outputs(
-    outputs: PipelineOutputs,
-    tables: dict[str, ParquetTable],
-    uploads: DataFrame | None = None,
+    outputs: PipelineOutputs, tables: dict[str, ParquetTable]
 ) -> None:
-    """The four persistence steps (`app.py:523-554`): three appends + the
-    NEW_UPLOADS processed=TRUE upsert.  Round 13: the sinks are disjoint
+    """The three document appends of the persistence steps
+    (`app.py:523-554`).  Round 13: the sinks are disjoint
     tables — the writes overlap (guide §2.6); per-table contents are
     unchanged (the shared AI stage is persisted by ``cache_intermediate``
     callers, so concurrent sinks share one materialization rather than
@@ -256,13 +250,11 @@ def persist_pipeline_outputs(
     whose appends succeeded.  Retry paths must use
     :func:`persist_pipeline_outputs_idempotent` (keyed upserts — replay
     converges regardless of which subset committed)."""
-    _write_sinks(outputs, tables, uploads, lambda t, df, _keys: t.append(df))
+    _write_sinks(outputs, tables, lambda t, df, _keys: t.append(df))
 
 
 def persist_pipeline_outputs_idempotent(
-    outputs: PipelineOutputs,
-    tables: dict[str, ParquetTable],
-    uploads: DataFrame | None = None,
+    outputs: PipelineOutputs, tables: dict[str, ParquetTable]
 ) -> None:
     """Replay-safe variant of :func:`persist_pipeline_outputs` for
     at-least-once delivery (foreachBatch replays a batch whose sink ran but
@@ -275,4 +267,4 @@ def persist_pipeline_outputs_idempotent(
     e.g. an ingest-date or a stable hash bucket of the document key —
     each batch rewrites only its touched partitions (O(touched+batch));
     Delta/Iceberg MERGE remains the multi-writer production swap-in."""
-    _write_sinks(outputs, tables, uploads, lambda t, df, keys: t.upsert(df, keys))
+    _write_sinks(outputs, tables, lambda t, df, keys: t.upsert(df, keys))

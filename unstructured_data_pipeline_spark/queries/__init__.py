@@ -341,13 +341,13 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # the rename of a staged version dir is the one commit point: no claim
-    # files, commit markers or CURRENT pointer
+    # the schema commits with the version: ALTER defaults are Parquet
+    # EXISTS_DEFAULTs in the version's `_schema`, read and written per version
+    "schema_evolution_report",
+    "table_clone_report",
+    "table_time_travel_report",
     "occ_transact_lifecycle",
-    "occ_recover_stale_lifecycle",
-    "occ_partitioned_lifecycle",
-    "incremental_dedup_report",
-    "streaming_intake_eav",
+    "merge_partitioned_lifecycle",
 ]
 
 

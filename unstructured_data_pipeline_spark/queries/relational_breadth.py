@@ -1363,8 +1363,8 @@ def schema_evolution_report(spark, sf_dir):
     (`ParquetTable.add_column`): half the customers land BEFORE the ALTER
     (their parquet files never carry the column and are NEVER rewritten —
     the only viable ALTER at 100 TB), the other half after, with a real
-    tier value; the read backfills the pre-ALTER cohort to the column
-    default.  Reference parity: the app/DDL schema drift the reference
+    tier value; the scan fills the column default (the field's Parquet
+    ``EXISTS_DEFAULT``) into the pre-ALTER cohort.  Reference parity: the app/DDL schema drift the reference
     handles at query time (`database/setup_database.sql:49-50` vs
     `app.py:45-78`) — here as an explicit evolution surface.  The rollup
     over the merged read is hash-gated against the union-with-default

@@ -125,16 +125,6 @@ def pipeline_tables(variant_native: bool = False) -> dict[str, T.StructType]:
     return out
 
 
-# the binaryFile-source row shape (Spark built-in) used for raw documents
-BINARY_DOCUMENT = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("modificationTime", T.TimestampType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
 # driver-generated fixture tables (TESTDATA.md)
 FIXTURE_TABLES = [
     "region",
