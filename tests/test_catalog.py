@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.catalog import (
     bootstrap_warehouse,
-    list_stage_files,
     list_stages,
     seed_invoice_prompts,
     setup_verification,
@@ -34,24 +33,6 @@ def test_list_stages_union_of_dirs_and_seen(spark, tmp_path):
     roots = {r["stage_name"]: r["stage_root"] for r in got}
     assert roots["docs_stage"].endswith("/docs_stage")
     assert roots["legacy_stage"] is None
-
-
-def test_list_stage_files_metadata_only(spark, tmp_path):
-    stage = tmp_path / "docs_stage"
-    (stage / "sub").mkdir(parents=True)
-    (stage / "a.txt").write_text("alpha")
-    (stage / "sub" / "b.txt").write_text("beta beta")
-    df = list_stage_files(spark, str(stage))
-    rows = df.collect()
-    assert [r["relative_path"] for r in rows] == ["a.txt", "sub/b.txt"]
-    assert [r["size_bytes"] for r in rows] == [5, 9]
-    assert all(r["file_url"].startswith("file:") for r in rows)
-    # the scan must NOT materialize blob contents: content column pruned
-    import re as _re
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    assert schemas and all("content" not in s for s in schemas)
 
 
 def test_setup_verification_counts(spark, tmp_path):

@@ -135,18 +135,21 @@ def test_install_leaves_a_lazy_zipimporter_alone(monkeypatch):
 
 
 def test_shipped_zip_holds_the_current_sources(tmp_path, monkeypatch):
-    """A zip left at the old per-pid path by an earlier process with the
-    same pid is not what gets shipped."""
+    """The shipped zip sits in a directory of its own, fresh in this
+    process, and holds the current sources: a zip another process left in
+    the temp dir is neither shipped nor touched."""
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(dist, "_SHIPPED", set())
+    stale = tmp_path / "udp_spark_pkg.zip"
     _write_zip(
-        tmp_path / f"udp_spark_pkg_{os.getpid()}.zip",
+        stale,
         {"unstructured_data_pipeline_spark/__init__.py": "raise ImportError('stale')\n"},
     )
     shipped: list[str] = []
     dist.ensure_shipped(SimpleNamespace(sparkContext=SimpleNamespace(addPyFile=shipped.append)))
     [path] = shipped
-    assert Path(path).parent == tmp_path
+    assert Path(path).parent.parent == tmp_path
+    assert Path(path) != stale and stale.exists()
     pkg = Path(dist.__file__).resolve().parent
     want = {
         f"{pkg.name}/{p.relative_to(pkg).as_posix()}": p.read_bytes()
@@ -154,4 +157,27 @@ def test_shipped_zip_holds_the_current_sources(tmp_path, monkeypatch):
     }
     with zipfile.ZipFile(path) as z:
         assert {n: z.read(n) for n in z.namelist()} == want
-    assert [p.name for p in tmp_path.iterdir() if p.suffix == ".tmp"] == []
+
+
+def test_package_zip_is_removed_when_the_process_exits(tmp_path):
+    """A child interpreter that built the zip leaves nothing in the temp
+    dir once it exits."""
+    import subprocess
+
+    code = (
+        "import os\n"
+        "from unstructured_data_pipeline_spark import dist\n"
+        "path = dist._package_zip()\n"
+        "assert os.path.getsize(path) > 0\n"
+        "print(path)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    root = Path(dist.__file__).resolve().parents[1]
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, env=env, check=True,
+        capture_output=True, text=True,
+    )
+    path = Path(out.stdout.strip().splitlines()[-1])
+    assert path.parent.parent == tmp_path
+    assert not path.parent.exists()
+    assert list(tmp_path.iterdir()) == []

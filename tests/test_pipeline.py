@@ -5,6 +5,7 @@ summarization contract."""
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import functions as F
 
@@ -101,14 +102,25 @@ def test_binary_source_to_pipeline_end_to_end(spark, tmp_path):
     )
 
     land = tmp_path / "stage"
-    land.mkdir()
+    (land / "sub").mkdir(parents=True)
     (land / "a.pdf").write_bytes(b"customer invoice total 42")
     (land / "b.png").write_bytes(b"stream receipt for coffee")
     (land / "ignored.txt").write_bytes(b"not a supported format")
+    (land / "sub" / "b.txt").write_bytes(b"not a supported format either")
+    (land / "sub" / "c.jpg").write_bytes(b"nested")
 
-    # the format glob prunes unsupported files at the SOURCE
+    # DIRECTORY(@stage): recursive, paths relative to the stage, sizes; the
+    # format glob prunes unsupported files at the SOURCE
     listing = directory_listing(spark, str(land))
-    assert sorted(r["relative_path"] for r in listing.collect()) == ["a.pdf", "b.png"]
+    rows = sorted(listing.collect(), key=lambda r: r["relative_path"])
+    assert [r["relative_path"] for r in rows] == ["a.pdf", "b.png", "sub/c.jpg"]
+    assert [r["length"] for r in rows] == [25, 25, 6]
+    assert all(r["file_url"].startswith("file:") for r in rows)
+    assert all(r["modification_time"] is not None for r in rows)
+    # the scan must NOT materialize blob contents: content column pruned
+    plan = listing._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert schemas and all("content" not in s for s in schemas)
 
     blobs = read_binary_documents(spark, str(land))
     udfs = make_udfs()
@@ -141,15 +153,13 @@ def test_prompts_override_upserts_generated(spark):
 
 
 def test_history_filters_and_sql_views(spark, sf_dir):
-    """HistoryFilters predicate composition + register_fixture_views SQL
-    surface (S4): the same count through both paths."""
+    """HistoryFilters predicate composition + the SQL surface over a
+    fixture table registered as a temp view: the same count both ways."""
     from unstructured_data_pipeline_spark.operators.history import (
         HistoryFilters,
         class_summary,
     )
-    from unstructured_data_pipeline_spark.sources.tables import (
-        register_fixture_views,
-    )
+    from unstructured_data_pipeline_spark.sources.tables import load_fixture_tables
 
     eav = spark.createDataFrame(
         [
@@ -168,7 +178,9 @@ def test_history_filters_and_sql_views(spark, sf_dir):
     # empty filters = identity
     assert class_summary(eav).count() == 2
 
-    register_fixture_views(spark, sf_dir)
+    load_fixture_tables(spark, sf_dir, ["customer"])["customer"].createOrReplaceTempView(
+        "customer"
+    )
     n_sql = spark.sql("SELECT COUNT(*) AS n FROM customer").collect()[0]["n"]
     import os
 

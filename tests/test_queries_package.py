@@ -86,3 +86,13 @@ def test_registry_is_complete_and_oracle_backed():
     # every entry is oracle-backed (None SQL entries are rows-only checks,
     # allowed but currently zero — update this pin if one is ever added)
     assert len(Q.oracle_sql()) == 223
+
+
+def test_queries_surface_has_no_stdlib_leaks():
+    """The wildcard re-export loop must not surface stdlib modules from
+    any topical query module."""
+    for name in ("time", "shutil", "tempfile"):
+        leaked = getattr(Q, name, None)
+        assert not isinstance(leaked, types.ModuleType) or not getattr(
+            leaked, "__name__", ""
+        ) == name, f"queries.{name} leaks the stdlib module"

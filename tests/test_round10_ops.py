@@ -139,7 +139,7 @@ def test_occ_threaded_transacts_never_lose_updates(spark, tmp_path):
         return df.select("k", (F.col("v") + F.lit(1)).alias("v").cast("int"))
 
     def worker(_i):
-        return t.transact(bump, max_attempts=25)
+        return t.transact(bump)
 
     with ThreadPoolExecutor(max_workers=n) as ex:
         versions = list(ex.map(worker, range(n)))

@@ -1,6 +1,7 @@
-"""Structured Streaming surface beyond the intake pipeline: watermarked
-windowed aggregation on a real stream, and custom stateful operators whose
-state survives restarts via the checkpoint (SURVEY §7 M4)."""
+"""Structured Streaming surface (SURVEY §7 M4): the binary intake stream
+and its replay-safe sinks, stateful dedup and session windows whose state
+survives restarts via the checkpoint, the continuous rollup, and the
+stream-stream interval join."""
 
 from __future__ import annotations
 
@@ -17,89 +18,6 @@ def _write_events(path, rows):
     with open(fname, "w") as f:
         for r in rows:
             f.write(json.dumps(r) + "\n")
-
-
-def test_windowed_counts_on_stream(spark, tmp_path):
-    from unstructured_data_pipeline_spark.streaming.intake import windowed_event_counts
-
-    src = tmp_path / "events"
-    _write_events(
-        src,
-        [
-            {"user_id": 1, "value": 1.0, "ts": "2026-01-01 10:05:00", "event_type": "view"},
-            {"user_id": 2, "value": 2.0, "ts": "2026-01-01 10:55:00", "event_type": "view"},
-            {"user_id": 1, "value": 3.0, "ts": "2026-01-01 11:05:00", "event_type": "buy"},
-        ],
-    )
-    stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {
-        (r["window_start"].hour, r["event_type"]): r["n_events"]
-        for r in spark.table("win_counts").collect()
-    }
-    assert rows == {(10, "view"): 2, (11, "buy"): 1}
-
-
-def test_stateful_running_totals_survive_restart(spark, tmp_path):
-    from unstructured_data_pipeline_spark.streaming.stateful import running_user_totals
-
-    src = tmp_path / "ev"
-    ckpt = str(tmp_path / "ckpt2")
-    _write_events(
-        src,
-        [
-            {"user_id": 1, "value": 10.0, "ts": "2026-01-01 10:00:00", "event_type": "a"},
-            {"user_id": 1, "value": 5.0, "ts": "2026-01-01 10:01:00", "event_type": "a"},
-            {"user_id": 2, "value": 7.0, "ts": "2026-01-01 10:02:00", "event_type": "a"},
-        ],
-    )
-
-    out_dir = str(tmp_path / "totals_out")
-
-    def drain():
-        stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-
-        def sink(batch_df, batch_id):
-            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-        q = (
-            running_user_totals(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def latest():
-        rows = spark.read.parquet(out_dir).collect()
-        out = {}
-        for r in sorted(rows, key=lambda r: r["batch_id"]):
-            out[r["user_id"]] = (r["n_events"], r["total_value"])
-        return out
-
-    drain()
-    assert latest() == {1: (2, 15.0), 2: (1, 7.0)}
-
-    # restart with one more file: state accumulates ACROSS the restart
-    _write_events(
-        src,
-        [{"user_id": 1, "value": 1.0, "ts": "2026-01-01 10:30:00", "event_type": "a"}],
-    )
-    drain()
-    assert latest()[1] == (3, 16.0)  # 2+1 events, 15+1 value — prior state restored
 
 
 def test_streaming_exact_dedup(spark, tmp_path):

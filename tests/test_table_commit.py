@@ -1,10 +1,11 @@
 """ParquetTable's one commit path (`operators/dml.py` ``ParquetTable._commit``):
 every version is staged in full, with a ``_base`` file naming its base and
 a unique cookie, and committed by renaming the stage onto the next version
-number, which fails when that version exists.  So a rewrite computed from
-a stale snapshot fails instead of overwriting another writer's commit, a
-crash at any step leaves a readable, writable table, and every read of a
-version goes through one reader (``read_version``).  Tables written by the
+number, which fails when that version exists.  Every write runs in one
+optimistic loop (``ParquetTable._write``), so a write built from a stale
+snapshot is rebuilt on the newer version instead of overwriting another
+writer's commit, a crash at any step leaves a readable, writable table,
+and every read of a version goes through one reader (``read_version``).  Tables written by the
 older claim protocol (``CURRENT`` pointer, ``.claim``/``.commit`` files)
 read the same and take the next commit."""
 
@@ -48,32 +49,93 @@ def test_read_version_of_current_keeps_pre_alter_rows(spark, tmp_path):
     assert _rows(t.read_version(before_alter)) == [("a", 1)]
 
 
-def test_upsert_raises_on_lost_update(spark, tmp_path, monkeypatch):
-    """A second writer commits while the first upsert's snapshot is being
-    written: the first must raise CommitConflictError, and the second
-    writer's rows must survive.  retain=2 keeps the shared base readable
-    (with retain=1 the winner's GC drops it and the loser's write fails
-    on the missing base files instead)."""
+def _overtake_first_fill(monkeypatch, table, race):
+    """Run ``race()`` once, when the first write into ``table``'s dir (a
+    parquet write or a hardlink walk into a stage) starts: another writer
+    commits while this write's fill is under way."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    t = ParquetTable(spark, str(tmp_path), "lost", SCHEMA, retain=2).ensure()
-    t.append(spark.createDataFrame([("seed", 0)], SCHEMA))
-    other = ParquetTable(spark, str(tmp_path), "lost", SCHEMA, retain=2)
-    real = DataFrameWriter.parquet
+    from unstructured_data_pipeline_spark.operators import dml
+
     fired = []
 
-    def parquet(self, path, *args, **kwargs):
-        if not fired and str(path).startswith(t.path + os.sep):
-            fired.append(path)
-            other.upsert(spark.createDataFrame([("b", 2)], SCHEMA), ["k"])
-        return real(self, path, *args, **kwargs)
+    def hook(real):
+        def wrapped(self_or_src, path, *args, **kwargs):
+            if not fired and str(path).startswith(table.path + os.sep):
+                fired.append(path)
+                race()
+            return real(self_or_src, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    with pytest.raises(CommitConflictError):
-        t.upsert(spark.createDataFrame([("a", 1)], SCHEMA), ["k"])
+        return wrapped
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", hook(DataFrameWriter.parquet))
+    monkeypatch.setattr(dml, "_link_tree", hook(dml._link_tree))
+    return fired
+
+
+def _rollup_merge(t):
+    from unstructured_data_pipeline_spark.streaming.rollup import merge_rollup_batch
+
+    batch = t.spark.createDataFrame([("a", 1), ("b", 5)], "k string, v long")
+    assert merge_rollup_batch(t, batch, ["k"], ["v"], 0)
+
+
+# op -> (layout, the write, the rows once the winner's ("b", 2) landed first)
+OVERTAKEN = {
+    "upsert": (
+        "flat",
+        lambda t: t.upsert(_df(t.spark, [("a", 1)], SCHEMA), ["k"]),
+        [("a", 1), ("b", 2), ("seed", 0)],
+    ),
+    "delete_where": (
+        "flat",
+        lambda t: t.delete_where(F.col("k") == "seed"),
+        [("b", 2)],
+    ),
+    "compact": ("flat", lambda t: t.compact(1), [("b", 2), ("seed", 0)]),
+    "add_column": (
+        "flat",
+        lambda t: t.add_column("g", T.StringType(), default="d"),
+        [("b", 2, "d"), ("seed", 0, "d")],
+    ),
+    "merge_rollup_batch": ("rollup", _rollup_merge, [("a", 1), ("b", 7), ("seed", 0)]),
+    "partitioned_upsert": (
+        "partitioned",
+        lambda t: t.upsert(_df(t.spark, [("a", "x", 1)], SCHEMA3), ["k"]),
+        [("a", "x", 1), ("b", "y", 2), ("seed", "x", 0)],
+    ),
+}
+
+
+@pytest.mark.parametrize("retain", [1, 2])
+@pytest.mark.parametrize("op", list(OVERTAKEN))
+def test_write_overtaken_during_fill_retries(spark, tmp_path, monkeypatch, op, retain):
+    """Another writer appends while a write's stage is being filled.  With
+    retain=1 the winner's GC drops the base under the fill, so the fill
+    fails on missing files; with retain=2 the commit finds its base stale.
+    Either way the write retries from the winner's version and lands on
+    top of its rows, leaving no stage behind."""
+    layout, write, want = OVERTAKEN[op]
+    if layout == "partitioned":
+        make = lambda: PartitionedParquetTable(  # noqa: E731
+            spark, str(tmp_path), "t", SCHEMA3, ["p"], retain=retain
+        )
+        seed, winner = ("seed", "x", 0), ("b", "y", 2)
+    else:
+        schema = T.StructType.fromDDL("k string, v long") if layout == "rollup" else SCHEMA
+        make = lambda: ParquetTable(  # noqa: E731
+            spark, str(tmp_path), "t", schema, retain=retain
+        )
+        seed, winner = ("seed", 0), ("b", 2)
+    t, other = make().ensure(), make()
+    t.append(spark.createDataFrame([seed], t.schema))
+    fired = _overtake_first_fill(
+        monkeypatch, t, lambda: other.append(spark.createDataFrame([winner], t.schema))
+    )
+    write(t)
     monkeypatch.undo()
     assert fired
-    assert _rows(t.read()) == [("b", 2), ("seed", 0)]
+    assert _rows(t.read()) == want
     assert not [d for d in os.listdir(t.path) if d.startswith("stage-")]
 
 
@@ -262,19 +324,47 @@ def _staged(t):
 
 def test_append_during_a_rewrite_is_not_lost(spark, tmp_path):
     """A rewrite whose snapshot was read before an append lands must not
-    commit over the append: it raises, and both appended rows stay."""
+    commit over the append: transact runs it again on the appended
+    version, and both the append and the rewrite land."""
     from unstructured_data_pipeline_spark.operators.dml import upsert
 
     t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
     t.append(_df(spark, [("a", 1)], SCHEMA))
+    calls = []
 
     def rewrite(cur):
-        t.append(_df(spark, [("b", 9)], SCHEMA))
+        calls.append(1)
+        if len(calls) == 1:
+            t.append(_df(spark, [("b", 9)], SCHEMA))
         return upsert(cur, _df(spark, [("a", 2)], SCHEMA), ["k"])
 
-    with pytest.raises(CommitConflictError):
-        t._replace(rewrite)
-    assert _rows(t.read()) == [("a", 1), ("b", 9)]
+    t.transact(rewrite)
+    assert len(calls) == 2
+    assert _rows(t.read()) == [("a", 2), ("b", 9)]
+
+
+def test_gc_error_after_the_rename_commits_once(spark, tmp_path, monkeypatch):
+    """The retention GC raises once after a write's rename committed it.
+    The write raises that error and is not committed a second time: the
+    table holds one new version and the rows once."""
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    t.append(_df(spark, [("seed", 0)], SCHEMA))
+    before = t.versions()
+    real = ParquetTable._gc
+    failed = []
+
+    def gc(self):
+        if not failed:
+            failed.append(1)
+            raise FileNotFoundError("a concurrent GC removed a file")
+        return real(self)
+
+    monkeypatch.setattr(ParquetTable, "_gc", gc)
+    with pytest.raises(FileNotFoundError, match="concurrent GC"):
+        t.append(_df(spark, [("a", 1)], SCHEMA))
+    monkeypatch.undo()
+    assert t.versions() == [*before, _next(before[-1])]
+    assert _rows(t.read()) == [("a", 1), ("seed", 0)]
 
 
 def test_append_overtaken_during_fill_retries(spark, tmp_path, monkeypatch):
@@ -323,6 +413,38 @@ def test_concurrent_appends_all_land(spark, tmp_path):
         sys.setswitchinterval(interval)
     assert _rows(t.read()) == sorted(rows)
     assert int(t.current_version()[2:]) == n + 1
+    assert not _staged(t)
+
+
+def test_concurrent_upserts_and_appends_all_land(spark, tmp_path):
+    """Upserts and appends race on one retain=1 table, more writers than
+    cores: each loser's base is GC'd under its fill or found stale at its
+    commit, and every write retries until it lands, once."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    n = min((os.cpu_count() or 4) + 2, 8)
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA).ensure()
+    t.append(_df(spark, [(f"k{i}", 0) for i in range(n)], SCHEMA))
+    writes = [
+        (t.upsert, (_df(spark, [(f"k{i}", i)], SCHEMA), ["k"]))
+        if i % 2
+        else (t.append, (_df(spark, [(f"a{i}", i)], SCHEMA),))
+        for i in range(n)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as ex:
+            futures = [ex.submit(f, *args) for f, args in writes]
+            for f in futures:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    want = {f"k{i}": i % 2 * i for i in range(n)}
+    want.update({f"a{i}": i for i in range(0, n, 2)})
+    assert _rows(t.read()) == sorted(want.items())
+    assert int(t.current_version()[2:]) == n + 2
     assert not _staged(t)
 
 
@@ -767,3 +889,63 @@ def test_recover_stale_keeps_only_versions_and_schema(spark, tmp_path):
     assert t.recover_stale() == []
     t.append(_df(spark, [("c", 3)], SCHEMA))
     assert _rows(t.read()) == [("a", 1), ("b", 2), ("c", 3)]
+
+
+# -- the write loop retries on the table's state, never on error text ------
+
+
+def test_transact_reraises_caller_file_not_found(spark, tmp_path):
+    """A FileNotFoundError raised by the CALLER's rewrite — even one whose
+    message mentions the table path — is a bug, not staleness: the base is
+    still the newest version, so it re-raises on the first attempt."""
+    t = _make(spark, tmp_path)
+    attempts = []
+
+    def buggy(df):
+        attempts.append(1)
+        raise FileNotFoundError(f"sidecar {t.path}/lookup.csv missing")
+
+    with pytest.raises(FileNotFoundError, match="lookup.csv"):
+        t.transact(buggy)
+    assert len(attempts) == 1  # no retries burnt
+
+
+def test_transact_reraises_jvm_error_without_version_dir(spark, tmp_path):
+    """A JVM-style FileNotFoundException on a base that is still the
+    newest version is the rewrite's own error, whatever path it names."""
+    t = _make(spark, tmp_path)
+    attempts = []
+
+    def buggy(df):
+        attempts.append(1)
+        raise RuntimeError(
+            f"java.io.FileNotFoundException: {t.path}/sidecar/part-0.parquet"
+        )
+
+    with pytest.raises(RuntimeError, match="sidecar"):
+        t.transact(buggy)
+    assert len(attempts) == 1
+
+
+def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
+    """A claim file that a writer of the older claim protocol left on the
+    next number when it died: transact() commits that number on its first
+    attempt, without a manual recover_stale()."""
+    t = _make(spark, tmp_path)
+    nxt = _next(t.current_version())
+    open(os.path.join(t.path, f"{nxt}.claim"), "w").close()
+    v = t.transact(lambda df: df.unionByName(_df(spark, [("healed", 1)], SCHEMA)))
+    assert v == nxt
+    assert t.current_version() == nxt
+    assert ("healed", 1) in _rows(t.read())
+
+
+def test_ensure_self_heals_dead_creation_claim(spark, tmp_path):
+    """A creation claim whose older-protocol writer died must not wedge
+    ensure(): it commits v-00000001 at once."""
+    t = ParquetTable(spark, str(tmp_path), "heal", SCHEMA)
+    os.makedirs(t.path, exist_ok=True)
+    open(os.path.join(t.path, "v-00000001.claim"), "w").close()
+    t.ensure()
+    assert t.current_version() == "v-00000001"
+    assert t.read().count() == 0

@@ -9,8 +9,6 @@ EXISTS semantics, plus listing helpers over spark.catalog.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -111,28 +109,6 @@ def list_stages(
             .agg(F.max("stage_root").alias("stage_root"))
         )
     return df.orderBy("stage_name")
-
-
-def list_stage_files(spark: SparkSession, stage_dir: str) -> DataFrame:
-    """DIRECTORY(@stage) counterpart (`app.py:136-140`): RELATIVE_PATH +
-    FILE_URL + size/mtime for every file in a stage.  Distributed listing
-    via the binaryFile source with the content column PRUNED — the scan
-    reads metadata only (check ReadSchema in the plan), so it is safe on a
-    stage holding terabytes of blobs."""
-    base = stage_dir.rstrip("/")
-    return (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(stage_dir)
-        .select(
-            F.regexp_replace(F.col("path"), re.escape("file:" + base) + "/?", "")
-            .alias("relative_path"),
-            F.col("path").alias("file_url"),
-            F.col("length").alias("size_bytes"),
-            F.col("modificationTime").alias("last_modified"),
-        )
-        .orderBy("relative_path")
-    )
 
 
 def verify_table_counts(

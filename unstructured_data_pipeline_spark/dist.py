@@ -6,8 +6,9 @@ The driver process imports us by file path, but pandas UDFs are cloudpickled
 ``import unstructured_data_pipeline_spark`` themselves.  On a real cluster
 you'd ``--py-files`` the wheel; here we do the equivalent at runtime:
 zip the package and ``addPyFile`` it once per SparkContext.  The zip is
-named by a hash of the package sources, so a zip left in the temp dir by
-another process (or an older checkout) is never shipped in their place.
+written into a directory this process creates (``tempfile.mkdtemp``) and
+removes at interpreter exit, so no other process's zip is ever shipped in
+its place or removed, and none outlives the process that shipped it.
 
 Per-task import tax.  Before every task a PySpark worker calls
 ``importlib.invalidate_caches()`` (``pyspark/worker_util.py``,
@@ -28,9 +29,10 @@ install does nothing.
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import os
 import pathlib
+import shutil
 import tempfile
 import zipfile
 import zipimport
@@ -73,31 +75,15 @@ def install_zip_cache_check() -> None:
 
 
 def _package_zip() -> str:
-    """Path of a zip of this package's sources, named by their content hash.
-    Processes with the same sources share the name, so the zip is written
-    through temp + rename: none of them ever ships a half-written one."""
+    """Path of a fresh zip of this package's sources, in a directory of its
+    own that is removed when the interpreter exits."""
     pkg_dir = pathlib.Path(__file__).resolve().parent
-    sources = [
-        (str(pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir)), p.read_bytes())
-        for p in sorted(pkg_dir.rglob("*.py"))
-    ]
-    h = hashlib.sha256()
-    for arcname, data in sources:
-        h.update(arcname.encode() + b"\0" + len(data).to_bytes(8, "big") + data)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"udp_spark_pkg_{h.hexdigest()[:16]}.zip"
-    )
-    if not os.path.exists(zip_path):
-        fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(zip_path))
-        try:
-            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
-                for arcname, data in sources:
-                    z.writestr(arcname, data)
-            os.chmod(tmp, 0o644)
-            os.replace(tmp, zip_path)
-        except BaseException:
-            os.unlink(tmp)
-            raise
+    zip_dir = tempfile.mkdtemp(prefix="udp_spark_pkg_")
+    atexit.register(shutil.rmtree, zip_dir, True)
+    zip_path = os.path.join(zip_dir, "udp_spark_pkg.zip")
+    with zipfile.ZipFile(zip_path, "w") as z:
+        for p in sorted(pkg_dir.rglob("*.py")):
+            z.write(p, pathlib.Path(pkg_dir.name) / p.relative_to(pkg_dir))
     return zip_path
 
 

@@ -715,8 +715,10 @@ class IncrementalLshDedup:
                 "sig",
             )
             # bands and ledger commit together; a replay skips the append
-            self.table._commit_append(
-                lambda _base, stage: self.table._write_snapshot(rows, stage),
+            self.table._write(
+                lambda base: self.table._linked(
+                    base, lambda stage: self.table._write_snapshot(rows, stage)
+                ),
                 batch_id,
             )
         except BaseException:

@@ -265,6 +265,10 @@ def persist_pipeline_outputs_idempotent(
     ``PartitionedParquetTable`` instances instead (same ``upsert``
     contract): with a partition column that is part of the merge key —
     e.g. an ingest-date or a stable hash bucket of the document key —
-    each batch rewrites only its touched partitions (O(touched+batch));
-    Delta/Iceberg MERGE remains the multi-writer production swap-in."""
+    each batch rewrites only its touched partitions (O(touched+batch)).
+    Each upsert runs in the table's one optimistic write loop
+    (``ParquetTable._write``): a sink overtaken by another writer's commit
+    (a second stream, a compaction) rebuilds its upsert on the winner's
+    version instead of raising out of ``foreachBatch``, so a replayed or
+    raced batch still lands once."""
     _write_sinks(outputs, tables, lambda t, df, keys: t.upsert(df, keys))

@@ -341,13 +341,15 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # the schema commits with the version: ALTER defaults are Parquet
-    # EXISTS_DEFAULTs in the version's `_schema`, read and written per version
-    "schema_evolution_report",
-    "table_clone_report",
-    "table_time_travel_report",
-    "occ_transact_lifecycle",
+    # one optimistic write loop: every table write that loses a commit race
+    # retries from the new base (`ParquetTable._write`)
+    "continuous_rollup_events",
+    "dml_upsert_customers",
+    "compaction_report",
     "merge_partitioned_lifecycle",
+    "occ_transact_lifecycle",
+    "streaming_intake_eav",
+    "incremental_dedup_report",
 ]
 
 

@@ -1,9 +1,8 @@
-from unstructured_data_pipeline_spark.sources.tables import load_fixture_tables, register_fixture_views
+from unstructured_data_pipeline_spark.sources.tables import load_fixture_tables
 from unstructured_data_pipeline_spark.sources.binary_docs import read_binary_documents, directory_listing
 
 __all__ = [
     "load_fixture_tables",
-    "register_fixture_views",
     "read_binary_documents",
     "directory_listing",
 ]

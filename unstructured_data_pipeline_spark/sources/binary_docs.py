@@ -11,6 +11,9 @@ executors, and `pathGlobFilter` prunes formats at the source.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,12 +44,27 @@ def read_binary_documents(
 
 
 def directory_listing(spark: SparkSession, path: str) -> DataFrame:
-    """The metadata-only directory scan (`app.py:135-141`): relative path +
-    full url, no content bytes (column pruned at the source)."""
-    df = read_binary_documents(spark, path).select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("relative_path"),
-        F.col("path").alias("file_url"),
-        F.col("length"),
-        F.col("modificationTime").alias("modification_time"),
+    """``SELECT ... FROM DIRECTORY(@stage)`` (`app.py:135-141`): every file
+    under the stage, subdirectories included, of a supported format,
+    as its path relative to the stage, full url, size and mtime.  The scan
+    reads metadata only — the content column is pruned at the source (check
+    ReadSchema in the plan) — so it is safe on a stage holding terabytes of
+    blobs."""
+    base = path.rstrip("/")
+    # the source reports a local file as a `file:/abs/path` URI
+    if "://" not in base and not base.startswith("file:"):
+        base = "file:" + os.path.abspath(base)
+    return (
+        spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.{" + ",".join(SUPPORTED_FORMATS) + "}")
+        .load(path)
+        .select(
+            F.regexp_replace(F.col("path"), "^" + re.escape(base) + "/", "").alias(
+                "relative_path"
+            ),
+            F.col("path").alias("file_url"),
+            F.col("length"),
+            F.col("modificationTime").alias("modification_time"),
+        )
     )
-    return df

@@ -31,9 +31,3 @@ def load_fixture_tables(
             else:
                 out[name] = spark.read.parquet(path)
     return out
-
-
-def register_fixture_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each fixture table as a temp view for ``spark.sql`` use."""
-    for name, df in load_fixture_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,6 +1,3 @@
-from unstructured_data_pipeline_spark.streaming.intake import (
-    start_intake_stream,
-    windowed_event_counts,
-)
+from unstructured_data_pipeline_spark.streaming.intake import start_intake_stream
 
-__all__ = ["start_intake_stream", "windowed_event_counts"]
+__all__ = ["start_intake_stream"]

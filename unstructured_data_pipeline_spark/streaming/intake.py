@@ -11,8 +11,7 @@ effectively-once because the sink upserts keyed by document
 (`persist_pipeline_outputs_idempotent`), so a replay rewrites the same rows.
 
 `start_intake_stream` wires: landing dir -> binaryFile/text stream ->
-foreachBatch(run_document_pipeline + persist).  Watermarked windowed
-aggregation over an event stream is provided for late-data analytics.
+foreachBatch(run_document_pipeline + persist).
 """
 
 from __future__ import annotations
@@ -99,29 +98,3 @@ def start_intake_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation — the standard late-data
-    pattern; works identically on a stream or a batch frame."""
-    df = events
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            F.col("sum_value").cast("double").alias("sum_value"),
-        )
-    )

@@ -15,11 +15,14 @@ inside the version dir, committed with the rows in one commit — the
 Structured Streaming rule that a sink's output and its progress commit
 together; `operators/dml.py` owns it, and every later rewrite of the
 table, `compact()` included, carries it) and `merge_rollup_batch` skips
-batches at-or-below it.  Replays of the
-same epoch therefore no-op, even after a crash at any point of the merge,
-and the final table equals the one-shot batch aggregate regardless of how
-arrivals were micro-batched (tested, and oracle-checked via
-`queries.continuous_rollup_events`).
+batches at-or-below it.  Replays of the same epoch therefore no-op, even
+after a crash at any point of the merge, and the final table equals the
+one-shot batch aggregate regardless of how arrivals were micro-batched
+(tested, and oracle-checked via `queries.continuous_rollup_events`).  The
+merge goes through the table's one write loop (`ParquetTable._write`): a
+merge that loses a commit race to another writer is rebuilt on the
+winner's version instead of raising out of `foreachBatch` and stopping
+the stream.
 
 At scale: the per-batch partial agg shuffles only the batch's rows; the
 merge joins the (small) partial against the rollup table on the bucket
@@ -33,11 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unstructured_data_pipeline_spark.operators.dml import (
-    ParquetTable,
-    _write_ledger,
-    last_applied_batch,
-)
+from unstructured_data_pipeline_spark.operators.dml import ParquetTable
 
 
 def merge_rollup_batch(
@@ -49,29 +48,24 @@ def merge_rollup_batch(
 ) -> bool:
     """Additively merge one micro-batch's partial aggregate; returns False
     (no-op) for an already-applied ``batch_id`` (replay)."""
-    base = table.ensure().current_version()
-    if batch_id <= last_applied_batch(table):
-        return False
-    # suffix the metric columns per side; USING full-outer join coalesces
-    # the key columns natively
-    cur = table.read_version(base).select(
-        *keys, *[F.col(m).alias(f"{m}_c") for m in metrics]
-    )
     p = partial.select(*keys, *[F.col(m).alias(f"{m}_p") for m in metrics])
-    merged = cur.join(p, keys, "full_outer").select(
-        *keys,
-        *[
-            (
-                F.coalesce(F.col(f"{m}_c"), F.lit(0).cast("long"))
-                + F.coalesce(F.col(f"{m}_p"), F.lit(0).cast("long"))
-            ).alias(m)
-            for m in metrics
-        ],
-    )
 
-    def fill(stage: str) -> None:
-        table._write_snapshot(merged, stage)
-        _write_ledger(stage, batch_id)
+    def fill_for(base: str):
+        # suffix the metric columns per side; USING full-outer join
+        # coalesces the key columns natively
+        cur = table.read_version(base).select(
+            *keys, *[F.col(m).alias(f"{m}_c") for m in metrics]
+        )
+        merged = cur.join(p, keys, "full_outer").select(
+            *keys,
+            *[
+                (
+                    F.coalesce(F.col(f"{m}_c"), F.lit(0).cast("long"))
+                    + F.coalesce(F.col(f"{m}_p"), F.lit(0).cast("long"))
+                ).alias(m)
+                for m in metrics
+            ],
+        )
+        return lambda stage: table._write_snapshot(merged, stage)
 
-    table._commit(base, fill)
-    return True
+    return table._write(fill_for, batch_id) is not None
