@@ -4,6 +4,7 @@ counterparts (`app.py:108-140`, `setup_database.sql:145-168`)."""
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -13,6 +14,7 @@ from unstructured_data_pipeline_spark.catalog import (
     seed_invoice_prompts,
     setup_verification,
 )
+from unstructured_data_pipeline_spark.sources import directory_listing
 
 
 def test_list_stages_union_of_dirs_and_seen(spark, tmp_path):
@@ -33,6 +35,27 @@ def test_list_stages_union_of_dirs_and_seen(spark, tmp_path):
     roots = {r["stage_name"]: r["stage_root"] for r in got}
     assert roots["docs_stage"].endswith("/docs_stage")
     assert roots["legacy_stage"] is None
+
+
+def test_list_stage_files_metadata_only(spark, tmp_path):
+    """DIRECTORY(@stage): recursive, paths relative to the stage, sizes and
+    mtimes; the format glob prunes unsupported files at the source."""
+    stage = tmp_path / "docs_stage"
+    (stage / "sub").mkdir(parents=True)
+    (stage / "a.pdf").write_bytes(b"alpha")
+    (stage / "ignored.txt").write_bytes(b"not a supported format")
+    (stage / "sub" / "b.txt").write_bytes(b"not a supported format either")
+    (stage / "sub" / "c.jpg").write_bytes(b"beta beta")
+    df = directory_listing(spark, str(stage))
+    rows = sorted(df.collect(), key=lambda r: r["relative_path"])
+    assert [r["relative_path"] for r in rows] == ["a.pdf", "sub/c.jpg"]
+    assert [r["length"] for r in rows] == [5, 9]
+    assert all(r["file_url"].startswith("file:") for r in rows)
+    assert all(r["modification_time"] is not None for r in rows)
+    # the scan must NOT materialize blob contents: content column pruned
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert schemas and all("content" not in s for s in schemas)
 
 
 def test_setup_verification_counts(spark, tmp_path):
