@@ -137,6 +137,18 @@ def test_upsert_idempotent(spark, table):
     assert sorted(tuple(r) for r in table.read().collect()) == once
 
 
+def test_compact_counts_the_partition_files(spark, table):
+    """compact() sizes and counts the data files under the partition dirs,
+    never the `_tombstones/` state: a merge-on-read delete, then an append
+    of a small file, each compact to one file per partition."""
+    table.delete_keys_mor(_mk(spark, [(0, "A", 0.0)]), keys=["k"])
+    assert table.compact() == 3
+    table.append(_mk(spark, [(99, "A", 1.0)]))
+    assert table.compact(target_files=1) == 3
+    want = sorted([*_base_rows()[1:], (99, "A", 1.0)])
+    assert sorted(tuple(r) for r in table.read().collect()) == want
+
+
 def test_crash_before_publish_keeps_old_version(spark, table, monkeypatch):
     """A failure after the new snapshot is fully staged (rows written,
     untouched partitions carried) but before its rename must leave the

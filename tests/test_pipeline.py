@@ -304,3 +304,53 @@ def test_idempotent_persist_of_empty_batch_writes_nothing(spark, tmp_path):
     persist_pipeline_outputs_idempotent(out, tables)
     assert not out.cached.storageLevel.useMemory
     assert {n: t.versions() for n, t in tables.items()} == before
+
+
+# -- C6 result caching: `cache_intermediate` persists the shared AI stage --
+
+
+def _det(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
+
+def test_cache_intermediate_identical_outputs(spark):
+    """cache on/off must be invisible in every deterministic output column."""
+    cols_p = ["file_ref", "file_url", "class_name", "extraction_result"]
+    cols_e = ["file_ref", "file_url", "class_name", "field_name", "field_value"]
+    off = run_document_pipeline(_docs(spark), with_ocr=True)
+    on = run_document_pipeline(_docs(spark), with_ocr=True, cache_intermediate=True)
+    try:
+        assert off.cached is None and on.cached is not None
+        assert on.cached.storageLevel.useMemory  # actually persisted
+        assert _det(on.processed, cols_p) == _det(off.processed, cols_p)
+        assert _det(on.extracted_fields, cols_e) == _det(off.extracted_fields, cols_e)
+        assert _det(on.ocr, ["file_ref", "ocr", "summary"]) == _det(
+            off.ocr, ["file_ref", "ocr", "summary"]
+        )
+    finally:
+        if on.cached is not None:
+            on.cached.unpersist()
+
+
+def test_writers_unpersist_cached_stage(spark, tmp_path):
+    """Both multi-sink writers must release the C6 handle (the reference's
+    explicit `.clear()` after writes), including on the idempotent path."""
+    from unstructured_data_pipeline_spark.catalog import bootstrap_warehouse
+    from unstructured_data_pipeline_spark.pipelines.batch import (
+        persist_pipeline_outputs,
+        persist_pipeline_outputs_idempotent,
+    )
+
+    for writer, sub in (
+        (persist_pipeline_outputs, "plain"),
+        (persist_pipeline_outputs_idempotent, "idem"),
+    ):
+        tables = bootstrap_warehouse(spark, str(tmp_path / sub))
+        out = run_document_pipeline(
+            _docs(spark), with_ocr=True, cache_intermediate=True
+        )
+        assert out.cached.storageLevel.useMemory
+        writer(out, tables)
+        assert not out.cached.storageLevel.useMemory  # unpersisted after fan-out
+        assert tables["documents_processed"].read().count() == 3
+        assert tables["documents_extracted_fields"].read().count() == 9

@@ -19,7 +19,12 @@ from __future__ import annotations
 
 import builtins
 import dis
+import glob
+import os
+import tempfile
 import types
+
+import pytest
 
 from unstructured_data_pipeline_spark import queries as Q
 
@@ -96,3 +101,30 @@ def test_queries_surface_has_no_stdlib_leaks():
         assert not isinstance(leaked, types.ModuleType) or not getattr(
             leaked, "__name__", ""
         ) == name, f"queries.{name} leaks the stdlib module"
+
+
+@pytest.mark.parametrize(
+    "fn_name, prefix",
+    [
+        ("occ_transact_lifecycle", "udp_occ_"),
+        ("occ_partitioned_lifecycle", "udp_occp_"),
+        ("occ_recover_stale_lifecycle", "udp_occr_"),
+    ],
+)
+def test_lifecycle_cleans_scratch_on_error(
+    spark, sf_dir, monkeypatch, fn_name, prefix
+):
+    """An exception mid-lifecycle (here: ensure() dying on step 01) must
+    not leak the mkdtemp scratch directory (ADVICE r12): the OCC lifecycle
+    entries wrap their scratch-table body in try/finally."""
+    from unstructured_data_pipeline_spark.operators import dml
+
+    def boom(self):
+        raise RuntimeError("wedged for test")
+
+    monkeypatch.setattr(dml.ParquetTable, "ensure", boom)
+    pattern = os.path.join(tempfile.gettempdir(), prefix + "*")
+    before = set(glob.glob(pattern))
+    with pytest.raises(RuntimeError, match="wedged"):
+        getattr(Q, fn_name)(spark, sf_dir)
+    assert set(glob.glob(pattern)) == before

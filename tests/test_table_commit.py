@@ -5,13 +5,13 @@ number, which fails when that version exists.  Every write runs in one
 optimistic loop (``ParquetTable._write``), so a write built from a stale
 snapshot is rebuilt on the newer version instead of overwriting another
 writer's commit, a crash at any step leaves a readable, writable table,
-and every read of a version goes through one reader (``read_version``).  Tables written by the
-older claim protocol (``CURRENT`` pointer, ``.claim``/``.commit`` files)
-read the same and take the next commit."""
+and every read of a version goes through one reader (``read_version``).
+Foreign residue at the table root (a file named like a version, a root
+``schema.json``) is never read as a version, never blocks a commit, and
+``recover_stale`` removes it."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -816,59 +816,21 @@ def test_retention_keeps_the_newest_versions(spark, tmp_path):
     assert t.read().count() == 5
 
 
-def _claim_protocol_table(spark, root):
-    """A table dir as the older claim protocol wrote it: an empty
-    v-00000001/, a v-00000002/ with rows, a `.claim` and a `.commit` file
-    per version, and a CURRENT pointer one version behind (its writer
-    died between the commit marker and the pointer advance)."""
-    path = os.path.join(root, "legacy")
-    os.makedirs(os.path.join(path, "v-00000001"))
-    _df(spark, [("a", 1), ("b", 2)], SCHEMA).write.parquet(
-        os.path.join(path, "v-00000002")
-    )
-    for v, base in (("v-00000001", ""), ("v-00000002", "v-00000001")):
-        with open(os.path.join(path, f"{v}.claim"), "w") as fh:
-            fh.write(f"{base or 'create'}:{'0' * 32}")
-        with open(os.path.join(path, f"{v}.commit"), "w") as fh:
-            fh.write(base)
-    with open(os.path.join(path, "CURRENT"), "w") as fh:
-        fh.write("v-00000001")
-    with open(os.path.join(path, "schema.json"), "w") as fh:
-        json.dump({"schema": SCHEMA.jsonValue(), "defaults": {}}, fh)
-    return ParquetTable(spark, root, "legacy", SCHEMA, retain=2)
-
-
-def test_claim_protocol_table_reads_the_same_and_takes_the_next_commits(
-    spark, tmp_path
-):
-    """A table written by the older claim protocol reads its newest
-    version whatever its CURRENT pointer says, and takes an append, an
-    upsert and a transact on top of it.  Its first commit unlinks the
-    pointer, claim and marker files: the root then holds only version
-    dirs and the legacy schema.json."""
-    t = _claim_protocol_table(spark, str(tmp_path))
-    assert t.current_version() == "v-00000002"
-    assert _rows(t.read()) == [("a", 1), ("b", 2)]
-    assert t.read_version("v-00000001").collect() == []
-    t.append(_df(spark, [("c", 3)], SCHEMA))
-    assert sorted(os.listdir(t.path)) == ["schema.json", *t.versions()]
-    t.upsert(_df(spark, [("a", 10)], SCHEMA), ["k"])
-    assert t.transact(lambda df: df.filter("k != 'b'")) == "v-00000005"
-    assert _rows(t.read()) == [("a", 10), ("c", 3)]
-    assert t.versions() == ["v-00000004", "v-00000005"]
-
-
-def test_recover_stale_keeps_only_versions_and_schema(spark, tmp_path):
+def test_recover_stale_keeps_only_versions(spark, tmp_path):
     """With writers stopped, recover_stale() removes every entry of the
-    table root but the version dirs and schema.json: stage dirs, crashed
-    `_write_atomic` temps, and the pointer, claim, marker and lock files
-    of the older claim protocol, including the claim on the live
-    version, whose data stays."""
-    t = _claim_protocol_table(spark, str(tmp_path))
-    legacy = sorted(
-        d for d in os.listdir(t.path) if d not in ("schema.json", *t.versions())
-    )
+    table root but the version dirs: stage dirs, crashed `_write_atomic`
+    temps and foreign residue (a root schema.json, pointer, claim, marker
+    and lock files), including a claim on the live version, whose data
+    stays."""
+    t = ParquetTable(spark, str(tmp_path), "t", SCHEMA, retain=2).ensure()
+    t.append(_df(spark, [("a", 1), ("b", 2)], SCHEMA))
     planted = [
+        "CURRENT",
+        "schema.json",
+        "v-00000001.claim",
+        "v-00000001.commit",
+        "v-00000002.claim",
+        "v-00000002.commit",
         "v-00000003.claim",
         "v-00000003.claim.obs",
         "CURRENT.lock",
@@ -883,8 +845,8 @@ def test_recover_stale_keeps_only_versions_and_schema(spark, tmp_path):
         open(os.path.join(t.path, name), "w").close()
     os.makedirs(os.path.join(t.path, "stage-deadbeef", "p=1"))
     removed = t.recover_stale()
-    assert sorted(removed) == sorted([*legacy, *planted, "stage-deadbeef"])
-    assert sorted(os.listdir(t.path)) == ["schema.json", "v-00000001", "v-00000002"]
+    assert sorted(removed) == sorted([*planted, "stage-deadbeef"])
+    assert sorted(os.listdir(t.path)) == ["v-00000001", "v-00000002"]
     assert _rows(t.read()) == [("a", 1), ("b", 2)]
     assert t.recover_stale() == []
     t.append(_df(spark, [("c", 3)], SCHEMA))
@@ -928,9 +890,9 @@ def test_transact_reraises_jvm_error_without_version_dir(spark, tmp_path):
 
 
 def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
-    """A claim file that a writer of the older claim protocol left on the
-    next number when it died: transact() commits that number on its first
-    attempt, without a manual recover_stale()."""
+    """Foreign residue named like a claim on the next number (a file, not
+    a version dir): transact() commits that number on its first attempt,
+    without a manual recover_stale()."""
     t = _make(spark, tmp_path)
     nxt = _next(t.current_version())
     open(os.path.join(t.path, f"{nxt}.claim"), "w").close()
@@ -941,11 +903,190 @@ def test_transact_self_heals_aged_dead_claim(spark, tmp_path):
 
 
 def test_ensure_self_heals_dead_creation_claim(spark, tmp_path):
-    """A creation claim whose older-protocol writer died must not wedge
-    ensure(): it commits v-00000001 at once."""
+    """Foreign residue named like a claim on the first number must not
+    wedge ensure(): it commits v-00000001 at once."""
     t = ParquetTable(spark, str(tmp_path), "heal", SCHEMA)
     os.makedirs(t.path, exist_ok=True)
     open(os.path.join(t.path, "v-00000001.claim"), "w").close()
     t.ensure()
     assert t.current_version() == "v-00000001"
     assert t.read().count() == 0
+
+
+# -- optimistic concurrency over the rename commit -------------------------
+
+
+def test_occ_conflict_detected_and_retry_preserves_both_writes(spark, tmp_path):
+    """Two writers race from the same base: the loser's commit must raise,
+    and a transact() retry must land its change on TOP of the winner's —
+    the textbook lost-update scenario, prevented.  retain=2 keeps the
+    shared base snapshot readable for the loser (with retain=1 the
+    winner's GC drops it and the loser sees retention aging instead —
+    transact() retries on either)."""
+    t = _make(spark, tmp_path, retain=2)
+    base = t.current_version()
+    add = lambda df, k: df.unionByName(
+        df.sparkSession.createDataFrame([(k, 1)], SCHEMA)
+    )
+    # writer B commits base+1 first
+    t.commit_rewrite(add(t.read_version(base), "b"), base)
+    # writer A computed from the same (now stale) base: must conflict
+    with pytest.raises(CommitConflictError):
+        t.commit_rewrite(add(t.read_version(base), "a"), base)
+    assert _rows(t.read()) == [("b", 1), ("seed", 0)]  # A's write NOT applied
+    # A retries optimistically: recomputes from the new snapshot
+    t.transact(lambda df: add(df, "a"))
+    assert _rows(t.read()) == [("a", 1), ("b", 1), ("seed", 0)]
+
+
+def test_occ_threaded_transacts_never_lose_updates(spark, tmp_path):
+    """N concurrent writers each increment the single counter row via
+    transact(); serializability means the final value is exactly N."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = _make(spark, tmp_path, retain=2)
+    n = 5
+
+    def bump(df):
+        return df.select("k", (F.col("v") + F.lit(1)).alias("v").cast("int"))
+
+    def worker(_i):
+        return t.transact(bump)
+
+    with ThreadPoolExecutor(max_workers=n) as ex:
+        versions = list(ex.map(worker, range(n)))
+    assert len(set(versions)) == n  # each commit got its own version
+    assert _rows(t.read()) == [("seed", n)]
+
+
+def test_upsert_and_transact_build_on_each_other(spark, tmp_path):
+    """An upsert after transact() commits builds on the transact's
+    version, and a transact after the upsert builds on the upsert's."""
+    t = _make(spark, tmp_path)
+    t.transact(
+        lambda df: df.unionByName(
+            df.sparkSession.createDataFrame([("occ", 1)], SCHEMA)
+        )
+    )
+    t.upsert(spark.createDataFrame([("upsert", 2)], SCHEMA), ["k"])
+    assert _rows(t.read()) == [("occ", 1), ("seed", 0), ("upsert", 2)]
+    t.transact(
+        lambda df: df.unionByName(
+            df.sparkSession.createDataFrame([("occ2", 3)], SCHEMA)
+        )
+    )
+    assert ("occ2", 3) in _rows(t.read())
+
+
+def test_occ_partitioned_table_keeps_hive_layout(spark, tmp_path):
+    """OCC commits on a PartitionedParquetTable must write hive partition
+    dirs (a flat snapshot would make the NEXT pruned merge find no
+    partitions to carry and silently degrade)."""
+    t = PartitionedParquetTable(
+        spark, str(tmp_path), "pt", SCHEMA3, partition_by=["p"], retain=2
+    ).ensure()
+    t.append(_df(spark, [("a", "x", 1), ("b", "y", 2), ("c", "z", 3)]))
+    t.transact(
+        lambda df: df.unionByName(
+            df.sparkSession.createDataFrame([("d", "x", 4)], SCHEMA3)
+        )
+    )
+    live = os.path.join(t.path, t.current_version())
+    subdirs = sorted(
+        d for d in os.listdir(live) if os.path.isdir(os.path.join(live, d))
+    )
+    assert subdirs == ["p=x", "p=y", "p=z"]  # hive layout preserved
+    # a pruned merge AFTER the OCC commit still carries untouched parts
+    t.upsert(_df(spark, [("a", "x", 10)]), ["k"])
+    got = sorted((r.k, r.p, r.v) for r in t.read().collect())
+    assert got == [("a", "x", 10), ("b", "y", 2), ("c", "z", 3), ("d", "x", 4)]
+
+
+# -- recover_stale sweeps foreign residue ----------------------------------
+
+
+def test_occ_recover_stale_claims_and_stages(spark, tmp_path):
+    """A writer that died mid-fill leaves its stage dir, and foreign
+    residue names a claim on the next number: recover_stale() removes
+    both, the rows stay, and the claimed number commits next."""
+    t = _make(spark, tmp_path)
+    live = t.current_version()
+    nxt = f"v-{int(live[2:]) + 1:08d}"
+    open(os.path.join(t.path, f"{nxt}.claim"), "w").close()
+    os.makedirs(os.path.join(t.path, "stage-deadbeef"))
+    open(os.path.join(t.path, "stage-deadbeef", "part-0.parquet"), "w").close()
+    removed = t.recover_stale()
+    assert set(removed) == {f"{nxt}.claim", "stage-deadbeef"}
+    assert _rows(t.read()) == [("seed", 0)]
+    assert t.transact(lambda df: df) == nxt
+
+
+def test_occ_recover_never_deletes_live_snapshot(spark, tmp_path):
+    """Foreign residue named like a claim on the LIVE version:
+    recover_stale() must drop only that file, never the data."""
+    t = _make(spark, tmp_path)
+    t.upsert(spark.createDataFrame([("upsert", 7)], SCHEMA), ["k"])
+    live = t.current_version()
+    with open(os.path.join(t.path, f"{live}.claim"), "w") as fh:
+        fh.write("planted")
+    assert t.current_version() == live
+    removed = t.recover_stale()
+    assert removed == [f"{live}.claim"]
+    assert t.current_version() == live
+    assert os.path.isdir(os.path.join(t.path, live))
+    assert ("upsert", 7) in _rows(t.read())
+
+
+def test_recover_stale_sweeps_lock_token_residue(spark, tmp_path):
+    """Foreign residue shaped like a pointer lock's `.lock.tok-` token
+    temp file: recover_stale() (writers stopped) must remove it."""
+    t = _make(spark, tmp_path)
+    residue = os.path.join(t.path, "CURRENT.lock.tok-deadbeef0000")
+    with open(residue, "w") as fh:
+        fh.write("orphaned-token")
+    removed = t.recover_stale()
+    assert os.path.basename(residue) in removed
+    assert not os.path.exists(residue)
+
+
+def test_recover_stale_clears_wedged_lock_state(spark, tmp_path):
+    """recover_stale() (writers stopped) clears foreign residue shaped like
+    pointer-lock crash state — the lock itself, steal graves and age
+    probes — and the table commits normally afterwards."""
+    t = _make(spark, tmp_path)
+    lock = os.path.join(t.path, "CURRENT.lock")
+    open(lock, "w").close()
+    open(lock + ".stale-deadbeef", "w").close()
+    probe = os.path.join(t.path, ".now-probe-deadbeef0000")
+    open(probe, "w").close()
+    removed = t.recover_stale()
+    for name in ("CURRENT.lock", "CURRENT.lock.stale-deadbeef",
+                 ".now-probe-deadbeef0000"):
+        assert name in removed
+    assert not os.path.exists(lock)
+    assert not os.path.exists(lock + ".stale-deadbeef")
+    assert not os.path.exists(probe)
+    t.append(spark.createDataFrame([("after", 1)], SCHEMA))
+    assert _rows(t.read()) == [("after", 1), ("seed", 0)]
+
+
+def test_recover_stale_sweeps_write_atomic_temps(spark, tmp_path):
+    """Foreign residue shaped like the `<target>.tmp-<pid>-<tag>` files of
+    crashed atomic publishes at the table root: recover_stale() (writers
+    stopped) must remove every one and leave the table readable."""
+    t = _make(spark, tmp_path)
+    residues = [
+        "CURRENT.tmp-12345-ab",
+        "v-00000002.claim.obs.tmp-12345-cd",
+        "v-00000001.commit.tmp-12345-ef",
+        "schema.json.tmp-12345-01",
+    ]
+    for r in residues:
+        open(os.path.join(t.path, r), "w").close()
+    removed = t.recover_stale()
+    assert sorted(removed) == sorted(residues)
+    for r in residues:
+        assert not os.path.exists(os.path.join(t.path, r))
+    assert sorted(os.listdir(t.path)) == t.versions()
+    assert t.read().count() == 1
+    assert t.recover_stale() == []

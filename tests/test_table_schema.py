@@ -4,13 +4,12 @@
 Parquet ``EXISTS_DEFAULT``, and every read and write takes the schema from
 the version it reads or bases on.  So a handle opened before an ALTER
 keeps the column, rewrites keep defaults and stored NULLs apart, a clone
-carries the schema inside its one commit, partitioned tables take
-defaults, and tables ALTERed by the older layout (a root ``schema.json``
-with ``defaults`` plus nested ``pre-alter-<col>/`` dirs) read the same."""
+carries the schema inside its one commit, and partitioned tables take
+defaults.  A version with no ``_schema`` reads in the constructor
+schema."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -135,52 +134,3 @@ def test_snapshot_before_an_alter_reads_without_the_column(spark, tmp_path):
     assert t.read().columns == ["k", "v", "tier"]
     # a table never ALTERed or cloned carries no schema file
     assert "_schema" not in os.listdir(os.path.join(t.path, before))
-
-
-# -- tables ALTERed by the older layout ---------------------------------------
-
-
-def _epoch_layout_table(spark, root):
-    """A table as ALTERs with defaults left it before the schema moved into
-    the version: a root schema.json holding the evolved schema and the
-    defaults, and the data files of each ALTER's base version hardlinked
-    under nested ``pre-alter-<col>/`` dirs.  ``a`` (default "A1") was added
-    with k1 stored, ``b`` (default 7) after k2 was stored with a NULL
-    ``a``, and k3 stores both columns, ``b`` as NULL."""
-    path = os.path.join(root, "old")
-    v = os.path.join(path, "v-00000003")
-    full = "k string, v int, a string, b int"
-    spark.createDataFrame([("k3", 3, "x", None)], full).write.parquet(v)
-    spark.createDataFrame([("k2", 2, None)], "k string, v int, a string").write.parquet(
-        os.path.join(v, "pre-alter-b")
-    )
-    spark.createDataFrame([("k1", 1)], SCHEMA).write.parquet(
-        os.path.join(v, "pre-alter-b", "pre-alter-a")
-    )
-    with open(os.path.join(v, "_base"), "w") as fh:
-        fh.write(f"v-00000002:{'0' * 32}")
-    schema = spark.createDataFrame([], full).schema
-    with open(os.path.join(path, "schema.json"), "w") as fh:
-        json.dump({"schema": schema.jsonValue(), "defaults": {"a": "A1", "b": 7}}, fh)
-    return ParquetTable(spark, root, "old", SCHEMA, retain=2)
-
-
-def test_epoch_layout_table_reads_the_same_and_takes_the_next_commits(
-    spark, tmp_path
-):
-    t = _epoch_layout_table(spark, str(tmp_path))
-    rows = [("k1", 1, "A1", 7), ("k2", 2, None, 7), ("k3", 3, "x", None)]
-    assert _rows(t.read()) == rows
-    full = "k string, v int, a string, b int"
-    t.append(spark.createDataFrame([("k4", 4, None, None)], full))
-    rows.append(("k4", 4, None, None))
-    assert _rows(t.read()) == rows
-    t.upsert(spark.createDataFrame([("k3", 30, "x", None)], full), ["k"])
-    rows[2] = ("k3", 30, "x", None)
-    assert _rows(t.read()) == rows
-    t.add_column("c", T.StringType(), default="C")
-    rows = [(*r, "C") for r in rows]
-    assert _rows(t.read()) == rows
-    t.transact(lambda df: df)
-    assert _rows(t.read()) == rows
-    assert sorted(os.listdir(t.path)) == ["schema.json", *t.versions()]

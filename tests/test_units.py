@@ -19,6 +19,7 @@ from unstructured_data_pipeline_spark.functions.prompts import (
 )
 from unstructured_data_pipeline_spark.functions.variant import (
     canonical_json,
+    stringify_display,
     variantify,
 )
 from unstructured_data_pipeline_spark.operators.dml import (
@@ -101,6 +102,18 @@ def test_variantify():
     assert variantify([1, "x"]) == '[1,"x"]'
     assert variantify(True) == "true"
     assert variantify(3) == "3"
+
+
+def test_stringify_display():
+    """Display coercion (`app.py:227-233`): NULL renders empty, structures
+    as canonical JSON, scalars through str() (a bool as Python prints it,
+    not as JSON)."""
+    assert stringify_display(None) == ""
+    assert stringify_display({"b": 1, "a": [2, None]}) == '{"a":[2,null],"b":1}'
+    assert stringify_display([1, "x"]) == canonical_json([1, "x"])
+    assert stringify_display(True) == "True"
+    assert stringify_display(2.5) == "2.5"
+    assert stringify_display(0) == "0"
 
 
 def test_canonical_json_is_canonical():

@@ -176,7 +176,6 @@ _LEDGER = "_last_batch"  # batch-id high-watermark of a batch sink
 _TOMBSTONES = "_tombstones"  # merge-on-read deleted keys
 _BASE = "_base"  # "<base version or create>:<cookie>" of the commit
 _SCHEMA = "_schema"  # StructType JSON, written by ALTER and clone
-_LEGACY_SCHEMA = "schema.json"  # root schema of tables ALTERed before _schema
 
 
 def last_applied_batch(table: "ParquetTable") -> int:
@@ -212,7 +211,6 @@ class ParquetTable:
                 _tombstones/   # merge-on-read deleted keys (if any)
                 _last_batch    # batch sink ledger (if any)
             stage-<uuid>/      # a version being written, or being dropped
-            schema.json        # legacy only: see schema_of()
 
     Every write is a new version — creation, append, anti-insert,
     upsert/delete/compact, merge-on-read deletes, ALTERs, clones, OCC
@@ -264,10 +262,10 @@ class ParquetTable:
 
     def schema_of(self, version: str | None) -> T.StructType:
         """The schema ``version`` was committed with: its ``_schema``, else
-        the root ``schema.json`` of a table ALTERed by the older layout,
-        else the constructor schema.  An ALTER default is the field's
-        ``EXISTS_DEFAULT`` metadata, which Spark's Parquet reader fills for
-        the files that lack the column; a stored NULL stays NULL."""
+        (a version never ALTERed or cloned) the constructor schema.  An
+        ALTER default is the field's ``EXISTS_DEFAULT`` metadata, which
+        Spark's Parquet reader fills for the files that lack the column; a
+        stored NULL stays NULL."""
         import json
 
         if version is not None:
@@ -276,19 +274,7 @@ class ParquetTable:
                     return T.StructType.fromJson(json.load(f))
             except FileNotFoundError:
                 pass
-        try:
-            with open(os.path.join(self.path, _LEGACY_SCHEMA)) as f:
-                meta = json.load(f)
-        except FileNotFoundError:
-            return self._declared
-        # the older layout backfilled its `defaults` for the rows of files
-        # hardlinked under `pre-alter-<col>/` dirs: the files lacking <col>
-        schema = T.StructType.fromJson(meta["schema"])
-        for f in schema.fields:
-            if f.name in meta.get("defaults", {}):
-                default = _default_sql(meta["defaults"][f.name], f.dataType)
-                f.metadata = {"EXISTS_DEFAULT": default}
-        return schema
+        return self._declared
 
     # -- committed versions -------------------------------------------------
     @staticmethod
@@ -315,8 +301,7 @@ class ParquetTable:
             (
                 d
                 for d in entries
-                # dirs only: tables written by the older claim protocol
-                # also hold v-XXXXXXXX.claim / .commit FILES
+                # dirs only: a foreign file named v-* is never a version
                 if d.startswith("v-") and os.path.isdir(os.path.join(self.path, d))
             ),
             key=lambda d: int(d[2:]),
@@ -426,13 +411,12 @@ class ParquetTable:
 
     # -- time travel (retained snapshots) -----------------------------------
     def _scan(self, path: str, schema: T.StructType) -> DataFrame:
-        """Every parquet file under one snapshot dir, legacy ALTER epoch
-        dirs included (the hive-partitioned subclass reads partition dirs)."""
-        return (
-            self.spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
-        )
+        """The data files of one snapshot dir in either layout: flat files
+        at its root, or the hive-partitioned subclass's ``pcol=value/``
+        dirs, whose values ``basePath`` reads back as columns.  The
+        ``_``-prefixed state is skipped, and the empty first version reads
+        as zero rows of ``schema``."""
+        return self.spark.read.schema(schema).option("basePath", path).parquet(path)
 
     def read_version(self, version: str) -> DataFrame:
         """AS-OF read of a retained snapshot (immutable once committed) in
@@ -568,9 +552,20 @@ class ParquetTable:
         ``spark.sql.files.maxPartitionBytes``).  Streaming/append-heavy
         pipelines accumulate small files — the classic small-files problem
         that degrades every later scan (one task + one footer read per
-        file); periodic compaction is the steady-state fix.  Returns the
+        file); periodic compaction is the steady-state fix.  A partitioned
+        table gets up to ``target_files`` per partition.  Returns the data
         file count after compaction."""
-        import glob
+
+        def data_files() -> list[str]:
+            """The current version's parquet files, partition dirs included
+            and the ``_``-prefixed state (``_tombstones/``) skipped."""
+            found = []
+            for base, dirs, files in os.walk(self.data_dir()):
+                dirs[:] = [d for d in dirs if not d.startswith("_")]
+                found += (
+                    os.path.join(base, f) for f in files if f.endswith(".parquet")
+                )
+            return found
 
         self.ensure()
         if target_files is None:
@@ -578,13 +573,10 @@ class ParquetTable:
                 "spark.sql.files.maxPartitionBytes", "134217728"
             )
             max_bytes = int(raw) if raw.isdigit() else 128 * 1024 * 1024
-            size = sum(
-                os.path.getsize(p)
-                for p in glob.glob(os.path.join(self.data_dir(), "*.parquet"))
-            )
+            size = sum(map(os.path.getsize, data_files()))
             target_files = max(1, size // max_bytes + 1)
         self.transact(lambda cur: cur.coalesce(int(target_files)))
-        return len(glob.glob(os.path.join(self.data_dir(), "*.parquet")))
+        return len(data_files())
 
     # -- the commit protocol ------------------------------------------------
     #
@@ -749,20 +741,10 @@ class ParquetTable:
         """Retention GC: drop every version below the newest ``retain``.
         A dropped version is first renamed to a ``stage-`` name, so a
         crash partway through the delete leaves residue, never a partial
-        snapshot that :meth:`versions` would list.  Every file at the
-        table root but a legacy ``schema.json`` goes too: no write puts a
-        file there, so each is a pointer, claim, marker, lock or probe
-        file of the older claim protocol."""
+        snapshot that :meth:`versions` would list."""
         import shutil
         import uuid
 
-        with os.scandir(self.path) as entries:
-            for e in entries:
-                if e.name != _LEGACY_SCHEMA and e.is_file(follow_symlinks=False):
-                    try:
-                        os.unlink(e.path)
-                    except FileNotFoundError:
-                        pass  # a concurrent GC unlinked it first
         for d in self.versions()[: -self.retain]:
             grave = os.path.join(self.path, f"stage-{uuid.uuid4().hex[:12]}")
             try:
@@ -797,11 +779,10 @@ class ParquetTable:
 
     def recover_stale(self) -> list[str]:
         """Crash cleanup, to run when NO writers are active: remove every
-        entry of the table root that is not a version dir or schema.json.
-        That covers the ``stage-`` dirs of a writer or a retention GC that
-        died partway, crashed :meth:`_write_atomic` temps, and the
-        pointer, claim, marker and lock files of tables written by the
-        older claim protocol.  Returns what was removed."""
+        entry of the table root that is not a ``v-*`` version dir.  No
+        write leaves anything else there but the ``stage-`` dirs of a
+        writer or a retention GC that died partway, so every other entry
+        is foreign residue.  Returns what was removed."""
         import shutil
 
         try:
@@ -811,7 +792,7 @@ class ParquetTable:
         removed = []
         for d in entries:
             full = os.path.join(self.path, d)
-            if d == _LEGACY_SCHEMA or (d.startswith("v-") and os.path.isdir(full)):
+            if d.startswith("v-") and os.path.isdir(full):
                 continue
             if os.path.isdir(full):
                 shutil.rmtree(full, ignore_errors=True)
@@ -902,17 +883,6 @@ class PartitionedParquetTable(ParquetTable):
     @staticmethod
     def _value_key(row: tuple) -> tuple:
         return tuple(None if v is None else str(v) for v in row)
-
-    # ensure(), read() and read_version() are inherited: the empty first
-    # version holds no partition dirs yet, and every scan goes through the
-    # hive-partitioned _scan below.
-
-    def _scan(self, path: str, schema: T.StructType) -> DataFrame:
-        return (
-            self.spark.read.schema(schema)
-            .option("basePath", path)
-            .parquet(path)
-        )
 
     def _write_snapshot(self, df: DataFrame, path: str) -> None:
         # every snapshot must keep the hive layout: a flat one would be

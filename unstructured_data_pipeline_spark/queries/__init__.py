@@ -341,15 +341,18 @@ DEMOS = {
 # re-proved before anything else.  Replace the list with each change set's
 # own; the assert below keeps every name a live registry entry.
 _CHANGED_PATHS = [
-    # one optimistic write loop: every table write that loses a commit race
-    # retries from the new base (`ParquetTable._write`)
-    "continuous_rollup_events",
-    "dml_upsert_customers",
-    "compaction_report",
-    "merge_partitioned_lifecycle",
+    # one on-disk table layout: one `_scan` for flat and partitioned
+    # versions, `recover_stale` removes every root entry but the `v-*`
+    # dirs, and `compact` counts partitioned data files
+    "occ_recover_stale_lifecycle",
     "occ_transact_lifecycle",
-    "streaming_intake_eav",
-    "incremental_dedup_report",
+    "occ_partitioned_lifecycle",
+    "schema_evolution_report",
+    "table_clone_report",
+    "table_time_travel_report",
+    "mor_delete_lifecycle_report",
+    "merge_partitioned_lifecycle",
+    "compaction_report",
 ]
 
 

@@ -3,14 +3,14 @@ next-round #6 — "the one OCC surface whose evidence is still unit-only").
 
 ``ParquetTable.recover_stale()`` (`operators/dml.py`, symbol citation per
 the round-12 convention) is the manual crash-recovery path: with writers
-stopped it removes every entry of the table root that is not a version
-dir or ``schema.json``, and hands the table back intact and writable.
+stopped it removes every entry of the table root that is not a ``v-*``
+version dir, and hands the table back intact and writable.
 This query deliberately plants one residue of every kind on a scratch
 table —
 
 * a ``stage-`` dir (a writer or a retention GC died partway);
-* the files a table written by the older claim protocol carries: the
-  ``CURRENT`` pointer, a claim on the next number and a dir-less claim
+* foreign residue shaped like the files of a claim-file commit protocol:
+  a ``CURRENT`` pointer, a claim on the next number and a dir-less claim
   beyond it with its ``.obs`` observation sidecar, an EMPTY
   ``CURRENT.lock``, a ``.lock.tok-`` token temp, a ``.lock.stale-``
   steal grave and a ``.now-probe-`` age probe;
