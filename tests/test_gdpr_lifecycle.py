@@ -1,9 +1,7 @@
-"""Unit tests for the round-9 changes: cohort-derived GDPR lifecycle
-deletes (ADVICE r8 — the predicate form silently assumed every
-events.user_id with %97==0 exists in customer) and the end-to-end
-streaming interval-join entry's batch-equivalence contract.  Registry
-hash-gate parity is covered by test_oracle_parity; these pin what the
-gate can't see."""
+"""GDPR erasure (`queries/gdpr_lifecycle.py`): the cohort-derived
+lifecycle deletes and the planning cascade's audit counts on hand-built
+fixtures whose shapes the registry hash gate cannot see — event user_ids
+that are not customers, and duplicated parent rows."""
 
 from __future__ import annotations
 
@@ -14,54 +12,7 @@ from pyspark.sql import functions as F
 from unstructured_data_pipeline_spark.queries import (
     gdpr_erasure_cascade,
     gdpr_erasure_lifecycle,
-    streaming_interval_join_attribution,
 )
-
-
-def test_flaky_transport_fails_without_retry_and_recovers_with_it():
-    """The C4 oracle row is only meaningful if the transport actually
-    fails: find a payload whose first attempt raises, prove a
-    max_attempts=1 adapter surfaces the failure, and that the default
-    retrying adapter returns exactly the stub answer for the same text."""
-    import pytest
-
-    from unstructured_data_pipeline_spark.ai.backends import (
-        DeterministicStubBackend,
-    )
-    from unstructured_data_pipeline_spark.ai.remote import (
-        FlakyStubTransport,
-        RemoteBackendAdapter,
-        RetryableError,
-        no_sleep,
-    )
-
-    # find a text the transport's md5 coin plants a failure for (~half do)
-    flaky_text = next(
-        t
-        for t in (f"customer invoice {i}" for i in range(64))
-        if _first_attempt_fails(FlakyStubTransport(), t)
-    )
-    no_retry = RemoteBackendAdapter(
-        FlakyStubTransport(), max_attempts=1, sleep=no_sleep
-    )
-    with pytest.raises(RetryableError):
-        no_retry.classify(flaky_text)
-
-    retrying = RemoteBackendAdapter(FlakyStubTransport(), sleep=no_sleep)
-    assert retrying.classify(flaky_text) == DeterministicStubBackend().classify(
-        flaky_text
-    )
-
-
-def _first_attempt_fails(transport, text: str) -> bool:
-    from unstructured_data_pipeline_spark.ai.remote import RetryableError
-    from unstructured_data_pipeline_spark.functions.variant import canonical_json
-
-    try:
-        transport("classify", canonical_json({"text": text}))
-        return False
-    except RetryableError:
-        return True
 
 
 def test_gdpr_lifecycle_matches_cascade_on_non_customer_user_ids(spark, tmp_path):
@@ -145,43 +96,3 @@ def test_gdpr_cascade_audit_survives_duplicate_parent_rows(spark, tmp_path):
     assert rows["lineitem"]["n_erased"] == 1
     assert rows["events"]["n_before"] == 2
     assert rows["events"]["n_erased"] == 1
-
-
-def test_streaming_interval_join_equals_batch_twin(spark, sf_dir):
-    """The landed streaming result must equal the batch interval join of
-    the same inputs — replay determinism is the contract that makes the
-    entry oracle-gateable (one file per side -> one availableNow batch ->
-    no cross-batch watermark drops)."""
-    from unstructured_data_pipeline_spark.queries import _cents, _events
-
-    got = {
-        r["user_id"]: (r["n_attributed"], r["sum_value_cents"])
-        for r in streaming_interval_join_attribution(spark, sf_dir).collect()
-    }
-    ev = _events(spark, sf_dir).select(
-        "user_id", "ts", "event_type", _cents(F.col("value")).alias("cents")
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("vu"), F.col("ts").alias("v_us")
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("ts").alias("p_us"), "cents"
-    )
-    want = {
-        r["vu"]: (r["n"], r["s"])
-        for r in (
-            v.join(
-                p,
-                (F.col("vu") == F.col("pu"))
-                & (F.col("p_us") >= F.col("v_us"))
-                & (F.col("p_us") <= F.col("v_us") + 3_600_000_000),
-            )
-            .groupBy("vu")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("cents").cast("long").alias("s"),
-            )
-            .collect()
-        )
-    }
-    assert got == want and len(got) > 0

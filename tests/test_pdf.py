@@ -111,7 +111,6 @@ def test_binary_intake_stream_with_pdf(spark, tmp_path):
         str(tmp_path / "ckpt"),
         tables,
         file_format="binaryFile",
-        trigger_available_now=True,
     )
     q.awaitTermination()
     rows = tables["document_ocr"].read().collect()

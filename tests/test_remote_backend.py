@@ -146,3 +146,42 @@ def test_adapter_drives_full_pipeline(spark):
     assert got == {"1.txt": "invoice", "2.txt": "invoice"}
     eav = out.extracted_fields.select("file_ref", "field_name", "field_value").collect()
     assert {(r["field_name"], r["field_value"]) for r in eav} == {("total", "42")}
+
+
+def test_flaky_transport_fails_without_retry_and_recovers_with_it():
+    """The C4 oracle row is only meaningful if the transport actually
+    fails: find a payload whose first attempt raises, prove a
+    max_attempts=1 adapter surfaces the failure, and that the default
+    retrying adapter returns exactly the stub answer for the same text."""
+    from unstructured_data_pipeline_spark.ai.backends import (
+        DeterministicStubBackend,
+    )
+    from unstructured_data_pipeline_spark.ai.remote import (
+        FlakyStubTransport,
+        no_sleep,
+    )
+
+    # find a text the transport's md5 coin plants a failure for (~half do)
+    flaky_text = next(
+        t
+        for t in (f"customer invoice {i}" for i in range(64))
+        if _first_attempt_fails(FlakyStubTransport(), t)
+    )
+    no_retry = RemoteBackendAdapter(
+        FlakyStubTransport(), max_attempts=1, sleep=no_sleep
+    )
+    with pytest.raises(RetryableError):
+        no_retry.classify(flaky_text)
+
+    retrying = RemoteBackendAdapter(FlakyStubTransport(), sleep=no_sleep)
+    assert retrying.classify(flaky_text) == DeterministicStubBackend().classify(
+        flaky_text
+    )
+
+
+def _first_attempt_fails(transport, text: str) -> bool:
+    try:
+        transport("classify", canonical_json({"text": text}))
+        return False
+    except RetryableError:
+        return True

@@ -89,7 +89,6 @@ def test_binary_intake_stream(spark, tmp_path):
         str(tmp_path / "ckpt3"),
         tables,
         file_format="binaryFile",
-        trigger_available_now=True,
     )
     q.awaitTermination()
     got = {
@@ -114,10 +113,7 @@ def test_intake_replay_is_effectively_once(spark, tmp_path):
     tables = bootstrap_warehouse(spark, str(tmp_path / "wh"))
 
     def drain(ckpt):
-        q = start_intake_stream(
-            spark, str(landing), str(tmp_path / ckpt), tables,
-            trigger_available_now=True,
-        )
+        q = start_intake_stream(spark, str(landing), str(tmp_path / ckpt), tables)
         q.awaitTermination()
 
     drain("ckpt_a")
@@ -283,3 +279,47 @@ def test_stream_stream_interval_join(spark, tmp_path):
         for r in interval_attribution_join(bviews, bpurch).collect()
     }
     assert bgot == got
+
+
+def test_streaming_interval_join_equals_batch_twin(spark, sf_dir):
+    """The landed streaming result must equal the batch interval join of
+    the same inputs — replay determinism is the contract that makes the
+    entry oracle-gateable (one file per side -> one availableNow batch ->
+    no cross-batch watermark drops)."""
+    from unstructured_data_pipeline_spark.queries import (
+        _cents,
+        _events,
+        streaming_interval_join_attribution,
+    )
+
+    got = {
+        r["user_id"]: (r["n_attributed"], r["sum_value_cents"])
+        for r in streaming_interval_join_attribution(spark, sf_dir).collect()
+    }
+    ev = _events(spark, sf_dir).select(
+        "user_id", "ts", "event_type", _cents(F.col("value")).alias("cents")
+    )
+    v = ev.filter(F.col("event_type") == "view").select(
+        F.col("user_id").alias("vu"), F.col("ts").alias("v_us")
+    )
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("pu"), F.col("ts").alias("p_us"), "cents"
+    )
+    want = {
+        r["vu"]: (r["n"], r["s"])
+        for r in (
+            v.join(
+                p,
+                (F.col("vu") == F.col("pu"))
+                & (F.col("p_us") >= F.col("v_us"))
+                & (F.col("p_us") <= F.col("v_us") + 3_600_000_000),
+            )
+            .groupBy("vu")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("cents").cast("long").alias("s"),
+            )
+            .collect()
+        )
+    }
+    assert got == want and len(got) > 0

@@ -215,6 +215,19 @@ def test_fresh_table_delete_keys_mor(spark, fresh):
     assert _rows(fresh.read()) == [("b", "y", 2)]
 
 
+def test_tombstoned_read_builds_without_a_job(spark, fresh):
+    """Building ``read()`` of a version with tombstones submits no Spark
+    job: the tombstone scan is given its key schema, so nothing is
+    inferred."""
+    fresh.append(_df(spark, ROWS))
+    fresh.delete_keys_mor(_df(spark, [("a", "x", 0)]), ["k"])
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.dagScheduler().nextJobId()
+    df = fresh.read()
+    assert sc.dagScheduler().nextJobId() == before
+    assert _rows(df) == ROWS[1:]
+
+
 def test_fresh_table_compact(spark, fresh):
     fresh.compact()
     assert fresh.current_version() == "v-00000002"

@@ -298,9 +298,7 @@ def test_streaming_intake_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        q = start_intake_stream(
-            spark, str(landing), ckpt, tables, trigger_available_now=True
-        )
+        q = start_intake_stream(spark, str(landing), ckpt, tables)
         q.awaitTermination()
 
     drain()
@@ -942,3 +940,21 @@ def test_default_driver_mem_env_override_and_bounds(monkeypatch):
 
     monkeypatch.setattr("builtins.open", raise_oserror)
     assert S._default_driver_mem() == "4g"
+
+
+def test_package_reads_no_private_session_conf():
+    """The engine has no session-conf switches of its own: no module of
+    the package names a ``spark.unstructured_data_pipeline.`` key (VARIANT
+    storage is chosen by ``bootstrap_warehouse(variant_native=...)``)."""
+    import unstructured_data_pipeline_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    readers = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            with open(os.path.join(d, f)) as src:
+                if "spark.unstructured_data_pipeline." in src.read():
+                    readers.append(os.path.relpath(os.path.join(d, f), root))
+    assert readers == []

@@ -14,7 +14,6 @@ from unstructured_data_pipeline_spark.pipelines.batch import (
     persist_pipeline_outputs,
     run_document_pipeline,
 )
-from unstructured_data_pipeline_spark.schemas import VARIANT_NATIVE_CONF
 
 
 def _docs(spark):
@@ -124,14 +123,3 @@ def test_variant_upsert_roundtrip(spark, tmp_path):
     assert got[("1.txt", "first_word")] == '"PATCHED"'
     assert len(got) == 9  # 3 docs x 3 fields, no dup rows
 
-
-def test_conf_flag_selects_encoding(spark, tmp_path):
-    spark.conf.set(VARIANT_NATIVE_CONF, "true")
-    try:
-        t = bootstrap_warehouse(spark, str(tmp_path / "wh_conf"))
-        assert isinstance(
-            t["documents_extracted_fields"].schema["field_value"].dataType,
-            T.VariantType,
-        )
-    finally:
-        spark.conf.set(VARIANT_NATIVE_CONF, "false")

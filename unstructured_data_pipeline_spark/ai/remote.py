@@ -38,7 +38,6 @@ def retry_with_backoff(
     base_delay: float = 0.5,
     multiplier: float = 2.0,
     max_delay: float = 30.0,
-    retry_on: tuple[type[BaseException], ...] = (RetryableError,),
     sleep: Callable[[float], None] = time.sleep,
 ):
     """Exponential-backoff retry decorator (the reference's fixed-count
@@ -47,8 +46,9 @@ def retry_with_backoff(
     Delay before attempt k (1-based retries) is
     ``min(base_delay * multiplier**(k-1), max_delay)`` — deterministic, no
     jitter state, so behavior is reproducible in tests (``sleep`` is
-    injectable).  Exceptions outside ``retry_on`` propagate immediately
-    (a 400-style permanent error must not burn retries)."""
+    injectable).  Only ``RetryableError`` is retried; any other exception
+    propagates immediately (a 400-style permanent error must not burn
+    retries)."""
     if max_attempts < 1:
         raise ValueError("max_attempts must be >= 1")
 
@@ -59,7 +59,7 @@ def retry_with_backoff(
             for attempt in range(1, max_attempts + 1):
                 try:
                     return fn(*args, **kwargs)
-                except retry_on:
+                except RetryableError:
                     if attempt == max_attempts:
                         raise
                     sleep(min(delay, max_delay))

@@ -13,26 +13,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unstructured_data_pipeline_spark.operators.dml import ParquetTable
-from unstructured_data_pipeline_spark.schemas import (
-    VARIANT_NATIVE_CONF,
-    pipeline_tables,
-)
+from unstructured_data_pipeline_spark.schemas import pipeline_tables
 
 
 def bootstrap_warehouse(
-    spark: SparkSession, root: str, variant_native: bool | None = None
+    spark: SparkSession, root: str, variant_native: bool = False
 ) -> dict[str, ParquetTable]:
     """CREATE IF NOT EXISTS for all five pipeline tables (S8).
 
-    ``variant_native=None`` reads the session conf
-    ``spark.unstructured_data_pipeline.variantNative`` (default off): when
-    on, the structured payload columns are stored as Spark-4 VariantType;
-    writers hand the same JSON strings either way (ParquetTable converts at
-    the boundary)."""
-    if variant_native is None:
-        variant_native = (
-            str(spark.conf.get(VARIANT_NATIVE_CONF, "false")).lower() == "true"
-        )
+    ``variant_native=True`` stores the structured payload columns as
+    Spark-4 VariantType; writers hand the same JSON strings either way
+    (ParquetTable converts at the boundary)."""
     tables = {
         name: ParquetTable(spark, root, name, schema)
         for name, schema in pipeline_tables(variant_native).items()

@@ -22,7 +22,6 @@ from unstructured_data_pipeline_spark.operators.similarity import (
 )
 from unstructured_data_pipeline_spark.operators.relational import (
     asof_join,
-    sessionize,
     latest_per_key,
 )
 
@@ -42,6 +41,5 @@ __all__ = [
     "cosine_topk",
     "lsh_bucketed_topk",
     "asof_join",
-    "sessionize",
     "latest_per_key",
 ]

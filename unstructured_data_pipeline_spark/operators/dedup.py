@@ -634,11 +634,10 @@ class IncrementalLshDedup:
         docs: DataFrame,
         corpus_texts: DataFrame,
         batch_id: int,
-        id_col: str = "doc_id",
-        text_col: str = "text",
         corpus_shingles: DataFrame | None = None,
     ) -> DataFrame:
         """Flag ``docs`` (one batch) against all earlier batches + itself.
+        ``docs`` and ``corpus_texts`` carry ``doc_id`` and ``text``.
 
         ``corpus_texts`` must cover every id that can appear in a candidate
         pair (this batch + all earlier ones) — in a deployment that is the
@@ -653,7 +652,7 @@ class IncrementalLshDedup:
         instead of re-shingling the batch text — the contract above already
         requires it to carry this batch's rows).
         """
-        d = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        d = docs.select(F.col("doc_id").alias("id"), "text")
         if corpus_shingles is not None:
             batch_sh = corpus_shingles.join(d.select("id"), "id", "left_semi")
         else:
@@ -684,9 +683,9 @@ class IncrementalLshDedup:
                 corpus_shingles
                 if corpus_shingles is not None
                 else shingle_arrays(
-                    corpus_texts.select(F.col(id_col), F.col(text_col)),
-                    id_col,
-                    text_col,
+                    corpus_texts.select("doc_id", "text"),
+                    "doc_id",
+                    "text",
                     self.n,
                 )
             )

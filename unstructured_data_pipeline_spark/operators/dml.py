@@ -53,27 +53,18 @@ class CommitConflictError(RuntimeError):
         self.target_version = target_version
 
 
-def upsert(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    broadcast: bool | None = None,
-) -> DataFrame:
+def upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """MERGE semantics: rows from ``source`` replace key-matched rows in
     ``target``; unmatched target rows survive.  Column order follows target.
 
-    ``broadcast``: ``True`` hints the source key set broadcast-able (safe for
-    the reference's small MERGE batches), ``False`` forbids it; the default
-    ``None`` lets AQE pick the join strategy from the runtime size — a
-    backfill-sized merge must not be force-broadcast (ADVICE r1)."""
+    The join strategy is AQE's pick from the runtime size: a small MERGE
+    batch broadcasts, and a backfill-sized merge is never force-broadcast
+    (ADVICE r1)."""
     cols = target.columns
     src = source.select(*cols)
     # no distinct(): a LEFT ANTI join ignores duplicate right-side keys,
     # and the dedup would cost an aggregate exchange per upsert
-    key_set = src.select(*keys)
-    if broadcast is True:
-        key_set = F.broadcast(key_set)
-    kept = target.join(key_set, on=keys, how="left_anti")
+    kept = target.join(src.select(*keys), on=keys, how="left_anti")
     return kept.unionByName(src)
 
 
@@ -430,9 +421,11 @@ class ParquetTable:
                 f"(retain={self.retain}; have {self.versions()})"
             )
         schema = self.schema_of(version)
-        return self._apply_tombstones(
-            self._scan(p, schema).select(*schema.fieldNames()), version
-        )
+        df = self._scan(p, schema).select(*schema.fieldNames())
+        tomb = self._tombstones(p, schema)
+        if tomb is None:
+            return df
+        return df.join(tomb, on=tomb.columns, how="left_anti")
 
     def _conform(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project ``df`` onto ``schema`` (the schema of the version a
@@ -533,19 +526,40 @@ class ParquetTable:
         past broadcast size.  NULL keys never match under SQL join
         semantics (same rule as ``snapshot_diff``), so a NULL-keyed
         tombstone row deletes nothing."""
-        tomb = source.select(*keys).distinct()
-        self._write(
-            lambda base: self._linked(
+
+        def fill_for(base: str):
+            # stored in the base's key types, the types `_tombstones` reads
+            schema = self.schema_of(base)
+            tomb = source.select(
+                *[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]
+            ).distinct()
+            return self._linked(
                 base, lambda stage: tomb.write.parquet(os.path.join(stage, _TOMBSTONES))
             )
-        )
 
-    def _apply_tombstones(self, df: DataFrame, version: str) -> DataFrame:
-        td = os.path.join(self.path, version, _TOMBSTONES)
-        if not os.path.isdir(td):
-            return df
-        tomb = self.spark.read.parquet(td)
-        return df.join(tomb, on=list(tomb.columns), how="left_anti")
+        self._write(fill_for)
+
+    def _tombstones(
+        self, version_dir: str, schema: T.StructType
+    ) -> DataFrame | None:
+        """The deleted keys in ``version_dir``'s ``_tombstones/``, or None.
+        The scan names the key columns (from one file's footer) with their
+        types in ``schema``, so building it fires no schema-inference job,
+        and it names the files themselves: Spark ignores a root path whose
+        leaf starts with ``_``, with a warning, before reading it anyway."""
+        import pyarrow.parquet as pq
+
+        td = os.path.join(version_dir, _TOMBSTONES)
+        try:
+            files = sorted(
+                os.path.join(td, f) for f in os.listdir(td) if f.endswith(".parquet")
+            )
+        except FileNotFoundError:
+            return None
+        keys = pq.read_schema(files[0]).names
+        return self.spark.read.schema(
+            T.StructType([schema[k] for k in keys])
+        ).parquet(*files)
 
     def compact(self, target_files: int | None = None) -> int:
         """Rewrite the table into ``target_files`` files (default: sized by
@@ -957,10 +971,9 @@ class PartitionedParquetTable(ParquetTable):
         through the tombstones) re-insert.  A key that still has a
         tombstoned row in an untouched partition keeps its tombstone: the
         untouched files are carried as they are."""
-        td = os.path.join(base_dir, _TOMBSTONES)
-        if not os.path.isdir(td):
+        tomb = self._tombstones(base_dir, schema)
+        if tomb is None:
             return
-        tomb = self.spark.read.parquet(td)
         cols = tomb.columns
         revived = self._scan(stage, schema).select(*cols)
         if not set(self.partition_by) <= set(cols):

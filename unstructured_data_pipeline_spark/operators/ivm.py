@@ -42,12 +42,10 @@ def maintain_grouped_agg(
     changes: DataFrame,
     group_col: str,
     measure_col: str,
-    count_col: str = "n_rows",
-    sum_col: str = "sum_measure",
 ) -> DataFrame:
     """Maintain a ``(group, count, sum)`` view under a CDC change set.
 
-    ``base`` has columns ``(group_col, count_col, sum_col)``; ``changes``
+    ``base`` has columns ``(group_col, "n_rows", "sum_measure")``; ``changes``
     is a `snapshot_diff(..., before=True)` output carrying ``action``,
     the after-image ``group_col``/``measure_col`` and before-images
     ``before_<group_col>``/``before_<measure_col>``.  NOOP rows are
@@ -68,6 +66,7 @@ def maintain_grouped_agg(
             "integer fixed-point column first (exact retraction needs "
             "exact addition)."
         )
+    count_col, sum_col = "n_rows", "sum_measure"
     bg, bm = f"before_{group_col}", f"before_{measure_col}"
     ch = changes.filter(F.col("action") != "NOOP")
     retract = ch.filter(F.col("action").isin("DELETE", "UPDATE")).select(

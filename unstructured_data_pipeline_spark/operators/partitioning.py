@@ -28,10 +28,6 @@ from pyspark.sql import DataFrame
 _SPLIT_CACHE: dict[tuple[str, ...], int] = {}
 _SPLIT_CACHE_MAX = 256
 
-# set to "false" to make every call a guaranteed no-op (real deployments
-# whose inputs always arrive well-split can skip even the probe)
-ENSURE_MIN_PARALLELISM_CONF = "spark.unstructured_data_pipeline.ensureMinParallelism"
-
 
 def ensure_min_parallelism(
     df: DataFrame, target: int | None = None, threshold: int | None = None
@@ -41,11 +37,8 @@ def ensure_min_parallelism(
     than ``threshold`` (default: ``target``) partitions.  A no-op — zero
     added shuffle — when the input is already spread, so it is safe to
     leave in 100 TB paths."""
-    spark = df.sparkSession
-    if str(spark.conf.get(ENSURE_MIN_PARALLELISM_CONF, "true")).lower() != "true":
-        return df
     if target is None:
-        target = spark.sparkContext.defaultParallelism
+        target = df.sparkSession.sparkContext.defaultParallelism
     if threshold is None:
         threshold = target
     # key on files + the ANALYZED plan's semantic hash (already computed for

@@ -23,9 +23,10 @@ def dynamic_pivot(
     field_col: str = "field_name",
     value_col: str = "field_value",
     values: list[str] | None = None,
-    agg: str = "first",
 ) -> DataFrame:
-    aggf = {"first": F.first, "max": F.max, "min": F.min, "sum": F.sum}[agg]
+    """One row per ``key_cols``, one column per field, holding the first
+    value seen for that field (the EAV table has one value per key and
+    field)."""
     g = eav.groupBy(*key_cols)
     p = g.pivot(field_col, values) if values else g.pivot(field_col)
-    return p.agg(aggf(F.col(value_col)))
+    return p.agg(F.first(F.col(value_col)))

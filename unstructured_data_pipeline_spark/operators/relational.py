@@ -1,5 +1,5 @@
 """Relational operators beyond the reference's surface: as-of join,
-gap-based sessionization, latest-per-key.
+latest-per-key.
 
 These extend the engine toward general event analytics (the `events` fixture
 table) while staying pure DataFrame — single window shuffle each, no UDFs.
@@ -24,12 +24,10 @@ def asof_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    direction: str = "backward",
-    suffix: str = "_r",
 ) -> DataFrame:
     """As-of join: for each left row, the single right row with the same key
-    and the greatest right_ts <= left_ts (``backward``; ``forward`` =
-    smallest right_ts >= left_ts).
+    and the greatest right_ts <= left_ts.  Right columns come out suffixed
+    ``_r``.
 
     Implementation: union-and-window — tag both sides, sort within key by
     time, carry the last-seen right row forward with ``last(ignorenulls)``.
@@ -42,9 +40,7 @@ def asof_join(
     at 100 TB scale (a direct ``join + filter + row_number`` materializes
     |left_key| x |right_key| pairs; this never does).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(direction)
-
+    suffix = "_r"
     rcols = [c for c in right.columns if c not in (on, right_ts)]
     lcols = [c for c in left.columns if c != on]  # includes left_ts
     r = right.select(
@@ -67,11 +63,8 @@ def asof_join(
     )
     both = l.unionByName(r)
 
-    if direction == "backward":
-        # right rows sort before left rows at equal ts (<=), then carry forward
-        order = [F.col("_ts").asc(), F.col("_side").desc(), F.col("_rtie").asc()]
-    else:
-        order = [F.col("_ts").desc(), F.col("_side").desc(), F.col("_rtie").asc()]
+    # right rows sort before left rows at equal ts (<=), then carry forward
+    order = [F.col("_ts").asc(), F.col("_side").desc(), F.col("_rtie").asc()]
     w = Window.partitionBy(on).orderBy(*order) \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
@@ -85,20 +78,3 @@ def asof_join(
         .drop("_side")
     )
 
-
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the time since the
-    user's previous event exceeds ``gap_minutes``.  Classic lag + cumulative
-    sum over one window shuffle."""
-    w = Window.partitionBy(user_col).orderBy(F.col(ts_col).asc())
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col)).over(w).cast("long")
-    new_sess = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
-    return events.withColumn(
-        "session_id",
-        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )

@@ -53,9 +53,9 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    exclude_self: bool = True,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector; a query is never
+    its own neighbor.
 
     Output: (q_id, neighbor_id, rank, cos) — rank 1..k by cosine desc,
     neighbor id asc on ties.
@@ -66,9 +66,9 @@ def cosine_topk(
     c = ensure_min_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("q_id"))
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("q_id")
+    )
     scored = pairs.select(
         "q_id",
         "neighbor_id",
@@ -104,7 +104,6 @@ def lsh_bucketed_topk(
     dim: int = 64,
     n_planes: int = 8,
     bands: int = 4,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ANN via random-hyperplane LSH: bucket = sign bits of ``n_planes``
     projections, split into ``bands`` bands for multi-probe recall; exact
@@ -149,9 +148,8 @@ def lsh_bucketed_topk(
         cb.join(qb, ["band", "sig"])
         .select("q_id", "q_vec", "neighbor_id", "c_vec")
         .distinct()
+        .filter(F.col("neighbor_id") != F.col("q_id"))
     )
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("q_id"))
     scored = cand.select(
         "q_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
     )
@@ -289,21 +287,17 @@ def ivf_topk(
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    exclude_self: bool = True,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: assign every corpus vector to its nearest
     coarse centroid (the inverted lists), probe each query against its
     ``nprobe`` nearest centroids, exact-rerank only the probed lists.
 
-    ``broadcast_probes`` (ADVICE r13): the default hints the probe side
-    (|Q| * nprobe rows, each carrying a full query vector) into a
-    broadcast hash join — correct for the bounded query sets this engine's
-    callers use (|Q| in the tens), and the only estimate-independent way
-    to keep the corpus-sized lists un-shuffled.  A CORPUS-sized query set
-    (e.g. self-kNN of everything) would exceed the 8 GB / 512M-row
-    broadcast cap: pass ``False`` to fall back to the planner's shuffle
-    join for that shape.
+    The probe side (|Q| * nprobe rows, each carrying a full query vector)
+    is hinted into a broadcast hash join (ADVICE r13) — correct for the
+    bounded query sets this engine's callers use (|Q| in the tens), and
+    the only estimate-independent way to keep the corpus-sized lists
+    un-shuffled.  A CORPUS-sized query set (e.g. self-kNN of everything)
+    would exceed the 8 GB / 512M-row broadcast cap.
 
     ``centroids`` is a tiny (cent_id, vec) DataFrame — broadcast to score
     assignments, so building the index is one scan of the corpus with NO
@@ -343,13 +337,11 @@ def ivf_topk(
     # SortMergeJoin that shuffled the corpus lists by cent_id (a handful
     # of distinct keys: maximal skew at scale).  Broadcasting the probe
     # side keeps the corpus un-shuffled; results unchanged.
-    if broadcast_probes:
-        probes = F.broadcast(probes)
-    cand = lists.join(probes, "cent_id").select(
-        "q_id", "q_vec", "neighbor_id", "c_vec"
+    cand = (
+        lists.join(F.broadcast(probes), "cent_id")
+        .select("q_id", "q_vec", "neighbor_id", "c_vec")
+        .filter(F.col("neighbor_id") != F.col("q_id"))
     )
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("q_id"))
     scored = cand.select(
         "q_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
     )

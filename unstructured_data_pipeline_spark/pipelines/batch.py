@@ -79,16 +79,14 @@ def run_document_pipeline(
     docs: DataFrame,
     backend: DocumentAIBackend | None = None,
     prompts: DataFrame | None = None,
-    id_col: str = "file_ref",
-    text_col: str = "text",
-    url_col: str | None = "file_url",
     with_ocr: bool = True,
     cache_intermediate: bool = False,
 ) -> PipelineOutputs:
     """Classify -> (seed prompts) -> extract -> explode EAV -> OCR+summary.
 
-    ``docs`` needs (id_col, text_col[, url_col]); binary sources first run
-    the OCR UDF to obtain text (see sources/binary_docs.py).
+    ``docs`` needs (file_ref, text[, file_url]); a missing ``file_url``
+    column reads as ``""``.  Binary sources first run the OCR UDF to
+    obtain text (see sources/binary_docs.py).
     ``prompts`` (class_name, prompts JSON) overrides per-class schemas —
     missing classes are auto-generated (AI5), matching the reference's
     seed-if-unseen behavior.
@@ -112,12 +110,8 @@ def run_document_pipeline(
 
     ensure_shipped(spark)
 
-    url = F.col(url_col) if url_col and url_col in docs.columns else F.lit("")
-    base = docs.select(
-        F.col(id_col).alias("file_ref"),
-        url.alias("file_url"),
-        F.col(text_col).alias("text"),
-    )
+    url = F.col("file_url") if "file_url" in docs.columns else F.lit("")
+    base = docs.select("file_ref", url.alias("file_url"), "text")
     # the AI UDF stages are the expensive path — make sure they run with
     # cluster-wide parallelism even when the source is one small file.
     from unstructured_data_pipeline_spark.operators.partitioning import (

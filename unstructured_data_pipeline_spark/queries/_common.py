@@ -129,16 +129,9 @@ def _stream_shuffle_partitions(spark: SparkSession) -> int:
     regardless of how little state it holds — measured at sf0.1 the
     stream-stream interval join spent 6-11 s at 32 partitions vs
     2.4-2.8 s at 8, identical output.  State partitioning should track
-    STATE VOLUME, not core count, so the default derives from the
+    STATE VOLUME, not core count, so the count derives from the
     cluster's parallelism (cores/4, floor 4 — enough to keep executors
-    busy on the bounded drains while cutting per-store overhead 4x) and
-    ``spark.unstructured_data_pipeline.streamShufflePartitions``
-    overrides it for production state sizes."""
-    conf = spark.conf.get(
-        "spark.unstructured_data_pipeline.streamShufflePartitions", None
-    )
-    if conf:
-        return max(1, int(conf))
+    busy on the bounded drains while cutting per-store overhead 4x)."""
     return max(4, spark.sparkContext.defaultParallelism // 4)
 
 

@@ -151,7 +151,7 @@ def pipeline_flaky_transport_recovery(spark, sf_dir):
     client-side the same way) — so the per-class/field EAV rollup must
     hash-match the CLEAN stub semantics the DuckDB oracle computes.  A
     max_attempts=1 adapter over the same transport fails outright
-    (unit-pinned, tests/test_round9_ops.py), proving the green row is the
+    (unit-pinned, tests/test_remote_backend.py), proving the green row is the
     retry's doing, not a benign transport."""
     from unstructured_data_pipeline_spark.ai.remote import (
         FlakyStubTransport,

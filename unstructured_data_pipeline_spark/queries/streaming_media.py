@@ -34,13 +34,7 @@ def streaming_intake_eav(spark, sf_dir):
         with open(os.path.join(landing, f"{r['doc_id']}.txt"), "w") as f:
             f.write(r["text"])
     tables = bootstrap_warehouse(spark, os.path.join(root, "tables"))
-    q = start_intake_stream(
-        spark,
-        landing,
-        os.path.join(root, "ckpt"),
-        tables,
-        trigger_available_now=True,
-    )
+    q = start_intake_stream(spark, landing, os.path.join(root, "ckpt"), tables)
     q.awaitTermination()
     out = (
         tables["documents_extracted_fields"]

@@ -90,10 +90,6 @@ PIPELINE_KEYS: dict[str, list[str]] = {
 }
 
 # --- Spark-4 native VariantType upgrade path (SURVEY §1.2) -----------------
-# Session conf flag: when "true", bootstrap_warehouse stores the VARIANT-ish
-# payload columns as real VariantType instead of canonical JSON strings.
-VARIANT_NATIVE_CONF = "spark.unstructured_data_pipeline.variantNative"
-
 # which columns upgrade per table (the reference's VARIANT columns that carry
 # structured payloads; setup_database.sql:54-72)
 VARIANT_COLUMNS: dict[str, list[str]] = {

@@ -19,28 +19,22 @@ from pyspark.sql import functions as F
 
 # reference-supported upload formats (`app.py:365`, `:815`)
 SUPPORTED_FORMATS = ("pdf", "jpg", "jpeg", "png")
+_FORMAT_GLOB = "*.{" + ",".join(SUPPORTED_FORMATS) + "}"
 
 
-def read_binary_documents(
-    spark: SparkSession,
-    path: str,
-    formats: tuple[str, ...] = SUPPORTED_FORMATS,
-    streaming: bool = False,
-) -> DataFrame:
-    """Scan a landing directory of document blobs.
+def read_binary_documents(spark: SparkSession, path: str) -> DataFrame:
+    """Batch scan of a landing directory's document blobs of a supported
+    format.
 
     Equivalent of ``SELECT ... FROM DIRECTORY(@stage)`` + ``TO_FILE`` in one:
-    rows carry both the listing metadata and the file bytes.  ``streaming``
-    switches to the Structured Streaming file source (checkpointed intake —
-    replaces the reference's NEW_UPLOADS.processed bookkeeping, see
-    streaming/intake.py).
+    rows carry both the listing metadata and the file bytes.  Checkpointed
+    intake is streaming/intake.py.
     """
-    glob = "*.{" + ",".join(formats) + "}" if formats else None
-    reader = spark.readStream if streaming else spark.read
-    r = reader.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    return r.load(path)
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", _FORMAT_GLOB)
+        .load(path)
+    )
 
 
 def directory_listing(spark: SparkSession, path: str) -> DataFrame:
@@ -57,7 +51,7 @@ def directory_listing(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.{" + ",".join(SUPPORTED_FORMATS) + "}")
+        .option("pathGlobFilter", _FORMAT_GLOB)
         .load(path)
         .select(
             F.regexp_replace(F.col("path"), "^" + re.escape(base) + "/", "").alias(

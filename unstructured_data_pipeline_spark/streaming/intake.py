@@ -37,14 +37,15 @@ def start_intake_stream(
     tables: dict[str, ParquetTable],
     backend: DocumentAIBackend | None = None,
     file_format: str = "text",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Stream the landing directory through the document pipeline.
 
     ``file_format='text'`` treats each file as one text document
     (wholetext); ``'binaryFile'`` feeds raw bytes through the OCR UDF first.
-    ``trigger_available_now`` drains what's there and stops — the batch-ish
-    mode used by tests and backfills; continuous deployments drop it.
+    The query runs under the ``availableNow`` trigger: it drains what the
+    directory holds and stops.  A periodic job that starts it again picks
+    up from the checkpoint, so scheduled runs keep the effectively-once
+    result.
     """
     if file_format == "text":
         stream = (
@@ -90,11 +91,10 @@ def start_intake_stream(
         # keyed upserts, not appends: a replayed batch rewrites its own rows
         persist_pipeline_outputs_idempotent(out, tables)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
